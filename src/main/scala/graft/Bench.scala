@@ -42,12 +42,19 @@ object Bench {
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.window",
       org.apache.logging.log4j.Level.ERROR)
+    // The warm-up and the side-file writes fail soft — they must not abort
+    // the timed run — but never silently: each failure goes to stderr and
+    // is counted in the full result line's `n_soft_fail`.
+    var softFails = 0
+    def failSoft(what: String)(f: => Unit): Unit =
+      try f catch { case e: Throwable =>
+        softFails += 1; System.err.println(s"[bench] $what failed: $e") }
     // untimed warmup: JIT/codegen + parquet footer caches, so the first
     // timed query isn't charged several seconds of JVM start-up
-    try {
+    failSoft("warm-up") {
       spark.range(1000).selectExpr("sum(id)").collect()
       spark.read.parquet(s"$sfDir/nation.parquet").count()
-    } catch { case _: Throwable => () }
+    }
     // Calibration probe (VERDICT r20 §next-round 1): a fixed, deterministic
     // CPU+shuffle microbench timed FIRST and LAST, so every BENCH json
     // carries a box-speed reference measured the same minute as the
@@ -192,8 +199,9 @@ object Bench {
           .map { case (d, v) => s"${jq(d)}: ${f3(v)}" }.mkString("{", ", ", "}")
         s" ${jq(k)}: $inner"
       }.mkString("{\n", ",\n", "\n}")
-      try java.nio.file.Files.write(basePath, (merged + "\n").getBytes("UTF-8"))
-      catch { case _: Throwable => () }
+      failSoft("baseline write") {
+        java.nio.file.Files.write(basePath, (merged + "\n").getBytes("UTF-8"))
+      }
     }
     // failed queries carry an explicit err marker (mirroring the contract
     // line) instead of a bare time-to-fail sample a downstream diff could
@@ -233,22 +241,23 @@ object Bench {
       if (cpus == "32") s""","value_normalized":${f3(totalNorm)}""" else ""
     val calJson = s""""calibration_sec":[${f3(calBefore)},${f3(calAfter)}],"calibration_ref":$CalRef$normJson"""
     val detail = s"""{"metric":"total","value":${f3(total)},"unit":"sec",$calJson,"samples":$samples,"guard_warns":$warnsJson,"n_err":$nerr,"sf":"$sfDir"}"""
-    try {
+    failSoft("samples write") {
       java.nio.file.Files.write(
         java.nio.file.Paths.get("bench_samples.json"),
         (detail + "\n").getBytes("UTF-8"))
-    } catch { case _: Throwable => () }
+    }
     // guard WARNs also append to the round log (VERDICT r12 ask #8): a
     // >1.8x drift lands in the committed PROGRESS record automatically,
     // not just in a scrolled-away stdout line. Fail-soft like the guard.
     if (guardWarns.nonEmpty) {
       val line = s"""{"ts":${System.currentTimeMillis / 1000}.0,"kind":"bench_guard","sf":"$sfDir","warns":$warnsJson}"""
-      try java.nio.file.Files.write(
-        java.nio.file.Paths.get("PROGRESS.jsonl"),
-        (line + "\n").getBytes("UTF-8"),
-        java.nio.file.StandardOpenOption.APPEND,
-        java.nio.file.StandardOpenOption.CREATE)
-      catch { case _: Throwable => () }
+      failSoft("PROGRESS append") {
+        java.nio.file.Files.write(
+          java.nio.file.Paths.get("PROGRESS.jsonl"),
+          (line + "\n").getBytes("UTF-8"),
+          java.nio.file.StandardOpenOption.APPEND,
+          java.nio.file.StandardOpenOption.CREATE)
+      }
     }
     // The driver keeps only the last ~2000 chars of stdout, and at 100+
     // queries the full per-query map (~2.6 KB) overflows it. Both lines
@@ -257,7 +266,7 @@ object Bench {
     // on the compact one, which is guaranteed to fit and (with
     // build.sbt's raw StdoutOutput + showSuccess=false) is the process's
     // final output line.
-    val fullLine = s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$qs,"n_err":$nerr,"sf":"$sfDir"}"""
+    val fullLine = s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$qs,"n_err":$nerr,"n_soft_fail":$softFails,"sf":"$sfDir"}"""
     val compactLine = s"""{"metric":"total","value":${f3(total)},"unit":"sec",$calJson,"n_err":$nerr,"n_queries":${results.size},"samples_file":"bench_samples.json","sf":"$sfDir"}"""
     // Emit the full per-query map first (humans + any tail space left),
     // then stop Spark UNDER an ERROR log level so shutdown cannot log

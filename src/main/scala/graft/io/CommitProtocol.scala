@@ -4,6 +4,9 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** How [[TgzSink]] marks completed task attempts and publishes winners.
+  * Both steps stay inside one root (a call stages in `<root>/_tmp-<call>/`),
+  * and each root of a two-store split resolves its own [[forPath]], so an
+  * object-store root never sees `rename` beside a posix one.
   *
   * [[RenameCommit]] — posix/HDFS: `FileSystem.rename` is atomic there, so
   * completion-marking renames the staged file to `....done` and publish

@@ -14,7 +14,8 @@ import graft.model.Schemas
 /** S7/S8 — the tar.gz repack sink (`/root/reference/embargo.go:104-122,
   * 143-218`): for every input archive, write one public and one private
   * `.tgz`, the private copy renamed `.tgz` → `-e.tgz`
-  * (`/root/reference/embargo.go:105`).
+  * (`/root/reference/embargo.go:105`), each committed straight into its
+  * own store as `WriteResults` does (`/root/reference/embargo.go:103-121`).
   *
   * Spark-first shape: a `foreachPartition` writer over routed entry rows.
   * [[TgzSource]] produces each archive's entries contiguously and in order
@@ -30,11 +31,13 @@ import graft.model.Schemas
   * both output archives in RAM, `/root/reference/embargo.go:126-146`).
   *
   * Output is published with a write-tmp-then-commit protocol: every task
-  * writes `outDir/_tmp/<final>.p<partition>.a<attempt>`, and when ALL its
-  * writers have closed cleanly it marks each staged file complete by
-  * renaming it to `....done` — the success record a bare attempt id cannot
-  * provide. Commit considers ONLY marked files: a task that died mid-write
-  * (or a speculative attempt killed after a slower-but-complete sibling
+  * writes `<root>/_tmp-<call>/<final>.p<partition>.a<attempt>` — staging
+  * private to the call, so concurrent calls into one root never see or
+  * delete each other's files — and when ALL its writers have closed
+  * cleanly it marks each staged file complete by renaming it to
+  * `....done` — the success record a bare attempt id cannot provide.
+  * Commit considers ONLY marked files: a task that died mid-write (or a
+  * speculative attempt killed after a slower-but-complete sibling
   * finished) leaves unmarked debris that can never beat a complete file,
   * regardless of attempt-id order. A final name marked by two DIFFERENT
   * partitions means the caller broke the per-archive contiguity contract
@@ -47,12 +50,17 @@ import graft.model.Schemas
   * Marking and publishing are rename-based only where rename is atomic
   * (posix/HDFS); on object-store schemes the sink switches to the
   * rename-free [[CopyCommit]] protocol (marker PUT + copy-then-verify) —
-  * see [[CommitProtocol]].
+  * see [[CommitProtocol]], resolved per root.
   */
 object TgzSink {
 
-  private val TmpDir = "_tmp"
   private val DoneSuffix = ".done"
+
+  /** A root one split call publishes into, and the call's staging beside it. */
+  private[io] final case class Target(dir: String, callId: String,
+                                      protocol: CommitProtocol) {
+    def staging: Path = new Path(dir, s"_tmp-$callId")
+  }
 
   /** Write `(archive × route)` tgz pairs under `outDir`.
     *
@@ -67,38 +75,55 @@ object TgzSink {
     * `<archiveBasename>` with `.tgz` → `-e.tgz` for the private half.
     */
   def writeSplit(routed: Dataset[Row], outDir: String): Unit =
-    writeSplit(routed, outDir,
-      CommitProtocol.forPath(outDir,
-        bridge.sessionHadoopConf(routed.sparkSession)))
+    writeSplit(routed, outDir, outDir)
 
-  /** [[writeSplit]] with an explicit commit protocol — the no-arg overload
-    * picks [[CopyCommit]] automatically for object-store schemes.
+  /** [[writeSplit]] with public halves under `publicDir` and `-e.tgz`
+    * halves under `privateDir`, each root on its [[CommitProtocol.forPath]].
     */
-  def writeSplit(routed: Dataset[Row], outDir: String,
-                 protocol: CommitProtocol): Unit = {
+  def writeSplit(routed: Dataset[Row], publicDir: String,
+                 privateDir: String): Unit = {
+    val conf = bridge.sessionHadoopConf(routed.sparkSession)
+    writeSplit(routed, publicDir, privateDir,
+      CommitProtocol.forPath(publicDir, conf),
+      CommitProtocol.forPath(privateDir, conf))
+  }
+
+  /** [[writeSplit]] into two stores with an explicit protocol per root. */
+  def writeSplit(routed: Dataset[Row], publicDir: String, privateDir: String,
+                 pubProtocol: CommitProtocol,
+                 privProtocol: CommitProtocol): Unit = {
     val spark = routed.sparkSession
     // session conf captured ONCE on the driver and shipped — a fresh
     // `new Configuration()` in the task would drop spark.hadoop.* settings
     // (object-store credentials, fs impls) and silently write elsewhere
     val sconf = new SerializableHadoopConf(bridge.sessionHadoopConf(spark))
-    val out = new Path(outDir)
-    val tmp = new Path(out, TmpDir)
-    val driverFs = out.getFileSystem(sconf.value)
-    driverFs.delete(tmp, true) // stale tmp from a failed prior run
-    driverFs.mkdirs(tmp)
+    val callId = java.util.UUID.randomUUID.toString
+    // one target when both halves share a root; the public half always
+    // goes to target 0, the private half to the last
+    val targets = Seq(publicDir -> pubProtocol, privateDir -> privProtocol)
+      .distinctBy(t => new Path(t._1))
+      .map { case (dir, protocol) => Target(dir, callId, protocol) }
+    val privIdx = targets.length - 1
+    targets.foreach(t => t.staging.getFileSystem(sconf.value).mkdirs(t.staging))
 
-    routed.foreachPartition { rows: Iterator[Row] =>
+    try routed.foreachPartition { rows: Iterator[Row] =>
       val conf = sconf.value
-      val fs = new Path(outDir).getFileSystem(conf)
-      val tmpDir = new Path(new Path(outDir), TmpDir)
+      val fss = targets.map(_.staging.getFileSystem(conf))
       val tc = TaskContext.get()
       val taskSuffix = s".p${tc.partitionId()}.a${tc.taskAttemptId()}"
       val closed = scala.collection.mutable.HashSet.empty[String]
-      val stagedNames = scala.collection.mutable.ArrayBuffer.empty[String]
+      // (target index, staged name) of every file this attempt wrote
+      val staged = scala.collection.mutable.ArrayBuffer.empty[(Int, String)]
       var current: String = null
       var lastOrdinal = Long.MinValue
       var pub: TarWriter = null
       var priv: TarWriter = null
+
+      def open(i: Int, name: String): TarWriter = {
+        staged += (i -> (name + taskSuffix))
+        new TarWriter(fss(i).create(
+          new Path(targets(i).staging, name + taskSuffix), true))
+      }
 
       def closeCurrent(): Unit = if (current != null) {
         pub.close(); priv.close()
@@ -116,12 +141,9 @@ object TgzSink {
           current = archive
           lastOrdinal = Long.MinValue
           val base = archive.substring(archive.lastIndexOf('/') + 1)
+          pub = open(0, base)
           // S8 rename (/root/reference/embargo.go:105)
-          val privName = base.replace(".tgz", "-e.tgz")
-          stagedNames += base + taskSuffix
-          stagedNames += privName + taskSuffix
-          pub = new TarWriter(fs.create(new Path(tmpDir, base + taskSuffix), true))
-          priv = new TarWriter(fs.create(new Path(tmpDir, privName + taskSuffix), true))
+          priv = open(privIdx, base.replace(".tgz", "-e.tgz"))
         }
         require(ordinal > lastOrdinal,
           s"entries for $archive are out of order at ordinal $ordinal — caller reordered rows")
@@ -135,56 +157,63 @@ object TgzSink {
       // RenameCommit marks by renaming the data file itself (atomic on
       // posix/HDFS); CopyCommit never renames — it PUTs a one-byte
       // `.done` marker beside the data file (atomic single-object PUT).
-      stagedNames.foreach { n =>
-        protocol match {
+      staged.foreach { case (i, n) =>
+        val dir = targets(i).staging
+        targets(i).protocol match {
           case RenameCommit =>
-            if (!fs.rename(new Path(tmpDir, n), new Path(tmpDir, n + DoneSuffix)))
+            if (!fss(i).rename(new Path(dir, n), new Path(dir, n + DoneSuffix)))
               throw new java.io.IOException(s"failed to mark staged file $n complete")
           case CopyCommit =>
-            val m = fs.create(new Path(tmpDir, n + DoneSuffix), true)
+            val m = fss(i).create(new Path(dir, n + DoneSuffix), true)
             // non-empty on purpose: the commit election lists the staging
             // dir through Spark's file index, which prunes zero-length
             // files — an empty marker would be invisible to it
             m.write('k'); m.close()
         }
       }
-    }
+    } catch { case e: Throwable => sweep(targets, sconf); throw e }
 
-    commit(spark, outDir, sconf, protocol)
+    commit(spark, targets, sconf)
   }
 
-  /** Publish `_tmp` outputs: consider only `.done`-marked files (attempts
-    * whose task closed every writer — unmarked files are mid-write debris
-    * and are dropped with the staging dir), fail on any final name marked
-    * by two distinct partitions, keep the latest marked attempt per final
-    * name, rename winners into place (overwriting prior runs' outputs).
-    *
-    * The staging catalog is DATA: the listing is a distributed `binaryFile`
-    * METADATA scan (content pruned, file discovery parallelized by Spark's
-    * file index — the same shape as [[FsOps.list]]) and the winner election
-    * is a `groupBy(finalName)` aggregation, so commit holds no per-archive
-    * state on the driver and survives ~10⁷ staged archives where a
-    * driver-side `listStatus` array would be the scaling wall. The renames
-    * are likewise distributed, metadata-only ops; the driver sees only the
-    * conflict verdict (a handful of example names).
-    */
-  private[io] def commit(spark: org.apache.spark.sql.SparkSession, outDir: String,
-                         sconf: SerializableHadoopConf,
-                         protocol: CommitProtocol = RenameCommit): Unit = {
-    import org.apache.spark.sql.functions._
-    val out = new Path(outDir)
-    val tmp = new Path(out, TmpDir)
-    val fs = out.getFileSystem(sconf.value)
+  /** Remove this call's staging dirs — never another call's. */
+  private def sweep(targets: Seq[Target], sconf: SerializableHadoopConf): Unit =
+    targets.foreach(t => t.staging.getFileSystem(sconf.value).delete(t.staging, true))
 
+  /** Publish every target's staged outputs: consider only `.done`-marked
+    * files (attempts whose task closed every writer — unmarked files are
+    * mid-write debris and are dropped with the staging dirs), fail on any
+    * final name marked by two distinct partitions, keep the latest marked
+    * attempt per (target, final name), move winners into their target
+    * root (overwriting prior runs' outputs), and always remove the
+    * staging dirs.
+    *
+    * The staging catalog is DATA: the listing is ONE distributed
+    * `binaryFile` METADATA scan over all targets' staging dirs (content
+    * pruned, file discovery parallelized by Spark's file index — the same
+    * shape as [[FsOps.list]]) and the winner election is a `groupBy`
+    * aggregation, so commit holds no per-archive state on the driver and
+    * survives ~10⁷ staged archives where a driver-side `listStatus` array
+    * would be the scaling wall. The publishes are likewise distributed,
+    * metadata-only ops; the driver sees only the conflict verdict (a
+    * handful of example names).
+    */
+  private[io] def commit(spark: org.apache.spark.sql.SparkSession,
+                         targets: Seq[Target],
+                         sconf: SerializableHadoopConf): Unit = {
+    import org.apache.spark.sql.functions._
     val stagedRe = "^(.*)\\.p(\\d+)\\.a(\\d+)\\" + DoneSuffix + "$"
-    val perFin = spark.read.format("binaryFile").load(tmp.toString)
-      .select(regexp_extract(col("path"), "([^/]+)$", 1).as("tmpName"))
-      .select(col("tmpName"),
+    val perFin = targets.indices.map { i =>
+      spark.read.format("binaryFile").load(targets(i).staging.toString)
+        .select(lit(i).as("target"),
+          regexp_extract(col("path"), "([^/]+)$", 1).as("tmpName"))
+    }.reduce(_ unionAll _)
+      .select(col("target"), col("tmpName"),
         regexp_extract(col("tmpName"), stagedRe, 1).as("fin"),
         regexp_extract(col("tmpName"), stagedRe, 2).cast("long").as("part"),
         regexp_extract(col("tmpName"), stagedRe, 3).cast("long").as("attempt"))
       .filter(col("fin") =!= "") // unmarked debris doesn't parse — dropped
-      .groupBy("fin").agg(
+      .groupBy("target", "fin").agg(
         countDistinct(col("part")).as("n_parts"),
         // latest attempt per final name wins (earlier = retry debris of the
         // same partition writing identical content)
@@ -195,26 +224,23 @@ object TgzSink {
       val conflicts = perFin.filter(col("n_parts") > 1)
         .select("fin").orderBy("fin").limit(5)
         .collect().map(_.getString(0))
-      if (conflicts.nonEmpty) {
-        fs.delete(tmp, true)
+      if (conflicts.nonEmpty)
         throw new IllegalStateException(
           "archive rows were split across partitions — outputs claimed by " +
             s"multiple tasks: ${conflicts.mkString(", ")}")
-      }
-      perFin.select("winner", "fin").foreachPartition { it: Iterator[Row] =>
+      perFin.select("target", "winner", "fin").foreachPartition { it: Iterator[Row] =>
         val conf = sconf.value
-        val o = new Path(outDir)
-        val pfs = o.getFileSystem(conf)
-        val t = new Path(o, TmpDir)
         it.foreach { r =>
-          val target = new Path(o, r.getString(1))
-          protocol match {
+          val t = targets(r.getInt(0))
+          val pfs = t.staging.getFileSystem(conf)
+          val target = new Path(t.dir, r.getString(2))
+          t.protocol match {
             case RenameCommit =>
               // the `.done` file IS the data under rename marking
               pfs.delete(target, false)
-              if (!pfs.rename(new Path(t, r.getString(0)), target))
+              if (!pfs.rename(new Path(t.staging, r.getString(1)), target))
                 throw new java.io.IOException(
-                  s"commit rename failed for ${r.getString(1)}")
+                  s"commit rename failed for ${r.getString(2)}")
             case CopyCommit =>
               // the `.done` file is a marker; the data sits beside it.
               // Copy-then-verify: object copy/PUT is complete-or-absent,
@@ -222,20 +248,22 @@ object TgzSink {
               // "published object verifiably holds the staged bytes"
               // before the winner is declared committed. The staged
               // source is left for the staging-dir sweep.
-              val src = new Path(t, r.getString(0).stripSuffix(DoneSuffix))
+              val src = new Path(t.staging, r.getString(1).stripSuffix(DoneSuffix))
               val srcLen = pfs.getFileStatus(src).getLen
               org.apache.hadoop.fs.FileUtil.copy(pfs, src, pfs, target,
                 false, true, conf)
               val dstLen = pfs.getFileStatus(target).getLen
               if (dstLen != srcLen)
                 throw new java.io.IOException(
-                  s"commit verify failed for ${r.getString(1)}: " +
+                  s"commit verify failed for ${r.getString(2)}: " +
                     s"published $dstLen bytes, staged $srcLen")
           }
         }
       }
-    } finally perFin.unpersist()
-    fs.delete(tmp, true)
+    } finally {
+      perFin.unpersist()
+      sweep(targets, sconf)
+    }
   }
 
   /** One gzipped tar stream; copies the 5 header fields the reference

@@ -148,14 +148,15 @@ object Dedup {
       // ~1.3e7 incl. planted families) and any corpus to 4.3e9 docs;
       // callers with wider id domains keep the two-long path. id_a <
       // id_b ≥ 0 by bucket sort order, so the unsigned unpack below is
-      // lossless. NOT the graded default — the r17 A/B (tools/CandProf,
-      // 4 alternating rounds over 2 sessions, SCALING.md) measured the
-      // arms as noise-indistinguishable, with the no-distinct lower
-      // bound never beating the two-long min: at sf1 the dedup exchange
-      // carries 159k ordered pairs (~2.5 MB), structurally incapable of
-      // being the candidate stage's 3.6 s. The lever only matters in a
-      // regime where pair volume itself is exchange-bound (dense buckets,
-      // pair rows ≫ corpus rows) — there, halving pair bytes is real.
+      // lossless. NOT the graded default — the r17 A/B (SCALING.md "Round
+      // 17: the d2 pair-dedup exchange", 4 alternating rounds over 2
+      // sessions) measured the arms as noise-indistinguishable, with the
+      // no-distinct lower bound never beating the two-long min: at sf1
+      // the dedup exchange carries 159k ordered pairs (~2.5 MB),
+      // structurally incapable of being the candidate stage's 3.6 s.
+      // The lever only matters in a regime where pair volume itself is
+      // exchange-bound (dense buckets, pair rows ≫ corpus rows) — there,
+      // halving pair bytes is real.
       // ENFORCED, not just documented (review r17): an id outside
       // [0, 2^32) would silently lose high bits / sign-extend over the
       // pack, collapsing unrelated pairs — fail loudly instead. id_a <

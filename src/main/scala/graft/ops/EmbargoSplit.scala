@@ -105,8 +105,17 @@ object EmbargoSplit {
     * task parallelism is the per-archive explode.
     */
   def runWith(spark: SparkSession, inPath: String, whitelist: DataFrame,
-              cutoffDateInt: Int, outDir: String): Unit = {
+              cutoffDateInt: Int, outDir: String): Unit =
+    runWith(spark, inPath, whitelist, cutoffDateInt, outDir, outDir)
+
+  /** [[runWith]] committing each public half under `publicDir` and each
+    * `-e.tgz` half under `privateDir` (see [[TgzSink]]); concurrent calls
+    * into the same roots are safe.
+    */
+  def runWith(spark: SparkSession, inPath: String, whitelist: DataFrame,
+              cutoffDateInt: Int, publicDir: String, privateDir: String): Unit = {
     val entries = TgzSource.entries(spark, inPath)
-    TgzSink.writeSplit(route(entries, whitelist, cutoffDateInt), outDir)
+    TgzSink.writeSplit(route(entries, whitelist, cutoffDateInt),
+      publicDir, privateDir)
   }
 }

@@ -44,7 +44,8 @@ object Graph {
     */
   private def edgeTable(edges: DataFrame, parts: Int = 0): DataFrame = {
     // parts = 0 → the session's shuffle width; a caller sizing for a
-    // cluster passes the edge-list width explicitly (see tools/GraphAb)
+    // cluster passes the edge-list width explicitly (SCALING.md "Round-19
+    // g1/g2 edge-partitioning A/B at sf1")
     val part = if (parts > 0) edges.repartition(parts, col("src"))
       else edges.repartition(col("src"))
     // out-degree as a window over the SAME src exchange the loop join
@@ -100,7 +101,8 @@ object Graph {
     * partitioning, no extra exchange. Left LAZY on purpose: round 1 and
     * the end-of-run dangling guard each fold it into their own job —
     * one extra pass over the materialized ed beats an eager checkpoint
-    * barrier (the r19 GraphAb A/B).
+    * barrier (the r19 A/B, SCALING.md "Round-19 g1/g2
+    * edge-partitioning A/B at sf1").
     */
   private def seedRanks(ed: DataFrame): DataFrame =
     ed.select("src").distinct()

@@ -126,7 +126,7 @@ object KMeans {
     require(k >= 1 && k <= MaxK, s"kmeans: k ($k) must be in [1, $MaxK]")
     val first = pts.orderBy(col("id")).limit(1).collect()
     require(first.nonEmpty, "kmeans: need at least 1 point")
-    var cents: Seq[Array[Long]] = Seq(first(0).getSeq[Long](1).toArray)
+    var cents: Seq[Array[Long]] = Seq(first(0).getAs[Seq[Long]]("q").toArray)
     for (_ <- 2 to k) {
       val next = pts
         .withColumn("p", packedAssign(col("q"), cents))
@@ -199,7 +199,9 @@ object KMeans {
     val seedRows = pts.orderBy(col("id")).limit(k).collect()
     require(seedRows.length == k,
       s"kmeans: need at least k ($k) points, got ${seedRows.length}")
-    val cents0: Seq[Array[Long]] = seedRows.map(_.getSeq[Long](1).toArray).toSeq
+    // by name: the caller's pinned table may carry (q, id) in any order
+    val cents0: Seq[Array[Long]] =
+      seedRows.map(_.getAs[Seq[Long]]("q").toArray).toSeq
     assign(pts, lloydRounds(pts, cents0, iters))
   }
 

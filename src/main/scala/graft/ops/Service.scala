@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
 
 /** The reference's HTTP service surface
   * (`/root/reference/deploy/deploy.go:118-126`): the four routes it
@@ -10,7 +9,8 @@ import org.apache.spark.sql.functions.col
   * `/_ah/health`, `/cron/update_embargo_whitelist`, `/cron/unembargo` —
   * served over a real (loopback, ephemeral-port) JDK `HttpServer`, each
   * delegating to the already-graded pipelines: the split
-  * ([[EmbargoSplit.runWith]] — e1/e2/e4's engine), the whitelist reload
+  * ([[EmbargoSplit.runWith]] — e1/e2/e4's engine, committing each half
+  * straight into its store with per-call staging), the whitelist reload
   * ([[graft.io.Sites.whitelistFromUrl]] — S6/P7/P8), and the promotion
   * ([[Unembargo.promoteDay]] — e3's engine).
   *
@@ -99,9 +99,9 @@ object Service {
     // (every handler there runs in its own goroutine): without an
     // executor, JDK HttpServer dispatches every handler on ONE thread, so
     // two independent /submit?file= archives serialize. Handlers are
-    // already safe under concurrency — per-request UUID split dirs,
-    // per-day store prefixes, and Spark happily runs driver-submitted
-    // jobs from several threads (guide §2.6).
+    // already safe under concurrency — every split stages per call (see
+    // graft.io.TgzSink), and Spark happily runs driver-submitted jobs
+    // from several threads (guide §2.6).
     private val handlerPool = java.util.concurrent.Executors.newFixedThreadPool(4)
     server.setExecutor(handlerPool)
 
@@ -181,9 +181,9 @@ object Service {
     }
 
     /** One archive through the split into the two stores — e4's accepted
-      * arm: `splitOut/base.tgz` → public, `splitOut/base-e.tgz` → private,
-      * both under the archive's own day prefix (`deploy.go:40-42` strips
-      * the bucket; the day dir is the object path's parent).
+      * arm: `base.tgz` → public, `base-e.tgz` → private, both under the
+      * archive's own day prefix (`deploy.go:40-42` strips the bucket; the
+      * day dir is the object path's parent).
       */
     private def embargoSingleObject(objPath: String): Unit = {
       // EmbargoSingleFile's own guard (`embargo.go:296-298`): a
@@ -192,67 +192,32 @@ object Service {
       require(objPath.contains("tgz") && objPath.contains("sidestream"),
         "not a proper sidestream file")
       val dayDir = objPath.substring(0, objPath.lastIndexOf('/'))
-      val base = objPath.substring(objPath.lastIndexOf('/') + 1)
-      val splitOut = s"${cfg.publicDir}/.split_tmp/${java.util.UUID.randomUUID}"
-      val cutoff = oneYearAgoInt(cfg.today())
-      try {
-        EmbargoSplit.runWith(spark, s"${cfg.srcDir}/$objPath",
-          currentWhitelist(), cutoff, splitOut)
-        graft.io.FsOps.mkdirs(spark, s"${cfg.publicDir}/$dayDir")
-        graft.io.FsOps.mkdirs(spark, s"${cfg.privateDir}/$dayDir")
-        graft.io.FsOps.copy(spark, s"$splitOut/$base",
-          s"${cfg.publicDir}/$dayDir/$base")
-        graft.io.FsOps.copy(spark,
-          s"$splitOut/${base.replace(".tgz", "-e.tgz")}",
-          s"${cfg.privateDir}/$dayDir/${base.replace(".tgz", "-e.tgz")}")
-      } finally graft.io.FsOps.deletePrefix(spark, splitOut)
+      EmbargoSplit.runWith(spark, s"${cfg.srcDir}/$objPath",
+        currentWhitelist(), oneYearAgoInt(cfg.today()),
+        s"${cfg.publicDir}/$dayDir", s"${cfg.privateDir}/$dayDir")
     }
 
     /** A whole day through the split as ONE distributed job
       * (`embargo.go:243-294` `EmbargoOneDayData`, whose serial
       * per-archive loop is exactly the unit of task parallelism here —
-      * SURVEY §3 E1): the day glob explodes every archive in parallel,
-      * [[EmbargoSplit.runWith]] writes all `-p`/`-e` pairs in one pass,
-      * and the publication routes them into the two stores with the
-      * distributed [[graft.io.FsOps.copyAll]]. An empty or absent day is
-      * a successful no-op — the reference's bucket listing just comes
-      * back empty.
+      * SURVEY §3 E1): the day glob explodes every archive in parallel and
+      * [[EmbargoSplit.runWith]] commits every public half into the public
+      * store's day prefix and every `-e.tgz` half into the embargoed
+      * store's, in one pass. An empty or absent day is a successful no-op
+      * — the reference's bucket listing just comes back empty.
       */
     private def embargoDay(date: String): Unit = {
       val prefix =
         s"sidestream/${date.substring(0, 4)}/${date.substring(4, 6)}/${date.substring(6, 8)}"
       val dayPath = new Path(s"${cfg.srcDir}/$prefix")
       val dayFs = dayPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!dayFs.exists(dayPath)) return
-      val any = dayFs.globStatus(new Path(dayPath, "*.tgz"))
-      if (any == null || any.isEmpty) return
-      val splitOut = s"${cfg.publicDir}/.split_tmp/${java.util.UUID.randomUUID}"
-      val cutoff = oneYearAgoInt(cfg.today())
+      // an absent day dir globs to nothing, like an empty one
+      if (Option(dayFs.globStatus(new Path(dayPath, "*.tgz"))).forall(_.isEmpty)) return
       spark.sparkContext.setJobGroup(DayJobGroup, s"embargo day $date")
-      try {
-        EmbargoSplit.runWith(spark, dayPath.toString, currentWhitelist(),
-          cutoff, splitOut)
-        graft.io.FsOps.mkdirs(spark, s"${cfg.publicDir}/$prefix")
-        graft.io.FsOps.mkdirs(spark, s"${cfg.privateDir}/$prefix")
-        val produced = graft.io.FsOps.list(spark, splitOut, suffix = ".tgz")
-        // route by MEMBERSHIP against the day's listed source basenames,
-        // not by the '-e.tgz' suffix (ADVICE r20): the split publishes
-        // each archive's public half under its own basename and the
-        // private half under the renamed one, so public = exactly the
-        // source names — a source whose basename itself ends in '-e.tgz'
-        // then cannot be misrouted to the private store. (The e4/single
-        // -file path routes by exact basename already.)
-        val srcNames = any.map(_.getPath.getName).toSeq
-        graft.io.FsOps.copyAll(spark,
-          produced.filter(col("name").isin(srcNames: _*)),
-          splitOut, s"${cfg.publicDir}/$prefix")
-        graft.io.FsOps.copyAll(spark,
-          produced.filter(!col("name").isin(srcNames: _*)),
-          splitOut, s"${cfg.privateDir}/$prefix")
-      } finally {
-        spark.sparkContext.clearJobGroup()
-        graft.io.FsOps.deletePrefix(spark, splitOut)
-      }
+      try EmbargoSplit.runWith(spark, dayPath.toString, currentWhitelist(),
+        oneYearAgoInt(cfg.today()),
+        s"${cfg.publicDir}/$prefix", s"${cfg.privateDir}/$prefix")
+      finally spark.sparkContext.clearJobGroup()
     }
 
     route("/_ah/health") { _ => (200, "ok") }

@@ -69,8 +69,8 @@ object TarQueries {
     * pool (guide §2.6: actions are only sequential because the driver
     * calls them sequentially — overlapping lets the next job's tasks
     * back-fill executors freed by the current job's tail). Used by the
-    * e3/e4 submit batches, whose per-archive splits write disjoint
-    * output dirs. Exceptions propagate (first failure rethrown unwrapped
+    * e3/e4 submit batches, whose per-archive splits each stage in their
+    * own dirs. Exceptions propagate (first failure rethrown unwrapped
     * so callers see the same exception type as the serial loop).
     */
   private def inParallel[T](items: Seq[T])(f: T => Unit): Unit =
@@ -214,19 +214,13 @@ object TarQueries {
       f"sidestream/${date / 10000}%04d/${date / 100 % 100}%02d/${date % 100}%02d"
     val fixtures = Seq((FixtureTgz, FixtureCutoff, 20170315),
       (Fixture2Tgz, Fixture2Cutoff, 20170316))
-    // E1: split each day, then the S8 insertion into the two stores —
-    // the two day jobs are independent (disjoint split dirs and day
-    // prefixes), so they overlap (guide §2.6)
+    // E1: split each day with the S8 insertion into the two stores — the
+    // two day jobs are independent (distinct day prefixes), so they
+    // overlap (guide §2.6)
     inParallel(fixtures) { case (tgz, cutoff, date) =>
-      val out = s"$root/split_$date"
-      EmbargoSplit.run(spark, tgz, FixtureWhitelist, cutoff, out)
-      val base = tgz.substring(tgz.lastIndexOf('/') + 1)
-      val e = base.replace(".tgz", "-e.tgz")
       val prefix = dayPrefix(date)
-      graft.io.FsOps.mkdirs(spark, s"$pub/$prefix")
-      graft.io.FsOps.mkdirs(spark, s"$priv/$prefix")
-      graft.io.FsOps.copy(spark, s"$out/$base", s"$pub/$prefix/$base")
-      graft.io.FsOps.copy(spark, s"$out/$e", s"$priv/$prefix/$e")
+      EmbargoSplit.runWith(spark, tgz, TgzSource.whitelist(spark, FixtureWhitelist),
+        cutoff, s"$pub/$prefix", s"$priv/$prefix")
     }
     // E2: the year has passed for fixture 1's day only — validDate is the
     // promotion decision, promoteDay the distributed copy
@@ -315,29 +309,21 @@ object TarQueries {
 
     // the accepted batch is request-sized (one archive per HTTP submit in
     // the reference; a bounded driver loop here, each archive's split a
-    // distributed job of its own — overlapped, guide §2.6: the requests
-    // write disjoint split_<reqId> dirs and distinct day prefixes)
+    // distributed job of its own — overlapped, guide §2.6: every split
+    // stages privately, so the requests may share day prefixes)
     val accepted = reqs
       .filter(col("url").isNotNull && col("url").startsWith("gs://") &&
         isSidestreamArchive(col("url")))
       .select("req_id", "url").collect()
       .map(r => (r.getLong(0), r.getString(1)))
-    inParallel(accepted.toSeq) { case (reqId, url) =>
+    inParallel(accepted.toSeq) { case (_, url) =>
       // deploy.go:40-42: strip "gs://", drop the bucket at the first '/'
       val removePrefix = url.stripPrefix("gs://")
       val objPath = removePrefix.substring(removePrefix.indexOf('/') + 1)
       val dayDir = objPath.substring(0, objPath.lastIndexOf('/'))
-      val archBase = base(objPath)
-      val splitOut = s"$root/split_$reqId"
-      EmbargoSplit.run(spark, s"$src/$objPath", FixtureWhitelist, E4Cutoff,
-        splitOut)
-      graft.io.FsOps.mkdirs(spark, s"$pub/$dayDir")
-      graft.io.FsOps.mkdirs(spark, s"$priv/$dayDir")
-      graft.io.FsOps.copy(spark, s"$splitOut/$archBase",
-        s"$pub/$dayDir/$archBase")
-      graft.io.FsOps.copy(spark,
-        s"$splitOut/${archBase.replace(".tgz", "-e.tgz")}",
-        s"$priv/$dayDir/${archBase.replace(".tgz", "-e.tgz")}")
+      EmbargoSplit.runWith(spark, s"$src/$objPath",
+        TgzSource.whitelist(spark, FixtureWhitelist), E4Cutoff,
+        s"$pub/$dayDir", s"$priv/$dayDir")
     }
 
     // read back what each store actually serves, keyed to the request by

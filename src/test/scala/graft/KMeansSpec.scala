@@ -176,6 +176,19 @@ class KMeansSpec extends AnyFunSuite with SparkSuite {
     }
   }
 
+  test("pinned fits read the seed vectors by name: a (q, id) table fits like (id, q)") {
+    val rnd = new scala.util.Random(11)
+    val vecs = Seq.fill(40)(Array.fill(6)(rnd.nextDouble() * 1.8 - 0.9))
+    def fitted(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    val idFirst = ptsOf(vecs).localCheckpoint()
+    val qFirst = ptsOf(vecs).select(col("q"), col("id")).localCheckpoint()
+    assert(fitted(KMeans.fitPinned(qFirst, k = 3, iters = 2)) ===
+      fitted(KMeans.fitPinned(idFirst, k = 3, iters = 2)))
+    assert(fitted(KMeans.fitPlusPlusPinned(qFirst, k = 3, iters = 2)) ===
+      fitted(KMeans.fitPlusPlusPinned(idFirst, k = 3, iters = 2)))
+  }
+
   test("loud guards: domain, k bounds, iters, not enough points") {
     import spark.implicits._
     val bad = Seq((0L, Array(1.5, 0.0)), (1L, Array(0.0, 0.0)))

@@ -132,14 +132,38 @@ class ServiceSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("/submit?date= embargoes the whole day; an empty day is a success no-op") {
+    // a source archive whose own basename already ends in -e.tgz: its
+    // public half keeps that name in the public store, its private half
+    // becomes -e-e.tgz in the embargoed store (ADVICE r20)
+    val fix2 = base(TarQueries.Fixture2Tgz)
+    val eSrc = fix2.replace("-0000.tgz", "-0001-e.tgz")
+    graft.io.FsOps.copy(spark, TarQueries.Fixture2Tgz,
+      s"$srcDir/sidestream/2017/03/16/$eSrc")
     val (code, _) = get("/submit?date=20170316")
     assert(code === 200)
-    val fix2 = base(TarQueries.Fixture2Tgz)
-    assert(entryNames(s"$pubDir/sidestream/2017/03/16/$fix2").nonEmpty)
-    assert(entryNames(
-      s"$privDir/sidestream/2017/03/16/${fix2.replace(".tgz", "-e.tgz")}").nonEmpty)
+    val pubDay = s"$pubDir/sidestream/2017/03/16"
+    val privDay = s"$privDir/sidestream/2017/03/16"
+    assert(entryNames(s"$pubDay/$fix2").nonEmpty)
+    assert(entryNames(s"$privDay/${fix2.replace(".tgz", "-e.tgz")}").nonEmpty)
+    val eSrcPriv = eSrc.replace(".tgz", "-e.tgz")
+    assert(eSrcPriv.endsWith("-0001-e-e.tgz"))
+    assert(entryNames(s"$pubDay/$eSrc") === entryNames(s"$pubDay/$fix2"))
+    assert(entryNames(s"$privDay/$eSrcPriv") ===
+      entryNames(s"$privDay/${fix2.replace(".tgz", "-e.tgz")}"))
+    assert(!Files.exists(java.nio.file.Paths.get(s"$privDay/$eSrc")))
+    assert(!Files.exists(java.nio.file.Paths.get(s"$pubDay/$eSrcPriv")))
     assert(get("/submit?date=20250101")._1 === 200) // no data staged there
     assert(get("/submit?date=2017031")._1 === 500)  // malformed date
+    // after the file submit (earlier test) and the day submit, no staging
+    // is left anywhere in either store
+    for (store <- Seq(pubDir, privDir)) {
+      val walk = Files.walk(java.nio.file.Paths.get(store))
+      val staging =
+        try walk.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path].getFileName.toString)
+          .filter(n => n.startsWith(".split_tmp") || n.startsWith("_tmp"))
+        finally walk.close()
+      assert(staging.isEmpty, s"$store holds staging entries $staging")
+    }
   }
 
   test("/cron/update_embargo_whitelist reloads the site feed into the whitelist store") {

@@ -23,57 +23,144 @@ class NoRenameFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
       s"rename is not atomic on this store: $src -> $dst")
 }
 
+/** [[NoRenameFileSystem]] under an object-store scheme, so
+  * [[CommitProtocol.forPath]] picks [[CopyCommit]] for its paths.
+  */
+class NoRenameObjectStore extends NoRenameFileSystem {
+  override def getScheme: String = "gs"
+  override def getUri: java.net.URI = java.net.URI.create("gs://graft-test/")
+}
+
 class TgzSinkCommitSpec extends AnyFunSuite with SparkSuite {
 
   private def sconf() =
     new SerializableHadoopConf(
       org.apache.spark.sql.graft.bridge.sessionHadoopConf(spark))
 
+  /** One call's staging under `outDir`, created empty — the layout
+    * `writeSplit` makes before its write job.
+    */
+  private def stagedTarget(outDir: String,
+                           protocol: CommitProtocol = RenameCommit): TgzSink.Target = {
+    val t = TgzSink.Target(outDir, "call-1", protocol)
+    Files.createDirectories(Paths.get(t.staging.toString))
+    t
+  }
+
+  private def names(dir: String): Seq[String] = {
+    val s = Files.list(Paths.get(dir))
+    try s.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path].getFileName.toString).sorted
+    finally s.close()
+  }
+
+  /** Names directly under `dir` that look like split staging. */
+  private def stagingEntries(dir: String): Seq[String] = names(dir).filter(_.startsWith("_tmp"))
+
+  /** What a Spark listing of `dir` sees: no `_` staging, no `.` checksums. */
+  private def visibleNames(dir: String): Seq[String] =
+    names(dir).filterNot(n => n.startsWith("_") || n.startsWith("."))
+
+  private def fixtureRouted() = {
+    import graft.queries.TarQueries.{FixtureCutoff, FixtureTgz, FixtureWhitelist}
+    graft.ops.EmbargoSplit.route(TgzSource.entries(spark, FixtureTgz),
+      TgzSource.whitelist(spark, FixtureWhitelist), FixtureCutoff)
+  }
+
+  private val fixtureBase = {
+    val t = graft.queries.TarQueries.FixtureTgz
+    t.substring(t.lastIndexOf('/') + 1)
+  }
+
+  private def entryCount(localTgz: String): Int =
+    TgzSource.readTgzStream(fixtureBase,
+      Files.newInputStream(Paths.get(localTgz))).size
+
   test("commit publishes marked attempts and drops unmarked mid-write debris") {
     val outDir = Files.createTempDirectory("graft-commit").toString
-    Files.createDirectories(Paths.get(s"$outDir/_tmp"))
+    val t = stagedTarget(outDir)
     // complete attempt 3 (marked) vs a KILLED attempt 9 that wrote more
     // bytes but never closed — the higher attempt id must not win
-    Files.write(Paths.get(s"$outDir/_tmp/x.tgz.p0.a3.done"), "COMPLETE".getBytes)
-    Files.write(Paths.get(s"$outDir/_tmp/x.tgz.p0.a9"), "TRUNCATED-BUT-LONGER".getBytes)
+    Files.write(Paths.get(s"${t.staging}/x.tgz.p0.a3.done"), "COMPLETE".getBytes)
+    Files.write(Paths.get(s"${t.staging}/x.tgz.p0.a9"), "TRUNCATED-BUT-LONGER".getBytes)
     // a second final name whose only attempt is unmarked: nothing published
-    Files.write(Paths.get(s"$outDir/_tmp/y.tgz.p1.a1"), "DEAD".getBytes)
+    Files.write(Paths.get(s"${t.staging}/y.tgz.p1.a1"), "DEAD".getBytes)
 
-    TgzSink.commit(spark, outDir, sconf())
+    TgzSink.commit(spark, Seq(t), sconf())
 
     assert(Files.readString(Paths.get(s"$outDir/x.tgz")) === "COMPLETE")
     assert(!Files.exists(Paths.get(s"$outDir/y.tgz")))
-    assert(!Files.exists(Paths.get(s"$outDir/_tmp"))) // staging cleaned up
+    assert(!Files.exists(Paths.get(t.staging.toString))) // staging cleaned up
   }
 
   test("commit picks the latest marked attempt of duplicate successes") {
     val outDir = Files.createTempDirectory("graft-commit2").toString
-    Files.createDirectories(Paths.get(s"$outDir/_tmp"))
-    Files.write(Paths.get(s"$outDir/_tmp/z.tgz.p2.a4.done"), "EARLY".getBytes)
-    Files.write(Paths.get(s"$outDir/_tmp/z.tgz.p2.a7.done"), "LATE".getBytes)
+    val t = stagedTarget(outDir)
+    Files.write(Paths.get(s"${t.staging}/z.tgz.p2.a4.done"), "EARLY".getBytes)
+    Files.write(Paths.get(s"${t.staging}/z.tgz.p2.a7.done"), "LATE".getBytes)
 
-    TgzSink.commit(spark, outDir, sconf())
+    TgzSink.commit(spark, Seq(t), sconf())
 
     assert(Files.readString(Paths.get(s"$outDir/z.tgz")) === "LATE")
   }
 
   test("CopyCommit publishes from marker files with copy-then-verify") {
     val outDir = Files.createTempDirectory("graft-commit-cp").toString
-    Files.createDirectories(Paths.get(s"$outDir/_tmp"))
+    val t = stagedTarget(outDir, CopyCommit)
     // marker-file protocol: the data file sits beside a zero-byte marker
-    Files.write(Paths.get(s"$outDir/_tmp/x.tgz.p0.a3"), "COMPLETE".getBytes)
-    Files.write(Paths.get(s"$outDir/_tmp/x.tgz.p0.a3.done"), "k".getBytes)
+    Files.write(Paths.get(s"${t.staging}/x.tgz.p0.a3"), "COMPLETE".getBytes)
+    Files.write(Paths.get(s"${t.staging}/x.tgz.p0.a3.done"), "k".getBytes)
     // unmarked mid-write debris must still lose
-    Files.write(Paths.get(s"$outDir/_tmp/x.tgz.p0.a9"), "TRUNCATED-LONGER".getBytes)
+    Files.write(Paths.get(s"${t.staging}/x.tgz.p0.a9"), "TRUNCATED-LONGER".getBytes)
 
-    TgzSink.commit(spark, outDir, sconf(), CopyCommit)
+    TgzSink.commit(spark, Seq(t), sconf())
 
     assert(Files.readString(Paths.get(s"$outDir/x.tgz")) === "COMPLETE")
-    assert(!Files.exists(Paths.get(s"$outDir/_tmp")))
+    assert(!Files.exists(Paths.get(t.staging.toString)))
+  }
+
+  test("one election covers two targets: each winner lands in its own root") {
+    val pubDir = Files.createTempDirectory("graft-commit-pub").toString
+    val privDir = Files.createTempDirectory("graft-commit-priv").toString
+    val pub = stagedTarget(pubDir)
+    val priv = stagedTarget(privDir, CopyCommit)
+    // the same final name staged in both roots is two outputs, not a
+    // cross-partition conflict: a source named `a-e.tgz` has its public
+    // half `a-e.tgz`, and source `a.tgz` its private half `a-e.tgz`
+    Files.write(Paths.get(s"${pub.staging}/a-e.tgz.p0.a1.done"), "PUBLIC".getBytes)
+    Files.write(Paths.get(s"${priv.staging}/a-e.tgz.p1.a2"), "PRIVATE".getBytes)
+    Files.write(Paths.get(s"${priv.staging}/a-e.tgz.p1.a2.done"), "k".getBytes)
+
+    TgzSink.commit(spark, Seq(pub, priv), sconf())
+
+    assert(Files.readString(Paths.get(s"$pubDir/a-e.tgz")) === "PUBLIC")
+    assert(Files.readString(Paths.get(s"$privDir/a-e.tgz")) === "PRIVATE")
+    assert(stagingEntries(pubDir).isEmpty && stagingEntries(privDir).isEmpty)
+  }
+
+  test("writeSplit leaves a concurrent writer's staged files in the same root alone") {
+    val outDir = Files.createTempDirectory("graft-commit-conc").toString
+    // another writer's marked, complete staged file, mid-way through its
+    // own commit: in another call's staging dir, and in the `_tmp` dir an
+    // earlier build's writers share
+    val planted = Seq(
+      Paths.get(s"$outDir/_tmp-other-call/w.tgz.p0.a1.done"),
+      Paths.get(s"$outDir/_tmp/w.tgz.p0.a1.done"))
+    planted.foreach { p =>
+      Files.createDirectories(p.getParent)
+      Files.write(p, "OTHER-WRITER".getBytes)
+    }
+
+    TgzSink.writeSplit(fixtureRouted(), outDir)
+
+    // neither deleted nor published by this call
+    planted.foreach(p => assert(Files.readString(p) === "OTHER-WRITER", p))
+    assert(!Files.exists(Paths.get(s"$outDir/w.tgz")))
+    // this call published its own halves and removed only its own staging
+    assert(entryCount(s"$outDir/$fixtureBase") === 145)
+    assert(stagingEntries(outDir) === Seq("_tmp", "_tmp-other-call"))
   }
 
   test("CopyCommit end-to-end split on a store with NO working rename") {
-    import graft.queries.TarQueries.{FixtureCutoff, FixtureTgz, FixtureWhitelist}
     // register a FileSystem whose rename always throws — the object-store
     // failure mode the protocol exists for (the reference's production
     // promote path is a GCS server-side copy,
@@ -81,34 +168,47 @@ class TgzSinkCommitSpec extends AnyFunSuite with SparkSuite {
     // copy+delete and non-atomic)
     spark.sparkContext.hadoopConfiguration
       .set("fs.nar.impl", classOf[NoRenameFileSystem].getName)
-    val local = Files.createTempDirectory("graft-nar").toString
-    val outDir = s"nar://$local"
+    // the public and private halves on two different nar:// roots
+    val localPub = Files.createTempDirectory("graft-nar-pub").toString
+    val localPriv = Files.createTempDirectory("graft-nar-priv").toString
 
-    val entries = TgzSource.entries(spark, FixtureTgz)
-    val wl = TgzSource.whitelist(spark, FixtureWhitelist)
-    val routed = graft.ops.EmbargoSplit.route(entries, wl, FixtureCutoff)
-    TgzSink.writeSplit(routed, outDir, CopyCommit)
+    val routed = fixtureRouted()
+    TgzSink.writeSplit(routed, s"nar://$localPub", s"nar://$localPriv",
+      CopyCommit, CopyCommit)
 
-    val base = FixtureTgz.substring(FixtureTgz.lastIndexOf('/') + 1)
-    val pub = TgzSource.readTgzStream(base,
-      Files.newInputStream(Paths.get(s"$local/$base"))).toSeq
-    val priv = TgzSource.readTgzStream(base,
-      Files.newInputStream(
-        Paths.get(s"$local/${base.replace(".tgz", "-e.tgz")}"))).toSeq
-    assert(pub.length === 145 && priv.length === 59)
-    assert(!Files.exists(Paths.get(s"$local/_tmp")))
+    assert(entryCount(s"$localPub/$fixtureBase") === 145)
+    assert(entryCount(s"$localPriv/${fixtureBase.replace(".tgz", "-e.tgz")}") === 59)
+    assert(stagingEntries(localPub).isEmpty && stagingEntries(localPriv).isEmpty)
 
     // non-vacuity: the rename-marking protocol on the same store fails —
     // the wrapper really has no rename, so a green CopyCommit run proves
     // the path is rename-free end to end
     val out2 = s"nar://${Files.createTempDirectory("graft-nar2")}"
     val e = intercept[Exception] {
-      TgzSink.writeSplit(routed, out2, RenameCommit)
+      TgzSink.writeSplit(routed, out2, out2, RenameCommit, RenameCommit)
     }
     def chain(t: Throwable): Seq[Throwable] =
       if (t == null) Nil else t +: chain(t.getCause)
     assert(chain(e).exists(_.getMessage != null)
       && chain(e).exists(c => Option(c.getMessage).exists(_.contains("rename"))))
+  }
+
+  test("each root resolves its own protocol: an object-store root never sees rename") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.gs.impl", classOf[NoRenameObjectStore].getName)
+    // public half on a posix dir (RenameCommit), private half on a
+    // rename-less store under an object-store scheme (CopyCommit)
+    val pubDir = Files.createTempDirectory("graft-mixed-pub").toString
+    val localPriv = Files.createTempDirectory("graft-mixed-priv").toString
+
+    TgzSink.writeSplit(fixtureRouted(), pubDir, s"gs://graft-test$localPriv")
+
+    val privName = fixtureBase.replace(".tgz", "-e.tgz")
+    assert(visibleNames(pubDir) === Seq(fixtureBase))
+    assert(visibleNames(localPriv) === Seq(privName))
+    assert(entryCount(s"$pubDir/$fixtureBase") === 145)
+    assert(entryCount(s"$localPriv/$privName") === 59)
+    assert(stagingEntries(pubDir).isEmpty && stagingEntries(localPriv).isEmpty)
   }
 
   test("commit protocol auto-detect: object-store schemes get CopyCommit") {
@@ -121,12 +221,12 @@ class TgzSinkCommitSpec extends AnyFunSuite with SparkSuite {
 
   test("commit still rejects a final name marked by two partitions") {
     val outDir = Files.createTempDirectory("graft-commit3").toString
-    Files.createDirectories(Paths.get(s"$outDir/_tmp"))
-    Files.write(Paths.get(s"$outDir/_tmp/w.tgz.p0.a1.done"), "P0".getBytes)
-    Files.write(Paths.get(s"$outDir/_tmp/w.tgz.p1.a2.done"), "P1".getBytes)
+    val t = stagedTarget(outDir)
+    Files.write(Paths.get(s"${t.staging}/w.tgz.p0.a1.done"), "P0".getBytes)
+    Files.write(Paths.get(s"${t.staging}/w.tgz.p1.a2.done"), "P1".getBytes)
 
     val e = intercept[IllegalStateException] {
-      TgzSink.commit(spark, outDir, sconf())
+      TgzSink.commit(spark, Seq(t), sconf())
     }
     assert(e.getMessage.contains("split across partitions"))
     assert(!Files.exists(Paths.get(s"$outDir/w.tgz")))
