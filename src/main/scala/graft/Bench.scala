@@ -21,17 +21,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Tables.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // ContextCleaner is GC-driven: with a large, un-pressured heap the
-      // default 30min periodic GC means shuffle files/broadcasts from ~100
-      // query executions accumulate for the whole bench run and later
-      // queries degrade. Keep the cleaner live.
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.localSession(cpus, "WARN")
     // The four global-window queries (w1/w2/o1 + percentile ranks) emit a
     // "No Partition Defined for Window operation" WARN per task — ~200
     // lines per bench run, which flooded the driver's bounded stdout tail

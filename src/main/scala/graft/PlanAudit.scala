@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump formatted plans for the scale-critical queries so shuffle
   * counts, broadcast choices, and pushed filters can be audited by eye
   * (`runMain graft.PlanAudit [sfDir] [name ...]`).
@@ -13,12 +11,7 @@ object PlanAudit {
       else Seq("p3_route_counts", "d2_minhash_neardup", "d7_dup_clusters",
         "d9_semdedup", "n1_ann_topk", "n2_ann_ivf", "q3_join_agg",
         "q8_bucketed_join", "s1_prefix_scan", "e1_split_counts")
-    val spark = Tables.configure(SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Tables.localSession("4", "ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")
       println(SparkEntry.queries(n)(spark, sfDir).queryExecution.explainString(

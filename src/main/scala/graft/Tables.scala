@@ -44,6 +44,19 @@ object Tables {
       // accumulate until later queries degrade. Keep the cleaner live.
       .config("spark.cleaner.periodicGC.interval", "30s")
 
+  /** The session every graft main runs on: [[configure]]d, `local[cpus]`
+    * with one shuffle partition per core, no UI.
+    */
+  def localSession(cpus: String, logLevel: String): SparkSession = {
+    val spark = configure(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.ui.enabled", "false"))
+      .getOrCreate()
+    spark.sparkContext.setLogLevel(logLevel)
+    spark
+  }
+
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
     spark.read.parquet(s"$sfDir/$name.parquet")
 

@@ -207,8 +207,7 @@ object Service {
       * — the reference's bucket listing just comes back empty.
       */
     private def embargoDay(date: String): Unit = {
-      val prefix =
-        s"sidestream/${date.substring(0, 4)}/${date.substring(4, 6)}/${date.substring(6, 8)}"
+      val prefix = Unembargo.dayPrefix(date.toInt)
       val dayPath = new Path(s"${cfg.srcDir}/$prefix")
       val dayFs = dayPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
       // an absent day dir globs to nothing, like an empty one

@@ -23,6 +23,10 @@ object Unembargo {
   def validDate(dateInt: Int, cutoffDateInt: Int): Boolean =
     dateInt > 20160000 && dateInt <= 21000000 && dateInt <= cutoffDateInt
 
+  /** A day's object prefix in either store: `sidestream/yyyy/mm/dd`. */
+  def dayPrefix(dateInt: Int): String =
+    f"sidestream/${dateInt / 10000}%04d/${dateInt / 100 % 100}%02d/${dateInt % 100}%02d"
+
   /** Promote one day: every `-e.tgz` under the day prefix in `srcDir` is
     * copied into `dstDir` (overwrite). Returns (copied, overwritten).
     *
@@ -36,7 +40,7 @@ object Unembargo {
                  dateInt: Int, cutoffDateInt: Int): (Long, Long) = {
     require(validDate(dateInt, cutoffDateInt),
       s"date $dateInt outside (20160000, 21000000] or newer than cutoff $cutoffDateInt")
-    val prefix = f"sidestream/${dateInt / 10000}%04d/${dateInt / 100 % 100}%02d/${dateInt % 100}%02d"
+    val prefix = dayPrefix(dateInt)
     val srcDay = s"$srcDir/$prefix"
     val dstDay = s"$dstDir/$prefix"
     FsOps.mkdirs(spark, dstDay)

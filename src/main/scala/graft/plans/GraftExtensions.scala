@@ -21,110 +21,63 @@ import graft.functions.{CanonicalIp, CharGramHashes, ExtractLocalIp, Md5Prefix, 
   * codegen'd Catalyst expressions — no serialization wall in SQL either.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  private def unary(name: String, clazz: Class[_], build: Expression => Expression)
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = {
-    val builder: Seq[Expression] => Expression = {
-      case Seq(child) => build(child)
-      case args => throw new IllegalArgumentException(
-        s"$name expects 1 argument, got ${args.length}")
-    }
-    (FunctionIdentifier(name),
-      new ExpressionInfo(clazz.getCanonicalName, name),
-      builder)
-  }
-
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(unary("local_ip", classOf[ExtractLocalIp], ExtractLocalIp))
-    ext.injectFunction(unary("normalize_ip", classOf[NormalizeIp], NormalizeIp))
-    ext.injectFunction(unary("canonical_ip", classOf[CanonicalIp], CanonicalIp))
-    ext.injectFunction(unary("rolling_hash", classOf[RollingHash], RollingHash))
-    ext.injectFunction(unary("nfc_normalize", classOf[NfcNormalize], NfcNormalize))
-    ext.injectFunction(unary("strip_accents", classOf[StripAccents], StripAccents))
-    ext.injectFunction(unary("simhash48", classOf[Simhash48], Simhash48))
-    ext.injectFunction(GraftExtensions.md5PrefixEntry)
-    ext.injectFunction(GraftExtensions.wordShingleHashesEntry)
-    ext.injectFunction(GraftExtensions.charGramHashesEntry)
-    ext.injectFunction(GraftExtensions.minhashBandKeysEntry)
-    ext.injectFunction(GraftExtensions.explodeTarEntry)
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftExtensions.entries.foreach(ext.injectFunction)
 }
 
 object GraftExtensions {
 
-  private[plans] val explodeTarEntry
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("explode_tar"),
-      new ExpressionInfo(classOf[ExplodeTar].getCanonicalName, "explode_tar"),
-      { case Seq(p, c) => ExplodeTar(p, c)
-        case args => throw new IllegalArgumentException(
-          s"explode_tar expects (path, content), got ${args.length} args") })
+  private[plans] type Entry = (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
 
-  private[plans] val md5PrefixEntry
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("md5_prefix"),
-      new ExpressionInfo(classOf[Md5Prefix].getCanonicalName, "md5_prefix"),
-      { case Seq(c, n) if n.foldable =>
-          Md5Prefix(c, n.eval().asInstanceOf[Number].intValue)
-        case args => throw new IllegalArgumentException(
-          s"md5_prefix expects (str, constant nBytes), got ${args.length} args") })
+  private def entry(name: String, clazz: Class[_], usage: String)
+                   (build: PartialFunction[Seq[Expression], Expression]): Entry =
+    (FunctionIdentifier(name),
+      new ExpressionInfo(clazz.getCanonicalName, name),
+      args => build.applyOrElse(args, (_: Seq[Expression]) =>
+        throw new IllegalArgumentException(
+          s"$name expects $usage, got ${args.length} args")))
+
+  private def unary(name: String, clazz: Class[_], build: Expression => Expression): Entry =
+    entry(name, clazz, "1 argument") { case Seq(child) => build(child) }
 
   private def intArg(e: Expression): Int = e.eval().asInstanceOf[Number].intValue
 
-  private[plans] val wordShingleHashesEntry
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("word_shingle_hashes"),
-      new ExpressionInfo(classOf[WordShingleHashes].getCanonicalName, "word_shingle_hashes"),
-      { case Seq(toks, w, n) if w.foldable && n.foldable =>
-          WordShingleHashes(toks, intArg(w), intArg(n))
-        case args => throw new IllegalArgumentException(
-          s"word_shingle_hashes expects (tokens, constant w, constant nBytes), got ${args.length} args") })
-
-  private[plans] val charGramHashesEntry
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("char_gram_hashes"),
-      new ExpressionInfo(classOf[CharGramHashes].getCanonicalName, "char_gram_hashes"),
-      { case Seq(text, n, b) if n.foldable && b.foldable =>
-          CharGramHashes(text, intArg(n), intArg(b))
-        case args => throw new IllegalArgumentException(
-          s"char_gram_hashes expects (text, constant n, constant nBytes), got ${args.length} args") })
-
-  private[plans] val minhashBandKeysEntry
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("minhash_band_keys"),
-      new ExpressionInfo(classOf[MinhashBandKeys].getCanonicalName, "minhash_band_keys"),
-      { case Seq(shingles, nb, rb) if nb.foldable && rb.foldable =>
-          MinhashBandKeys(shingles, intArg(nb), intArg(rb))
-        case args => throw new IllegalArgumentException(
-          s"minhash_band_keys expects (shingles, constant numBands, constant rowsPerBand), got ${args.length} args") })
+  /** Every SQL function graft exposes — one table for both [[apply]]
+    * (session build) and [[register]] (an existing session).
+    */
+  private[plans] val entries: Seq[Entry] = Seq(
+    unary("local_ip", classOf[ExtractLocalIp], ExtractLocalIp),
+    unary("normalize_ip", classOf[NormalizeIp], NormalizeIp),
+    unary("canonical_ip", classOf[CanonicalIp], CanonicalIp),
+    unary("rolling_hash", classOf[RollingHash], RollingHash),
+    unary("nfc_normalize", classOf[NfcNormalize], NfcNormalize),
+    unary("strip_accents", classOf[StripAccents], StripAccents),
+    unary("simhash48", classOf[Simhash48], Simhash48),
+    entry("md5_prefix", classOf[Md5Prefix], "(str, constant nBytes)") {
+      case Seq(c, n) if n.foldable => Md5Prefix(c, intArg(n))
+    },
+    entry("word_shingle_hashes", classOf[WordShingleHashes],
+        "(tokens, constant w, constant nBytes)") {
+      case Seq(toks, w, n) if w.foldable && n.foldable =>
+        WordShingleHashes(toks, intArg(w), intArg(n))
+    },
+    entry("char_gram_hashes", classOf[CharGramHashes],
+        "(text, constant n, constant nBytes)") {
+      case Seq(text, n, b) if n.foldable && b.foldable =>
+        CharGramHashes(text, intArg(n), intArg(b))
+    },
+    entry("minhash_band_keys", classOf[MinhashBandKeys],
+        "(shingles, constant numBands, constant rowsPerBand)") {
+      case Seq(shingles, nb, rb) if nb.foldable && rb.foldable =>
+        MinhashBandKeys(shingles, intArg(nb), intArg(rb))
+    },
+    entry("explode_tar", classOf[ExplodeTar], "(path, content)") {
+      case Seq(p, c) => ExplodeTar(p, c)
+    })
 
   /** Imperative registration for an existing session (tests, shells). */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     val reg: FunctionRegistry = spark.sessionState.functionRegistry
-    reg.registerFunction(FunctionIdentifier("local_ip"),
-      new ExpressionInfo(classOf[ExtractLocalIp].getCanonicalName, "local_ip"),
-      { case Seq(c) => ExtractLocalIp(c) })
-    reg.registerFunction(FunctionIdentifier("normalize_ip"),
-      new ExpressionInfo(classOf[NormalizeIp].getCanonicalName, "normalize_ip"),
-      { case Seq(c) => NormalizeIp(c) })
-    reg.registerFunction(FunctionIdentifier("canonical_ip"),
-      new ExpressionInfo(classOf[CanonicalIp].getCanonicalName, "canonical_ip"),
-      { case Seq(c) => CanonicalIp(c) })
-    reg.registerFunction(FunctionIdentifier("rolling_hash"),
-      new ExpressionInfo(classOf[RollingHash].getCanonicalName, "rolling_hash"),
-      { case Seq(c) => RollingHash(c) })
-    reg.registerFunction(FunctionIdentifier("simhash48"),
-      new ExpressionInfo(classOf[Simhash48].getCanonicalName, "simhash48"),
-      { case Seq(c) => Simhash48(c) })
-    reg.registerFunction(FunctionIdentifier("nfc_normalize"),
-      new ExpressionInfo(classOf[NfcNormalize].getCanonicalName, "nfc_normalize"),
-      { case Seq(c) => NfcNormalize(c) })
-    reg.registerFunction(FunctionIdentifier("strip_accents"),
-      new ExpressionInfo(classOf[StripAccents].getCanonicalName, "strip_accents"),
-      { case Seq(c) => StripAccents(c) })
-    Seq(md5PrefixEntry, wordShingleHashesEntry, charGramHashesEntry,
-      minhashBandKeysEntry, explodeTarEntry).foreach { case (id, info, builder) =>
-      reg.registerFunction(id, info, builder)
-    }
+    entries.foreach { case (id, info, builder) => reg.registerFunction(id, info, builder) }
   }
 }

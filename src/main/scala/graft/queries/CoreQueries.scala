@@ -990,6 +990,18 @@ object CoreQueries {
       |       COUNT(*) FILTER (event_id % 50 = 0) AS n_bad
       |FROM events GROUP BY 1""".stripMargin
 
+  /** Stages the partitioned events layout at [[PartitionPruneDir]], shared
+    * by q9 and q10 (staging the identical layout twice doubled the
+    * full-corpus partitioned write per bench run).
+    */
+  private def ensurePartitionedEvents(spark: SparkSession, sfDir: String): Unit =
+    Staged("q9_events_p", sfDir, Seq(PartitionPruneDir)) {
+      graft.ops.Scale.writePartitioned(
+        Tables.events(spark, sfDir)
+          .select(col("event_type"), col("user_id"), col("value")),
+        PartitionPruneDir, "event_type")
+    }
+
   /** Q9 — partitioned write → pruned scan ([[graft.ops.Scale.writePartitioned]]):
     * events staged into one directory per event_type, read back with a
     * partition-column filter that must prune at planning time (directory
@@ -998,26 +1010,6 @@ object CoreQueries {
     * a partition dropped on write, mis-assigned rows, or a filter that
     * silently became a row filter over the full scan all break the hash.
     */
-  /** The sfDir whose partitioned events layout is CURRENTLY staged at
-    * [[PartitionPruneDir]] (shared by q9 and q10 — staging the identical
-    * layout twice doubled the full-corpus partitioned write per bench
-    * run). Current-value marker, not a seen-set: the path is fixed, so
-    * staleness is "holds a different corpus" (the n7 pattern).
-    */
-  private val partitionedStagedFor =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-
-  private def ensurePartitionedEvents(spark: SparkSession, sfDir: String): Unit =
-    partitionedStagedFor.synchronized {
-      if (partitionedStagedFor.get != sfDir) {
-        graft.ops.Scale.writePartitioned(
-          Tables.events(spark, sfDir)
-            .select(col("event_type"), col("user_id"), col("value")),
-          PartitionPruneDir, "event_type")
-        partitionedStagedFor.set(sfDir)
-      }
-    }
-
   def partitionPrune(spark: SparkSession, sfDir: String): DataFrame = {
     ensurePartitionedEvents(spark, sfDir)
     partitionPruneRead(spark)
@@ -1193,10 +1185,6 @@ object CoreQueries {
       |       CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
       |FROM s GROUP BY user_id, sid""".stripMargin
 
-  /** sfDirs whose st7 source files are already staged in this JVM. */
-  private val st7Staged =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** ST7 — WATERMARKED streaming dedup
     * ([[graft.streaming.EventSessions.dedupStream]] →
     * `dropDuplicatesWithinWatermark`): the state-bounded production form
@@ -1216,8 +1204,7 @@ object CoreQueries {
     val src = TarQueries.stagePath("st7_src", sfDir) + ".parquet"
     val out = s"${TarQueries.StageDir}/st7_dedup.parquet"
     graft.io.FsOps.deletePrefix(spark, out)
-    st7Staged.computeIfAbsent(sfDir, _ => {
-      graft.io.FsOps.deletePrefix(spark, src)
+    Staged("st7_src", sfDir, Seq(src)) {
       val ev = Tables.events(spark, sfDir)
         .select(col("event_id"), col("user_id"), col("ts"))
       // one base file (all originals), one copies file: the graded
@@ -1229,8 +1216,7 @@ object CoreQueries {
       // planted duplicates: full-row copies arriving after their originals
       ev.filter(col("event_id") % 20 === 0)
         .repartition(1).write.mode("append").parquet(src)
-      src
-    })
+    }
     val ckpt = java.nio.file.Files.createTempDirectory("graft-st7")
       .resolve("ckpt").toString
     val stream = spark.readStream.schema(spark.read.parquet(src).schema)

@@ -19,10 +19,6 @@ import graft.ops.Dedup
   */
 object DedupQueries {
 
-  /** sfDirs whose st3 source files are already staged in this JVM. */
-  private val st3Staged =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** The augmented corpus' row count, from the memoized count of the BASE
     * table ([[Tables.rowCount]]) plus the augmentation ratio (`corpus()`
     * adds a copy per 20th and per 25th doc) — the self-sizing input for
@@ -196,8 +192,7 @@ object DedupQueries {
     // the staged source is a deterministic function of sfDir — stage it
     // once per JVM so repeat timings measure the DRAIN (the operator under
     // test), not a rewrite of the same three files
-    st3Staged.computeIfAbsent(sfDir, _ => {
-      graft.io.FsOps.deletePrefix(spark, src)
+    Staged("st3_src", sfDir, Seq(src)) {
       val docs = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
       // one base file, not two: the graded property is the copies file
       // deduping against state from an EARLIER batch — two batches
@@ -206,8 +201,7 @@ object DedupQueries {
       docs.repartition(1).write.mode("overwrite").parquet(src)
       docs.filter(col("doc_id") % 25 === 0)
         .repartition(1).write.mode("append").parquet(src)
-      src
-    })
+    }
     val ckpt = java.nio.file.Files.createTempDirectory("graft-st3")
       .resolve("ckpt").toString
     val stream = spark.readStream.schema(spark.read.parquet(src).schema)

@@ -659,16 +659,6 @@ object MultimodalQueries {
        |WHERE doc_id NOT IN (SELECT media_id FROM drops)
        |GROUP BY 1""".stripMargin
 
-  /** sfDirs whose st9 corpus hashes are already staged in this JVM (the
-    * staged path embeds the sfDir, so a seen-set memo is safe here).
-    */
-  private val st9CorpusStaged =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** sfDirs whose st9 arrival image files are already staged in this JVM. */
-  private val st9Staged =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** ST9 — streaming image-ingest dedup ([[graft.streaming.StreamPHash]]):
     * the corpus pHash table builds offline (batch m8 over the gradient
     * corpus, staged to parquet), then "arriving" images — variant-2
@@ -682,16 +672,14 @@ object MultimodalQueries {
     */
   def streamPhashDedup(spark: SparkSession, sfDir: String): DataFrame = {
     val corpusHashPath = TarQueries.stagePath("st9_corpus_ph", sfDir)
-    st9CorpusStaged.computeIfAbsent(sfDir, _ => {
+    Staged("st9_corpus_ph", sfDir, Seq(corpusHashPath)) {
       phash(spark, sfDir)
         .select(col("media_id").as("doc_id"), col("phash").as("simhash"))
         .write.mode("overwrite").parquet(corpusHashPath)
-      sfDir
-    })
+    }
     val src = TarQueries.stagePath("st9_arrivals", sfDir)
-    st9Staged.computeIfAbsent(sfDir, _ => {
+    Staged("st9_arrivals", sfDir, Seq(src)) {
       import spark.implicits._
-      graft.io.FsOps.deletePrefix(spark, src)
       val arrivals = Tables.documents(spark, sfDir)
         .select(col("doc_id")).filter(col("doc_id") % 3 === 0)
         .as[Long]
@@ -704,8 +692,7 @@ object MultimodalQueries {
         .repartition(1).write.mode("overwrite").parquet(src)
       arrivals.filter(col("media_id") % 2 === 1)
         .repartition(1).write.mode("append").parquet(src)
-      src
-    })
+    }
     val out = s"${TarQueries.StageDir}/st9_matches.parquet"
     graft.io.FsOps.deletePrefix(spark, out)
     val ckpt = java.nio.file.Files.createTempDirectory("graft-st9")

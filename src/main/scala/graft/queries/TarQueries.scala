@@ -50,11 +50,9 @@ object TarQueries {
     */
   val StageDir = "/tmp/graft_stage"
 
-  /** Per-sfDir staging path for the streaming sources: their per-JVM
-    * staging memos key on sfDir, so the staged FILES must too — with a
-    * shared fixed path, staging corpus B after corpus A and then
-    * re-running A would hit A's memo, skip restaging, and drain B's
-    * files against A's oracle.
+  /** Per-sfDir staging path for the streaming sources ([[Staged]]): each
+    * corpus stages into its own files, so restaging corpus B never
+    * deletes or overwrites the files a reader of corpus A is draining.
     */
   def stagePath(name: String, sfDir: String): String = {
     // full md5 of the sfDir, not its 32-bit hashCode — a hashCode

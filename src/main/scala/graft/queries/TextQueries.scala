@@ -1757,9 +1757,6 @@ object TextQueries {
        |       CAST(MAX(pos) AS BIGINT) AS last_pos
        |FROM c GROUP BY 1""".stripMargin
 
-  /** sfDirs whose c3 multi-file stream source is already staged this JVM. */
-  private val c3Staged = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** C3 — the STREAMING corpus capstone ([[graft.streaming.StreamCorpus]]):
     * c1's ingest door run in production shape — one AvailableNow drain
     * composing the st6 LM gate (batch-trained broadcast model, stateless
@@ -1777,8 +1774,7 @@ object TextQueries {
     val src = TarQueries.stagePath("c3_src", sfDir) + ".parquet"
     val out = s"${TarQueries.StageDir}/c3_corpus.parquet"
     graft.io.FsOps.deletePrefix(spark, out)
-    c3Staged.computeIfAbsent(sfDir, _ => {
-      graft.io.FsOps.deletePrefix(spark, src)
+    Staged("c3_src", sfDir, Seq(src)) {
       val docs = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
       // one base file (the st3/r21 trim): the graded property is the
       // re-delivery file falling to cross-batch state — two batches
@@ -1788,8 +1784,7 @@ object TextQueries {
       // micro-batch and must fall to cross-batch dedup state
       docs.filter(col("doc_id") % 25 === 0)
         .repartition(1).write.mode("append").parquet(src)
-      src
-    })
+    }
     val d = Tables.documents(spark, sfDir)
       .filter(length(col("text")) >= 2)
       .select(col("doc_id"), lower(col("text")).as("t"))

@@ -33,12 +33,7 @@ object GenScale {
     val Array(srcDir, outDir, factorStr) = args
     val factor = factorStr.toInt
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.Tables.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Tables.localSession(cpus, "WARN")
     try generate(spark, srcDir, outDir, factor)
     finally spark.stop()
   }

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Job-level cost decomposition for batch queries (guide §1): runs the
   * named declared queries with a SparkListener and prints every Spark
@@ -19,12 +18,7 @@ object JobProf {
       .getOrElse(Seq("g1_pagerank"))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.Tables.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Tables.localSession(cpus, "ERROR")
     // A/B knob: SPARK_EXTRA_CONF="k=v;k=v" session-conf overrides
     sys.env.get("SPARK_EXTRA_CONF").foreach(_.split(";").filter(_.contains("="))
       .foreach { kv =>

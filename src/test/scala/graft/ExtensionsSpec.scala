@@ -35,6 +35,11 @@ class ExtensionsSpec extends AnyFunSuite with SparkSuite {
     assert(row.getString(1) === "2001:4c08:2003:3f::230")
     assert(row.getString(2) === "")
     assert(row.getLong(3) === graft.functions.HashFunctions.rollingHash("hello world"))
+    // a wrong arity names the function, as the injected builders do
+    val e = intercept[IllegalArgumentException] {
+      spark.sql("SELECT local_ip('a', 'b')").collect()
+    }
+    assert(e.getMessage.contains("local_ip expects 1 argument, got 2"))
   }
 
   test("canonical_ip / md5_prefix usable from SQL") {
