@@ -2,8 +2,6 @@ package graft.io
 
 import java.util
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow

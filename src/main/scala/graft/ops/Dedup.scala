@@ -446,7 +446,7 @@ object Dedup {
   private def nearDupsFromSets(rawSets: DataFrame, threshold: Double,
                                numBands: Int, rowsPerBand: Int,
                                collapseIdentical: Boolean,
-                               bandPrune: DataFrame => DataFrame = identity)
+                               bandPrune: DataFrame => DataFrame)
       : DataFrame = {
     // The shingle arrays feed several branches (grouping, signatures, both
     // verify joins) — materialize them ONCE with an eager localCheckpoint.

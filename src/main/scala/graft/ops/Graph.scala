@@ -52,8 +52,14 @@ object Graph {
     // needs anyway (guide §2.4: two operations keyed the same way share
     // one exchange) — the former groupBy+join shape paid a second keyed
     // exchange for `deg` plus the join itself
+    // a null src would drop out of the src-keyed iteration join and take
+    // its mass with it: fail loud per row, inside the projection the
+    // checkpoint job already runs (no separate validation job)
     val w = org.apache.spark.sql.expressions.Window.partitionBy("src")
-    part.withColumn("d", count(lit(1)).over(w)).localCheckpoint()
+    part.withColumn("d",
+        when(col("src").isNull, raise_error(lit("edgeTable: null src in edge list")))
+          .otherwise(count(lit(1)).over(w)))
+      .localCheckpoint()
   }
 
   /** ENFORCES the dangling-node precondition loudly (review r19): a node

@@ -57,8 +57,7 @@ object LmScore {
         var i = 0
         while (i < cps.length - 1) {
           val k = java.lang.Long.valueOf(bgKey(cps(i), cps(i + 1)))
-          val prev = m.get(k)
-          m.put(k, if (prev == null) 1L else prev + 1L)
+          m.put(k, m.getOrDefault(k, 0L) + 1L)
           i += 1
         }
       }
@@ -103,8 +102,7 @@ object LmScore {
     var nBg = 0L
     while (i < cps.length - 1) {
       val bg = java.lang.Long.valueOf(bgKey(cps(i), cps(i + 1)))
-      val prev = m.get(bg)
-      m.put(bg, if (prev == null) 1L else prev + 1L)
+      m.put(bg, m.getOrDefault(bg, 0L) + 1L)
       nBg += 1L
       i += 1
     }
@@ -156,7 +154,6 @@ object LmScore {
     */
   def stupidBackoffScores(docs: DataFrame, trainPred:
       org.apache.spark.sql.Column): DataFrame = {
-    val spark = docs.sparkSession
     // the three n-gram streams: trigrams to score, plus train-side
     // trigram/bigram/unigram counts. Array-slice expressions, zero
     // shuffle until the count aggregates.

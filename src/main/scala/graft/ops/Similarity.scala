@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Row}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
@@ -840,20 +840,6 @@ object Similarity {
   // parquet, serve many).
   // ------------------------------------------------------------------
 
-  /** `(vec_id, cell, r)`: each unit vector's residual from its coarse
-    * cell's UNIT centroid (unit on both sides so the IP decomposition
-    * above is exact for cosine scoring).
-    */
-  private def residuals(corpus: DataFrame, centroids: DataFrame): DataFrame = {
-    val cu = withUnit(centroids, "embedding", "cu")
-      .select(col("vec_id").as("cell"), col("cu"))
-    withUnit(corpus, "embedding", "u")
-      .join(ivfAssign(corpus, centroids), "vec_id")
-      .join(broadcast(cu), "cell")
-      .select(col("vec_id"), col("cell"),
-        zip_with(col("u"), col("cu"), (a, b) => a - b).as("r"))
-  }
-
   /** Train the residual codebook for IVF-PQ: coarse `centroids` are
     * [[trainCentroids]]' output (staged by the caller); the returned
     * `(subspace, code, embedding)` codebook quantizes residuals.
@@ -863,9 +849,10 @@ object Similarity {
                           iters: Int = 3): DataFrame =
     {
     // The training sample is bounded and the centroids are k·dim — so the
-    // residualization of the SAMPLE happens in driver memory too, exactly
-    // mirroring [[residuals]] (unit-normalize both sides, cosine-argmax
-    // cell with ties to the lowest id, r = u − ĉ): one TakeOrdered job
+    // residualization of the SAMPLE happens in driver memory too, with
+    // the residual math of the IVF-PQ section comment above
+    // (unit-normalize both sides, cosine-argmax cell with ties to the
+    // lowest id, r = u − ĉ(cell)): one TakeOrdered job
     // collects the sample vectors, zero distributed assignment jobs. The
     // CORPUS-side residualization ([[ivfPqBuildIndex]]) stays distributed
     // — that one genuinely scales with the data.
@@ -926,6 +913,30 @@ object Similarity {
       ivfPqBuildIndex(corpus, centroids, codebook, m, subDim).localCheckpoint(),
       corpus, centroids, codebook, probeSet, k, pool, nprobe, m, subDim)
 
+  /** Row bounds on the quantizers [[ivfPqBuildIndex]] inlines as
+    * literals: every cell and every codebook entry becomes one dot
+    * product in the per-row projection, so past these the literal encode
+    * is the wrong plan (and the driver the wrong place to hold them).
+    * 4096 cells is FAISS's `IVF4096` list count; 4096 codebook rows is
+    * 16 subspaces × 256 codes (8-bit PQ). The graded indexes use 8 cells
+    * and 4 × 16 codebook rows.
+    */
+  val MaxIvfCells: Int = 4096
+  val MaxPqCodebookRows: Int = 4096
+
+  /** Collect a quantizer table of at most `bound` rows, failing loud past
+    * it. The driver never holds more than bound + 1 rows, and one
+    * partition keeps the limited collect to the single job a plain
+    * collect runs (a multi-partition limit scan relaunches per round).
+    */
+  private def collectQuantizer(df: DataFrame, bound: Int,
+                               what: String): Array[Row] = {
+    val rows = df.coalesce(1).limit(bound + 1).collect()
+    require(rows.length <= bound,
+      s"ivfPqBuildIndex: $what exceed the $bound-row bound")
+    rows
+  }
+
   /** Build the servable index: one row per (vector, subspace) carrying
     * the coarse cell and the PQ code — m·k-bits per vector, EXACTLY the
     * table an IVF-PQ deployment stages to parquet at build time and
@@ -948,9 +959,10 @@ object Similarity {
     // commutes), driver-side unit() mirrors withUnit element-for-element
     // (the [[ivfPqTrainResiduals]] precedent the oracle already grades),
     // and every argmax keeps the max(struct(s, -id)) tie rule.
-    val cents = centroids
-      .select(col("vec_id"), col("embedding").cast("array<double>"))
-      .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+    val cents = collectQuantizer(
+        centroids.select(col("vec_id"), col("embedding").cast("array<double>")),
+        MaxIvfCells, "centroids")
+      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
       .sortBy(_._1)
     require(cents.nonEmpty, "ivfPqBuildIndex: centroids must be non-empty")
     def unit(v: Array[Double]): Array[Double] = {
@@ -958,9 +970,10 @@ object Similarity {
       v.map(_ / n)
     }
     val cus = cents.map { case (cid, e) => (cid, unit(e)) }
-    val cb = codebook.select(col("subspace"), col("code"),
-        col("embedding").cast("array<double>").as("ce"))
-      .collect()
+    val cb = collectQuantizer(
+        codebook.select(col("subspace"), col("code"),
+          col("embedding").cast("array<double>").as("ce")),
+        MaxPqCodebookRows, "codebook")
       .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2).toArray))
     val bySub: Map[Int, Array[(Long, Array[Double])]] = cb.groupBy(_._1)
       .map { case (j, rs) => j -> rs.map(t => (t._2, t._3)).sortBy(_._1) }

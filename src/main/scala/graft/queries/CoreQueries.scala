@@ -1226,9 +1226,6 @@ object CoreQueries {
       delay = "3650 days", outDir = out, checkpointDir = ckpt,
       // keyspace-sized: every event_id is a live dedup key until its
       // watermark horizon passes; the memoized base count is the octave
-      statePartitions = Some(graft.streaming.StateSizing.forKeyspace(
-        Tables.rowCount(spark, sfDir, "events"),
-        spark.sparkContext.defaultParallelism)),
       stateKeys = Some(Tables.rowCount(spark, sfDir, "events")))
     spark.read.parquet(out)
       .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("us"))

@@ -211,9 +211,6 @@ object DedupQueries {
     graft.streaming.StreamDedup.distinctFingerprints(stream, out, ckpt,
       // keyspace-sized: one state key per distinct fingerprint — the
       // memoized base-table count is the right octave
-      statePartitions = Some(graft.streaming.StateSizing.forKeyspace(
-        Tables.rowCount(spark, sfDir, "documents"),
-        spark.sparkContext.defaultParallelism)),
       stateKeys = Some(Tables.rowCount(spark, sfDir, "documents")))
     spark.read.parquet(out)
   }

@@ -1374,7 +1374,7 @@ object TextQueries {
 
   private def bpeTokenizeDocs(docs: DataFrame, nMerges: Int,
                               maxWords: Int = 0,
-                              memoKey: String = ""): DataFrame = {
+                              memoKey: String): DataFrame = {
     val merges = bpeMergesFor(docs, nMerges, maxWords, memoKey)
     docs
       .select(col("doc_id"),
@@ -1799,9 +1799,6 @@ object TextQueries {
       .option("maxFilesPerTrigger", "1")
       .parquet(src)
     graft.streaming.StreamCorpus.drainGateDedup(stream, model, out, ckpt,
-      statePartitions = Some(graft.streaming.StateSizing.forKeyspace(
-        Tables.rowCount(spark, sfDir, "documents"),
-        spark.sparkContext.defaultParallelism)),
       stateKeys = Some(Tables.rowCount(spark, sfDir, "documents")))
     // drain close → t12 packing over the drained (fp, n_tokens) survivors
     val keyed = spark.read.parquet(out)

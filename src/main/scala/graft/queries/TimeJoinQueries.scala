@@ -239,9 +239,6 @@ object TimeJoinQueries {
     val stream = chronStream(spark, src)
     graft.streaming.WindowedAgg.drainTumblingDistinct(stream, "user_id",
       "1 hour", "1 minute", rsd, out, ckpt,
-      statePartitions = Some(graft.streaming.StateSizing.forKeyspace(
-        Tables.rowCount(spark, sfDir, "events"),
-        spark.sparkContext.defaultParallelism)),
       stateKeys = Some(Tables.rowCount(spark, sfDir, "events")))
     val HourUs = 3600000000L
     val exact = Tables.events(spark, sfDir)
@@ -303,13 +300,7 @@ object TimeJoinQueries {
       .filter(col("event_type") =!= "__sentinel")
       .join(dim, Seq("user_id")) // stream-static equi-join, stateless
       .select(col("user_id"), col("event_type"), col("nation"), col("value"))
-    val q = stream.writeStream
-      .format("parquet")
-      .option("path", out)
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    graft.streaming.Drain(stream, ckpt)(graft.streaming.Drain.parquet(out))
     spark.read.parquet(out)
       .groupBy("nation", "event_type")
       .agg(count(lit(1)).as("n_events"),
@@ -359,9 +350,6 @@ object TimeJoinQueries {
       .parquet(src)
     graft.streaming.StreamDedup.distinctRows(stream, Seq("user_id", "day"),
       out, ckpt,
-      statePartitions = Some(graft.streaming.StateSizing.forKeyspace(
-        Tables.rowCount(spark, sfDir, "events"),
-        spark.sparkContext.defaultParallelism)),
       stateKeys = Some(Tables.rowCount(spark, sfDir, "events")))
     import org.apache.spark.sql.expressions.Window
     val w = Window.orderBy("day")
@@ -633,9 +621,6 @@ object TimeJoinQueries {
     graft.streaming.EventSessions.drainSessions(
       chronStream(spark, src), gap = "6 hours", delay = "1 minute",
       outDir = out, checkpointDir = ckpt,
-      statePartitions = Some(graft.streaming.StateSizing.forKeyspace(
-        Tables.rowCount(spark, sfDir, "events"),
-        spark.sparkContext.defaultParallelism)),
       stateKeys = Some(Tables.rowCount(spark, sfDir, "events")))
     spark.read.parquet(out).filter(col("user_id") >= 0)
       .select(col("user_id"), unix_micros(col("session_start")).as("start_us"),
@@ -674,9 +659,6 @@ object TimeJoinQueries {
     val stream = chronStream(spark, src)
     graft.streaming.WindowedAgg.drainTumblingOhlc(stream, "15 minutes",
       "1 minute", out, ckpt,
-      statePartitions = Some(graft.streaming.StateSizing.forKeyspace(
-        Tables.rowCount(spark, sfDir, "events"),
-        spark.sparkContext.defaultParallelism)),
       stateKeys = Some(Tables.rowCount(spark, sfDir, "events")))
     spark.read.parquet(out).filter(col("event_type") =!= "__sentinel")
   }
@@ -737,10 +719,8 @@ object TimeJoinQueries {
     val ckpt = java.nio.file.Files.createTempDirectory("graft-st15")
       .resolve("ckpt").toString
     var v = 0
-    val q = chronStream(spark, src).writeStream
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+    graft.streaming.Drain(chronStream(spark, src), ckpt)(
+      _.foreachBatch { (batch: DataFrame, _: Long) =>
         if (!batch.isEmpty) {
           val cur = spark.read.parquet(s"$stateDir/v$v")
           val ups = batch.filter(col("change").isin("I", "U"))
@@ -754,10 +734,7 @@ object TimeJoinQueries {
           next.write.mode("overwrite").parquet(s"$stateDir/v${v + 1}")
           v += 1
         }
-        ()
-      }
-      .start()
-    q.awaitTermination()
+      })
     (stateDir, v)
   }
 
@@ -905,9 +882,6 @@ object TimeJoinQueries {
       out, ckpt,
       // keyspace-sized; the event count upper-bounds the live
       // (window, type) key count by construction
-      statePartitions = Some(graft.streaming.StateSizing.forKeyspace(
-        Tables.rowCount(spark, sfDir, "events"),
-        spark.sparkContext.defaultParallelism)),
       stateKeys = Some(Tables.rowCount(spark, sfDir, "events")))
     spark.read.parquet(out).filter(col("event_type") =!= "__sentinel")
   }
@@ -933,9 +907,6 @@ object TimeJoinQueries {
     val stream = chronStream(spark, src)
     graft.streaming.WindowedAgg.drainTrendingTopK(stream, "1 hour", "1 minute",
       k = 3, out, ckpt,
-      statePartitions = Some(graft.streaming.StateSizing.forKeyspace(
-        Tables.rowCount(spark, sfDir, "events"),
-        spark.sparkContext.defaultParallelism)),
       stateKeys = Some(Tables.rowCount(spark, sfDir, "events")))
     spark.read.parquet(out).filter(col("event_type") =!= "__sentinel")
   }
@@ -1050,9 +1021,6 @@ object TimeJoinQueries {
       delay = "1 minute", outDir = out, checkpointDir = ckpt,
       // keyspace-sized; the event count upper-bounds the buffered-row
       // keyspace on either join side
-      statePartitions = Some(graft.streaming.StateSizing.forKeyspace(
-        Tables.rowCount(spark, sfDir, "events"),
-        spark.sparkContext.defaultParallelism)),
       stateKeys = Some(Tables.rowCount(spark, sfDir, "events")))
     spark.read.parquet(out)
   }
@@ -1098,9 +1066,6 @@ object TimeJoinQueries {
       chronStream(spark, s"$src/click"), chronStream(spark, s"$src/purchase"),
       window = "30 minutes",
       delay = "1 minute", outDir = out, checkpointDir = ckpt,
-      statePartitions = Some(graft.streaming.StateSizing.forKeyspace(
-        Tables.rowCount(spark, sfDir, "events"),
-        spark.sparkContext.defaultParallelism)),
       stateKeys = Some(Tables.rowCount(spark, sfDir, "events")),
       outer = true)
     spark.read.parquet(out).filter(col("user_id") >= 0L)

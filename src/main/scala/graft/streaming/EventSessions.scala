@@ -48,58 +48,30 @@ object EventSessions {
       .dropDuplicatesWithinWatermark(idCols.head, idCols.tail: _*)
 
   /** Drain [[dedupStream]] into `outDir` as parquet; blocks until the
-    * AvailableNow drain finishes. RocksDB state store + `statePartitions`
-    * keyspace sizing as in
+    * AvailableNow drain finishes. `stateKeys` sizes the state store as in
     * [[StreamDedup.distinctFingerprints]].
     */
   def drainDedup(events: DataFrame, idCols: Seq[String], delay: String,
                  outDir: String, checkpointDir: String,
-                 statePartitions: Option[Int] = None,
-                 stateKeys: Option[Long] = None): Unit = {
-    val conf = events.sparkSession.conf
-    val prev = conf.get("spark.sql.shuffle.partitions")
-    statePartitions.foreach(n => conf.set("spark.sql.shuffle.partitions", n))
-    try StateStores.withSizedStore(events.sparkSession, stateKeys) {
-      val q = dedupStream(events, idCols, delay)
-        .writeStream
-        .format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", checkpointDir)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally conf.set("spark.sql.shuffle.partitions", prev)
-  }
+                 stateKeys: Option[Long] = None): Unit =
+    Drain.stateful(dedupStream(events, idCols, delay), checkpointDir,
+      stateKeys)(Drain.parquet(outDir))
 
   /** ST16 — drain [[sessionize]] as a STREAM: the same gap-session
     * aggregation maintained incrementally with session-window state
     * (merging an arriving event into its user's open session, fusing
     * sessions the event bridges), finalized exactly once by the
     * append-mode watermark when it passes a session's close (last event
-    * + gap). Blocks until the AvailableNow drain finishes. RocksDB state
-    * + keyspace-sized partitions as in [[drainDedup]]; state here is
-    * USER-sized (one open session per quiet user), so any static-table
-    * proxy passed via `statePartitions` is an upper octave.
+    * + gap). Blocks until the AvailableNow drain finishes. State is
+    * sized from `stateKeys` as in [[drainDedup]]; state here is
+    * USER-sized (one open session per quiet user), so a static-table
+    * proxy passed as `stateKeys` is an upper octave.
     */
   def drainSessions(events: DataFrame, gap: String, delay: String,
                     outDir: String, checkpointDir: String,
-                    statePartitions: Option[Int] = None,
-                    stateKeys: Option[Long] = None): Unit = {
-    val conf = events.sparkSession.conf
-    val prev = conf.get("spark.sql.shuffle.partitions")
-    statePartitions.foreach(n => conf.set("spark.sql.shuffle.partitions", n))
-    try StateStores.withSizedStore(events.sparkSession, stateKeys) {
-      val q = sessionize(withLateDataBound(events, delay), gap)
-        .writeStream
-        .format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", checkpointDir)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally conf.set("spark.sql.shuffle.partitions", prev)
-  }
+                    stateKeys: Option[Long] = None): Unit =
+    Drain.stateful(sessionize(withLateDataBound(events, delay), gap),
+      checkpointDir, stateKeys)(Drain.parquet(outDir))
 
   /** Custom keyed state: per-user running totals maintained across
     * micro-batches with `mapGroupsWithState` — the `KeyValueGroupedDataset`

@@ -1,9 +1,10 @@
 package graft.streaming
 
-/** Keyspace-driven sizing for streaming state partitions — the
-  * `statePartitions` knob of the stateful drains ([[StreamDedup]],
-  * [[EventSessions]], [[StreamJoin]], [[WindowedAgg]]), derived instead
-  * of hard-coded, the way [[graft.ops.LshSizing]] self-sizes LSH bands.
+/** Keyspace-driven sizing for streaming state partitions — the width
+  * [[Drain.stateful]] gives every stateful drain ([[StreamDedup]],
+  * [[EventSessions]], [[StreamJoin]], [[WindowedAgg]], [[StreamCorpus]])
+  * from its `stateKeys` estimate, derived instead of hard-coded, the way
+  * [[graft.ops.LshSizing]] self-sizes LSH bands.
   *
   * The tradeoff the rule encodes: state partition count is FROZEN into a
   * streaming checkpoint (Spark pins `spark.sql.shuffle.partitions` for
@@ -22,7 +23,9 @@ package graft.streaming
   * exchange is exercised even at toy scale) and ≤ 4× the parallelism
   * (more stores than cores just multiplies commit overhead). The key
   * count only needs the right OCTAVE: callers pass a cheap upper proxy
-  * (a memoized static-table count — [[graft.Tables.rowCount]]).
+  * (a memoized static-table count — [[graft.Tables.rowCount]]) as
+  * `stateKeys`, and the same estimate picks the state store provider
+  * ([[StateStores.withSizedStore]]).
   */
 object StateSizing {
 
@@ -35,8 +38,8 @@ object StateSizing {
     * ≲ 200 MB of total state — comfortably heap-resident on any
     * reasonable executor, two orders below where on-heap state pressure
     * starts to matter on multi-GB heaps. Above it, state belongs in
-    * RocksDB (bounded block cache, SSD-backed). The same octave-accurate
-    * proxy callers already pass to [[forKeyspace]] drives both rules.
+    * RocksDB (bounded block cache, SSD-backed). One octave-accurate
+    * `stateKeys` estimate drives both rules ([[Drain.stateful]]).
     */
   val OnHeapMaxKeys: Long = 1L << 20
 

@@ -8,7 +8,7 @@ import org.apache.spark.sql.SparkSession
   *
   *   - The default HDFS-backed provider keeps every keyed state partition
   *     ON-HEAP with per-batch delta files — the cheapest commit path by a
-  *     measured 20-25% of drain time (StreamProf r21: st14 3.8→3.0 s,
+  *     measured 20-25% of drain time (r21 per-batch profile: st14 3.8→3.0 s,
   *     st5 4.6→3.4 s), and the right engineering whenever the whole
   *     keyspace comfortably fits executor memory (Spark's own default for
   *     exactly that reason).
@@ -44,8 +44,12 @@ object StateStores {
   private val TrackRowsKey =
     "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows"
 
-  private def withConfs[T](spark: SparkSession, confs: Seq[(String, String)])
-                          (body: => T): T = {
+  /** Run `body` with `confs` set on the session, restoring each key's
+    * previous value (or unsetting it) after.
+    */
+  private[streaming] def withConfs[T](spark: SparkSession,
+                                      confs: Seq[(String, String)])
+                                     (body: => T): T = {
     val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
     try body

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.Trigger
 
 /** ST8 — streaming ANN serving: arriving query vectors are searched per
   * micro-batch against a STAGED IVF-PQ index
@@ -52,16 +51,11 @@ object StreamAnn {
     }
     val cents = localize(centroids)
     val cb = localize(codebook)
-    val q = probeStream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty)
-          graft.ops.Similarity.ivfPqTopKParts(res, codes, corpus, cents,
-              cb, batch, k, pool, nprobe, m, subDim)
-            .write.mode("append").parquet(outDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    Drain(probeStream, checkpointDir)(_.foreachBatch { (batch: DataFrame, _: Long) =>
+      if (!batch.isEmpty)
+        graft.ops.Similarity.ivfPqTopKParts(res, codes, corpus, cents,
+            cb, batch, k, pool, nprobe, m, subDim)
+          .write.mode("append").parquet(outDir)
+    })
   }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.functions.TextFunctions.{fingerprint, wsTokens}
 
@@ -37,7 +36,6 @@ object StreamCorpus {
     */
   def drainGateDedup(stream: DataFrame, model: graft.ops.LmScore.BigramModel,
                      outDir: String, checkpointDir: String,
-                     statePartitions: Option[Int] = None,
                      stateKeys: Option[Long] = None): Unit = {
     val spark = stream.sparkSession
     import spark.implicits._
@@ -59,17 +57,6 @@ object StreamCorpus {
       .select(fingerprint(col("text")).as("fp"),
         size(wsTokens(col("text"))).cast("long").as("n_tokens"))
       .dropDuplicates(Seq("fp"))
-    val conf = spark.conf
-    val prev = conf.get("spark.sql.shuffle.partitions")
-    statePartitions.foreach(n => conf.set("spark.sql.shuffle.partitions", n))
-    try StateStores.withSizedStore(spark, stateKeys) {
-      val q = gated.writeStream
-        .format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", checkpointDir)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally conf.set("spark.sql.shuffle.partitions", prev)
+    Drain.stateful(gated, checkpointDir, stateKeys)(Drain.parquet(outDir))
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.Trigger
 
 /** ST3 — streaming exact deduplication: the arrival-time half of the dedup
   * suite (SURVEY §2.7). Batch dedup (D1) asks "which rows repeat in the
@@ -25,20 +24,19 @@ object StreamDedup {
     * cross-batch dedup on `fp` into `outDir` as parquet; blocks until the
     * AvailableNow drain finishes.
     *
-    * `statePartitions` sizes the state store (pinned into the checkpoint
-    * at first run — `spark.sql.shuffle.partitions` at start time). Unlike
-    * a batch shuffle, every state partition pays per-MICRO-BATCH
-    * snapshot/commit file I/O whether or not it holds keys, so this wants
-    * sizing to the keyspace a single store instance can hold (state is
-    * keys-only here), not to the cluster's batch parallelism — far fewer
-    * partitions than cores is normal for streaming dedup.
+    * `stateKeys` is the keyspace estimate [[Drain.stateful]] sizes the
+    * state store from (partition count and provider, both pinned into the
+    * checkpoint at first run). Unlike a batch shuffle, every state
+    * partition pays per-MICRO-BATCH snapshot/commit file I/O whether or
+    * not it holds keys, so the width follows the keyspace a single store
+    * instance can hold (state is keys-only here), not the cluster's batch
+    * parallelism — far fewer partitions than cores is normal for
+    * streaming dedup.
     */
   def distinctFingerprints(stream: DataFrame, outDir: String,
                            checkpointDir: String,
-                           statePartitions: Option[Int] = None,
                            stateKeys: Option[Long] = None): Unit =
-    distinctRows(stream, Seq("fp"), outDir, checkpointDir, statePartitions,
-      stateKeys)
+    distinctRows(stream, Seq("fp"), outDir, checkpointDir, stateKeys)
 
   /** [[distinctFingerprints]] generalized to any key-column set: drain
     * `stream` through cross-batch `dropDuplicates(cols)` into `outDir`
@@ -46,21 +44,7 @@ object StreamDedup {
     */
   def distinctRows(stream: DataFrame, cols: Seq[String], outDir: String,
                    checkpointDir: String,
-                   statePartitions: Option[Int] = None,
-                   stateKeys: Option[Long] = None): Unit = {
-    val conf = stream.sparkSession.conf
-    val prev = conf.get("spark.sql.shuffle.partitions")
-    statePartitions.foreach(n => conf.set("spark.sql.shuffle.partitions", n))
-    try StateStores.withSizedStore(stream.sparkSession, stateKeys) {
-      val q = stream
-        .dropDuplicates(cols)
-        .writeStream
-        .format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", checkpointDir)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally conf.set("spark.sql.shuffle.partitions", prev)
-  }
+                   stateKeys: Option[Long] = None): Unit =
+    Drain.stateful(stream.dropDuplicates(cols), checkpointDir, stateKeys)(
+      Drain.parquet(outDir))
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** ST5 — stream-stream inner join with a time-range constraint: the
   * attribution shape (purchases within a window after a click, impressions
@@ -70,31 +69,17 @@ object StreamJoin {
 
   /** Drain a streaming attribution join into `outDir` as parquet; blocks
     * until the AvailableNow drain completes. `outer` selects
-    * [[attributionJoinOuter]]; `statePartitions` as in
+    * [[attributionJoinOuter]]; `stateKeys` sizes the join state as in
     * [[StreamDedup.distinctFingerprints]].
     */
   def drainAttribution(clicks: DataFrame, purchases: DataFrame,
                        window: String, delay: String,
                        outDir: String, checkpointDir: String,
-                       statePartitions: Option[Int] = None,
                        outer: Boolean = false,
                        stateKeys: Option[Long] = None): Unit = {
-    val conf = clicks.sparkSession.conf
-    val prev = conf.get("spark.sql.shuffle.partitions")
-    statePartitions.foreach(n => conf.set("spark.sql.shuffle.partitions", n))
-    try StateStores.withSizedStore(clicks.sparkSession, stateKeys) {
-      val joined =
-        if (outer) attributionJoinOuter(clicks, purchases, window, delay)
-        else attributionJoin(clicks, purchases, window, delay)
-      val q = joined
-        .writeStream
-        .format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", checkpointDir)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally conf.set("spark.sql.shuffle.partitions", prev)
+    val joined =
+      if (outer) attributionJoinOuter(clicks, purchases, window, delay)
+      else attributionJoin(clicks, purchases, window, delay)
+    Drain.stateful(joined, checkpointDir, stateKeys)(Drain.parquet(outDir))
   }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming k-means assignment serving — the cluster-routing door of an
   * ingest pipeline (route each arriving document's embedding to its
@@ -21,19 +20,13 @@ object StreamKMeans {
     * grades the streamed output unchanged.
     */
   def serveAssign(embStream: DataFrame, cents: Seq[Array[Long]],
-                  outDir: String, checkpointDir: String): Unit = {
-    val q = embStream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty)
-          graft.ops.KMeans.assign(
-              batch.select(col("vec_id").as("id"),
-                graft.ops.KMeans.quantize(col("embedding")).as("q")),
-              cents)
-            .write.mode("append").parquet(outDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                  outDir: String, checkpointDir: String): Unit =
+    Drain(embStream, checkpointDir)(_.foreachBatch { (batch: DataFrame, _: Long) =>
+      if (!batch.isEmpty)
+        graft.ops.KMeans.assign(
+            batch.select(col("vec_id").as("id"),
+              graft.ops.KMeans.quantize(col("embedding")).as("q")),
+            cents)
+          .write.mode("append").parquet(outDir)
+    })
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.Trigger
 
 /** ST9 — streaming image-ingest dedup: arriving image payloads are
   * perceptually hashed per micro-batch ([[graft.ops.Multimodal.pHashes]],
@@ -35,21 +34,16 @@ object StreamPHash {
     val corpusValueBands = graft.ops.Dedup
       .hammingValueBands(corpusH, bits, maxHamming)
       .localCheckpoint()
-    val q = imageStream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val hashes = graft.ops.Multimodal
-            .pHashes(graft.ops.Multimodal.asMedia(batch)).toDF()
-            .select(col("media_id").as("doc_id"), col("phash").as("simhash"))
-          graft.ops.Dedup
-            .hammingMatchesAgainstBands(hashes, corpusH, corpusValueBands,
-              bits, maxHamming)
-            .write.mode("append").parquet(outDir)
-        }
+    Drain(imageStream, checkpointDir)(_.foreachBatch { (batch: DataFrame, _: Long) =>
+      if (!batch.isEmpty) {
+        val hashes = graft.ops.Multimodal
+          .pHashes(graft.ops.Multimodal.asMedia(batch)).toDF()
+          .select(col("media_id").as("doc_id"), col("phash").as("simhash"))
+        graft.ops.Dedup
+          .hammingMatchesAgainstBands(hashes, corpusH, corpusValueBands,
+            bits, maxHamming)
+          .write.mode("append").parquet(outDir)
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    })
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.Trigger
 
 /** ST6 — streaming model serving: score a document stream against a
   * batch-trained broadcast LM ([[graft.ops.LmScore]]) — the
@@ -26,16 +25,10 @@ object StreamScore {
     val spark = stream.sparkSession
     import spark.implicits._
     val bc = spark.sparkContext.broadcast(model)
-    val q = stream.as[(Long, String)].mapPartitions { rows =>
+    val scored = stream.as[(Long, String)].mapPartitions { rows =>
         val m = bc.value
         rows.map { case (id, t) => graft.ops.LmScore.score(m, id, t) }
       }.toDF("doc_id", "nll", "keep")
-      .writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    Drain(scored, checkpointDir)(Drain.parquet(outDir))
   }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 import graft.io.TgzSource
@@ -48,22 +47,17 @@ object StreamingEmbargo {
       .load(inDir)
 
     var batches = 0L
-    val q = stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val entries = TgzSource.explodeEntries(batch)
-        // slowly-changing dim: fresh whitelist every batch
-        val wl = TgzSource.whitelist(batch.sparkSession, whitelistPath)
-        val routed = EmbargoSplit.route(entries, wl, cutoffDateInt)
-        routed
-          .select(col("archive"), col("ordinal"), col("name"), col("size"),
-            col("local_ip"), col("route"))
-          .write.mode("append").partitionBy("route").parquet(outDir)
-        batches += 1
-      }
-      .start()
-    q.awaitTermination()
+    Drain(stream, checkpointDir)(_.foreachBatch { (batch: DataFrame, _: Long) =>
+      val entries = TgzSource.explodeEntries(batch)
+      // slowly-changing dim: fresh whitelist every batch
+      val wl = TgzSource.whitelist(batch.sparkSession, whitelistPath)
+      val routed = EmbargoSplit.route(entries, wl, cutoffDateInt)
+      routed
+        .select(col("archive"), col("ordinal"), col("name"), col("size"),
+          col("local_ip"), col("route"))
+        .write.mode("append").partitionBy("route").parquet(outDir)
+      batches += 1
+    })
     batches
   }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** ST4 — watermarked tumbling-window aggregation: the canonical streaming
   * rollup (events/min by type, bytes/hour by host, …). Windows are
@@ -42,10 +41,9 @@ object WindowedAgg {
     */
   def drainTrendingTopK(stream: DataFrame, window: String, delay: String,
                         k: Int, outDir: String, checkpointDir: String,
-                        statePartitions: Option[Int] = None,
                         stateKeys: Option[Long] = None): Unit =
-    drainAppend(tumblingCounts(stream, window, delay), outDir, checkpointDir,
-      statePartitions, stateKeys)(
+    Drain.stateful(tumblingCounts(stream, window, delay), checkpointDir,
+      stateKeys)(
       _.foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
         if (!batch.isEmpty) {
           val byWin = org.apache.spark.sql.expressions.Window
@@ -61,40 +59,16 @@ object WindowedAgg {
 
   /** Drain the windowed aggregation of `stream` into `outDir` as parquet
     * (append mode — finalized windows only); blocks until the
-    * AvailableNow drain completes. `statePartitions` as in
-    * [[StreamDedup.distinctFingerprints]]: window-agg state is one row
+    * AvailableNow drain completes. `stateKeys` sizes the state store as
+    * in [[StreamDedup.distinctFingerprints]]: window-agg state is one row
     * per open (window, type) group, so the per-micro-batch state-store
     * commit cost wants few partitions, not cluster-width.
     */
-  /** Shared drain scaffold: size the state-store partitions, run the
-    * append-mode AvailableNow drain on RocksDB, restore the shuffle conf
-    * — the boilerplate every windowed drain here repeats (a fix to the
-    * save/restore logic now lands once).
-    */
-  private def drainAppend(df: DataFrame, outDir: String, checkpointDir: String,
-                          statePartitions: Option[Int],
-                          stateKeys: Option[Long] = None)
-                         (sink: org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row]
-                           => org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row]): Unit = {
-    val conf = df.sparkSession.conf
-    val prev = conf.get("spark.sql.shuffle.partitions")
-    statePartitions.foreach(n => conf.set("spark.sql.shuffle.partitions", n))
-    try StateStores.withSizedStore(df.sparkSession, stateKeys) {
-      val q = sink(df.writeStream
-          .option("checkpointLocation", checkpointDir)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow()))
-        .start()
-      q.awaitTermination()
-    } finally conf.set("spark.sql.shuffle.partitions", prev)
-  }
-
   def drainTumbling(stream: DataFrame, window: String, delay: String,
                     outDir: String, checkpointDir: String,
-                    statePartitions: Option[Int] = None,
                     stateKeys: Option[Long] = None): Unit =
-    drainAppend(tumblingCounts(stream, window, delay), outDir, checkpointDir,
-      statePartitions, stateKeys)(_.format("parquet").option("path", outDir))
+    Drain.stateful(tumblingCounts(stream, window, delay), checkpointDir,
+      stateKeys)(Drain.parquet(outDir))
 
   /** ST14 — streaming OHLC resample (w8's bars maintained at the ingest
     * door): `min_by`/`max_by` over the `(us, event_id)` total order are
@@ -128,11 +102,9 @@ object WindowedAgg {
 
   def drainTumblingOhlc(stream: DataFrame, window: String, delay: String,
                         outDir: String, checkpointDir: String,
-                        statePartitions: Option[Int] = None,
                         stateKeys: Option[Long] = None): Unit =
-    drainAppend(tumblingOhlc(stream, window, delay),
-      outDir, checkpointDir, statePartitions, stateKeys)(
-      _.format("parquet").option("path", outDir))
+    Drain.stateful(tumblingOhlc(stream, window, delay), checkpointDir,
+      stateKeys)(Drain.parquet(outDir))
 
   /** ST12 — streaming per-window approximate distinct: HLL++
     * (`approx_count_distinct`) inside the watermarked windowed
@@ -147,13 +119,11 @@ object WindowedAgg {
   def drainTumblingDistinct(stream: DataFrame, keyCol: String, window: String,
                             delay: String, rsd: Double, outDir: String,
                             checkpointDir: String,
-                            statePartitions: Option[Int] = None,
                             stateKeys: Option[Long] = None): Unit =
-    drainAppend(stream
+    Drain.stateful(stream
         .withWatermark("ts", delay)
         .groupBy(org.apache.spark.sql.functions.window(col("ts"), window))
         .agg(approx_count_distinct(col(keyCol), rsd).as("n_hll"))
         .select(unix_micros(col("window.start")).as("win_us"), col("n_hll")),
-      outDir, checkpointDir, statePartitions, stateKeys)(
-      _.format("parquet").option("path", outDir))
+      checkpointDir, stateKeys)(Drain.parquet(outDir))
 }

@@ -1,15 +1,21 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.streaming.StreamingQueryListener
 
-/** Job-level cost decomposition for batch queries (guide §1): runs the
-  * named declared queries with a SparkListener and prints every Spark
-  * job's wall time + first-stage name, so a multi-job query (iterative
-  * graph rounds, staged index builds, driver-looped lifecycles) shows
-  * where its seconds actually go — the batch counterpart of
-  * [[StreamProf]].
+/** Cost decomposition for declared queries (guide §1: measure first):
+  * runs the named queries with a SparkListener and a
+  * StreamingQueryListener attached and prints
+  *   - every Spark job's wall time + first-stage name, so a multi-job
+  *     query (iterative graph rounds, staged index builds, driver-looped
+  *     lifecycles) shows where its seconds actually go;
+  *   - for a query that runs a stream, per micro-batch the engine's own
+  *     duration breakdown (`durationMs`: addBatch / queryPlanning /
+  *     walCommit / commitOffsets / latestOffset / triggerExecution) plus
+  *     state-operator commit times — where the per-micro-batch floor of
+  *     the streaming drains goes. Batch-only queries print no such lines.
   *
-  * Usage: SPARK_GRAFT_SF_DIR=... sbt "runMain graft.tools.JobProf g1_pagerank[,n7_ann_ivfpq_update]"
+  * Usage: SPARK_GRAFT_SF_DIR=... sbt "runMain graft.tools.JobProf g1_pagerank[,st5_stream_join,...]"
   */
 object JobProf {
   def main(args: Array[String]): Unit = {
@@ -41,6 +47,26 @@ object JobProf {
         }
       }
     })
+    spark.streams.addListener(new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+        println(s"[stream] started ${e.id}")
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
+        val p = e.progress
+        val dur = p.durationMs
+        val keys = Seq("triggerExecution", "latestOffset", "queryPlanning",
+          "walCommit", "commitOffsets", "getBatch", "addBatch")
+        val parts = keys.flatMap(k => Option(dur.get(k)).map(v => s"$k=${v}ms"))
+        println(s"[batch ${p.batchId}] rows=${p.numInputRows} ${parts.mkString(" ")}")
+        p.stateOperators.foreach { so =>
+          println(s"  [state ${so.operatorName}] commit=${so.commitTimeMs}ms " +
+            s"rowsUpdated=${so.numRowsUpdated} rowsTotal=${so.numRowsTotal} " +
+            s"memUsed=${so.memoryUsedBytes} custom=${so.customMetrics}")
+        }
+      }
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+        println(s"[stream] terminated ${e.id}")
+    })
+    // one untimed warmup so JIT/codegen is charged once, like Bench
     try {
       spark.range(1000).selectExpr("sum(id)").collect()
       spark.read.parquet(s"$sfDir/nation.parquet").count()

@@ -104,6 +104,18 @@ class GraphSpec extends AnyFunSuite with SparkSuite {
       Graph.pageRankConverged(Seq((1L, 2L)).toDF("src", "dst"), tol = 0L, maxIters = 1))
   }
 
+  test("pageRank fails loud on a null src instead of dropping its edge") {
+    import spark.implicits._
+    // a symmetric graph plus one edge whose src is null: the src-keyed
+    // iteration join would silently drop it
+    val edges = Seq((Option(1L), 2L), (Option(2L), 1L), (Option.empty[Long], 1L))
+      .toDF("src", "dst")
+    val ex = intercept[Exception](Graph.pageRank(edges, iters = 1).collect())
+    def messages(t: Throwable): Seq[String] =
+      if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
+    assert(messages(ex).exists(_.contains("null src")), messages(ex))
+  }
+
   test("HITS raises loudly on a zero-mass normalize instead of NULL-ing scores (r19 hardening)") {
     import spark.implicits._
     // one hub fanning to 3 authorities: round-1 authority scores truncate

@@ -156,6 +156,29 @@ class SimilaritySpec extends AnyFunSuite with SparkSuite {
     assert(Set(11L, 12L, 13L).contains(top1(10L)), s"probe 10 -> ${top1(10L)}")
   }
 
+  test("ivfPqBuildIndex refuses quantizers past its driver-side row bounds") {
+    import org.apache.spark.sql.functions.{array, col, lit}
+    // 2-dim vectors, one subspace of 2 dims
+    def vecs(n: Int, idCol: String) = spark.range(n)
+      .select(col("id").as(idCol), array(lit(1.0f), lit(0.0f)).as("embedding"))
+    val corpus = vecs(4, "vec_id")
+    val oneCell = vecs(1, "vec_id")
+    val oneCode = vecs(1, "code").select(lit(0).as("subspace"), col("code"),
+      col("embedding"))
+    val cells = intercept[IllegalArgumentException](Similarity.ivfPqBuildIndex(
+      corpus, vecs(Similarity.MaxIvfCells + 1, "vec_id"), oneCode, m = 1, subDim = 2))
+    assert(cells.getMessage.contains("centroids"), cells.getMessage)
+    val codes = intercept[IllegalArgumentException](Similarity.ivfPqBuildIndex(
+      corpus, oneCell,
+      vecs(Similarity.MaxPqCodebookRows + 1, "code")
+        .select(lit(0).as("subspace"), col("code"), col("embedding")),
+      m = 1, subDim = 2))
+    assert(codes.getMessage.contains("codebook"), codes.getMessage)
+    // within the bounds the same quantizer shapes build
+    assert(Similarity.ivfPqBuildIndex(corpus, oneCell, oneCode, m = 1, subDim = 2)
+      .count() === 4)
+  }
+
   test("N10: radius search returns the whole in-threshold neighborhood of probed cells") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col

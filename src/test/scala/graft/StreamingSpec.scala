@@ -108,7 +108,7 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
       .option("maxFilesPerTrigger", "1")
       .parquet(src)
     graft.streaming.StreamCorpus.drainGateDedup(stream, model, out,
-      root.resolve("ckpt").toString, statePartitions = Some(2))
+      root.resolve("ckpt").toString)
 
     val sunk = spark.read.parquet(out).collect()
       .map(r => r.getAs[String]("fp") -> r.getAs[Long]("n_tokens"))
