@@ -3,26 +3,22 @@ package graft.io
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-/** How [[TgzSink]] marks completed task attempts and publishes winners.
-  * Both steps stay inside one root (a call stages in `<root>/_tmp-<call>/`),
+/** How [[TgzSink]] publishes the staged files its write tasks reported.
+  * Publishing stays inside one root (a call stages in `<root>/_tmp-<call>/`),
   * and each root of a two-store split resolves its own [[forPath]], so an
   * object-store root never sees `rename` beside a posix one.
   *
   * [[RenameCommit]] — posix/HDFS: `FileSystem.rename` is atomic there, so
-  * completion-marking renames the staged file to `....done` and publish
-  * renames the winner into place.
+  * publish renames each reported staged file into place.
   *
   * [[CopyCommit]] — object stores (GCS/S3/ABFS — the reference's actual
   * production target promotes via GCS server-side copy,
   * `/root/reference/unembargo.go:124-130`): Hadoop `rename` there is a
   * non-atomic copy+delete whose failure state is unknowable, so this
-  * protocol never renames. Completion-marking PUTs a one-byte
-  * `<staged>.done` marker object (a single-object PUT is atomic on every
-  * major store, and the marker is only written after every tar stream
-  * closed — so a marker implies complete staged bytes); publish copies the
-  * staged object to its final name (object copy is complete-or-absent),
-  * verifies the published length against the staged length before
-  * declaring success, and leaves the source for the staging-dir sweep.
+  * protocol never renames. Publish copies the staged object to its final
+  * name (object copy is complete-or-absent), verifies the published length
+  * against the staged length before declaring success, and leaves the
+  * source for the staging-dir sweep.
   */
 sealed trait CommitProtocol extends Serializable
 case object RenameCommit extends CommitProtocol

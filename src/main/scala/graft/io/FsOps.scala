@@ -122,28 +122,9 @@ object FsOps {
   def mkdirs(spark: SparkSession, dir: String): Boolean =
     fs(spark, dir).mkdirs(new Path(dir))
 
-  /** Compact a parquet directory's files toward `targetBytes` each —
-    * the small-file remedy. Streaming sinks, per-day ingests and
-    * fine-grained partitioning all accrete files far below the ideal
-    * scan unit; at lake scale the LISTING becomes the bottleneck (every
-    * query pays file-count × metadata round-trip) and each task reads a
-    * sliver. Rewrites through `repartition` (even output sizes; pass
-    * `shuffle = false` for a `coalesce` that skips the exchange when the
-    * input is not skewed), then swaps directories.
-    *
-    * The delete+rename swap is NOT atomic — concurrent readers can catch
-    * the gap. That is inherent to bare-directory layouts (the reference's
-    * own overwrite semantics, `/root/reference/unembargo.go:115-130`);
-    * table formats fix it with a metadata pointer swap, and this op slots
-    * under one (compact, then commit the new file list).
-    *
-    * Returns the output file count.
-    */
-  /** Total bytes of the parquet data files under `dir` — the shared size
-    * listing behind both compaction variants ([[compactParquet]] and
-    * [[graft.ops.Compaction.compact]]), so their `ceil(bytes/target)`
-    * file-count arithmetic can never drift apart on what "bytes" means
-    * (data files only; _SUCCESS/metadata excluded).
+  /** Total bytes of the parquet data files under `dir` — the size
+    * listing behind [[graft.ops.Compaction.compact]]'s `ceil(bytes/target)`
+    * file-count arithmetic (data files only; _SUCCESS/metadata excluded).
     */
   def parquetBytes(spark: SparkSession, dir: String): Long = {
     // List what the READER reads: every non-hidden file, recursively
@@ -175,20 +156,5 @@ object FsOps {
       }.sum
       walk(new Path(dir))
     }
-  }
-
-  def compactParquet(spark: SparkSession, dir: String,
-                     targetBytes: Long = 128L << 20,
-                     shuffle: Boolean = true): Int = {
-    val f = fs(spark, dir)
-    val size = parquetBytes(spark, dir)
-    val nFiles = math.max(1, math.ceil(size.toDouble / targetBytes).toInt)
-    val df = spark.read.parquet(dir)
-    val compacted = if (shuffle) df.repartition(nFiles) else df.coalesce(nFiles)
-    val tmp = dir.stripSuffix("/") + ".compact-tmp"
-    compacted.write.mode("overwrite").parquet(tmp)
-    f.delete(new Path(dir), true)
-    f.rename(new Path(tmp), new Path(dir))
-    nFiles
   }
 }

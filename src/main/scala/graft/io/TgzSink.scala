@@ -6,7 +6,7 @@ import org.apache.commons.compress.archivers.tar.{TarArchiveEntry, TarArchiveOut
 import org.apache.commons.compress.compressors.gzip.GzipCompressorOutputStream
 import org.apache.hadoop.fs.Path
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{Dataset, Row}
+import org.apache.spark.sql.{Dataset, Encoders, Row}
 import org.apache.spark.sql.graft.bridge
 
 import graft.model.Schemas
@@ -17,7 +17,7 @@ import graft.model.Schemas
   * (`/root/reference/embargo.go:105`), each committed straight into its
   * own store as `WriteResults` does (`/root/reference/embargo.go:103-121`).
   *
-  * Spark-first shape: a `foreachPartition` writer over routed entry rows.
+  * Spark-first shape: a `mapPartitions` writer over routed entry rows.
   * [[TgzSource]] produces each archive's entries contiguously and in order
   * inside one task, so the whole split pipeline
   * (scan → explode → route → repack) runs shuffle-free: this sink just
@@ -33,34 +33,34 @@ import graft.model.Schemas
   * Output is published with a write-tmp-then-commit protocol: every task
   * writes `<root>/_tmp-<call>/<final>.p<partition>.a<attempt>` — staging
   * private to the call, so concurrent calls into one root never see or
-  * delete each other's files — and when ALL its writers have closed
-  * cleanly it marks each staged file complete by renaming it to
-  * `....done` — the success record a bare attempt id cannot provide.
-  * Commit considers ONLY marked files: a task that died mid-write (or a
-  * speculative attempt killed after a slower-but-complete sibling
-  * finished) leaves unmarked debris that can never beat a complete file,
-  * regardless of attempt-id order. A final name marked by two DIFFERENT
+  * delete each other's files — and, once ALL its writers have closed
+  * cleanly, returns one [[StagedFile]] report per file as its task result.
+  * Spark delivers exactly one result per partition, from the attempt that
+  * succeeded, so the reports name the winners: a task that died mid-write,
+  * or a speculative duplicate, reports nothing and its staged file is
+  * swept with the staging dir. A final name reported by two DIFFERENT
   * partitions means the caller broke the per-archive contiguity contract
   * (e.g. a repartition split an archive across tasks) — the commit fails
   * fast instead of letting the second writer silently clobber the first.
-  * Two marked attempts of the SAME partition are duplicate successes
-  * (retry after a lost heartbeat, speculation) writing identical content;
-  * the latest is picked for determinism.
   *
-  * Marking and publishing are rename-based only where rename is atomic
-  * (posix/HDFS); on object-store schemes the sink switches to the
-  * rename-free [[CopyCommit]] protocol (marker PUT + copy-then-verify) —
-  * see [[CommitProtocol]], resolved per root.
+  * Publishing is rename-based only where rename is atomic (posix/HDFS); on
+  * object-store schemes the sink switches to the rename-free
+  * [[CopyCommit]] protocol (copy-then-verify) — see [[CommitProtocol]],
+  * resolved per root.
   */
 object TgzSink {
-
-  private val DoneSuffix = ".done"
 
   /** A root one split call publishes into, and the call's staging beside it. */
   private[io] final case class Target(dir: String, callId: String,
                                       protocol: CommitProtocol) {
     def staging: Path = new Path(dir, s"_tmp-$callId")
   }
+
+  /** One file a task staged and closed: `tmpName` under
+    * `targets(target).staging`, to be published as `fin`.
+    */
+  private[io] final case class StagedFile(target: Int, fin: String,
+                                          tmpName: String, partition: Int)
 
   /** Write `(archive × route)` tgz pairs under `outDir`.
     *
@@ -106,21 +106,20 @@ object TgzSink {
     val privIdx = targets.length - 1
     targets.foreach(t => t.staging.getFileSystem(sconf.value).mkdirs(t.staging))
 
-    try routed.foreachPartition { rows: Iterator[Row] =>
+    val reports = try routed.mapPartitions { rows: Iterator[Row] =>
       val conf = sconf.value
       val fss = targets.map(_.staging.getFileSystem(conf))
       val tc = TaskContext.get()
       val taskSuffix = s".p${tc.partitionId()}.a${tc.taskAttemptId()}"
       val closed = scala.collection.mutable.HashSet.empty[String]
-      // (target index, staged name) of every file this attempt wrote
-      val staged = scala.collection.mutable.ArrayBuffer.empty[(Int, String)]
+      val staged = scala.collection.mutable.ArrayBuffer.empty[StagedFile]
       var current: String = null
       var lastOrdinal = Long.MinValue
       var pub: TarWriter = null
       var priv: TarWriter = null
 
       def open(i: Int, name: String): TarWriter = {
-        staged += (i -> (name + taskSuffix))
+        staged += StagedFile(i, name, name + taskSuffix, tc.partitionId())
         new TarWriter(fss(i).create(
           new Path(targets(i).staging, name + taskSuffix), true))
       }
@@ -152,119 +151,69 @@ object TgzSink {
         w.write(r)
       }
       closeCurrent()
-      // every writer closed cleanly — mark this attempt's files complete so
-      // commit can tell them from the debris of attempts that died mid-write.
-      // RenameCommit marks by renaming the data file itself (atomic on
-      // posix/HDFS); CopyCommit never renames — it PUTs a one-byte
-      // `.done` marker beside the data file (atomic single-object PUT).
-      staged.foreach { case (i, n) =>
-        val dir = targets(i).staging
-        targets(i).protocol match {
-          case RenameCommit =>
-            if (!fss(i).rename(new Path(dir, n), new Path(dir, n + DoneSuffix)))
-              throw new java.io.IOException(s"failed to mark staged file $n complete")
-          case CopyCommit =>
-            val m = fss(i).create(new Path(dir, n + DoneSuffix), true)
-            // non-empty on purpose: the commit election lists the staging
-            // dir through Spark's file index, which prunes zero-length
-            // files — an empty marker would be invisible to it
-            m.write('k'); m.close()
-        }
-      }
-    } catch { case e: Throwable => sweep(targets, sconf); throw e }
+      // reported only now, with every writer closed
+      staged.iterator
+    }(Encoders.product[StagedFile]).collect().toSeq
+    catch { case e: Throwable => sweep(targets, sconf); throw e }
 
-    commit(spark, targets, sconf)
+    commit(spark, targets, reports, sconf)
   }
 
   /** Remove this call's staging dirs — never another call's. */
   private def sweep(targets: Seq[Target], sconf: SerializableHadoopConf): Unit =
     targets.foreach(t => t.staging.getFileSystem(sconf.value).delete(t.staging, true))
 
-  /** Publish every target's staged outputs: consider only `.done`-marked
-    * files (attempts whose task closed every writer — unmarked files are
-    * mid-write debris and are dropped with the staging dirs), fail on any
-    * final name marked by two distinct partitions, keep the latest marked
-    * attempt per (target, final name), move winners into their target
-    * root (overwriting prior runs' outputs), and always remove the
-    * staging dirs.
+  /** Publish the files the write job's tasks reported: fail on any final
+    * name reported by two distinct partitions, move each reported file into
+    * its target root (overwriting prior runs' outputs) in ONE distributed
+    * job, and always remove the staging dirs —
+    * unreported files (attempts that died or lost) go with them.
     *
-    * The staging catalog is DATA: the listing is ONE distributed
-    * `binaryFile` METADATA scan over all targets' staging dirs (content
-    * pruned, file discovery parallelized by Spark's file index — the same
-    * shape as [[FsOps.list]]) and the winner election is a `groupBy`
-    * aggregation, so commit holds no per-archive state on the driver and
-    * survives ~10⁷ staged archives where a driver-side `listStatus` array
-    * would be the scaling wall. The publishes are likewise distributed,
-    * metadata-only ops; the driver sees only the conflict verdict (a
-    * handful of example names).
+    * Driver state: two reports per input archive. The scan's file index
+    * already holds one `FileStatus` per input archive on the driver, so
+    * the reports add no new class of driver state.
     */
   private[io] def commit(spark: org.apache.spark.sql.SparkSession,
-                         targets: Seq[Target],
-                         sconf: SerializableHadoopConf): Unit = {
-    import org.apache.spark.sql.functions._
-    val stagedRe = "^(.*)\\.p(\\d+)\\.a(\\d+)\\" + DoneSuffix + "$"
-    val perFin = targets.indices.map { i =>
-      spark.read.format("binaryFile").load(targets(i).staging.toString)
-        .select(lit(i).as("target"),
-          regexp_extract(col("path"), "([^/]+)$", 1).as("tmpName"))
-    }.reduce(_ unionAll _)
-      .select(col("target"), col("tmpName"),
-        regexp_extract(col("tmpName"), stagedRe, 1).as("fin"),
-        regexp_extract(col("tmpName"), stagedRe, 2).cast("long").as("part"),
-        regexp_extract(col("tmpName"), stagedRe, 3).cast("long").as("attempt"))
-      .filter(col("fin") =!= "") // unmarked debris doesn't parse — dropped
-      .groupBy("target", "fin").agg(
-        countDistinct(col("part")).as("n_parts"),
-        // latest attempt per final name wins (earlier = retry debris of the
-        // same partition writing identical content)
-        max_by(col("tmpName"), col("attempt")).as("winner"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
+                         targets: Seq[Target], reports: Seq[StagedFile],
+                         sconf: SerializableHadoopConf): Unit =
     try {
-      val conflicts = perFin.filter(col("n_parts") > 1)
-        .select("fin").orderBy("fin").limit(5)
-        .collect().map(_.getString(0))
+      // two archives with one basename in one task share a staged name
+      val files = reports.distinct
+      val claims = files.map(f => (f.target, f.fin))
+      val conflicts = claims.diff(claims.distinct).map(_._2).distinct.sorted.take(5)
       if (conflicts.nonEmpty)
         throw new IllegalStateException(
           "archive rows were split across partitions — outputs claimed by " +
             s"multiple tasks: ${conflicts.mkString(", ")}")
-      perFin.select("target", "winner", "fin").foreachPartition { it: Iterator[Row] =>
+      val sc = spark.sparkContext
+      sc.parallelize(files, files.size.min(sc.defaultParallelism).max(1)).foreach { f =>
         val conf = sconf.value
-        it.foreach { r =>
-          val t = targets(r.getInt(0))
-          val pfs = t.staging.getFileSystem(conf)
-          val target = new Path(t.dir, r.getString(2))
-          t.protocol match {
-            case RenameCommit =>
-              // the `.done` file IS the data under rename marking
-              pfs.delete(target, false)
-              if (!pfs.rename(new Path(t.staging, r.getString(1)), target))
-                throw new java.io.IOException(
-                  s"commit rename failed for ${r.getString(2)}")
-            case CopyCommit =>
-              // the `.done` file is a marker; the data sits beside it.
-              // Copy-then-verify: object copy/PUT is complete-or-absent,
-              // and the length check turns "copy claimed success" into
-              // "published object verifiably holds the staged bytes"
-              // before the winner is declared committed. The staged
-              // source is left for the staging-dir sweep.
-              val src = new Path(t.staging, r.getString(1).stripSuffix(DoneSuffix))
-              val srcLen = pfs.getFileStatus(src).getLen
-              org.apache.hadoop.fs.FileUtil.copy(pfs, src, pfs, target,
-                false, true, conf)
-              val dstLen = pfs.getFileStatus(target).getLen
-              if (dstLen != srcLen)
-                throw new java.io.IOException(
-                  s"commit verify failed for ${r.getString(2)}: " +
-                    s"published $dstLen bytes, staged $srcLen")
-          }
+        val t = targets(f.target)
+        val pfs = t.staging.getFileSystem(conf)
+        val src = new Path(t.staging, f.tmpName)
+        val target = new Path(t.dir, f.fin)
+        t.protocol match {
+          case RenameCommit =>
+            pfs.delete(target, false)
+            if (!pfs.rename(src, target))
+              throw new java.io.IOException(s"commit rename failed for ${f.fin}")
+          case CopyCommit =>
+            // Copy-then-verify: object copy/PUT is complete-or-absent,
+            // and the length check turns "copy claimed success" into
+            // "published object verifiably holds the staged bytes"
+            // before the file is declared committed. The staged source
+            // is left for the staging-dir sweep.
+            val srcLen = pfs.getFileStatus(src).getLen
+            org.apache.hadoop.fs.FileUtil.copy(pfs, src, pfs, target,
+              false, true, conf)
+            val dstLen = pfs.getFileStatus(target).getLen
+            if (dstLen != srcLen)
+              throw new java.io.IOException(
+                s"commit verify failed for ${f.fin}: " +
+                  s"published $dstLen bytes, staged $srcLen")
         }
       }
-    } finally {
-      perFin.unpersist()
-      sweep(targets, sconf)
-    }
-  }
+    } finally sweep(targets, sconf)
 
   /** One gzipped tar stream; copies the 5 header fields the reference
     * preserves (`/root/reference/embargo.go:163-168`).

@@ -24,11 +24,11 @@ object Compaction {
   /** Refuse overlapping in/out dirs (an overwrite-mode write into — or
     * OVER, an ancestor outDir recursively deletes the input before the
     * lazy scan reads it — the directory being read truncates the input
-    * mid-scan; the in-place variant is FsOps.compactParquet). Compares
-    * FULLY QUALIFIED forms (review r16): makeQualified resolves
-    * scheme/authority and relative paths against the FS default, and
-    * URI.normalize collapses '.'/'..' segments, so the same directory
-    * spelled two ways cannot slip past a raw string-prefix test.
+    * mid-scan). Compares FULLY QUALIFIED forms (review r16):
+    * makeQualified resolves scheme/authority and relative paths against
+    * the FS default, and URI.normalize collapses '.'/'..' segments, so the
+    * same directory spelled two ways cannot slip past a raw string-prefix
+    * test.
     * (Symlinked aliases on a local FS remain the caller's
     * responsibility — no portable resolution exists across Hadoop
     * filesystems.)
@@ -43,8 +43,7 @@ object Compaction {
     val inN = qualified(inDir).stripSuffix("/") + "/"
     val outN = qualified(outDir).stripSuffix("/") + "/"
     require(!inN.startsWith(outN) && !outN.startsWith(inN),
-      s"inDir ($inDir) and outDir ($outDir) overlap — " +
-        "use FsOps.compactParquet for in-place")
+      s"inDir ($inDir) and outDir ($outDir) overlap")
   }
 
   /** ceil(totalBytes / targetBytes), the shared output-file-count rule. */

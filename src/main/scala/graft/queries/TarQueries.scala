@@ -63,6 +63,18 @@ object TarQueries {
     s"$StageDir/${name}_${d.map("%02x".format(_)).mkString}"
   }
 
+  private def base(p: String) = p.substring(p.lastIndexOf('/') + 1)
+
+  /** The e4/e5 "source bucket": each fixture copied under its day prefix
+    * in `src`.
+    */
+  private def stageSourceStore(spark: SparkSession, src: String): Unit =
+    Seq((FixtureTgz, "sidestream/2017/03/15"),
+        (Fixture2Tgz, "sidestream/2017/03/16")).foreach { case (tgz, prefix) =>
+      graft.io.FsOps.mkdirs(spark, s"$src/$prefix")
+      graft.io.FsOps.copy(spark, tgz, s"$src/$prefix/${base(tgz)}")
+    }
+
   /** Run independent per-archive Spark jobs from a small driver thread
     * pool (guide §2.6: actions are only sequential because the driver
     * calls them sequentially — overlapping lets the next job's tasks
@@ -175,7 +187,6 @@ object TarQueries {
     graft.io.FsOps.deletePrefix(spark, out)
     EmbargoSplit.run(spark, FixtureTgz, FixtureWhitelist, FixtureCutoff, out)
     EmbargoSplit.run(spark, Fixture2Tgz, FixtureWhitelist, Fixture2Cutoff, out)
-    def base(p: String) = p.substring(p.lastIndexOf('/') + 1)
     manifest(Seq(
       ("f1-p", s"$out/${base(FixtureTgz)}"),
       ("f1-e", s"$out/${base(FixtureTgz).replace(".tgz", "-e.tgz")}"),
@@ -208,15 +219,13 @@ object TarQueries {
     graft.io.FsOps.deletePrefix(spark, root)
     val pub = s"$root/public"
     val priv = s"$root/embargoed"
-    def dayPrefix(date: Int) =
-      f"sidestream/${date / 10000}%04d/${date / 100 % 100}%02d/${date % 100}%02d"
     val fixtures = Seq((FixtureTgz, FixtureCutoff, 20170315),
       (Fixture2Tgz, Fixture2Cutoff, 20170316))
     // E1: split each day with the S8 insertion into the two stores — the
     // two day jobs are independent (distinct day prefixes), so they
     // overlap (guide §2.6)
     inParallel(fixtures) { case (tgz, cutoff, date) =>
-      val prefix = dayPrefix(date)
+      val prefix = graft.ops.Unembargo.dayPrefix(date)
       EmbargoSplit.runWith(spark, tgz, TgzSource.whitelist(spark, FixtureWhitelist),
         cutoff, s"$pub/$prefix", s"$priv/$prefix")
     }
@@ -274,22 +283,16 @@ object TarQueries {
   def singleFileSubmit(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     import graft.functions.NameFunctions.{decodeBase64Path, isSidestreamArchive}
-    def base(p: String) = p.substring(p.lastIndexOf('/') + 1)
     submitRequests.toDF("req_id", "b64")
       .write.mode("overwrite").parquet(s"$StageDir/e4_requests.parquet")
     stageGoldenManifest(spark, s"$StageDir/e4_golden.parquet")
 
-    // the "source bucket": fixtures staged under their day prefixes
     val root = s"$StageDir/e4"
     graft.io.FsOps.deletePrefix(spark, root)
     val src = s"$root/src"
     val pub = s"$root/public"
     val priv = s"$root/embargoed"
-    Seq((FixtureTgz, "sidestream/2017/03/15"),
-        (Fixture2Tgz, "sidestream/2017/03/16")).foreach { case (tgz, prefix) =>
-      graft.io.FsOps.mkdirs(spark, s"$src/$prefix")
-      graft.io.FsOps.copy(spark, tgz, s"$src/$prefix/${base(tgz)}")
-    }
+    stageSourceStore(spark, src)
 
     // request classification — the handler's guard chain as columns
     val reqs = spark.read.parquet(s"$StageDir/e4_requests.parquet")
@@ -396,7 +399,6 @@ object TarQueries {
   private def submitRequests: Seq[(Long, String)] = {
     def b64(s: String) =
       java.util.Base64.getEncoder.encodeToString(s.getBytes("UTF-8"))
-    def base(p: String) = p.substring(p.lastIndexOf('/') + 1)
     Seq(
       (1L, b64(s"gs://scraper-mlab/sidestream/2017/03/15/${base(FixtureTgz)}")),
       (2L, b64(s"gs://scraper-mlab/sidestream/2017/03/16/${base(Fixture2Tgz)}")),
@@ -422,7 +424,6 @@ object TarQueries {
     */
   def serviceSubmit(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    def base(p: String) = p.substring(p.lastIndexOf('/') + 1)
     val reqRows = submitRequests
     reqRows.toDF("req_id", "b64")
       .write.mode("overwrite").parquet(s"$StageDir/e5_requests.parquet")
@@ -433,11 +434,7 @@ object TarQueries {
     val src = s"$root/src"
     val pub = s"$root/public"
     val priv = s"$root/embargoed"
-    Seq((FixtureTgz, "sidestream/2017/03/15"),
-        (Fixture2Tgz, "sidestream/2017/03/16")).foreach { case (tgz, prefix) =>
-      graft.io.FsOps.mkdirs(spark, s"$src/$prefix")
-      graft.io.FsOps.copy(spark, tgz, s"$src/$prefix/${base(tgz)}")
-    }
+    stageSourceStore(spark, src)
 
     val svc = graft.ops.Service.serve(spark, graft.ops.Service.ServiceConfig(
       srcDir = src, publicDir = pub, privateDir = priv,

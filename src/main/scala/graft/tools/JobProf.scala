@@ -25,12 +25,6 @@ object JobProf {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = graft.Tables.localSession(cpus, "ERROR")
-    // A/B knob: SPARK_EXTRA_CONF="k=v;k=v" session-conf overrides
-    sys.env.get("SPARK_EXTRA_CONF").foreach(_.split(";").filter(_.contains("="))
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        println(s"[conf] $k=$v"); spark.conf.set(k.trim, v.trim)
-      })
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit = {
@@ -70,7 +64,7 @@ object JobProf {
     try {
       spark.range(1000).selectExpr("sum(id)").collect()
       spark.read.parquet(s"$sfDir/nation.parquet").count()
-    } catch { case _: Throwable => () }
+    } catch { case e: Throwable => System.err.println(s"[jobprof] warm-up failed: $e") }
     for (name <- names) {
       val fn = graft.SparkEntry.queries(name)
       for (pass <- 1 to 2) {

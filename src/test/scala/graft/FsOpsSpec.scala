@@ -74,25 +74,6 @@ class FsOpsSpec extends AnyFunSuite with SparkSuite {
     assert(FsOps.syncCopy(spark, s"$root/a", s"$root/b") === 0) // idempotent
   }
 
-  test("compactParquet merges small files, preserving every row") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft-compact").toString + "/t.parquet"
-    val df = (1 to 5000).map(i => (i.toLong, s"v$i")).toDF("k", "v")
-    df.repartition(20).write.parquet(dir) // 20 tiny files
-    val before = FsOps.list(spark, dir, ".parquet").count()
-    assert(before === 20)
-    val n = FsOps.compactParquet(spark, dir, targetBytes = 1L << 30)
-    assert(n === 1)
-    assert(FsOps.list(spark, dir, ".parquet").count() === 1)
-    val after = spark.read.parquet(dir)
-    assert(after.count() === 5000)
-    assert(after.exceptAll(df).isEmpty && df.exceptAll(after).isEmpty)
-    // coalesce path: no exchange in the rewrite, same data
-    df.repartition(20).write.mode("overwrite").parquet(dir)
-    FsOps.compactParquet(spark, dir, targetBytes = 1L << 30, shuffle = false)
-    assert(spark.read.parquet(dir).count() === 5000)
-  }
-
   test("list() plans no sort: join consumers pay no listing exchange") {
     val root = Files.createTempDirectory("graft-plan").toString
     FsOps.mkdirs(spark, s"$root/a")

@@ -6,10 +6,6 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSuite
 
-/** Commit-protocol spec for [[TgzSink]]: only `.done`-marked staged files
-  * are publishable — an attempt that died mid-write (no marker) must never
-  * beat a complete attempt, whatever its attempt id.
-  */
 /** A local FileSystem masquerading as an object store whose `rename` is
   * unusable — models GCS/S3 semantics where rename is client-driven
   * copy+delete and must never be on the commit path.
@@ -31,6 +27,12 @@ class NoRenameObjectStore extends NoRenameFileSystem {
   override def getUri: java.net.URI = java.net.URI.create("gs://graft-test/")
 }
 
+/** Commit-protocol spec for [[TgzSink]]: only the staged files the write
+  * job's tasks reported are publishable — an attempt that died mid-write
+  * (no report) must never beat a complete attempt, whatever its attempt id.
+  * In the test names, a "marked" file is a reported one and the "election"
+  * is the commit over the reports.
+  */
 class TgzSinkCommitSpec extends AnyFunSuite with SparkSuite {
 
   private def sconf() =
@@ -45,6 +47,16 @@ class TgzSinkCommitSpec extends AnyFunSuite with SparkSuite {
     val t = TgzSink.Target(outDir, "call-1", protocol)
     Files.createDirectories(Paths.get(t.staging.toString))
     t
+  }
+
+  /** Stage `content` as partition `part`'s file for `fin` and return the
+    * report its task would deliver.
+    */
+  private def stage(t: TgzSink.Target, target: Int, fin: String, part: Int,
+                    attempt: Int, content: String): TgzSink.StagedFile = {
+    val tmp = s"$fin.p$part.a$attempt"
+    Files.write(Paths.get(s"${t.staging}/$tmp"), content.getBytes)
+    TgzSink.StagedFile(target, fin, tmp, part)
   }
 
   private def names(dir: String): Seq[String] = {
@@ -78,41 +90,29 @@ class TgzSinkCommitSpec extends AnyFunSuite with SparkSuite {
   test("commit publishes marked attempts and drops unmarked mid-write debris") {
     val outDir = Files.createTempDirectory("graft-commit").toString
     val t = stagedTarget(outDir)
-    // complete attempt 3 (marked) vs a KILLED attempt 9 that wrote more
-    // bytes but never closed — the higher attempt id must not win
-    Files.write(Paths.get(s"${t.staging}/x.tgz.p0.a3.done"), "COMPLETE".getBytes)
+    // complete attempt 3 (reported) vs a KILLED attempt 9 that wrote more
+    // bytes but never reported — the higher attempt id must not win
+    val x = stage(t, 0, "x.tgz", 0, 3, "COMPLETE")
     Files.write(Paths.get(s"${t.staging}/x.tgz.p0.a9"), "TRUNCATED-BUT-LONGER".getBytes)
-    // a second final name whose only attempt is unmarked: nothing published
+    // a second final name whose only attempt never reported: nothing published
     Files.write(Paths.get(s"${t.staging}/y.tgz.p1.a1"), "DEAD".getBytes)
 
-    TgzSink.commit(spark, Seq(t), sconf())
+    TgzSink.commit(spark, Seq(t), Seq(x), sconf())
 
     assert(Files.readString(Paths.get(s"$outDir/x.tgz")) === "COMPLETE")
     assert(!Files.exists(Paths.get(s"$outDir/y.tgz")))
     assert(!Files.exists(Paths.get(t.staging.toString))) // staging cleaned up
   }
 
-  test("commit picks the latest marked attempt of duplicate successes") {
-    val outDir = Files.createTempDirectory("graft-commit2").toString
-    val t = stagedTarget(outDir)
-    Files.write(Paths.get(s"${t.staging}/z.tgz.p2.a4.done"), "EARLY".getBytes)
-    Files.write(Paths.get(s"${t.staging}/z.tgz.p2.a7.done"), "LATE".getBytes)
-
-    TgzSink.commit(spark, Seq(t), sconf())
-
-    assert(Files.readString(Paths.get(s"$outDir/z.tgz")) === "LATE")
-  }
-
-  test("CopyCommit publishes from marker files with copy-then-verify") {
+  test("CopyCommit publishes reported files with copy-then-verify") {
     val outDir = Files.createTempDirectory("graft-commit-cp").toString
     val t = stagedTarget(outDir, CopyCommit)
-    // marker-file protocol: the data file sits beside a zero-byte marker
-    Files.write(Paths.get(s"${t.staging}/x.tgz.p0.a3"), "COMPLETE".getBytes)
-    Files.write(Paths.get(s"${t.staging}/x.tgz.p0.a3.done"), "k".getBytes)
-    // unmarked mid-write debris must still lose
+    // no marker file: the report alone makes the staged file publishable
+    val x = stage(t, 0, "x.tgz", 0, 3, "COMPLETE")
+    // unreported mid-write debris must still lose
     Files.write(Paths.get(s"${t.staging}/x.tgz.p0.a9"), "TRUNCATED-LONGER".getBytes)
 
-    TgzSink.commit(spark, Seq(t), sconf())
+    TgzSink.commit(spark, Seq(t), Seq(x), sconf())
 
     assert(Files.readString(Paths.get(s"$outDir/x.tgz")) === "COMPLETE")
     assert(!Files.exists(Paths.get(t.staging.toString)))
@@ -126,25 +126,62 @@ class TgzSinkCommitSpec extends AnyFunSuite with SparkSuite {
     // the same final name staged in both roots is two outputs, not a
     // cross-partition conflict: a source named `a-e.tgz` has its public
     // half `a-e.tgz`, and source `a.tgz` its private half `a-e.tgz`
-    Files.write(Paths.get(s"${pub.staging}/a-e.tgz.p0.a1.done"), "PUBLIC".getBytes)
-    Files.write(Paths.get(s"${priv.staging}/a-e.tgz.p1.a2"), "PRIVATE".getBytes)
-    Files.write(Paths.get(s"${priv.staging}/a-e.tgz.p1.a2.done"), "k".getBytes)
+    val reports = Seq(
+      stage(pub, 0, "a-e.tgz", 0, 1, "PUBLIC"),
+      stage(priv, 1, "a-e.tgz", 1, 2, "PRIVATE"))
 
-    TgzSink.commit(spark, Seq(pub, priv), sconf())
+    TgzSink.commit(spark, Seq(pub, priv), reports, sconf())
 
     assert(Files.readString(Paths.get(s"$pubDir/a-e.tgz")) === "PUBLIC")
     assert(Files.readString(Paths.get(s"$privDir/a-e.tgz")) === "PRIVATE")
     assert(stagingEntries(pubDir).isEmpty && stagingEntries(privDir).isEmpty)
   }
 
+  test("commit is one Spark job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val pubDir = Files.createTempDirectory("graft-commit-job-pub").toString
+    val privDir = Files.createTempDirectory("graft-commit-job-priv").toString
+    val pub = stagedTarget(pubDir)
+    val priv = stagedTarget(privDir, CopyCommit)
+    val reports = (0 until 3).flatMap { p =>
+      Seq(stage(pub, 0, s"a$p.tgz", p, p, "PUBLIC"),
+        stage(priv, 1, s"a$p-e.tgz", p, p, "PRIVATE"))
+    }
+    val group = "graft-commit-spec"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (Option(js.properties).exists(
+            _.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setJobGroup(group, "commit")
+      try TgzSink.commit(spark, Seq(pub, priv), reports, sconf())
+      finally spark.sparkContext.clearJobGroup()
+      // listener events are async: wait for the first, then until the
+      // count holds still (bounded, so a zero-job run fails the assert)
+      val deadline = System.currentTimeMillis + 30000
+      while (jobs.get() == 0 && System.currentTimeMillis < deadline)
+        Thread.sleep(100)
+      var prev = -1
+      while (jobs.get() != prev) { prev = jobs.get(); Thread.sleep(300) }
+    } finally spark.sparkContext.removeSparkListener(listener)
+
+    assert(jobs.get() === 1)
+    assert(visibleNames(pubDir) === Seq("a0.tgz", "a1.tgz", "a2.tgz"))
+    assert(visibleNames(privDir) === Seq("a0-e.tgz", "a1-e.tgz", "a2-e.tgz"))
+  }
+
   test("writeSplit leaves a concurrent writer's staged files in the same root alone") {
     val outDir = Files.createTempDirectory("graft-commit-conc").toString
-    // another writer's marked, complete staged file, mid-way through its
-    // own commit: in another call's staging dir, and in the `_tmp` dir an
+    // another writer's complete staged file, mid-way through its own
+    // commit: in another call's staging dir, and in the `_tmp` dir an
     // earlier build's writers share
     val planted = Seq(
-      Paths.get(s"$outDir/_tmp-other-call/w.tgz.p0.a1.done"),
-      Paths.get(s"$outDir/_tmp/w.tgz.p0.a1.done"))
+      Paths.get(s"$outDir/_tmp-other-call/w.tgz.p0.a1"),
+      Paths.get(s"$outDir/_tmp/w.tgz.p0.a1"))
     planted.foreach { p =>
       Files.createDirectories(p.getParent)
       Files.write(p, "OTHER-WRITER".getBytes)
@@ -222,13 +259,13 @@ class TgzSinkCommitSpec extends AnyFunSuite with SparkSuite {
   test("commit still rejects a final name marked by two partitions") {
     val outDir = Files.createTempDirectory("graft-commit3").toString
     val t = stagedTarget(outDir)
-    Files.write(Paths.get(s"${t.staging}/w.tgz.p0.a1.done"), "P0".getBytes)
-    Files.write(Paths.get(s"${t.staging}/w.tgz.p1.a2.done"), "P1".getBytes)
+    val reports = Seq(stage(t, 0, "w.tgz", 0, 1, "P0"), stage(t, 0, "w.tgz", 1, 2, "P1"))
 
     val e = intercept[IllegalStateException] {
-      TgzSink.commit(spark, Seq(t), sconf())
+      TgzSink.commit(spark, Seq(t), reports, sconf())
     }
     assert(e.getMessage.contains("split across partitions"))
     assert(!Files.exists(Paths.get(s"$outDir/w.tgz")))
+    assert(!Files.exists(Paths.get(t.staging.toString)))
   }
 }
