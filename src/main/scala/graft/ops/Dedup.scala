@@ -653,68 +653,55 @@ object Dedup {
     * handful of rounds at any scale. For adversarial long-chain graphs
     * use a star-contraction variant (O(log n) rounds); not needed here.
     *
-    * Each round's labels go through an eager checkpoint, which TRUNCATES
-    * the logical lineage — `persist` alone is not enough for an iterative
-    * loop whose round references the previous labels twice (neighbor join,
-    * no-neighbor fallback): the analyzed plan would branch and roughly
-    * double per round, and analysis time — not execution — becomes the
-    * bottleneck within a few iterations.
+    * The loop is [[Fixpoint]] in convergence mode: each round's labels
+    * are pinned, which TRUNCATES the logical lineage — `persist` alone is
+    * not enough for an iterative loop whose round references the previous
+    * labels twice (neighbor join, no-neighbor fallback): the analyzed
+    * plan would branch and roughly double per round, and analysis time —
+    * not execution — becomes the bottleneck within a few iterations. The
+    * round's "no label changed" test rides in the job that pins it. The
+    * edge list is built once (one `inline()` pass symmetrizes the pairs,
+    * so the pair pipeline runs once) and pinned as it comes: a pin keeps
+    * no output partitioning (its plan reports UnknownPartitioning), so
+    * every round exchanges the edges on `dst` anyway and AQE coalescing
+    * sizes that exchange for a small graph — a `repartition` before the
+    * pin would only add one more exchange.
     *
-    * Durability: with `checkpointDir = None` rounds use `localCheckpoint`
-    * (executor-local blocks — fine single-JVM and fastest, but on a real
-    * cluster an executor loss mid-fixpoint loses blocks with NO lineage to
-    * recompute them, and the whole run restarts). A 100 TB run passes a
-    * `checkpointDir` on durable shared storage (HDFS/object store): rounds
-    * then go through reliable `Dataset.checkpoint()`, so losing any number
-    * of executors costs one round's recompute at most — the files survive.
+    * Durability follows the context ([[Fixpoint.pin]]): with no
+    * checkpoint dir the pins are `localCheckpoint` (executor-local blocks
+    * — fine single-JVM and fastest, but on a real cluster an executor
+    * loss mid-fixpoint loses blocks with NO lineage to recompute them, and
+    * the whole run restarts). A 100 TB run sets `spark.checkpoint.dir` on
+    * durable shared storage (HDFS/object store): the pins then go through
+    * reliable `Dataset.checkpoint()`, so losing any number of executors
+    * costs one round's recompute at most — the files survive.
+    *
+    * Throws IllegalStateException when `maxIters` rounds end with a label
+    * still changing: those labels would be partial components.
     */
-  def dupClusters(pairs: DataFrame, maxIters: Int = 25,
-                  checkpointDir: Option[String] = None): DataFrame = {
-    val sc0 = pairs.sparkSession.sparkContext
-    checkpointDir.foreach(sc0.setCheckpointDir)
-    // one knob for every round materialization: reliable when a dir is given
-    def mat(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint() else df.localCheckpoint()
-    // materialize the (possibly expensive) pair pipeline ONCE before the
-    // union doubles it into both edge directions
-    val p = pairs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nPairs = p.count()
-    // Partition the edge list by its SIZE, not by the parent pipeline's
-    // layout: the union would otherwise carry 2x the pair pipeline's
-    // partition count into every propagation round, and a small dup graph
-    // (the common case — near-dup pairs are rare relative to the corpus)
-    // pays dozens of near-empty tasks per round. ~100k edges per partition
-    // keeps round jobs proportional to the graph, capped at 4x parallelism.
-    val sc = pairs.sparkSession.sparkContext
-    val parts = math.max(1,
-      math.min((2L * nPairs / 100000L).toInt + 1, sc.defaultParallelism * 4))
-    val edges = mat(p.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .unionAll(p.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .repartition(parts))
-    p.unpersist()
-    var labels = mat(edges.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("rep")))
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIters) {
-      val nbrMin = edges
-        .join(labels.select(col("id").as("dst"), col("rep")), "dst")
-        .groupBy("src").agg(min("rep").as("nrep"))
-      // the convergence signal rides in the SAME projection the checkpoint
-      // materializes: one join+agg job per round, and the change count is
-      // then a column scan over the already-local checkpoint blocks — not a
-      // second re-join of next against the previous labels
-      val next = mat(labels
-        .join(nbrMin.select(col("src").as("id"), col("nrep")), Seq("id"), "left_outer")
-        .select(col("id"), least(col("rep"), coalesce(col("nrep"), col("rep"))).as("rep"),
-          (col("nrep") < col("rep")).as("changed")))
-      val nChanged = next.filter(col("changed")).count()
-      labels = next.select("id", "rep")
-      converged = nChanged == 0
-      i += 1
-    }
+  def dupClusters(pairs: DataFrame, maxIters: Int = 25): DataFrame = {
+    val edges = Fixpoint.pin(pairs.selectExpr(
+      "inline(array(struct(id_a AS src, id_b AS dst), struct(id_b AS src, id_a AS dst)))"))
+    val seed = edges.select(col("src").as("id")).distinct()
+      .select(col("id"), col("id").as("rep"))
+    val (labels, _, converged) =
+      Fixpoint(seed, maxIters, Some(!bool_or(col("changed")))) { labels =>
+        val nbrMin = edges
+          .join(labels.select(col("id").as("dst"), col("rep")), "dst")
+          .groupBy("src").agg(min("rep").as("nrep"))
+        labels
+          .join(nbrMin.select(col("src").as("id"), col("nrep")), Seq("id"), "left_outer")
+          .select(col("id"), least(col("rep"), coalesce(col("nrep"), col("rep"))).as("rep"),
+            (col("nrep") < col("rep")).as("changed"))
+      }
+    requireConverged(converged, "dupClusters", maxIters)
     labels.select(col("id").as("doc_id"), col("rep").as("rep_id"))
   }
+
+  private def requireConverged(converged: Boolean, op: String, maxIters: Int): Unit =
+    if (!converged) throw new IllegalStateException(
+      s"$op: not converged after maxIters ($maxIters) rounds — the labels " +
+        "would be partial components; raise maxIters")
 
   /** D7 fallback — connected components by alternating large-star /
     * small-star contraction (the two-round MapReduce scheme of Kiveris et
@@ -731,12 +718,19 @@ object Dedup {
     * the minimum attach to min(Γ(u)). Both are an equi-join of the edge
     * list against a per-node `min` aggregate — shuffles keyed on node id,
     * nothing wider than an edge ever materializes, same posture as the
-    * propagation loop. Fixpoint = the edge set is stable, at which point
-    * the graph is a forest of depth-1 stars rooted at component minima.
+    * propagation loop. The loop is [[Fixpoint]] in convergence mode, and
+    * it stops at the first round that leaves a forest of depth-1 stars
+    * rooted at component minima: every src has exactly one dst, and no
+    * dst is a src. That forest is stable under both steps, and the test
+    * rides in the job that pins the round. Both halves are needed: on the
+    * path 1-4-3-5-2 round 1 leaves no dst that is a src, yet node 3 keeps
+    * two dsts.
     *
     * Same contract as [[dupClusters]]: in `(id_a, id_b)` pairs, out
     * `(doc_id, rep_id)` with `rep_id` = component minimum —
-    * `DedupSpec` property-checks label equality on random graphs.
+    * `DedupSpec` property-checks label equality on random graphs — and
+    * the same IllegalStateException when `maxIters` rounds do not reach
+    * the star forest.
     */
   def dupClustersStar(pairs: DataFrame, maxIters: Int = 50): DataFrame = {
     def largeStar(e: DataFrame): DataFrame = {
@@ -759,19 +753,18 @@ object Dedup {
         .unionAll(m.select(col("u").as("src"), col("m").as("dst")))
         .filter(col("src") =!= col("dst")).distinct()
     }
-    var edges = pairs
+    val seed = pairs
       .select(col("id_a").as("src"), col("id_b").as("dst"))
-      .filter(col("src") =!= col("dst")).distinct().localCheckpoint()
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIters) {
-      val next = smallStar(largeStar(edges)).localCheckpoint()
-      // stable edge set = every node one hop from its component minimum;
-      // both checks scan checkpointed blocks (lineage is truncated per round)
-      converged = next.count() == edges.count() && next.exceptAll(edges).isEmpty
-      edges = next
-      i += 1
-    }
+      .filter(col("src") =!= col("dst")).distinct()
+    val (edges, _, converged) =
+      Fixpoint(seed, maxIters, Some(!bool_or(col("fanout") > 1 || col("mid").isNotNull))) { e =>
+        val next = smallStar(largeStar(e))
+        val srcs = next.select(col("src").as("dst")).distinct().withColumn("mid", lit(true))
+        next.withColumn("fanout",
+            count(lit(1)).over(org.apache.spark.sql.expressions.Window.partitionBy("src")))
+          .join(srcs, Seq("dst"), "left_outer")
+      }
+    requireConverged(converged, "dupClustersStar", maxIters)
     edges.select(col("src").as("doc_id"), col("dst").as("rep_id"))
       .unionAll(edges.select(col("dst").as("doc_id"), col("dst").as("rep_id")))
       .distinct()

@@ -16,13 +16,14 @@ import org.apache.spark.sql.functions._
   *
   * Spark-first shape: the loop body is one key-equi join (ranks ⋈ edges
   * on `src`) + one aggregation (sum by `dst`) — the standard Pregel
-  * message round expressed relationally. The edge list with its
-  * out-degrees is loop-invariant: computed once, localCheckpoint'd, and
-  * pre-partitioned by `src`, so each iteration reuses the edge-side
-  * exchange and shuffles only the (node-sized) rank table. At cluster
-  * scale the further lever is block partitioning (GraphX-style 2-D edge
-  * cuts); the relational loop here is the shape AQE can already re-plan
-  * per iteration.
+  * message round expressed relationally, run by [[Fixpoint]]. The edge
+  * list with its out-degrees is loop-invariant: computed once and pinned
+  * ([[Fixpoint.pin]]). A pin keeps no output partitioning (the pinned
+  * scan reports UnknownPartitioning), so each round still exchanges the
+  * edge side on `src`; AQE then broadcasts the node-sized rank side. At
+  * cluster scale the further lever is block partitioning (GraphX-style
+  * 2-D edge cuts); the relational loop here is the shape AQE can already
+  * re-plan per iteration.
   */
 object Graph {
 
@@ -36,10 +37,10 @@ object Graph {
     */
   val FixedPoint: Long = 1000000000L
 
-  /** Builds the loop-invariant edge table (src, dst, d) — pre-partitioned
-    * by the iteration join key and checkpointed so every round pays for it
-    * once. The dangling-node precondition is enforced by
-    * [[assertNoDangling]] AFTER round 1 — a node-sized check, not an
+  /** Builds the loop-invariant edge table (src, dst, d) — partitioned
+    * by the iteration join key for the degree window and pinned so every
+    * round pays for it once. The dangling-node precondition is enforced by
+    * [[assertNoDangling]] on the final ranks — a node-sized check, not an
     * edge-sized one.
     */
   private def edgeTable(edges: DataFrame, parts: Int = 0): DataFrame = {
@@ -54,12 +55,11 @@ object Graph {
     // exchange for `deg` plus the join itself
     // a null src would drop out of the src-keyed iteration join and take
     // its mass with it: fail loud per row, inside the projection the
-    // checkpoint job already runs (no separate validation job)
+    // pin job already runs (no separate validation job)
     val w = org.apache.spark.sql.expressions.Window.partitionBy("src")
-    part.withColumn("d",
-        when(col("src").isNull, raise_error(lit("edgeTable: null src in edge list")))
-          .otherwise(count(lit(1)).over(w)))
-      .localCheckpoint()
+    Fixpoint.pin(part.withColumn("d",
+      when(col("src").isNull, raise_error(lit("edgeTable: null src in edge list")))
+        .otherwise(count(lit(1)).over(w))))
   }
 
   /** ENFORCES the dangling-node precondition loudly (review r19): a node
@@ -69,7 +69,7 @@ object Graph {
     * is exactly `distinct dst` (round 1 trivially; later rounds too,
     * because set(src) ⊆ set(dst) would make every src a receiving dst),
     * so set(src) == set(dst) ⟺ ANY round's keyset equals the seed keyset.
-    * The check therefore runs ONCE against the (checkpointed) final
+    * The check therefore runs ONCE against the (pinned) final
     * ranks: a single NODE-sized union-count job, zero mid-loop barriers.
     * (Two r19 cuts were A/B-invalidated first: an edge-sized union
     * aggregate cost ~2.3 s on the 11.7M-edge sf1 graph, and a
@@ -100,11 +100,10 @@ object Graph {
       .select(col("dst").as("node"), col("r"))
   }
 
-  /** Uniform [[FixedPoint]] seed ranks FROM the checkpointed table (review
+  /** Uniform [[FixedPoint]] seed ranks FROM the pinned table (review
     * r18): seeding from `deg` would re-execute the whole edge-build
     * lineage a second time in the rank job — the exact cost the ed
-    * checkpoint exists to pay once. distinct() on src reuses ed's hash
-    * partitioning, no extra exchange. Left LAZY on purpose: round 1 and
+    * pin exists to pay once. Left LAZY on purpose: round 1 and
     * the end-of-run dangling guard each fold it into their own job —
     * one extra pass over the materialized ed beats an eager checkpoint
     * barrier (the r19 A/B, SCALING.md "Round-19 g1/g2
@@ -117,7 +116,7 @@ object Graph {
   /** `iters` damped PageRank rounds over a directed edge list
     * (`src: Long`, `dst: Long`). Every node must appear as BOTH a src and
     * a dst (feed symmetric edges for an undirected graph) — ENFORCED
-    * loudly by [[checkedEdges]]; dangling nodes would leak mass and drop
+    * loudly by [[assertNoDangling]]; dangling nodes would leak mass and drop
     * out of the aggregate. Returns (`node`, `r`) with r in [[FixedPoint]]
     * units: r' = 0.15·FP + 0.85·Σ_{u→node} (r(u) div deg(u)), all integer.
     */
@@ -127,31 +126,10 @@ object Graph {
         "uniform seeds labeled as ranks")
     val ed = edgeTable(edges, parts)
     val seed = seedRanks(ed)
-    var ranks = seed
-    var guarded = false
-    for (i <- 1 to iters) {
-      ranks = prStep(ed, ranks)
-      // cut lineage every 3rd INTERMEDIATE round: a per-iteration
-      // localCheckpoint materializes a node-sized job each round (the r18
-      // A/B measured it as pure overhead at low iteration counts —
-      // results bit-identical either way), while never checkpointing
-      // grows the plan linearly in `iters`; every-3rd keeps the analyzed
-      // plan bounded at long horizons and costs nothing at short ones
-      if (i % 3 == 0 && i < iters) {
-        ranks = ranks.localCheckpoint()
-        // fail FAST on a dangling graph (review r20): the cadence
-        // checkpoint is already materialized, so the guard here costs the
-        // same one node-sized job it costs at end-of-run — but an invalid
-        // graph now dies at round 3 instead of paying all `iters` rounds
-        // first. No new barrier: this piggybacks on the existing pin.
-        if (!guarded) { assertNoDangling(seed, ranks, "pageRank"); guarded = true }
-      }
-    }
-    // pin the final ranks (node-sized; the caller's action reads the pin)
-    // and run the dangling guard against them — one cheap job at the end,
-    // no mid-loop barrier (see assertNoDangling)
-    val fin = ranks.localCheckpoint()
-    if (!guarded) assertNoDangling(seed, fin, "pageRank")
+    // pin the final ranks (node-sized): the dangling guard and the
+    // caller's action both read them
+    val fin = Fixpoint.pin(Fixpoint(seed, iters, None)(prStep(ed, _))._1)
+    assertNoDangling(seed, fin, "pageRank")
     fin
   }
 
@@ -163,52 +141,28 @@ object Graph {
     * run); the ranks after k rounds are bit-identical to
     * `pageRank(edges, k)` (spec-pinned in GraphSpec).
     *
-    * Each round checkpoints the node-sized rank table (the delta is a
-    * driver action over it — without pinning, the comparison would
-    * recompute the round) and joins new-vs-old on `node`; the
-    * dangling-node precondition makes the keyset loop-invariant, so an
-    * inner join is exact. The delta join adds one node-sized exchange per
-    * round — the price of convergence mode over fixed-iters.
+    * Each round joins the previous ranks in as `rp` and the delta is
+    * observed in the job that pins the round ([[Fixpoint]]). The join is
+    * left outer, so the round's keyset stays exactly prStep's (the one
+    * [[assertNoDangling]] reads); on a valid graph the keyset is
+    * loop-invariant and every `rp` is present. The join adds one
+    * node-sized exchange per round — the price of convergence mode over
+    * fixed-iters.
     */
   def pageRankConverged(edges: DataFrame, tol: Long, maxIters: Int): (DataFrame, Int) = {
     require(maxIters >= 1, s"pageRankConverged: maxIters ($maxIters) must be >= 1")
     require(tol >= 0L, s"pageRankConverged: tol ($tol) must be >= 0")
     val ed = edgeTable(edges)
     val seed = seedRanks(ed)
-    var ranks = seed
-    var i = 0
-    var done = false
-    while (i < maxIters && !done) {
-      val next = prStep(ed, ranks).localCheckpoint()
-      if (i == 0) assertNoDangling(seed, next, "pageRankConverged")
-      val delta = next
-        .join(ranks.select(col("node"), col("r").as("rp")), "node")
-        .agg(sum(abs(col("r") - col("rp"))).as("d"))
-        .first().getLong(0)
-      done = delta <= tol
-      ranks = next
-      i += 1
-    }
-    (ranks, i)
+    val (ranks, rounds, _) =
+      Fixpoint(seed, maxIters, Some(sum(abs(col("r") - col("rp"))) <= tol)) { prev =>
+        prStep(ed, prev)
+          .join(prev.select(col("node"), col("r").as("rp")), Seq("node"), "left_outer")
+      }
+    assertNoDangling(seed, ranks, "pageRankConverged")
+    (ranks, rounds)
   }
 
-  /** HITS (Kleinberg 1999, "Authoritative Sources in a Hyperlinked
-    * Environment") over a DIRECTED hub→authority edge list — the natural
-    * companion to [[pageRank]] on bipartite interaction graphs (here
-    * customers are hubs, suppliers authorities): each round computes
-    * authority mass as the sum of in-linking hub scores, then hub mass as
-    * the sum of out-linked authority scores, L1-normalizing each side to
-    * [[FixedPoint]] in integer arithmetic (`raw div (total div FP)` —
-    * one exact global-window sum over the node-sized aggregate, never a
-    * second pass over edges; the div-by-div form never overflows Long:
-    * raw ≤ deg·FP and total ≤ E·FP stay far inside 2^63 for any graph
-    * whose edge count fits a cluster). Same loop shape as PageRank: two
-    * key-equi joins + two aggregations per round over the checkpointed
-    * edge list, bit-exact on any partitioning.
-    *
-    * Returns (`node`, `role` 'hub'|'authority', `score`) for the state
-    * after `iters` full rounds.
-    */
   /** L1-normalize one HITS side to [[FixedPoint]] in integer arithmetic
     * (`raw div (total div FP)` — one exact global-window sum over the
     * node-sized aggregate, never a second pass over edges). Zero-mass
@@ -228,49 +182,52 @@ object Graph {
                 |ELSE raw div (tot div ${FixedPoint}L) END""".stripMargin).as(out))
   }
 
-  /** One full HITS round: authority mass from in-linking hub scores, then
-    * hub mass from out-linked authority scores, each L1-normalized. `pin`
-    * is applied to each side as it is produced — identity for the
-    * fixed-iters loop (its cadence checkpoint happens outside),
-    * `localCheckpoint` for the converged loop (the delta is a driver
-    * action per round). Returns (auths, hubs).
+  /** One full HITS round over the (`node`, `role`, `score`) state:
+    * authority mass from the state's in-linking hub scores, then hub mass
+    * from out-linked authority scores, each L1-normalized. Returns the
+    * next state — both sides, so a pin cuts them in one job.
     */
-  private def hitsRound(ed: DataFrame, hubs: DataFrame,
-                        pin: DataFrame => DataFrame): (DataFrame, DataFrame) = {
-    val auths = pin(hitsNormalize(
+  private def hitsRound(ed: DataFrame, state: DataFrame): DataFrame = {
+    val hubs = state.filter(col("role") === "hub")
+      .select(col("node"), col("score").as("h"))
+    val auths = hitsNormalize(
       ed.join(hubs, ed("src") === hubs("node"))
-        .groupBy(col("dst")).agg(sum(col("h")).as("raw")), "dst", "a"))
-    val next = pin(hitsNormalize(
+        .groupBy(col("dst")).agg(sum(col("h")).as("raw")), "dst", "a")
+    val next = hitsNormalize(
       ed.join(auths, ed("dst") === auths("node"))
-        .groupBy(col("src")).agg(sum(col("a")).as("raw")), "src", "h"))
-    (auths, next)
-  }
-
-  /** Uniform hub seeds over the checkpointed edge table's src keyset. */
-  private def hitsSeed(ed: DataFrame): DataFrame =
-    ed.select("src").distinct()
-      .select(col("src").as("node"), lit(FixedPoint).as("h"))
-
-  /** The (`node`, `role`, `score`) union both HITS variants return. */
-  private def hitsOutput(hubs: DataFrame, auths: DataFrame): DataFrame =
-    hubs.select(col("node"), lit("hub").as("role"), col("h").as("score"))
+        .groupBy(col("src")).agg(sum(col("a")).as("raw")), "src", "h")
+    next.select(col("node"), lit("hub").as("role"), col("h").as("score"))
       .unionAll(auths.select(col("node"), lit("authority").as("role"),
         col("a").as("score")))
+  }
 
+  /** Uniform hub seeds over the pinned edge table's src keyset. */
+  private def hitsSeed(ed: DataFrame): DataFrame =
+    ed.select("src").distinct()
+      .select(col("src").as("node"), lit("hub").as("role"), lit(FixedPoint).as("score"))
+
+  /** HITS (Kleinberg 1999, "Authoritative Sources in a Hyperlinked
+    * Environment") over a DIRECTED hub→authority edge list — the natural
+    * companion to [[pageRank]] on bipartite interaction graphs (here
+    * customers are hubs, suppliers authorities): each round computes
+    * authority mass as the sum of in-linking hub scores, then hub mass as
+    * the sum of out-linked authority scores, L1-normalizing each side to
+    * [[FixedPoint]] in integer arithmetic (`raw div (total div FP)` —
+    * one exact global-window sum over the node-sized aggregate, never a
+    * second pass over edges; the div-by-div form never overflows Long:
+    * raw ≤ deg·FP and total ≤ E·FP stay far inside 2^63 for any graph
+    * whose edge count fits a cluster). Same loop shape as PageRank: two
+    * key-equi joins + two aggregations per round over the pinned edge
+    * list, bit-exact on any partitioning.
+    *
+    * Returns (`node`, `role` 'hub'|'authority', `score`) for the state
+    * after `iters` full rounds.
+    */
   def hits(edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1,
       s"hits: iters ($iters) must be >= 1 — 0 rounds would return uniform seeds")
-    val ed = edges.repartition(col("src")).localCheckpoint()
-    var hubs = hitsSeed(ed)
-    var auths: DataFrame = null
-    for (i <- 1 to iters) {
-      val (a, h) = hitsRound(ed, hubs, identity)
-      auths = a; hubs = h
-      if (i % 3 == 0 && i < iters) { // the pageRank lineage cadence
-        hubs = hubs.localCheckpoint(); auths = auths.localCheckpoint()
-      }
-    }
-    hitsOutput(hubs, auths)
+    val ed = Fixpoint.pin(edges.repartition(col("src")))
+    Fixpoint(hitsSeed(ed), iters, None)(hitsRound(ed, _))._1
   }
 
   /** Convergence-stopped HITS — [[pageRankConverged]]'s stopping rule
@@ -279,30 +236,22 @@ object Graph {
     * L1-normalized each round, so the hub delta bounds the authority
     * drift too), or `maxIters`. Integer scores make the stop decision
     * bit-deterministic; the state after k rounds is bit-identical to
-    * `hits(edges, k)` (spec-pinned). Per round both node-sized score
-    * tables checkpoint (the delta is a driver action) — the price of
-    * convergence mode, exactly as in pageRankConverged.
+    * `hits(edges, k)` (spec-pinned). Each round carries the previous hub
+    * score as `hp` on its hub rows (the hub keyset is distinct src every
+    * round) and the delta is observed in the job that pins the round
+    * ([[Fixpoint]]).
     */
   def hitsConverged(edges: DataFrame, tol: Long, maxIters: Int): (DataFrame, Int) = {
     require(maxIters >= 1, s"hitsConverged: maxIters ($maxIters) must be >= 1")
     require(tol >= 0L, s"hitsConverged: tol ($tol) must be >= 0")
-    val ed = edges.repartition(col("src")).localCheckpoint()
-    var hubs = hitsSeed(ed).localCheckpoint()
-    var auths: DataFrame = null
-    var i = 0
-    var done = false
-    while (i < maxIters && !done) {
-      val (a, next) = hitsRound(ed, hubs, _.localCheckpoint())
-      auths = a
-      // hub keyset = distinct src every round — inner join is exact
-      val delta = next
-        .join(hubs.select(col("node"), col("h").as("hp")), "node")
-        .agg(sum(abs(col("h") - col("hp"))).as("d"))
-        .first().getLong(0)
-      done = delta <= tol
-      hubs = next
-      i += 1
-    }
-    (hitsOutput(hubs, auths), i)
+    val ed = Fixpoint.pin(edges.repartition(col("src")))
+    val (scores, rounds, _) =
+      Fixpoint(hitsSeed(ed), maxIters, Some(sum(abs(col("score") - col("hp"))) <= tol)) { prev =>
+        hitsRound(ed, prev).join(
+          prev.filter(col("role") === "hub")
+            .select(col("node"), col("role"), col("score").as("hp")),
+          Seq("node", "role"), "left_outer")
+      }
+    (scores, rounds)
   }
 }

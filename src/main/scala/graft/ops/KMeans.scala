@@ -86,6 +86,23 @@ object KMeans {
     if (packed.size == 1) packed.head else least(packed: _*)
   }
 
+  /** The point table (`id`, `q`) pinned once: the loop scans it once
+    * per round.
+    */
+  private def pin(points: DataFrame): DataFrame =
+    points.select(col("id"), col("q")).localCheckpoint()
+
+  /** The quantized vectors of the k LOWEST ids, read by name — a pinned
+    * table may carry (q, id) in any order.
+    */
+  private def lowestIdSeeds(pts: DataFrame, k: Int): Seq[Array[Long]] = {
+    require(k >= 1 && k <= MaxK, s"kmeans: k ($k) must be in [1, $MaxK]")
+    val seedRows = pts.orderBy(col("id")).limit(k).collect()
+    require(seedRows.length == k,
+      s"kmeans: need at least k ($k) points, got ${seedRows.length}")
+    seedRows.map(_.getAs[Seq[Long]]("q").toArray).toSeq
+  }
+
   /** `iters` full Lloyd rounds (assign → update) over `points`
     * (`id: Long`, `q: array<long>` — see [[quantize]]), seeded with the
     * quantized vectors of the k LOWEST ids. Returns the final driver-held
@@ -93,16 +110,8 @@ object KMeans {
     * caller's final-assignment projection.
     */
   def lloyd(points: DataFrame, k: Int, iters: Int): (Seq[Array[Long]], DataFrame) = {
-    require(k >= 1 && k <= MaxK, s"kmeans: k ($k) must be in [1, $MaxK]")
-    require(iters >= 1, s"kmeans: iters ($iters) must be >= 1")
-    // the loop scans the points once per round — pin them once
-    val pts = points.select(col("id"), col("q")).localCheckpoint()
-    val seedRows = pts.orderBy(col("id")).limit(k).collect()
-    require(seedRows.length == k,
-      s"kmeans: need at least k ($k) points, got ${seedRows.length}")
-    val cents0: Seq[Array[Long]] =
-      seedRows.map(_.getSeq[Long](1).toArray).toSeq
-    (lloydRounds(pts, cents0, iters), pts)
+    val pts = pin(points)
+    (lloydRounds(pts, lowestIdSeeds(pts, k), iters), pts)
   }
 
   /** Deterministic k-means++ seeding (Arthur & Vassilvitskii 2007,
@@ -184,44 +193,28 @@ object KMeans {
   /** Lloyd + final assignment under the final centroids: (`id`,
     * `cluster`, `d2`) for every point, all exact integers.
     */
-  def fit(points: DataFrame, k: Int, iters: Int): DataFrame = {
-    val (cents, pts) = lloyd(points, k, iters)
-    assign(pts, cents)
-  }
+  def fit(points: DataFrame, k: Int, iters: Int): DataFrame =
+    fitPinned(pin(points), k, iters)
 
   /** [[fit]] over an ALREADY-PINNED point table — the caller holds the
-    * localCheckpoint, so two seedings can share ONE pin (a9). Same
-    * seeding/rounds/assignment as [[fit]], bit for bit.
+    * localCheckpoint, so two seedings can share ONE pin (a9).
     */
-  private[graft] def fitPinned(pts: DataFrame, k: Int, iters: Int): DataFrame = {
-    require(k >= 1 && k <= MaxK, s"kmeans: k ($k) must be in [1, $MaxK]")
-    require(iters >= 1, s"kmeans: iters ($iters) must be >= 1")
-    val seedRows = pts.orderBy(col("id")).limit(k).collect()
-    require(seedRows.length == k,
-      s"kmeans: need at least k ($k) points, got ${seedRows.length}")
-    // by name: the caller's pinned table may carry (q, id) in any order
-    val cents0: Seq[Array[Long]] =
-      seedRows.map(_.getAs[Seq[Long]]("q").toArray).toSeq
-    assign(pts, lloydRounds(pts, cents0, iters))
-  }
+  private[graft] def fitPinned(pts: DataFrame, k: Int, iters: Int): DataFrame =
+    assign(pts, lloydRounds(pts, lowestIdSeeds(pts, k), iters))
 
   /** [[fit]] with deterministic k-means++ seeding ([[seedPlusPlus]])
     * instead of lowest-id seeds: same Lloyd engine, same assignment,
     * better-spread starting centroids — the form a real corpus run
     * should use (a9 grades the inertia contrast against [[fit]]).
     */
-  def fitPlusPlus(points: DataFrame, k: Int, iters: Int): DataFrame = {
-    require(iters >= 1, s"kmeans: iters ($iters) must be >= 1")
-    val pts = points.select(col("id"), col("q")).localCheckpoint()
-    fitPlusPlusPinned(pts, k, iters)
-  }
+  def fitPlusPlus(points: DataFrame, k: Int, iters: Int): DataFrame =
+    fitPlusPlusPinned(pin(points), k, iters)
 
   /** [[fitPlusPlus]] over an already-pinned point table (see
     * [[fitPinned]]).
     */
   private[graft] def fitPlusPlusPinned(pts: DataFrame, k: Int,
                                        iters: Int): DataFrame = {
-    require(iters >= 1, s"kmeans: iters ($iters) must be >= 1")
     // the same loud n >= k guard fit/lloyd enforce (review r20), on
     // DISTINCT vectors (ADVICE r20): with fewer than k distinct points the
     // D2 argmax chain would re-pick an already-chosen vector (min-d2 = 0)

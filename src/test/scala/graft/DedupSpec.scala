@@ -139,26 +139,71 @@ class DedupSpec extends AnyFunSuite with SparkSuite {
 
   test("D7: reliable-checkpoint fixpoint (cluster durability path) matches star contraction") {
     import spark.implicits._
-    // the 100 TB path: rounds checkpoint to DURABLE storage, so executor
-    // loss mid-fixpoint recomputes at most one round instead of restarting
-    val dir = java.nio.file.Files.createTempDirectory("d7-ckpt").toString
-    try {
-      val rnd = new scala.util.Random(11)
-      val pairs = (0 until 60)
-        .map(_ => (rnd.nextInt(40).toLong, rnd.nextInt(40).toLong))
-        .filter(p => p._1 != p._2).toDF("id_a", "id_b")
-      val reliable = Dedup.dupClusters(pairs, checkpointDir = Some(dir)).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val star = Dedup.dupClustersStar(pairs).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(reliable === star)
-      // the rounds really went through the reliable dir (RDD checkpoint files)
-      val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-        .filter(_.toFile.isFile).count()
-      assert(wrote > 0, s"no checkpoint files written under $dir")
+    import graft.ops.Graph
+    // the 100 TB path: with a checkpoint dir on the context every loop pins
+    // to DURABLE storage, so executor loss mid-fixpoint recomputes at most
+    // one round instead of restarting. Each of the six loops must give the
+    // local-checkpoint output and write its pins under the dir.
+    val rnd = new scala.util.Random(11)
+    val pairs = (0 until 60)
+      .map(_ => (rnd.nextInt(40).toLong, rnd.nextInt(40).toLong))
+      .filter(p => p._1 != p._2).toDF("id_a", "id_b")
+    val sym = pairs.selectExpr(
+      "inline(array(struct(id_a AS src, id_b AS dst), struct(id_b AS src, id_a AS dst)))")
+    val directed = (0L until 30L).map(i => (i % 5, 100L + i % 7)).distinct.toDF("src", "dst")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+    val loops: Seq[(String, () => Set[Seq[Any]])] = Seq(
+      "pageRank" -> (() => rows(Graph.pageRank(sym, iters = 7))),
+      "pageRankConverged" -> (() => rows(Graph.pageRankConverged(sym, tol = 0L, maxIters = 5)._1)),
+      "hits" -> (() => rows(Graph.hits(directed, iters = 4))),
+      "hitsConverged" -> (() => rows(Graph.hitsConverged(directed, tol = 0L, maxIters = 4)._1)),
+      "dupClusters" -> (() => rows(Dedup.dupClusters(pairs))),
+      "dupClustersStar" -> (() => rows(Dedup.dupClustersStar(pairs))))
+    val dir = java.nio.file.Files.createTempDirectory("d7-ckpt")
+    val sc = spark.sparkContext
+    val durable = try {
+      loops.map { case (name, run) =>
+        assert(sc.getCheckpointDir.isEmpty)
+        val local = run()
+        sc.setCheckpointDir(dir.resolve(name).toString)
+        val got = try run() finally sc.setCheckpointDir(null)
+        assert(got === local, s"$name: durable output differs from local")
+        assert(local.nonEmpty, s"$name: empty output")
+        // the pins really went through the reliable dir (RDD checkpoint files)
+        val wrote = java.nio.file.Files.walk(dir.resolve(name))
+          .filter(_.toFile.isFile).count()
+        assert(wrote > 0, s"$name: no checkpoint files written under $dir")
+        name -> got
+      }.toMap
     } finally {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+      sc.setCheckpointDir(null)
+      org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
     }
+    assert(durable("dupClusters") === durable("dupClustersStar"))
+  }
+
+  test("D7: both dup-cluster fixpoints fail loud when maxIters ends unconverged") {
+    import spark.implicits._
+    // a 10-node chain: propagation needs 9 rounds to carry label 1 to
+    // node 10 and a 10th to see no change; 3 rounds would return partial
+    // components
+    val chain = (1L until 10L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val ex = intercept[IllegalStateException](Dedup.dupClusters(chain, maxIters = 3))
+    assert(ex.getMessage.contains("maxIters (3)"), ex.getMessage)
+    val exStar = intercept[IllegalStateException](Dedup.dupClustersStar(chain, maxIters = 1))
+    assert(exStar.getMessage.contains("maxIters (1)"), exStar.getMessage)
+    // with enough rounds both return the single component
+    assert(Dedup.dupClusters(chain, maxIters = 10).collect().map(_.getLong(1)).toSet === Set(1L))
+  }
+
+  test("D7: star contraction stops only at a star forest (a node left with two roots is not one)") {
+    import spark.implicits._
+    // on the path 1-4-3-5-2, round 1 leaves {4→1, 5→2, 3→1, 3→2}: no dst
+    // is a src, yet node 3 keeps two dsts — stopping there would label
+    // 3 twice and 5, 2 with rep 2
+    val path = Seq((1L, 4L), (4L, 3L), (3L, 5L), (5L, 2L)).toDF("id_a", "id_b")
+    val labels = Dedup.dupClustersStar(path).collect().map(r => r.getLong(0) -> r.getLong(1))
+    assert(labels.sorted.toSeq === (1L to 5L).map(_ -> 1L))
   }
 
   test("D7: star contraction matches min-label propagation on random graphs") {
