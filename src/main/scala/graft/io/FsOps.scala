@@ -116,6 +116,10 @@ object FsOps {
   def deletePrefix(spark: SparkSession, dir: String): Boolean =
     fs(spark, dir).delete(new Path(dir), true)
 
+  /** Whether an object or prefix exists at `path`. */
+  def exists(spark: SparkSession, path: String): Boolean =
+    fs(spark, path).exists(new Path(path))
+
   /** S11 — idempotent bucket/dir create
     * (`/root/reference/gcs_operations.go:36-55`).
     */

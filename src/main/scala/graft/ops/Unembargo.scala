@@ -28,7 +28,9 @@ object Unembargo {
     f"sidestream/${dateInt / 10000}%04d/${dateInt / 100 % 100}%02d/${dateInt % 100}%02d"
 
   /** Promote one day: every `-e.tgz` under the day prefix in `srcDir` is
-    * copied into `dstDir` (overwrite). Returns (copied, overwritten).
+    * copied into `dstDir` (overwrite). Returns (copied, overwritten). An
+    * absent source day is the reference's empty listing: it returns
+    * (0, 0) and creates no public day dir.
     *
     * The copy plan (J3 overwrite-join of the two listings) never leaves the
     * cluster: counts come from an aggregate, the object copies run
@@ -43,6 +45,7 @@ object Unembargo {
     val prefix = dayPrefix(dateInt)
     val srcDay = s"$srcDir/$prefix"
     val dstDay = s"$dstDir/$prefix"
+    if (!FsOps.exists(spark, srcDay)) return (0L, 0L)
     FsOps.mkdirs(spark, dstDay)
 
     val src = FsOps.list(spark, srcDay, "-e.tgz").select(col("name"))

@@ -1214,29 +1214,20 @@ object AnnQueries {
     val (cents, cb, idxPath) = stageIvfPq(spark, "st8", sfDir, emb,
       centroidIters = 2, pqIters = 2)
     val index = spark.read.parquet(idxPath)
-    val src = TarQueries.stagePath("st8_probes", sfDir)
-    Staged("st8_probes", sfDir, Seq(src)) {
+    val stream = Arrivals("st8_probes", sfDir) {
       val probes = emb.filter(col("vec_id") % 50 === 0)
-      probes.filter(col("vec_id") % 100 === 0)
-        .repartition(1).write.mode("overwrite").parquet(src)
-      probes.filter(col("vec_id") % 100 === 50)
-        .repartition(1).write.mode("append").parquet(src)
+      Seq(probes.filter(col("vec_id") % 100 === 0),
+        probes.filter(col("vec_id") % 100 === 50))
     }
     val out = s"${TarQueries.StageDir}/st8_topk.parquet"
     graft.io.FsOps.deletePrefix(spark, out)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-st8")
-      .resolve("ckpt").toString
-    val stream = spark.readStream.schema(spark.read.parquet(src).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(src)
-    graft.streaming.StreamAnn.serveTopK(stream, index, emb, cents, cb, out,
-      ckpt, k = 3, pool = 10, nprobe = 2, m = 4, subDim = 16)
+    Arrivals.scratch { ckpt =>
+      graft.streaming.StreamAnn.serveTopK(stream, index, emb, cents, cb, out,
+        ckpt, k = 3, pool = 10, nprobe = 2, m = 4, subDim = 16)
+    }
     // an all-empty probe stream writes nothing (foreachBatch skips empty
     // batches) — answer with an empty result, not a missing-path error
-    val outPath = new org.apache.hadoop.fs.Path(out)
-    if (outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(outPath))
-      spark.read.parquet(out)
+    if (graft.io.FsOps.exists(spark, out)) spark.read.parquet(out)
     else
       spark.range(0).select(col("id").as("probe_id"), col("id").as("neighbor_id"),
         col("id").as("rank"))
@@ -1360,21 +1351,14 @@ object AnnQueries {
         graft.ops.KMeans.quantize(col("embedding")).as("q"))
       graft.ops.KMeans.lloyd(pts, k = 4, iters = 3)._1
     }
-    val src = TarQueries.stagePath("st17_probes", sfDir)
-    Staged("st17_probes", sfDir, Seq(src)) {
-      emb.filter(col("vec_id") % 2 === 0)
-        .repartition(1).write.mode("overwrite").parquet(src)
-      emb.filter(col("vec_id") % 2 === 1)
-        .repartition(1).write.mode("append").parquet(src)
+    val stream = Arrivals("st17_probes", sfDir) {
+      Seq(emb.filter(col("vec_id") % 2 === 0), emb.filter(col("vec_id") % 2 === 1))
     }
     val out = s"${TarQueries.StageDir}/st17_assign.parquet"
     graft.io.FsOps.deletePrefix(spark, out)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-st17")
-      .resolve("ckpt").toString
-    val stream = spark.readStream.schema(spark.read.parquet(src).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(src)
-    graft.streaming.StreamKMeans.serveAssign(stream, cents, out, ckpt)
+    Arrivals.scratch { ckpt =>
+      graft.streaming.StreamKMeans.serveAssign(stream, cents, out, ckpt)
+    }
     spark.read.parquet(out)
       .select(col("id").as("vec_id"), col("cluster"), col("d2"))
   }

@@ -1201,10 +1201,9 @@ object CoreQueries {
     * can't reach.
     */
   def streamWmDedup(spark: SparkSession, sfDir: String): DataFrame = {
-    val src = TarQueries.stagePath("st7_src", sfDir) + ".parquet"
     val out = s"${TarQueries.StageDir}/st7_dedup.parquet"
     graft.io.FsOps.deletePrefix(spark, out)
-    Staged("st7_src", sfDir, Seq(src)) {
+    val stream = Arrivals("st7_src", sfDir) {
       val ev = Tables.events(spark, sfDir)
         .select(col("event_id"), col("user_id"), col("ts"))
       // one base file (all originals), one copies file: the graded
@@ -1212,21 +1211,15 @@ object CoreQueries {
       // than their originals, which two batches already exercise — the
       // previous 2+1+1 layout paid two extra RocksDB micro-batches for
       // the same proof (the st18/r20 trim; guide §1)
-      ev.repartition(1).write.mode("overwrite").parquet(src)
-      // planted duplicates: full-row copies arriving after their originals
-      ev.filter(col("event_id") % 20 === 0)
-        .repartition(1).write.mode("append").parquet(src)
+      Seq(ev, ev.filter(col("event_id") % 20 === 0))
     }
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-st7")
-      .resolve("ckpt").toString
-    val stream = spark.readStream.schema(spark.read.parquet(src).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(src)
-    graft.streaming.EventSessions.drainDedup(stream, Seq("event_id"),
-      delay = "3650 days", outDir = out, checkpointDir = ckpt,
-      // keyspace-sized: every event_id is a live dedup key until its
-      // watermark horizon passes; the memoized base count is the octave
-      stateKeys = Some(Tables.rowCount(spark, sfDir, "events")))
+    Arrivals.scratch { ckpt =>
+      graft.streaming.EventSessions.drainDedup(stream, Seq("event_id"),
+        delay = "3650 days", outDir = out, checkpointDir = ckpt,
+        // keyspace-sized: every event_id is a live dedup key until its
+        // watermark horizon passes; the memoized base count is the octave
+        stateKeys = Some(Tables.rowCount(spark, sfDir, "events")))
+    }
     spark.read.parquet(out)
       .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("us"))
   }

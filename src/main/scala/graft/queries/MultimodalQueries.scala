@@ -677,8 +677,7 @@ object MultimodalQueries {
         .select(col("media_id").as("doc_id"), col("phash").as("simhash"))
         .write.mode("overwrite").parquet(corpusHashPath)
     }
-    val src = TarQueries.stagePath("st9_arrivals", sfDir)
-    Staged("st9_arrivals", sfDir, Seq(src)) {
+    val stream = Arrivals("st9_arrivals", sfDir) {
       import spark.implicits._
       val arrivals = Tables.documents(spark, sfDir)
         .select(col("doc_id")).filter(col("doc_id") % 3 === 0)
@@ -688,25 +687,17 @@ object MultimodalQueries {
           ids.map(id => (id + 1000000L, "image", gradientPngBytes(id / 6, 2)))
         }.toDF("media_id", "kind", "content")
       // two files → two micro-batches, split on arrival-id parity
-      arrivals.filter(col("media_id") % 2 === 0)
-        .repartition(1).write.mode("overwrite").parquet(src)
-      arrivals.filter(col("media_id") % 2 === 1)
-        .repartition(1).write.mode("append").parquet(src)
+      Seq(arrivals.filter(col("media_id") % 2 === 0),
+        arrivals.filter(col("media_id") % 2 === 1))
     }
     val out = s"${TarQueries.StageDir}/st9_matches.parquet"
     graft.io.FsOps.deletePrefix(spark, out)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-st9")
-      .resolve("ckpt").toString
-    val stream = spark.readStream.schema(spark.read.parquet(src).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(src)
-    graft.streaming.StreamPHash.matchArrivals(stream,
-      spark.read.parquet(corpusHashPath), bits = 63, maxHamming = 10,
-      outDir = out, checkpointDir = ckpt)
-    val outPath = new org.apache.hadoop.fs.Path(out)
-    if (outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(outPath))
-      spark.read.parquet(out)
+    Arrivals.scratch { ckpt =>
+      graft.streaming.StreamPHash.matchArrivals(stream,
+        spark.read.parquet(corpusHashPath), bits = 63, maxHamming = 10,
+        outDir = out, checkpointDir = ckpt)
+    }
+    if (graft.io.FsOps.exists(spark, out)) spark.read.parquet(out)
     else
       spark.range(0).select(col("id").as("batch_id"), col("id").as("corpus_id"),
         col("id").cast("int").as("hamming"))

@@ -23,6 +23,9 @@ import org.apache.spark.sql.SparkSession
   * static oracle SQL and the graded queries run sequentially; a
   * concurrently queried deployment would stage to per-corpus immutable
   * paths instead.
+  *
+  * The staged stream sources go through [[Arrivals]], which stages its
+  * files here and keeps the written schema as the memo value.
   */
 object Staged {
 

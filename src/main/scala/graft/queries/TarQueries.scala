@@ -694,16 +694,17 @@ object TarQueries {
     * manifest, hash-checking the drain's output.
     */
   def streamDrain(spark: SparkSession, sfDir: String): DataFrame = {
-    val root = java.nio.file.Files.createTempDirectory("graft-st1")
-    val in = java.nio.file.Files.createDirectory(root.resolve("in"))
-    java.nio.file.Files.copy(java.nio.file.Paths.get(FixtureTgz),
-      in.resolve("20170315T000000Z-mlab3-sea03-sidestream-0000.tgz"))
     val out = s"$StageDir/st1_routed.parquet"
     // fresh checkpoint each run re-drains everything; clear prior output so
     // the append sink can't double-count
     graft.io.FsOps.deletePrefix(spark, out)
-    graft.streaming.StreamingEmbargo.drain(spark, in.toString, FixtureWhitelist,
-      FixtureCutoff, out, root.resolve("ckpt").toString)
+    Arrivals.scratch { root =>
+      val in = java.nio.file.Files.createDirectory(java.nio.file.Paths.get(root, "in"))
+      java.nio.file.Files.copy(java.nio.file.Paths.get(FixtureTgz),
+        in.resolve("20170315T000000Z-mlab3-sea03-sidestream-0000.tgz"))
+      graft.streaming.StreamingEmbargo.drain(spark, in.toString, FixtureWhitelist,
+        FixtureCutoff, out, s"$root/ckpt")
+    }
     spark.read.parquet(out)
       .groupBy("route").agg(count(lit(1)).as("n_files"), sum(col("size")).as("n_bytes"))
   }

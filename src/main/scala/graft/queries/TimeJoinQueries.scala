@@ -169,48 +169,6 @@ object TimeJoinQueries {
        |  ON c.us >= e.start_us AND c.us < e.start_us + $IncidentWindowUs
        |GROUP BY 1, 2""".stripMargin
 
-  /** Stage `df` as ONE parquet file at `dest` with an explicit mtime —
-    * FileStreamSource orders files by modification time, and the st4
-    * drain's correctness depends on the chronological halves arriving
-    * before the sentinel (a same-millisecond tie would make arrival order,
-    * and therefore watermark-lateness, nondeterministic).
-    */
-  private def stageOneFile(df: DataFrame, tmpDir: String,
-                           dest: java.nio.file.Path, mtime: Long): Unit = {
-    df.repartition(1).write.mode("overwrite").parquet(tmpDir)
-    val part = new java.io.File(tmpDir).listFiles()
-      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-      .head
-    java.nio.file.Files.createDirectories(dest.getParent)
-    java.nio.file.Files.move(part.toPath, dest,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    dest.toFile.setLastModified(mtime)
-  }
-
-  /** The staged-chronological readStream every st-drain here opens:
-    * explicit schema (one batch read of the staged dir), one file per
-    * micro-batch. A drain-contract change (e.g. the trigger granularity)
-    * lands once.
-    */
-  private def chronStream(spark: SparkSession, src: String): DataFrame =
-    spark.readStream
-      .schema(spark.read.parquet(src).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(src)
-
-  /** ST4 — watermarked tumbling-window streaming aggregation
-    * ([[graft.streaming.WindowedAgg]]): events split into two
-    * chronological files drained one per micro-batch (so the watermark
-    * genuinely advances across batches and drops nothing — each file's
-    * rows are newer than the previous watermark), then a far-future
-    * sentinel file whose arrival pushes the watermark past every real
-    * window; the engine's no-data batch then emits the remaining open
-    * windows before the AvailableNow drain terminates. Append mode means
-    * the sink holds each finalized window EXACTLY once — a duplicate
-    * (window re-emitted), a missing window (state lost between batches),
-    * or a late-drop (mis-ordered staging) all break the hash against
-    * DuckDB's plain GROUP BY over the same events.
-    */
   /** ST12 — streaming per-window approximate distinct users
     * ([[graft.streaming.WindowedAgg.drainTumblingDistinct]]): exact
     * windowed COUNT(DISTINCT) is unsupported in streaming (full per-key
@@ -227,19 +185,17 @@ object TimeJoinQueries {
     */
   def streamWindowDistinct(spark: SparkSession, sfDir: String): DataFrame = {
     val rsd = 0.02
-    val src = ensureSt4Src(spark, sfDir)
     val out = s"${TarQueries.StageDir}/st12_hll.parquet"
     graft.io.FsOps.deletePrefix(spark, out)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-st12")
-      .resolve("ckpt").toString
     // the sentinel STAYS in-stream: it is what pushes the watermark past
     // the last real window (filtering it pre-watermark left that window
     // open forever — one missing row); its own far-future window never
     // finalizes, and the exact-side inner join excludes it regardless
-    val stream = chronStream(spark, src)
-    graft.streaming.WindowedAgg.drainTumblingDistinct(stream, "user_id",
-      "1 hour", "1 minute", rsd, out, ckpt,
-      stateKeys = Some(Tables.rowCount(spark, sfDir, "events")))
+    Arrivals.scratch { ckpt =>
+      graft.streaming.WindowedAgg.drainTumblingDistinct(st4Arrivals(spark, sfDir),
+        "user_id", "1 hour", "1 minute", rsd, out, ckpt,
+        stateKeys = Some(Tables.rowCount(spark, sfDir, "events")))
+    }
     val HourUs = 3600000000L
     val exact = Tables.events(spark, sfDir)
       .select((expr(s"unix_micros(ts) div $HourUs") * HourUs).as("win_us"),
@@ -287,20 +243,19 @@ object TimeJoinQueries {
     * enrichment across batch boundaries.
     */
   def streamStaticJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    val src = ensureSt4Src(spark, sfDir)
     val out = s"${TarQueries.StageDir}/st13_enriched.parquet"
     graft.io.FsOps.deletePrefix(spark, out)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-st13")
-      .resolve("ckpt").toString
     // static dim: user → nation (user ids map onto customer keys mod |c|)
     val dim = Tables.customer(spark, sfDir)
       .select(col("c_custkey").as("user_id"),
         col("c_nationkey").cast("long").as("nation"))
-    val stream = chronStream(spark, src)
+    val stream = st4Arrivals(spark, sfDir)
       .filter(col("event_type") =!= "__sentinel")
       .join(dim, Seq("user_id")) // stream-static equi-join, stateless
       .select(col("user_id"), col("event_type"), col("nation"), col("value"))
-    graft.streaming.Drain(stream, ckpt)(graft.streaming.Drain.parquet(out))
+    Arrivals.scratch { ckpt =>
+      graft.streaming.Drain(stream, ckpt)(graft.streaming.Drain.parquet(out))
+    }
     spark.read.parquet(out)
       .groupBy("nation", "event_type")
       .agg(count(lit(1)).as("n_events"),
@@ -327,30 +282,24 @@ object TimeJoinQueries {
     * is w6's exact shape, and the oracle IS w6's oracle.
     */
   def streamUniques(spark: SparkSession, sfDir: String): DataFrame = {
-    val src = TarQueries.stagePath("st11_src", sfDir) + ".parquet"
     val out = s"${TarQueries.StageDir}/st11_days.parquet"
     graft.io.FsOps.deletePrefix(spark, out)
-    Staged("st11_src", sfDir, Seq(src)) {
+    val stream = Arrivals("st11_src", sfDir) {
       val ev = Tables.events(spark, sfDir)
         .select(col("user_id"),
           expr("unix_micros(ts) div 86400000000").as("day"))
       // one base file, not two: the graded property is the REPLAY file
       // deduping against state from an EARLIER batch, which two batches
       // already exercise — each extra file is a RocksDB micro-batch the
-      // drain pays for (the st18/r20 trim; guide §1)
-      ev.repartition(1).write.mode("overwrite").parquet(src)
-      // the replay batch: these user-days already sit in state
-      ev.filter(col("user_id") % 10 === 0)
-        .repartition(1).write.mode("append").parquet(src)
+      // drain pays for (the st18/r20 trim; guide §1). The replay file's
+      // user-days already sit in state when it arrives.
+      Seq(ev, ev.filter(col("user_id") % 10 === 0))
     }
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-st11")
-      .resolve("ckpt").toString
-    val stream = spark.readStream.schema("user_id BIGINT, day BIGINT")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(src)
-    graft.streaming.StreamDedup.distinctRows(stream, Seq("user_id", "day"),
-      out, ckpt,
-      stateKeys = Some(Tables.rowCount(spark, sfDir, "events")))
+    Arrivals.scratch { ckpt =>
+      graft.streaming.StreamDedup.distinctRows(stream, Seq("user_id", "day"),
+        out, ckpt,
+        stateKeys = Some(Tables.rowCount(spark, sfDir, "events")))
+    }
     import org.apache.spark.sql.expressions.Window
     val w = Window.orderBy("day")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -535,7 +484,7 @@ object TimeJoinQueries {
       |                   > 4 * (n5 * q5 - s5 * s5)) AS anomaly
       |FROM r""".stripMargin
 
-  /** Shared chronological staging (st4/st10/st12/st13/st14 share one
+  /** Shared chronological arrivals (st4/st10/st12/st13/st14 share one
     * source; st16 its own): split `ev` (which must carry a `us` epoch-µs
     * column, dropped on write) at its temporal midpoint into two one-file
     * micro-batches. The far-future sentinel (30 days past max —
@@ -545,43 +494,27 @@ object TimeJoinQueries {
     * pays for): the watermark still advances past every real window at
     * that batch's end, and AvailableNow's no-data batch flushes the
     * remaining open windows. Cross-batch state is exercised by the
-    * half1/half2 boundary exactly as before; emitted rows are identical
-    * (oracle-proven for all six drains sharing this stager). Mtimes
-    * spaced 2 s apart so FileStreamSource's arrival order is
-    * deterministic. A drain-contract change (sentinel offset, mtime
-    * rule) now lands once for every chronological stager. Staged once
-    * per sfDir under `stagePath(tag, sfDir)` ([[Staged]]); returns the
-    * source dir.
+    * half1/half2 boundary; emitted rows are oracle-proven for all six
+    * drains sharing this source. Staged once per sfDir ([[Arrivals]]).
     */
-  private def stageChronHalves(sfDir: String, tag: String, evDef: => DataFrame,
-                               mkSentinel: Long => DataFrame): String = {
-    val src = TarQueries.stagePath(tag, sfDir)
-    Staged(tag, sfDir, Seq(src)) {
+  private def chronHalves(sfDir: String, tag: String, evDef: => DataFrame,
+                          mkSentinel: Long => DataFrame): DataFrame =
+    Arrivals(tag, sfDir) {
       val ev = evDef
       val Array(lo, hi) = ev.agg(min(col("us")), max(col("us")))
         .collect().head.toSeq.map(_.asInstanceOf[Long]).toArray
       val mid = lo + (hi - lo) / 2
-      // src-derived tmp for the same reason as stageAttributionSides: the
-      // same tag staging two sfDirs concurrently must not share a scratch
-      val tmp = s"$src.tmp"
-      val base = java.nio.file.Paths.get(src)
-      val t0 = System.currentTimeMillis()
-      stageOneFile(ev.filter(col("us") <= mid).drop("us"),
-        tmp, base.resolve("0001.parquet"), t0)
-      stageOneFile(ev.filter(col("us") > mid).drop("us")
-        .unionAll(mkSentinel(hi)),
-        tmp, base.resolve("0002.parquet"), t0 + 2000)
+      Seq(ev.filter(col("us") <= mid).drop("us"),
+        ev.filter(col("us") > mid).drop("us").unionAll(mkSentinel(hi)))
     }
-    src
-  }
 
   /** The sentinel timestamp: 30 days past the stream's max event time. */
   private def sentinelTs(hi: Long) =
     new java.sql.Timestamp((hi + 30L * 86400000000L) / 1000)
 
-  private def ensureSt4Src(spark: SparkSession, sfDir: String): String = {
+  private def st4Arrivals(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    stageChronHalves(sfDir, "st4_src",
+    chronHalves(sfDir, "st4_src",
       Tables.events(spark, sfDir)
         .select(col("ts"), col("event_type"), col("value"), col("user_id"),
           unix_micros(col("ts")).as("us")),
@@ -589,9 +522,9 @@ object TimeJoinQueries {
         .toDF("ts", "event_type", "value", "user_id"))
   }
 
-  private def ensureSt16Src(spark: SparkSession, sfDir: String): String = {
+  private def st16Arrivals(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    stageChronHalves(sfDir, "st16_src",
+    chronHalves(sfDir, "st16_src",
       Tables.events(spark, sfDir)
         .select(col("ts"), col("user_id"), col("value"),
           unix_micros(col("ts")).as("us")),
@@ -613,15 +546,14 @@ object TimeJoinQueries {
     * emitted by append mode.
     */
   def streamSessions(spark: SparkSession, sfDir: String): DataFrame = {
-    val src = ensureSt16Src(spark, sfDir)
     val out = s"${TarQueries.StageDir}/st16_sessions.parquet"
     graft.io.FsOps.deletePrefix(spark, out)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-st16")
-      .resolve("ckpt").toString
-    graft.streaming.EventSessions.drainSessions(
-      chronStream(spark, src), gap = "6 hours", delay = "1 minute",
-      outDir = out, checkpointDir = ckpt,
-      stateKeys = Some(Tables.rowCount(spark, sfDir, "events")))
+    Arrivals.scratch { ckpt =>
+      graft.streaming.EventSessions.drainSessions(
+        st16Arrivals(spark, sfDir), gap = "6 hours", delay = "1 minute",
+        outDir = out, checkpointDir = ckpt,
+        stateKeys = Some(Tables.rowCount(spark, sfDir, "events")))
+    }
     spark.read.parquet(out).filter(col("user_id") >= 0)
       .select(col("user_id"), unix_micros(col("session_start")).as("start_us"),
         col("n_events"), col("total_value"))
@@ -630,9 +562,9 @@ object TimeJoinQueries {
   /** st4's chronological staging with `event_id` carried (the OHLC
     * tie-break key st4's source doesn't need).
     */
-  private def ensureSt14Src(spark: SparkSession, sfDir: String): String = {
+  private def st14Arrivals(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    stageChronHalves(sfDir, "st14_src",
+    chronHalves(sfDir, "st14_src",
       Tables.events(spark, sfDir)
         .select(col("ts"), col("event_id"), col("event_type"), col("value"),
           unix_micros(col("ts")).as("us")),
@@ -651,15 +583,13 @@ object TimeJoinQueries {
     * boundary agree with the global (us, event_id) order.
     */
   def streamOhlc(spark: SparkSession, sfDir: String): DataFrame = {
-    val src = ensureSt14Src(spark, sfDir)
     val out = s"${TarQueries.StageDir}/st14_ohlc.parquet"
     graft.io.FsOps.deletePrefix(spark, out)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-st14")
-      .resolve("ckpt").toString
-    val stream = chronStream(spark, src)
-    graft.streaming.WindowedAgg.drainTumblingOhlc(stream, "15 minutes",
-      "1 minute", out, ckpt,
-      stateKeys = Some(Tables.rowCount(spark, sfDir, "events")))
+    Arrivals.scratch { ckpt =>
+      graft.streaming.WindowedAgg.drainTumblingOhlc(st14Arrivals(spark, sfDir),
+        "15 minutes", "1 minute", out, ckpt,
+        stateKeys = Some(Tables.rowCount(spark, sfDir, "events")))
+    }
     spark.read.parquet(out).filter(col("event_type") =!= "__sentinel")
   }
 
@@ -692,49 +622,42 @@ object TimeJoinQueries {
     */
   private def st15Chain(spark: SparkSession, sfDir: String,
                         force: Boolean): (String, Int) = {
-    val src = TarQueries.stagePath("st15_src", sfDir)
     val stateDir = TarQueries.stagePath("st15_state", sfDir)
-    Staged("st15", sfDir, Seq(src, stateDir), force)(drainSt15(spark, sfDir, src, stateDir))
+    Staged("st15", sfDir, Seq(stateDir), force)(drainSt15(spark, sfDir, stateDir))
   }
 
-  private def drainSt15(spark: SparkSession, sfDir: String, src: String,
+  private def drainSt15(spark: SparkSession, sfDir: String,
                         stateDir: String): (String, Int) = {
-    // one compute of the full-outer diff feeds both staged halves
-    // (review r16: uncached, the join ran once per stageOneFile call)
-    val diff = CoreQueries.snapshotDiff(spark, sfDir).localCheckpoint()
-    // per-sfDir scratch too (review r17): a shared tmp would let two
-    // overlapping builds for different corpora pick up each other's
-    // part files
-    val tmp = TarQueries.stagePath("st15_tmp", sfDir)
-    val base = java.nio.file.Paths.get(src)
-    val t0 = System.currentTimeMillis()
-    stageOneFile(diff.filter(col("event_id") % 2 === 0),
-      tmp, base.resolve("0001.parquet"), t0)
-    stageOneFile(diff.filter(col("event_id") % 2 =!= 0),
-      tmp, base.resolve("0002.parquet"), t0 + 2000)
+    val feed = Arrivals("st15_src", sfDir) {
+      // one compute of the full-outer diff feeds both staged halves
+      // (review r16: uncached, the join ran once per staged file)
+      val diff = CoreQueries.snapshotDiff(spark, sfDir).localCheckpoint()
+      Seq(diff.filter(col("event_id") % 2 === 0),
+        diff.filter(col("event_id") % 2 =!= 0))
+    }
     // v0 = the v1 snapshot (same derivation as j10's base version)
     Tables.events(spark, sfDir).select(col("event_id"), col("value"))
       .filter(col("event_id") % 7 =!= 0)
       .write.parquet(s"$stateDir/v0")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-st15")
-      .resolve("ckpt").toString
     var v = 0
-    graft.streaming.Drain(chronStream(spark, src), ckpt)(
-      _.foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val cur = spark.read.parquet(s"$stateDir/v$v")
-          val ups = batch.filter(col("change").isin("I", "U"))
-            .select(col("event_id"), col("new_value").as("value"))
-          val next = cur
-            .join(batch.select("event_id"), Seq("event_id"), "left_anti")
-            .unionByName(ups)
-          // overwrite, not ErrorIfExists: foreachBatch is at-least-once,
-          // and a retried batch re-produces the SAME v_{n+1} — the write
-          // must be idempotent or the retry kills the query (review r16)
-          next.write.mode("overwrite").parquet(s"$stateDir/v${v + 1}")
-          v += 1
-        }
-      })
+    Arrivals.scratch { ckpt =>
+      graft.streaming.Drain(feed, ckpt)(
+        _.foreachBatch { (batch: DataFrame, _: Long) =>
+          if (!batch.isEmpty) {
+            val cur = spark.read.parquet(s"$stateDir/v$v")
+            val ups = batch.filter(col("change").isin("I", "U"))
+              .select(col("event_id"), col("new_value").as("value"))
+            val next = cur
+              .join(batch.select("event_id"), Seq("event_id"), "left_anti")
+              .unionByName(ups)
+            // overwrite, not ErrorIfExists: foreachBatch is at-least-once,
+            // and a retried batch re-produces the SAME v_{n+1} — the write
+            // must be idempotent or the retry kills the query (review r16)
+            next.write.mode("overwrite").parquet(s"$stateDir/v${v + 1}")
+            v += 1
+          }
+        })
+    }
     (stateDir, v)
   }
 
@@ -871,18 +794,29 @@ object TimeJoinQueries {
       |       CASE WHEN event_id % 5 = 0 THEN value + 1.0 ELSE value END AS value
       |FROM events WHERE event_id % 3 != 0""".stripMargin
 
+  /** ST4 — watermarked tumbling-window streaming aggregation
+    * ([[graft.streaming.WindowedAgg]]): events split into two
+    * chronological files drained one per micro-batch (so the watermark
+    * genuinely advances across batches and drops nothing — each file's
+    * rows are newer than the previous watermark), then a far-future
+    * sentinel file whose arrival pushes the watermark past every real
+    * window; the engine's no-data batch then emits the remaining open
+    * windows before the AvailableNow drain terminates. Append mode means
+    * the sink holds each finalized window EXACTLY once — a duplicate
+    * (window re-emitted), a missing window (state lost between batches),
+    * or a late-drop (mis-ordered staging) all break the hash against
+    * DuckDB's plain GROUP BY over the same events.
+    */
   def windowedAgg(spark: SparkSession, sfDir: String): DataFrame = {
-    val src = ensureSt4Src(spark, sfDir)
     val out = s"${TarQueries.StageDir}/st4_win.parquet"
     graft.io.FsOps.deletePrefix(spark, out)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-st4")
-      .resolve("ckpt").toString
-    val stream = chronStream(spark, src)
-    graft.streaming.WindowedAgg.drainTumbling(stream, "1 hour", "1 minute",
-      out, ckpt,
-      // keyspace-sized; the event count upper-bounds the live
-      // (window, type) key count by construction
-      stateKeys = Some(Tables.rowCount(spark, sfDir, "events")))
+    Arrivals.scratch { ckpt =>
+      graft.streaming.WindowedAgg.drainTumbling(st4Arrivals(spark, sfDir),
+        "1 hour", "1 minute", out, ckpt,
+        // keyspace-sized; the event count upper-bounds the live
+        // (window, type) key count by construction
+        stateKeys = Some(Tables.rowCount(spark, sfDir, "events")))
+    }
     spark.read.parquet(out).filter(col("event_type") =!= "__sentinel")
   }
 
@@ -899,15 +833,13 @@ object TimeJoinQueries {
     * post-read (it trends alone in its own empty window).
     */
   def streamTrending(spark: SparkSession, sfDir: String): DataFrame = {
-    val src = ensureSt4Src(spark, sfDir)
     val out = s"${TarQueries.StageDir}/st10_trend.parquet"
     graft.io.FsOps.deletePrefix(spark, out)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-st10")
-      .resolve("ckpt").toString
-    val stream = chronStream(spark, src)
-    graft.streaming.WindowedAgg.drainTrendingTopK(stream, "1 hour", "1 minute",
-      k = 3, out, ckpt,
-      stateKeys = Some(Tables.rowCount(spark, sfDir, "events")))
+    Arrivals.scratch { ckpt =>
+      graft.streaming.WindowedAgg.drainTrendingTopK(st4Arrivals(spark, sfDir),
+        "1 hour", "1 minute", k = 3, out, ckpt,
+        stateKeys = Some(Tables.rowCount(spark, sfDir, "events")))
+    }
     spark.read.parquet(out).filter(col("event_type") =!= "__sentinel")
   }
 
@@ -928,70 +860,62 @@ object TimeJoinQueries {
       |       CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
       |FROM events GROUP BY 1, 2""".stripMargin
 
-  /** Stage clicks/purchases as chronological two-file sides under `src`
-    * — the shared st5/st18 source (review r20: one definition, not two
-    * drifting copies). File 1 holds everything at or before the straddle
-    * boundary: the earliest click with a strictly-later in-window
-    * purchase, so at least one attribution window CROSSES the
-    * micro-batch edge (a median split was measured to put zero windows
-    * across it at sf0.01 — the hash would then pass without exercising
-    * cross-batch state); file 2 holds the rest. `sentinelGapUs`
-    * (st18's outer form) unions one far-future sentinel row per side
-    * into file 2 — negative never-joinable ids; the min-of-inputs
-    * watermark must pass every click's close time or unmatched rows
-    * would never flush.
+  /** Clicks and purchases as chronological two-file arrivals, one
+    * source per side — the shared st5/st18 source (review r20: one
+    * definition, not two drifting copies). File 1 holds everything at or
+    * before the straddle boundary: the earliest click with a
+    * strictly-later in-window purchase, so at least one attribution
+    * window CROSSES the micro-batch edge (a median split was measured to
+    * put zero windows across it at sf0.01 — the hash would then pass
+    * without exercising cross-batch state); file 2 holds the rest. The
+    * boundary is memoized per staging, so the two sides share one
+    * compute. `sentinelGapUs` (st18's outer form) unions one far-future
+    * sentinel row per side into file 2 — negative never-joinable ids; the
+    * min-of-inputs watermark must pass every click's close time or
+    * unmatched rows would never flush. Returns (clicks, purchases).
     */
-  private def stageAttributionSides(spark: SparkSession, sfDir: String,
-                                    src: String,
-                                    sentinelGapUs: Option[Long]): Unit = {
+  private def attributionArrivals(spark: SparkSession, sfDir: String,
+                                  tag: String, sentinelGapUs: Option[Long])
+      : (DataFrame, DataFrame) = {
     import spark.implicits._
-    val ev = Tables.events(spark, sfDir)
+    // lazy: the events read is only for staging, which a memo hit skips
+    lazy val ev = Tables.events(spark, sfDir)
       .select(col("event_id"), col("user_id"), col("ts"), col("event_type"),
         unix_micros(col("ts")).as("us"))
-    val boundary = ev.filter(col("event_type") === "click")
-      .select(col("user_id"), col("us").as("cus"))
-      .join(ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("us").as("pus")), "user_id")
-      .filter(col("pus") > col("cus") &&
-        col("pus") < col("cus") + 1800000000L)
-      .agg(min(col("cus"))).collect().head
-    val mid =
-      if (boundary.isNullAt(0)) {
-        val Array(lo, hi) = ev.agg(min(col("us")), max(col("us")))
-          .collect().head.toSeq.map(_.asInstanceOf[Long]).toArray
-        lo + (hi - lo) / 2 // no ordered pair anywhere — median fallback
-      } else boundary.getLong(0)
-    val maxUs =
-      if (sentinelGapUs.isDefined)
-        ev.agg(max(col("us"))).collect().head.getLong(0)
-      else 0L
-    // tmp derived from the TARGET src, not a shared scratch name: st5 and
-    // st18 staging concurrently in one JVM must not move each other's
-    // part files (ADVICE r20)
-    val tmp = s"$src.tmp"
-    val base = java.nio.file.Paths.get(src)
-    val t0 = System.currentTimeMillis()
-    for ((kind, idx) <- Seq("click" -> 0, "purchase" -> 1)) {
+    // (split point, max event µs for the sentinel)
+    def bounds = Staged(s"${tag}_bounds", sfDir, Nil) {
+      val boundary = ev.filter(col("event_type") === "click")
+        .select(col("user_id"), col("us").as("cus"))
+        .join(ev.filter(col("event_type") === "purchase")
+          .select(col("user_id"), col("us").as("pus")), "user_id")
+        .filter(col("pus") > col("cus") &&
+          col("pus") < col("cus") + 1800000000L)
+        .agg(min(col("cus"))).collect().head
+      lazy val range = ev.agg(min(col("us")), max(col("us"))).collect().head
+      val mid =
+        if (boundary.isNullAt(0)) { // no ordered pair anywhere — median fallback
+          val (lo, hi) = (range.getLong(0), range.getLong(1))
+          lo + (hi - lo) / 2
+        } else boundary.getLong(0)
+      (mid, if (sentinelGapUs.isDefined) range.getLong(1) else 0L)
+    }
+    def side(kind: String, sentId: Long) = Arrivals(s"${tag}_$kind", sfDir) {
+      val (mid, maxUs) = bounds
       val side = ev.filter(col("event_type") === kind)
         .select("event_id", "user_id", "ts")
       val second = side.filter(unix_micros(col("ts")) > mid)
       // the sentinel rides IN the second file, not a third: the watermark
       // advances at that batch's end and AvailableNow's no-data batch
       // flushes the outer rows — one fewer RocksDB micro-batch per side
-      val withSentinel = sentinelGapUs match {
-        case Some(gap) =>
-          val sentId = if (kind == "click") -1L else -2L
+      Seq(side.filter(unix_micros(col("ts")) <= mid),
+        sentinelGapUs.fold(second) { gap =>
           second.unionAll(
             Seq((sentId, sentId, maxUs + gap)).toDF("event_id", "user_id", "sus")
               .select(col("event_id"), col("user_id"),
                 timestamp_micros(col("sus")).as("ts")))
-        case None => second
-      }
-      stageOneFile(side.filter(unix_micros(col("ts")) <= mid),
-        tmp, base.resolve(s"$kind/0001.parquet"), t0 + idx * 1000)
-      stageOneFile(withSentinel,
-        tmp, base.resolve(s"$kind/0002.parquet"), t0 + 2000 + idx * 1000)
+        })
     }
+    (side("click", -1L), side("purchase", -2L))
   }
 
   /** ST5 — stream-stream attribution join
@@ -1007,21 +931,18 @@ object TimeJoinQueries {
     * survived the batch boundary and eviction never dropped a live row.
     */
   def streamJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    val src = TarQueries.stagePath("st5_src", sfDir)
     val out = s"${TarQueries.StageDir}/st5_attrib.parquet"
     graft.io.FsOps.deletePrefix(spark, out)
-    Staged("st5_src", sfDir, Seq(src)) {
-      stageAttributionSides(spark, sfDir, src, sentinelGapUs = None)
+    val (clicks, purchases) =
+      attributionArrivals(spark, sfDir, "st5", sentinelGapUs = None)
+    Arrivals.scratch { ckpt =>
+      graft.streaming.StreamJoin.drainAttribution(clicks, purchases,
+        window = "30 minutes",
+        delay = "1 minute", outDir = out, checkpointDir = ckpt,
+        // keyspace-sized; the event count upper-bounds the buffered-row
+        // keyspace on either join side
+        stateKeys = Some(Tables.rowCount(spark, sfDir, "events")))
     }
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-st5")
-      .resolve("ckpt").toString
-    graft.streaming.StreamJoin.drainAttribution(
-      chronStream(spark, s"$src/click"), chronStream(spark, s"$src/purchase"),
-      window = "30 minutes",
-      delay = "1 minute", outDir = out, checkpointDir = ckpt,
-      // keyspace-sized; the event count upper-bounds the buffered-row
-      // keyspace on either join side
-      stateKeys = Some(Tables.rowCount(spark, sfDir, "events")))
     spark.read.parquet(out)
   }
 
@@ -1051,23 +972,19 @@ object TimeJoinQueries {
     * null-extended.
     */
   def streamOuterJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    val src = TarQueries.stagePath("st18_src", sfDir)
     val out = s"${TarQueries.StageDir}/st18_attrib.parquet"
     graft.io.FsOps.deletePrefix(spark, out)
-    Staged("st18_src", sfDir, Seq(src)) {
-      // sentinel 2 h past the corpus max — beyond every click's close
-      // time (30 min window + 1 min delay)
-      stageAttributionSides(spark, sfDir, src,
-        sentinelGapUs = Some(7200000000L))
+    // sentinel 2 h past the corpus max — beyond every click's close
+    // time (30 min window + 1 min delay)
+    val (clicks, purchases) =
+      attributionArrivals(spark, sfDir, "st18", sentinelGapUs = Some(7200000000L))
+    Arrivals.scratch { ckpt =>
+      graft.streaming.StreamJoin.drainAttribution(clicks, purchases,
+        window = "30 minutes",
+        delay = "1 minute", outDir = out, checkpointDir = ckpt,
+        stateKeys = Some(Tables.rowCount(spark, sfDir, "events")),
+        outer = true)
     }
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-st18")
-      .resolve("ckpt").toString
-    graft.streaming.StreamJoin.drainAttribution(
-      chronStream(spark, s"$src/click"), chronStream(spark, s"$src/purchase"),
-      window = "30 minutes",
-      delay = "1 minute", outDir = out, checkpointDir = ckpt,
-      stateKeys = Some(Tables.rowCount(spark, sfDir, "events")),
-      outer = true)
     spark.read.parquet(out).filter(col("user_id") >= 0L)
   }
 

@@ -209,6 +209,13 @@ class ServiceSpec extends AnyFunSuite with SparkSuite {
     assert(entryNames(s"$pubDir/sidestream/2017/03/15/$fixBase").nonEmpty)
   }
 
+  test("/cron/unembargo on a valid day with no embargoed archives is a 200 no-op") {
+    // 20170101 is at or before the one-year cutoff (20170315) and no
+    // private day dir exists for it: the reference's listing is empty
+    assert(get("/cron/unembargo?date=20170101") === ((200, "OK")))
+    assert(!Files.exists(java.nio.file.Paths.get(s"$pubDir/sidestream/2017/01/01")))
+  }
+
   test("whitelist refresh REROUTES subsequent splits (SURVEY §3 E3: the refreshed store is the split's source)") {
     // fresh service + stores so the shared service's state can't leak in
     val root2 = Files.createTempDirectory("graft-svc-wl").toString

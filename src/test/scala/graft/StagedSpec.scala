@@ -58,6 +58,14 @@ class StagedSpec extends AnyFunSuite with SparkSuite {
     assert(rows(CoreQueries.streamWmDedup(spark, sf)) === first)
   }
 
+  test("ST7: a drain leaves no new entry in java.io.tmpdir") {
+    def tmpEntries = new java.io.File(System.getProperty("java.io.tmpdir")).list().toSet
+    CoreQueries.streamWmDedup(spark, sf).collect() // stages the source
+    val before = tmpEntries
+    assert(CoreQueries.streamWmDedup(spark, sf).collect().nonEmpty)
+    assert(tmpEntries -- before === Set.empty[String])
+  }
+
   test("Q9: the deleted fixed-path partitioned layout is restaged") {
     val first = rows(CoreQueries.partitionPrune(spark, sf))
     assert(first.nonEmpty)

@@ -37,6 +37,17 @@ class UnembargoSpec extends AnyFunSuite with SparkSuite {
     }
   }
 
+  test("E2: promoteDay on a day with no embargoed archives copies nothing and creates no public day dir") {
+    val root = Files.createTempDirectory("graft-unemb-absent").toString
+    try {
+      Files.createDirectories(Paths.get(s"$root/embargo"))
+      val (copied, overwritten) = Unembargo.promoteDay(spark,
+        s"$root/embargo", s"$root/archive", dateInt = 20170101, cutoffDateInt = 20250101)
+      assert((copied, overwritten) === ((0L, 0L)))
+      assert(!Files.exists(Paths.get(s"$root/archive/${Unembargo.dayPrefix(20170101)}")))
+    } finally graft.io.FsOps.deletePrefix(spark, root)
+  }
+
   test("A1: observe() collects routed counters in the same pass") {
     import graft.ops.EmbargoSplit
     val entries = TgzSource.entries(spark, TarQueries.FixtureTgz)
