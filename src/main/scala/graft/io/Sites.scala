@@ -17,7 +17,7 @@ import graft.model.Schemas
   * Spark-first shape: the fetch is a driver-side GET (the document is a few
   * hundred KB — a dimension, not data), parsed by the Spark JSON reader
   * against the declared [[Schemas.siteSchema]], then the P7 samknows filter,
-  * P8 ipv4/ipv6 unpivot, and A2 distinct run as a regular (broadcastable)
+  * P8 ipv4/ipv6 unpivot, and A2 distinct run as a regular
   * DataFrame pipeline — the exact semantics of `FilterSiteIPs`
   * (`/root/reference/embargo_check.go:39-60`).
   */
@@ -55,8 +55,8 @@ object Sites {
 
   /** P7+P8+A2 — reduce site rows to the distinct whitelist IP set
     * (`/root/reference/embargo_check.go:46-58`): drop samknows hosts, keep
-    * every non-empty ipv4/ipv6, dedupe. Output column `wip`, ready to be
-    * the broadcast side of the J1 routing join.
+    * every non-empty ipv4/ipv6, dedupe. Output column `wip`, the form
+    * [[graft.ops.Whitelist.fromFrame]] loads for J1 routing.
     */
   def whitelist(sites: DataFrame): DataFrame =
     sites

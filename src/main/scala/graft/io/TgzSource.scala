@@ -4,6 +4,7 @@ import java.io.{BufferedInputStream, ByteArrayInputStream, InputStream}
 
 import org.apache.commons.compress.archivers.tar.TarArchiveInputStream
 import org.apache.commons.compress.compressors.gzip.GzipCompressorInputStream
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions.col
 
@@ -29,13 +30,31 @@ import graft.model.TarEntry
   */
 object TgzSource {
 
-  /** Explode every `.tgz` under `path` (file, dir, or glob) into entries. */
+  /** Explode every `.tgz` under `path` (file, dir, or glob) into entries.
+    *
+    * A glob is expanded here, on the driver, and its matches are loaded as
+    * concrete paths — the same root paths the reader's own expansion
+    * yields. Handed the glob itself, the reader first checks it for a
+    * streaming sink's metadata dir by stat-ing it as a literal path, which
+    * fails and logs a WARN with a full `FileNotFoundException` stack on
+    * every call. A glob that matches nothing is passed through unchanged,
+    * so it fails exactly as before.
+    */
   def entries(spark: SparkSession, path: String,
-              globFilter: String = "*.tgz"): Dataset[TarEntry] =
+              globFilter: String = "*.tgz"): Dataset[TarEntry] = {
+    val paths =
+      if (!path.exists("{}[]*?\\".contains(_))) Seq(path)
+      else {
+        val p = new Path(path)
+        Option(p.getFileSystem(spark.sparkContext.hadoopConfiguration).globStatus(p))
+          .map(_.toSeq.map(_.getPath.toString)).filter(_.nonEmpty)
+          .getOrElse(Seq(path))
+      }
     explodeEntries(
       spark.read.format("binaryFile")
         .option("pathGlobFilter", globFilter)
-        .load(path))
+        .load(paths: _*))
+  }
 
   /** Explode a DataFrame of `(path, content)` binary-file rows — the shared
     * core for batch scans and streaming micro-batches (ST1).

@@ -10,13 +10,14 @@ import graft.model.{Schemas, TarEntry}
 
 /** E1 — THE embargo pipeline (`/root/reference/embargo.go:125-220`):
   * explode archives → P2 regular-file filter → P3 routing predicate with the
-  * J1 whitelist broadcast join → repack per-archive public/private pairs.
+  * J1 whitelist membership → repack per-archive public/private pairs.
   *
-  * The whole job is one narrow stage: the broadcast hash join and the
-  * `when/otherwise` route column keep each archive's entries in the task
-  * that read them (order intact), so [[TgzSink.writeSplit]] needs no
-  * shuffle and the day-batch parallelizes purely by archive — the unit the
-  * reference looped over serially (`/root/reference/embargo.go:278-291`).
+  * The whole job is one narrow stage: the route column is a projection
+  * (membership is an `InSet` over the driver-held [[Whitelist]]), so each
+  * archive's entries stay in the task that read them (order intact),
+  * [[TgzSink.writeSplit]] needs no shuffle and the day-batch parallelizes
+  * purely by archive — the unit the reference looped over serially
+  * (`/root/reference/embargo.go:278-291`).
   */
 object EmbargoSplit {
 
@@ -39,13 +40,9 @@ object EmbargoSplit {
     * generalized so one Dataset can carry archives from many days (the
     * day loop's unit of parallelism).
     *
-    * `whitelist` must expose one `wip` column (see [[TgzSource.whitelist]]);
-    * it is explicitly `broadcast` — thousands of rows at most
-    * (`/root/reference/embargo_check.go:58`).
-    *
     * Membership compares CANONICAL IP forms on both sides
-    * ([[graft.functions.IpFunctions.canonicalIp]]). This is an INTENTIONAL
-    * DIVERGENCE from the reference: `CheckInWhiteList`
+    * ([[graft.functions.IpFunctions.canonicalIp]]; see [[Whitelist]]). This
+    * is an INTENTIONAL DIVERGENCE from the reference: `CheckInWhiteList`
     * (`/root/reference/embargo_check.go:103-108`) does a literal map lookup
     * of the Go-canonical filename IP against the RAW whitelist strings, so
     * a whitelist entry spelled non-canonically (`2001:DB8:0:0:0:0:0:1`)
@@ -56,27 +53,29 @@ object EmbargoSplit {
     * the operator explicitly listed — the intended semantics of the
     * whitelist, so acceptable under the embargo safety contract (an IP is
     * either listed or not; its textual spelling is not a security
-    * boundary). Invalid whitelist lines canonicalize to "" and are dropped
-    * before the join so they can never meet a malformed filename's empty
+    * boundary). Invalid whitelist lines canonicalize to "" and are not in
+    * the set, so they can never meet a malformed filename's empty
     * local_ip.
     */
-  def route(entries: Dataset[TarEntry], whitelist: DataFrame,
-            cutoffDateInt: Int): DataFrame = {
-    import graft.functions.IpFunctions.canonical_ip
-    val regs = entries.filter(col("typeflag") === "0")
+  def route(entries: Dataset[TarEntry], whitelist: Whitelist,
+            cutoffDateInt: Int): DataFrame =
+    entries.filter(col("typeflag") === "0")
       .withColumn("base", basename(col("name")))
       .withColumn("local_ip", coalesce(local_ip(col("base")), lit("")))
-    val wl = whitelist.select(canonical_ip(col("wip")).as("wip"))
-      .filter(length(col("wip")) > 0)
-      .distinct()
-    regs.join(broadcast(wl), canonical_ip(regs("local_ip")) === wl("wip"), "left_outer")
       .withColumn("route",
         when(fileDateInt(basename(col("archive"))) < lit(cutoffDateInt)
           || !col("base").contains("web100")
-          || col("wip").isNotNull, Schemas.RoutePublic)
+          || whitelist.contains(col("local_ip")), Schemas.RoutePublic)
           .otherwise(Schemas.RoutePrivate))
-      .drop("wip", "base")
-  }
+      .drop("base")
+
+  /** [[route]] with the whitelist as a DataFrame with one `wip` column
+    * (see [[TgzSource.whitelist]]), loaded by [[Whitelist.fromFrame]]'s
+    * bounded collect.
+    */
+  def route(entries: Dataset[TarEntry], whitelist: DataFrame,
+            cutoffDateInt: Int): DataFrame =
+    route(entries, Whitelist.fromFrame(whitelist), cutoffDateInt)
 
   /** Per-route file/byte counts over all routed entries — matches the golden
     * split cardinalities (145 public / 59 private for the fixture,
@@ -93,29 +92,34 @@ object EmbargoSplit {
     */
   def run(spark: SparkSession, inPath: String, whitelistPath: String,
           cutoffDateInt: Int, outDir: String): Unit =
-    runWith(spark, inPath, TgzSource.whitelist(spark, whitelistPath),
-      cutoffDateInt, outDir)
+    runWith(spark, inPath, Whitelist.fromText(spark, whitelistPath),
+      cutoffDateInt, outDir, outDir)
 
   /** [[run]] with the whitelist supplied as a DataFrame (one `wip` column)
-    * instead of a text path — the form the service's refreshed whitelist
-    * store feeds ([[Service]] re-reads the store per request, the
-    * reference's in-memory reload made durable,
-    * `/root/reference/embargo.go:94-101`). `inPath` may be a single
-    * archive, a directory, or a glob: a whole day splits as ONE job whose
-    * task parallelism is the per-archive explode.
+    * instead of a text path, loaded by [[Whitelist.fromFrame]].
     */
   def runWith(spark: SparkSession, inPath: String, whitelist: DataFrame,
               cutoffDateInt: Int, outDir: String): Unit =
     runWith(spark, inPath, whitelist, cutoffDateInt, outDir, outDir)
 
-  /** [[runWith]] committing each public half under `publicDir` and each
-    * `-e.tgz` half under `privateDir` (see [[TgzSink]]); concurrent calls
-    * into the same roots are safe.
-    */
+  /** The DataFrame-whitelist form of the two-root [[runWith]]. */
   def runWith(spark: SparkSession, inPath: String, whitelist: DataFrame,
-              cutoffDateInt: Int, publicDir: String, privateDir: String): Unit = {
-    val entries = TgzSource.entries(spark, inPath)
-    TgzSink.writeSplit(route(entries, whitelist, cutoffDateInt),
+              cutoffDateInt: Int, publicDir: String, privateDir: String): Unit =
+    runWith(spark, inPath, Whitelist.fromFrame(whitelist), cutoffDateInt,
       publicDir, privateDir)
-  }
+
+  /** Split every archive under `inPath` — a single archive, a directory,
+    * or a glob: a whole day splits as ONE job whose task parallelism is
+    * the per-archive explode — committing each public half under
+    * `publicDir` and each `-e.tgz` half under `privateDir` (see
+    * [[TgzSink]]); concurrent calls into the same roots are safe. The
+    * whitelist is the caller's driver-held value ([[Service]] keeps it as
+    * service state, the reference's in-memory list,
+    * `/root/reference/embargo.go:94-101`), so the split runs the write
+    * job and the commit job and nothing else.
+    */
+  def runWith(spark: SparkSession, inPath: String, whitelist: Whitelist,
+              cutoffDateInt: Int, publicDir: String, privateDir: String): Unit =
+    TgzSink.writeSplit(route(TgzSource.entries(spark, inPath), whitelist,
+      cutoffDateInt), publicDir, privateDir)
 }

@@ -1,7 +1,7 @@
 package graft.ops
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 /** The reference's HTTP service surface
   * (`/root/reference/deploy/deploy.go:118-126`): the four routes it
@@ -12,7 +12,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * ([[EmbargoSplit.runWith]] — e1/e2/e4's engine, committing each half
   * straight into its store with per-call staging), the whitelist reload
   * ([[graft.io.Sites.whitelistFromUrl]] — S6/P7/P8), and the promotion
-  * ([[Unembargo.promoteDay]] — e3's engine).
+  * ([[Unembargo.promoteDay]] — e3's engine). The whitelist the split
+  * routes by is service state: a driver-held [[Whitelist]] snapshot,
+  * reloaded only when its source's version changes (see
+  * `currentWhitelist`).
   *
   * Statuses follow the reference's INTENT per arm; three wire-level
   * quirks of the Go binary are deliberately not reproduced (review r19):
@@ -87,6 +90,9 @@ object Service {
     */
   val CommittedMarker = "_GRAFT_COMMITTED"
 
+  /** A loaded whitelist and the source version it was loaded from. */
+  private final case class Snapshot(version: (Path, Long), whitelist: Whitelist)
+
   final class EmbargoService(spark: SparkSession, cfg: ServiceConfig)
       extends AutoCloseable {
     import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
@@ -101,8 +107,10 @@ object Service {
     // two independent /submit?file= archives serialize. Handlers are
     // already safe under concurrency — every split stages per call (see
     // graft.io.TgzSink), and Spark happily runs driver-submitted jobs
-    // from several threads (guide §2.6).
-    private val handlerPool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    // from several threads (guide §2.6). One handler per core the
+    // context schedules on, so concurrent splits can keep every core busy.
+    private val handlerPool = java.util.concurrent.Executors
+      .newFixedThreadPool(spark.sparkContext.defaultParallelism)
     server.setExecutor(handlerPool)
 
     // the MetricsEndpoint header-guard discipline: HttpServer swallows
@@ -152,32 +160,61 @@ object Service {
           if (s.startsWith("gs://")) Some(s) else None
         } catch { case _: IllegalArgumentException => None }
 
-    /** The split's whitelist source, re-read PER REQUEST (SURVEY §3 E3):
-      * once `/cron/update_embargo_whitelist` has written the refreshed
-      * store, every subsequent split consumes it; until then the seed
-      * text at `cfg.whitelistPath` applies. This is the reference's
-      * in-memory singleton reload (`embargo.go:94-101` replaces
-      * `EmbargoSingleton`'s checker; `embargo.go:174` reads whatever is
-      * current) made durable and restart-safe — the store is a few
-      * thousand rows, a dimension read, never a data-plane cost.
+    private val hadoopConf = spark.sparkContext.hadoopConfiguration
+    private val storeDir = new Path(cfg.whitelistOut)
+    private val seedPath = new Path(cfg.whitelistPath)
+
+    /** Which whitelist governs and its version: the refresh store's commit
+      * marker and that marker's modification time, else the seed text's.
+      *
+      * Readiness is the COMMITTED store, not a bare directory: Spark's
+      * overwrite is delete-then-write, so a crash mid-refresh leaves a
+      * partial dir that must not wedge every later split (review r20).
+      * The commit signal is the SERVICE'S OWN marker, written by the
+      * refresh route after its parquet write returns (ADVICE r20); the
+      * committer's `_SUCCESS` is accepted too for stores committed by
+      * older builds, but is no longer relied on (it is optional under
+      * marksuccessfuljobs=false). Absent both, no refresh has ever
+      * completed (or the last one died), and the seed text governs.
+      *
+      * One `FileSystem` stat once a refresh has committed; no Spark job.
       */
-    private def currentWhitelist(): DataFrame = {
-      // readiness = the COMMITTED store, not a bare directory: Spark's
-      // overwrite is delete-then-write, so a crash mid-refresh leaves a
-      // partial dir whose existence check would wedge every subsequent
-      // split (review r20). The commit signal is the SERVICE'S OWN
-      // marker, written by the refresh route after its parquet write
-      // returns (ADVICE r20) — the committer's _SUCCESS is accepted too
-      // for stores committed by older builds, but is no longer relied on
-      // (it is optional under marksuccessfuljobs=false). Absent both:
-      // no refresh has ever completed (or the last one died) — fall back
-      // to the seed text until a refresh succeeds.
-      val out = new Path(cfg.whitelistOut)
-      val f = out.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (f.exists(new Path(out, CommittedMarker)) ||
-          f.exists(new Path(out, "_SUCCESS")))
-        spark.read.parquet(cfg.whitelistOut)
-      else graft.io.TgzSource.whitelist(spark, cfg.whitelistPath)
+    private def whitelistVersion(): (Path, Long) = {
+      val fs = storeDir.getFileSystem(hadoopConf)
+      Seq(new Path(storeDir, CommittedMarker), new Path(storeDir, "_SUCCESS"))
+        .iterator.flatMap { m =>
+          try Some(m -> fs.getFileStatus(m).getModificationTime)
+          catch { case _: java.io.FileNotFoundException => None }
+        }.nextOption()
+        .getOrElse(seedPath ->
+          seedPath.getFileSystem(hadoopConf).getFileStatus(seedPath).getModificationTime)
+    }
+
+    @volatile private var snapshot: Option[Snapshot] = None
+
+    /** The split's whitelist: the snapshot of the current version
+      * ([[whitelistVersion]]), reloaded under a lock when the version
+      * moves — a refresh committed by this service or any other instance
+      * over the same store, a restart, a marker lost to a crashed
+      * overwrite. This is the reference's in-memory list
+      * (`embargo.go:94-101` swaps `EmbargoSingleton`'s checker;
+      * `embargo.go:174` reads whatever is current), made restart-safe by
+      * reloading from the committed store. It caches the dimension, not
+      * results: every request still splits its own input.
+      */
+    private def currentWhitelist(): Whitelist = {
+      val version = whitelistVersion()
+      def current = snapshot.filter(_.version == version)
+      current.getOrElse(synchronized {
+        current.getOrElse {
+          val wl =
+            if (version._1 == seedPath) Whitelist.fromText(spark, cfg.whitelistPath)
+            else Whitelist.fromFrame(spark.read.parquet(cfg.whitelistOut))
+          val s = Snapshot(version, wl)
+          snapshot = Some(s)
+          s
+        }
+      }).whitelist
     }
 
     /** One archive through the split into the two stores — e4's accepted
@@ -250,17 +287,24 @@ object Service {
     }
 
     route("/cron/update_embargo_whitelist") { _ =>
-      graft.io.Sites.whitelistFromUrl(spark, cfg.sitesUrl)
-        .write.mode("overwrite").parquet(cfg.whitelistOut)
+      // the feed is fetched once, on the driver; the bounded load runs
+      // first, so a feed past the size bound commits nothing
+      val fresh = graft.io.Sites.whitelistFromUrl(spark, cfg.sitesUrl)
+      val wl = Whitelist.fromFrame(fresh)
+      fresh.write.mode("overwrite").parquet(cfg.whitelistOut)
       // The SERVICE owns the commit signal (ADVICE r20): the committer's
       // _SUCCESS is optional (mapreduce.fileoutputcommitter.
       // marksuccessfuljobs=false is a common object-store setting), and
       // without a marker every later split would silently keep the seed
       // list forever. Written AFTER the parquet write returns, so its
       // presence means a complete refresh regardless of committer config.
-      val out = new Path(cfg.whitelistOut)
-      val f = out.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      f.create(new Path(out, CommittedMarker), true).close()
+      val marker = new Path(storeDir, CommittedMarker)
+      val fs = marker.getFileSystem(hadoopConf)
+      fs.create(marker, true).close()
+      // install what was just committed, keyed by the new marker
+      synchronized {
+        snapshot = Some(Snapshot(marker -> fs.getFileStatus(marker).getModificationTime, wl))
+      }
       (200, "OK")
     }
 

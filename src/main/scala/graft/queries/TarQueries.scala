@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.io.TgzSource
-import graft.ops.EmbargoSplit
+import graft.ops.{EmbargoSplit, Whitelist}
 
 /** Driver-contract queries over the real reference fixture tarball
   * (S4 explode + E1 routing, `/root/reference/embargo.go:125-220`).
@@ -129,8 +129,8 @@ object TarQueries {
     */
   def splitCounts(spark: SparkSession, sfDir: String): DataFrame = {
     val entries = TgzSource.entries(spark, FixtureTgz)
-    val wl = TgzSource.whitelist(spark, FixtureWhitelist)
-    EmbargoSplit.route(entries, wl, FixtureCutoff)
+    EmbargoSplit.route(entries, Whitelist.fromText(spark, FixtureWhitelist),
+      FixtureCutoff)
       .select(col("route"), col("name"), col("size"))
       .write.mode("overwrite").parquet(s"$StageDir/e1_routed.parquet")
     EmbargoSplit.fileCounts(spark.read.parquet(s"$StageDir/e1_routed.parquet"))
@@ -224,10 +224,10 @@ object TarQueries {
     // E1: split each day with the S8 insertion into the two stores — the
     // two day jobs are independent (distinct day prefixes), so they
     // overlap (guide §2.6)
+    val wl = Whitelist.fromText(spark, FixtureWhitelist)
     inParallel(fixtures) { case (tgz, cutoff, date) =>
       val prefix = graft.ops.Unembargo.dayPrefix(date)
-      EmbargoSplit.runWith(spark, tgz, TgzSource.whitelist(spark, FixtureWhitelist),
-        cutoff, s"$pub/$prefix", s"$priv/$prefix")
+      EmbargoSplit.runWith(spark, tgz, wl, cutoff, s"$pub/$prefix", s"$priv/$prefix")
     }
     // E2: the year has passed for fixture 1's day only — validDate is the
     // promotion decision, promoteDay the distributed copy
@@ -317,13 +317,13 @@ object TarQueries {
         isSidestreamArchive(col("url")))
       .select("req_id", "url").collect()
       .map(r => (r.getLong(0), r.getString(1)))
+    val wl = Whitelist.fromText(spark, FixtureWhitelist)
     inParallel(accepted.toSeq) { case (_, url) =>
       // deploy.go:40-42: strip "gs://", drop the bucket at the first '/'
       val removePrefix = url.stripPrefix("gs://")
       val objPath = removePrefix.substring(removePrefix.indexOf('/') + 1)
       val dayDir = objPath.substring(0, objPath.lastIndexOf('/'))
-      EmbargoSplit.runWith(spark, s"$src/$objPath",
-        TgzSource.whitelist(spark, FixtureWhitelist), E4Cutoff,
+      EmbargoSplit.runWith(spark, s"$src/$objPath", wl, E4Cutoff,
         s"$pub/$dayDir", s"$priv/$dayDir")
     }
 

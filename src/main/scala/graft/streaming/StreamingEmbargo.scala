@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
 import graft.io.TgzSource
-import graft.ops.EmbargoSplit
+import graft.ops.{EmbargoSplit, Whitelist}
 
 /** ST1 — incremental batch semantics (SURVEY §2.7): the reference is a
   * scheduler-driven incremental pipeline (`/submit?date=` per day,
@@ -17,10 +17,10 @@ import graft.ops.EmbargoSplit
   * (`/root/reference/embargo.go:246-247`).
   *
   * The whitelist is re-read INSIDE every micro-batch — a slowly-changing
-  * broadcast dimension. The reference intended daily refresh but its
-  * singleton cache made the cron reload a no-op
-  * (`/root/reference/embargo.go:55-57` vs `:94-101`); per-batch re-read is
-  * correct by construction.
+  * dimension, loaded on the driver ([[Whitelist.fromText]], no Spark job).
+  * The reference intended daily refresh but its singleton cache made the
+  * cron reload a no-op (`/root/reference/embargo.go:55-57` vs `:94-101`);
+  * per-batch re-read is correct by construction.
   */
 object StreamingEmbargo {
 
@@ -50,7 +50,7 @@ object StreamingEmbargo {
     Drain(stream, checkpointDir)(_.foreachBatch { (batch: DataFrame, _: Long) =>
       val entries = TgzSource.explodeEntries(batch)
       // slowly-changing dim: fresh whitelist every batch
-      val wl = TgzSource.whitelist(batch.sparkSession, whitelistPath)
+      val wl = Whitelist.fromText(batch.sparkSession, whitelistPath)
       val routed = EmbargoSplit.route(entries, wl, cutoffDateInt)
       routed
         .select(col("archive"), col("ordinal"), col("name"), col("size"),

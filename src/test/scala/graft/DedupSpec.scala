@@ -7,7 +7,7 @@ import graft.ops.{Dedup, Similarity}
 /** Operator-level specs for the dedup/similarity suite on tiny inline data
   * (the sf-table integration path is covered by Verify + the DuckDB oracle).
   */
-class DedupSpec extends AnyFunSuite with SparkSuite {
+class DedupSpec extends AnyFunSuite with SparkSuite with TempDirs {
 
   private def docs(rows: (Long, String)*) = {
     import spark.implicits._
@@ -159,7 +159,7 @@ class DedupSpec extends AnyFunSuite with SparkSuite {
       "hitsConverged" -> (() => rows(Graph.hitsConverged(directed, tol = 0L, maxIters = 4)._1)),
       "dupClusters" -> (() => rows(Dedup.dupClusters(pairs))),
       "dupClustersStar" -> (() => rows(Dedup.dupClustersStar(pairs))))
-    val dir = java.nio.file.Files.createTempDirectory("d7-ckpt")
+    val dir = tempDir("d7-ckpt")
     val sc = spark.sparkContext
     val durable = try {
       loops.map { case (name, run) =>

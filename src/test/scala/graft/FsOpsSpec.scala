@@ -9,10 +9,10 @@ import graft.io.FsOps
 /** S1-S3/S9-S11 catalog-operation specs over a temp dir (posix stands in
   * for the object store; the code path is Hadoop FileSystem either way).
   */
-class FsOpsSpec extends AnyFunSuite with SparkSuite {
+class FsOpsSpec extends AnyFunSuite with SparkSuite with TempDirs {
 
   test("list / read / copy / delete / mkdirs round-trip") {
-    val root = Files.createTempDirectory("graft-fs").toString
+    val root = tempDir("graft-fs").toString
     assert(FsOps.mkdirs(spark, s"$root/src"))
     Files.write(java.nio.file.Paths.get(s"$root/src/a.tgz"), "alpha".getBytes)
     Files.write(java.nio.file.Paths.get(s"$root/src/b.tgz"), "beta!!".getBytes)
@@ -39,7 +39,7 @@ class FsOpsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("S2: empty and many-file prefixes list without driver materialization") {
-    val root = Files.createTempDirectory("graft-fs2").toString
+    val root = tempDir("graft-fs2").toString
     FsOps.mkdirs(spark, s"$root/empty")
     assert(FsOps.list(spark, s"$root/empty").count() === 0)
 
@@ -56,7 +56,7 @@ class FsOpsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("J2/J4 object level: syncCopy copies only missing, compare detects drift") {
-    val root = Files.createTempDirectory("graft-sync").toString
+    val root = tempDir("graft-sync").toString
     FsOps.mkdirs(spark, s"$root/a")
     FsOps.mkdirs(spark, s"$root/b")
     Files.write(java.nio.file.Paths.get(s"$root/a/x.tgz"), "xx".getBytes)
@@ -75,7 +75,7 @@ class FsOpsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("list() plans no sort: join consumers pay no listing exchange") {
-    val root = Files.createTempDirectory("graft-plan").toString
+    val root = tempDir("graft-plan").toString
     FsOps.mkdirs(spark, s"$root/a")
     FsOps.mkdirs(spark, s"$root/b")
     Files.write(java.nio.file.Paths.get(s"$root/a/x.tgz"), "xx".getBytes)

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * ordering (a click BEFORE the first view does not convert), the 24h
   * step expiry, and step independence from later-step noise.
   */
-class FunnelSpec extends AnyFunSuite with SparkSuite {
+class FunnelSpec extends AnyFunSuite with SparkSuite with TempDirs {
 
   private val H = 3600000000L // 1h in µs
 
@@ -17,7 +17,7 @@ class FunnelSpec extends AnyFunSuite with SparkSuite {
   private def run(rows: Seq[(Long, String, Long)]): Map[String, Long] = {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft-funnel").toString
+    val dir = tempDir("graft-funnel").toString
     rows.toDF("user_id", "event_type", "us")
       .select(col("user_id"), lit(1L).as("event_id"),
         timestamp_micros(col("us")).as("ts"), col("event_type"),

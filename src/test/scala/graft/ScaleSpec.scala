@@ -7,7 +7,7 @@ import graft.ops.{Scale, SequencePack}
 /** Skew/co-location utility specs: salted join equivalence with a skewed
   * key, heavy-hitter diagnosis, and shuffle-free bucketed joins.
   */
-class ScaleSpec extends AnyFunSuite with SparkSuite {
+class ScaleSpec extends AnyFunSuite with SparkSuite with TempDirs {
 
   test("saltedJoin: identical results to plain join under heavy skew") {
     import spark.implicits._
@@ -353,7 +353,7 @@ class ScaleSpec extends AnyFunSuite with SparkSuite {
   test("S19: compaction shrinks the file count and clusters disjoint key ranges") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val root = java.nio.file.Files.createTempDirectory("graft-s19").toString
+    val root = tempDir("graft-s19").toString
     val df = (0L until 5000L).map(i => (i, s"payload-$i")).toDF("event_id", "p")
     df.repartition(32).write.mode("overwrite").parquet(s"$root/small")
     def parquetFiles(dir: String) =
@@ -385,7 +385,7 @@ class ScaleSpec extends AnyFunSuite with SparkSuite {
   test("S23: z-order bounds BOTH key columns per file; single-key leaves the second at full range") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val root = java.nio.file.Files.createTempDirectory("graft-s23").toString
+    val root = tempDir("graft-s23").toString
     // two independent uniform keys — the shape where single-key clustering
     // provably cannot help the second column
     val rnd = new scala.util.Random(7)
@@ -425,7 +425,7 @@ class ScaleSpec extends AnyFunSuite with SparkSuite {
   test("S24: dynamic overwrite patches one partition; static mode would truncate the rest") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val root = java.nio.file.Files.createTempDirectory("graft-s24").toString
+    val root = tempDir("graft-s24").toString
     val df = Seq((1L, 0L, 1.0), (2L, 0L, 2.0), (3L, 1L, 3.0), (4L, 2L, 4.0))
       .toDF("id", "day", "v")
     df.write.mode("overwrite").partitionBy("day").parquet(root)
@@ -481,7 +481,7 @@ class ScaleSpec extends AnyFunSuite with SparkSuite {
   test("s25: expireSnapshots removes expired versions + orphans, keeps the live tail byte-intact") {
     import spark.implicits._
     import java.nio.file.{Files, Paths}
-    val root = Files.createTempDirectory("graft-expire").toString
+    val root = tempDir("graft-expire").toString
     (0 to 3).foreach { n =>
       Seq((n.toLong, s"v$n")).toDF("id", "tag").write.parquet(s"$root/v$n")
     }

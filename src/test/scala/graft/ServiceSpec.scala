@@ -16,13 +16,13 @@ import graft.queries.TarQueries
   * missing-params 404, invalid-filename 500, failed-processing 500,
   * non-integer unembargo date 400.
   */
-class ServiceSpec extends AnyFunSuite with SparkSuite {
+class ServiceSpec extends AnyFunSuite with SparkSuite with TempDirs {
 
   private def base(p: String) = p.substring(p.lastIndexOf('/') + 1)
   private def b64(s: String) =
     java.util.Base64.getEncoder.encodeToString(s.getBytes("UTF-8"))
 
-  private lazy val root = Files.createTempDirectory("graft-svc").toString
+  private lazy val root = tempDir("graft-svc").toString
   private lazy val (srcDir, pubDir, privDir) =
     (s"$root/src", s"$root/public", s"$root/embargoed")
 
@@ -40,7 +40,7 @@ class ServiceSpec extends AnyFunSuite with SparkSuite {
         graft.io.FsOps.mkdirs(spark, s"$srcDir/$prefix")
         graft.io.FsOps.copy(spark, tgz, s"$srcDir/$prefix/${base(tgz)}")
     }
-    val sites = Files.createTempFile("graft-svc-sites", ".json")
+    val sites = tempDir("graft-svc-sites").resolve("sites.json")
     Files.writeString(sites, sitesJson)
     // today pinned to 2018-03-15 → the one-year default cutoff is
     // 20170315: neither fixture day is aged out, so the split is a real
@@ -218,14 +218,14 @@ class ServiceSpec extends AnyFunSuite with SparkSuite {
 
   test("whitelist refresh REROUTES subsequent splits (SURVEY §3 E3: the refreshed store is the split's source)") {
     // fresh service + stores so the shared service's state can't leak in
-    val root2 = Files.createTempDirectory("graft-svc-wl").toString
+    val root2 = tempDir("graft-svc-wl").toString
     val (src2, pub2, priv2) = (s"$root2/src", s"$root2/public", s"$root2/embargoed")
     graft.io.FsOps.mkdirs(spark, s"$src2/sidestream/2017/03/15")
     graft.io.FsOps.copy(spark, TarQueries.FixtureTgz,
       s"$src2/sidestream/2017/03/15/${base(TarQueries.FixtureTgz)}")
     // the feed whitelists 173.205.3.43 — absent from the seed text, so its
     // entries land PRIVATE until the refresh lands
-    val sites2 = Files.createTempFile("graft-svc-sites2", ".json")
+    val sites2 = tempDir("graft-svc-sites2").resolve("sites.json")
     Files.writeString(sites2,
       """[{"hostname": "mlab3.sea03.measurement-lab.org", "ipv4": "173.205.3.43", "ipv6": "2001:668:1f:1d::43"}]""")
     val svc = Service.serve(spark, Service.ServiceConfig(
@@ -269,7 +269,7 @@ class ServiceSpec extends AnyFunSuite with SparkSuite {
 
   test("/submit?date= runs ONE distributed split job per day (not per archive) with identical store contents") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val root3 = Files.createTempDirectory("graft-svc-day").toString
+    val root3 = tempDir("graft-svc-day").toString
     val (src3, pub3, priv3) = (s"$root3/src", s"$root3/public", s"$root3/embargoed")
     // day 1: BOTH fixtures as one day; day 2: a single archive
     Seq((TarQueries.FixtureTgz, "sidestream/2017/03/17"),
@@ -338,6 +338,128 @@ class ServiceSpec extends AnyFunSuite with SparkSuite {
       spark.sparkContext.removeSparkListener(listener)
       svc.close()
     }
+  }
+
+  /** A fresh service over its own stores with fixture 1 in the scraper
+    * store, plus a GET against it that answers (status, body).
+    */
+  private def freshService(tag: String, sitesUrl: String,
+                           whitelistOut: Option[String] = None)
+      : (String, Service.EmbargoService, String => (Int, String)) = {
+    val r = tempDir(s"graft-svc-$tag").toString
+    graft.io.FsOps.mkdirs(spark, s"$r/src/sidestream/2017/03/15")
+    graft.io.FsOps.copy(spark, TarQueries.FixtureTgz,
+      s"$r/src/sidestream/2017/03/15/${base(TarQueries.FixtureTgz)}")
+    val svc = Service.serve(spark, Service.ServiceConfig(
+      srcDir = s"$r/src", publicDir = s"$r/public", privateDir = s"$r/embargoed",
+      whitelistPath = TarQueries.FixtureWhitelist, sitesUrl = sitesUrl,
+      whitelistOut = whitelistOut.getOrElse(s"$r/whitelist.parquet"),
+      today = () => java.time.LocalDate.of(2018, 3, 15)))
+    def call(path: String): (Int, String) = {
+      val client = java.net.http.HttpClient.newHttpClient()
+      val req = java.net.http.HttpRequest.newBuilder()
+        .uri(java.net.URI.create(s"http://127.0.0.1:${svc.port}$path")).GET().build()
+      val resp = client.send(req, java.net.http.HttpResponse.BodyHandlers.ofString())
+      (resp.statusCode(), resp.body())
+    }
+    (r, svc, call)
+  }
+
+  private def feed(tag: String, json: String): String = {
+    val f = tempDir(s"graft-svc-$tag").resolve("sites.json")
+    Files.writeString(f, json)
+    f.toUri.toString
+  }
+
+  private val fixtureFile =
+    b64(s"gs://scraper-mlab/sidestream/2017/03/15/${base(TarQueries.FixtureTgz)}")
+
+  test("/submit?file= starts exactly two Spark jobs, the split's write and commit: the whitelist is service state") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val (_, svc, call) = freshService("jobs", feed("jobs-feed", sitesJson))
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val fenced = new java.util.concurrent.CountDownLatch(1)
+    val t0 = new java.util.concurrent.atomic.AtomicLong(Long.MaxValue)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (Option(js.properties).exists(_.getProperty("graft.fence") != null))
+          fenced.countDown()
+        else if (js.time >= t0.get) jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      // the committed refresh store governs, as in a running deployment
+      assert(call("/cron/update_embargo_whitelist") === ((200, "OK")))
+      t0.set(System.currentTimeMillis())
+      assert(call(s"/submit?file=$fixtureFile") === ((200, "success")))
+      // the listener bus delivers in order: once a job started after the
+      // reply is seen, every job the submit started has been counted
+      sc.setLocalProperty("graft.fence", "1")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("graft.fence", null)
+      assert(fenced.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(jobs.get === 2)
+    } finally {
+      sc.removeSparkListener(listener)
+      svc.close()
+    }
+  }
+
+  test("a refresh committed by another service over the same store reaches this service's next submit") {
+    val shared = tempDir("graft-svc-shared").resolve("whitelist.parquet").toString
+    // A's feed lists sea03's .39 only; B's lists .43, absent from A's
+    val (rootA, svcA, callA) =
+      freshService("peer-a", feed("peer-a-feed", sitesJson), Some(shared))
+    val (_, svcB, callB) = freshService("peer-b", feed("peer-b-feed",
+      """[{"hostname": "mlab3.sea03.measurement-lab.org", "ipv4": "173.205.3.43", "ipv6": ""}]"""),
+      Some(shared))
+    try {
+      val fixBase = base(TarQueries.FixtureTgz)
+      val pubTgz = s"$rootA/public/sidestream/2017/03/15/$fixBase"
+      val privTgz =
+        s"$rootA/embargoed/sidestream/2017/03/15/${fixBase.replace(".tgz", "-e.tgz")}"
+      def has43(tgz: String): Boolean =
+        entryNames(tgz).exists(_.contains("_173.205.3.43_"))
+      val marker = java.nio.file.Paths.get(shared, Service.CommittedMarker)
+      assert(callA("/cron/update_embargo_whitelist") === ((200, "OK")))
+      assert(callA(s"/submit?file=$fixtureFile") === ((200, "success")))
+      assert(!has43(pubTgz) && has43(privTgz), "A's own store leaves .43 embargoed")
+      val before = Files.getLastModifiedTime(marker)
+      assert(callB("/cron/update_embargo_whitelist") === ((200, "OK")))
+      assert(Files.getLastModifiedTime(marker) !== before,
+        "B's commit must leave a new marker mtime")
+      assert(callA(s"/submit?file=$fixtureFile") === ((200, "success")))
+      assert(has43(pubTgz) && !has43(privTgz),
+        "A kept routing by its old snapshot after B's refresh committed")
+    } finally { svcA.close(); svcB.close() }
+  }
+
+  test("a committed store past the whitelist size bound answers 500 and publishes nothing") {
+    import spark.implicits._
+    val (root, svc, call) = freshService("bound", "file:///nonexistent.json")
+    try {
+      val n = graft.ops.Whitelist.MaxSize + 1L
+      // n distinct valid IPv4 addresses, committed as a refresh would be
+      spark.range(n).select(concat_ws(".", lit(10), ($"id" / 65536).cast("long"),
+          ($"id" / 256 % 256).cast("long"), ($"id" % 256).cast("long")).as("wip"))
+        .write.parquet(s"$root/whitelist.parquet")
+      assert(spark.read.parquet(s"$root/whitelist.parquet").distinct().count() === n)
+      Files.createFile(java.nio.file.Paths.get(s"$root/whitelist.parquet", Service.CommittedMarker))
+      assert(call(s"/submit?file=$fixtureFile") === ((500, "Fail with embargo single file.")))
+      for (store <- Seq(s"$root/public", s"$root/embargoed")) {
+        val p = java.nio.file.Paths.get(store)
+        val files =
+          if (!Files.exists(p)) Nil
+          else {
+            val walk = Files.walk(p)
+            try walk.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path])
+              .filter(Files.isRegularFile(_))
+            finally walk.close()
+          }
+        assert(files.isEmpty, s"$store holds $files")
+      }
+    } finally svc.close()
   }
 
   test("service shuts down cleanly") {

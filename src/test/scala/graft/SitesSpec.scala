@@ -13,7 +13,7 @@ import graft.queries.TarQueries
   * exercised over a `file:` URL exactly as the reference's tests use local
   * fixtures; the parse/filter semantics mirror `FilterSiteIPs`.
   */
-class SitesSpec extends AnyFunSuite with SparkSuite {
+class SitesSpec extends AnyFunSuite with SparkSuite with TempDirs {
 
   private val fixtureJson =
     """[
@@ -24,7 +24,7 @@ class SitesSpec extends AnyFunSuite with SparkSuite {
       |]""".stripMargin
 
   private def fixtureUrl(): String = {
-    val f = Files.createTempFile("graft-sites", ".json")
+    val f = tempDir("graft-sites").resolve("sites.json")
     Files.writeString(f, fixtureJson)
     f.toUri.toString // file:///...
   }

@@ -12,7 +12,7 @@ import graft.queries.{CoreQueries, Staged, TarQueries}
   * gone, when the corpus changes, and after a failed build — never serves
   * readers over missing paths.
   */
-class StagedSpec extends AnyFunSuite with SparkSuite {
+class StagedSpec extends AnyFunSuite with SparkSuite with TempDirs {
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -33,7 +33,7 @@ class StagedSpec extends AnyFunSuite with SparkSuite {
 
   test("Staged: rebuilds over deleted paths when files go missing, the sfDir changes or force is set") {
     spark
-    val art = Files.createTempDirectory("staged-spec").resolve("artifact")
+    val art = tempDir("staged-spec").resolve("artifact")
     var builds = 0
     def stage(sfDir: String, force: Boolean = false): Int =
       Staged("staged-spec-paths", sfDir, Seq(art.toString), force) {

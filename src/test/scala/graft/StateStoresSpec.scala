@@ -13,7 +13,7 @@ import graft.streaming.{StateStores, StreamDedup}
   * RocksDB commits `*.changelog`/`*.zip` under `state/`, the default
   * HDFS-backed provider commits `*.delta`.
   */
-class StateStoresSpec extends AnyFunSuite with SparkSuite {
+class StateStoresSpec extends AnyFunSuite with SparkSuite with TempDirs {
 
   private def stateFiles(ckpt: Path): Seq[String] = {
     val state = ckpt.resolve("state")
@@ -30,7 +30,7 @@ class StateStoresSpec extends AnyFunSuite with SparkSuite {
 
   test("stream dedup drains through a RocksDB state store") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-rocks")
+    val base = tempDir("graft-rocks")
     val src = base.resolve("src").toString
     val out = base.resolve("out").toString
     val ckpt = base.resolve("ckpt")
@@ -52,7 +52,7 @@ class StateStoresSpec extends AnyFunSuite with SparkSuite {
     import spark.implicits._
     import graft.streaming.StateSizing
     def drain(stateKeys: Option[Long]): Seq[String] = {
-      val base = Files.createTempDirectory("graft-sized")
+      val base = tempDir("graft-sized")
       val src = base.resolve("src").toString
       val out = base.resolve("out").toString
       val ckpt = base.resolve("ckpt")
@@ -102,7 +102,7 @@ class StateStoresSpec extends AnyFunSuite with SparkSuite {
   test("a keyspace estimate sizes the checkpoint's state partitions") {
     import spark.implicits._
     import graft.streaming.StateSizing
-    val base = Files.createTempDirectory("graft-width")
+    val base = tempDir("graft-width")
     val src = base.resolve("src").toString
     val ckpt = base.resolve("ckpt")
     (1 to 40).map(i => s"fp${i % 10}").toDF("fp").repartition(2)
@@ -122,7 +122,7 @@ class StateStoresSpec extends AnyFunSuite with SparkSuite {
   test("a restarted dedup drain keeps its checkpoint's sizing and state") {
     import spark.implicits._
     import graft.streaming.StateSizing
-    val base = Files.createTempDirectory("graft-restart")
+    val base = tempDir("graft-restart")
     val src = base.resolve("src").toString
     val out = base.resolve("out").toString
     val ckpt = base.resolve("ckpt")

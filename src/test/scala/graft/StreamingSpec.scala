@@ -13,7 +13,7 @@ import graft.streaming.StreamingEmbargo
   * inside the stream matches batch semantics; re-runs are incremental
   * (checkpointed file index), not reprocessing.
   */
-class StreamingSpec extends AnyFunSuite with SparkSuite {
+class StreamingSpec extends AnyFunSuite with SparkSuite with TempDirs {
 
   private def writeTgz(path: Path, entries: (String, String)*): Unit = {
     val tar = new TarArchiveOutputStream(
@@ -30,7 +30,7 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("AvailableNow drain routes new archives only, per-batch whitelist") {
-    val root = Files.createTempDirectory("graft-stream")
+    val root = tempDir("graft-stream")
     val inDir = Files.createDirectory(root.resolve("in"))
     val outDir = root.resolve("out").toString
     val ckpt = root.resolve("ckpt").toString
@@ -78,7 +78,7 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, lower}
     import graft.ops.LmScore
-    val root = Files.createTempDirectory("graft-c3-spec")
+    val root = tempDir("graft-c3-spec")
     val src = root.resolve("src").toString
     val likely = "the cat sat on the mat and the cat sat again"
     val gibberish = "zq xv jk wq pz bn mf gh qq ww"
@@ -138,7 +138,7 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
     for ((tgz, cutoff, nPub, nPriv) <- Seq(
         (FixtureTgz, FixtureCutoff, 145L, 59L),
         (Fixture2Tgz, Fixture2Cutoff, 4L, 6L))) {
-      val root = Files.createTempDirectory("graft-st1-golden")
+      val root = tempDir("graft-st1-golden")
       val inDir = Files.createDirectory(root.resolve("in"))
       Files.copy(java.nio.file.Paths.get(tgz),
         inDir.resolve(tgz.substring(tgz.lastIndexOf('/') + 1)))

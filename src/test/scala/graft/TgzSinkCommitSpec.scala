@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSuite
+import graft.{SparkSuite, TempDirs}
 
 /** A local FileSystem masquerading as an object store whose `rename` is
   * unusable — models GCS/S3 semantics where rename is client-driven
@@ -33,7 +33,7 @@ class NoRenameObjectStore extends NoRenameFileSystem {
   * In the test names, a "marked" file is a reported one and the "election"
   * is the commit over the reports.
   */
-class TgzSinkCommitSpec extends AnyFunSuite with SparkSuite {
+class TgzSinkCommitSpec extends AnyFunSuite with SparkSuite with TempDirs {
 
   private def sconf() =
     new SerializableHadoopConf(
@@ -88,7 +88,7 @@ class TgzSinkCommitSpec extends AnyFunSuite with SparkSuite {
       Files.newInputStream(Paths.get(localTgz))).size
 
   test("commit publishes marked attempts and drops unmarked mid-write debris") {
-    val outDir = Files.createTempDirectory("graft-commit").toString
+    val outDir = tempDir("graft-commit").toString
     val t = stagedTarget(outDir)
     // complete attempt 3 (reported) vs a KILLED attempt 9 that wrote more
     // bytes but never reported — the higher attempt id must not win
@@ -105,7 +105,7 @@ class TgzSinkCommitSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("CopyCommit publishes reported files with copy-then-verify") {
-    val outDir = Files.createTempDirectory("graft-commit-cp").toString
+    val outDir = tempDir("graft-commit-cp").toString
     val t = stagedTarget(outDir, CopyCommit)
     // no marker file: the report alone makes the staged file publishable
     val x = stage(t, 0, "x.tgz", 0, 3, "COMPLETE")
@@ -119,8 +119,8 @@ class TgzSinkCommitSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("one election covers two targets: each winner lands in its own root") {
-    val pubDir = Files.createTempDirectory("graft-commit-pub").toString
-    val privDir = Files.createTempDirectory("graft-commit-priv").toString
+    val pubDir = tempDir("graft-commit-pub").toString
+    val privDir = tempDir("graft-commit-priv").toString
     val pub = stagedTarget(pubDir)
     val priv = stagedTarget(privDir, CopyCommit)
     // the same final name staged in both roots is two outputs, not a
@@ -139,8 +139,8 @@ class TgzSinkCommitSpec extends AnyFunSuite with SparkSuite {
 
   test("commit is one Spark job") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val pubDir = Files.createTempDirectory("graft-commit-job-pub").toString
-    val privDir = Files.createTempDirectory("graft-commit-job-priv").toString
+    val pubDir = tempDir("graft-commit-job-pub").toString
+    val privDir = tempDir("graft-commit-job-priv").toString
     val pub = stagedTarget(pubDir)
     val priv = stagedTarget(privDir, CopyCommit)
     val reports = (0 until 3).flatMap { p =>
@@ -175,7 +175,7 @@ class TgzSinkCommitSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("writeSplit leaves a concurrent writer's staged files in the same root alone") {
-    val outDir = Files.createTempDirectory("graft-commit-conc").toString
+    val outDir = tempDir("graft-commit-conc").toString
     // another writer's complete staged file, mid-way through its own
     // commit: in another call's staging dir, and in the `_tmp` dir an
     // earlier build's writers share
@@ -206,8 +206,8 @@ class TgzSinkCommitSpec extends AnyFunSuite with SparkSuite {
     spark.sparkContext.hadoopConfiguration
       .set("fs.nar.impl", classOf[NoRenameFileSystem].getName)
     // the public and private halves on two different nar:// roots
-    val localPub = Files.createTempDirectory("graft-nar-pub").toString
-    val localPriv = Files.createTempDirectory("graft-nar-priv").toString
+    val localPub = tempDir("graft-nar-pub").toString
+    val localPriv = tempDir("graft-nar-priv").toString
 
     val routed = fixtureRouted()
     TgzSink.writeSplit(routed, s"nar://$localPub", s"nar://$localPriv",
@@ -220,7 +220,7 @@ class TgzSinkCommitSpec extends AnyFunSuite with SparkSuite {
     // non-vacuity: the rename-marking protocol on the same store fails —
     // the wrapper really has no rename, so a green CopyCommit run proves
     // the path is rename-free end to end
-    val out2 = s"nar://${Files.createTempDirectory("graft-nar2")}"
+    val out2 = s"nar://${tempDir("graft-nar2")}"
     val e = intercept[Exception] {
       TgzSink.writeSplit(routed, out2, out2, RenameCommit, RenameCommit)
     }
@@ -235,8 +235,8 @@ class TgzSinkCommitSpec extends AnyFunSuite with SparkSuite {
       .set("fs.gs.impl", classOf[NoRenameObjectStore].getName)
     // public half on a posix dir (RenameCommit), private half on a
     // rename-less store under an object-store scheme (CopyCommit)
-    val pubDir = Files.createTempDirectory("graft-mixed-pub").toString
-    val localPriv = Files.createTempDirectory("graft-mixed-priv").toString
+    val pubDir = tempDir("graft-mixed-pub").toString
+    val localPriv = tempDir("graft-mixed-priv").toString
 
     TgzSink.writeSplit(fixtureRouted(), pubDir, s"gs://graft-test$localPriv")
 
@@ -257,7 +257,7 @@ class TgzSinkCommitSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("commit still rejects a final name marked by two partitions") {
-    val outDir = Files.createTempDirectory("graft-commit3").toString
+    val outDir = tempDir("graft-commit3").toString
     val t = stagedTarget(outDir)
     val reports = Seq(stage(t, 0, "w.tgz", 0, 1, "P0"), stage(t, 0, "w.tgz", 1, 2, "P1"))
 

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.io.{TgzSink, TgzSource}
 import graft.model.Schemas
-import graft.ops.EmbargoSplit
+import graft.ops.{EmbargoSplit, Whitelist}
 import graft.queries.TarQueries.{Fixture2Cutoff, Fixture2Tgz, FixtureCutoff, FixtureTgz, FixtureWhitelist}
 
 /** Golden-split tests (`/root/reference/embargo_test.go:54-90`), at the
@@ -15,7 +15,7 @@ import graft.queries.TarQueries.{Fixture2Cutoff, Fixture2Tgz, FixtureCutoff, Fix
   * `/root/reference/embargo_test.go:51-53`), so equivalence is the ordered
   * (name, size) list per route — strictly stronger than set equality.
   */
-class TgzSplitSpec extends AnyFunSuite with SparkSuite {
+class TgzSplitSpec extends AnyFunSuite with SparkSuite with TempDirs {
 
   private def goldenEntries(path: String): Seq[(String, Long)] =
     TgzSource.readTgzStream(path, Files.newInputStream(Paths.get(path)))
@@ -63,7 +63,7 @@ class TgzSplitSpec extends AnyFunSuite with SparkSuite {
     }
 
     test(s"S7/S8 sink [$label]: end-to-end run writes -p/-e pair equivalent to goldens") {
-      val outDir = Files.createTempDirectory("graft-split").toString
+      val outDir = tempDir("graft-split").toString
       EmbargoSplit.run(spark, tgz, FixtureWhitelist, cutoff, outDir)
       val base = tgz.substring(tgz.lastIndexOf('/') + 1)
       val pubOut = s"$outDir/$base"
@@ -84,7 +84,7 @@ class TgzSplitSpec extends AnyFunSuite with SparkSuite {
       // compare fragile, embargo_test.go:51-53), so the strongest portable
       // equivalence is per-entry DECOMPRESSED payload digests: same entry
       // set, same inner bytes, for both the -p and -e halves.
-      val outDir = Files.createTempDirectory("graft-split-md5").toString
+      val outDir = tempDir("graft-split-md5").toString
       EmbargoSplit.run(spark, tgz, FixtureWhitelist, cutoff, outDir)
       def entryMd5s(path: String): Map[String, String] =
         TgzSource.readTgzStream(path, Files.newInputStream(Paths.get(path)))
@@ -103,6 +103,56 @@ class TgzSplitSpec extends AnyFunSuite with SparkSuite {
       // non-vacuity: the two halves are disjoint, non-empty, real digests
       assert(pubGolden.nonEmpty && privGolden.nonEmpty)
       assert(pubGolden.keySet.intersect(privGolden.keySet).isEmpty)
+    }
+  }
+
+  private def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+    df.collect().toSeq.map(_.toSeq.map {
+      case b: Array[Byte] => b.toSeq
+      case x => x
+    })
+
+  for ((label, tgz, cutoff, _, _) <- goldenFixtures)
+    test(s"route [$label]: the DataFrame and Whitelist forms give identical rows in order") {
+      val entries = TgzSource.entries(spark, tgz)
+      val viaFrame = EmbargoSplit.route(entries,
+        TgzSource.whitelist(spark, FixtureWhitelist), cutoff)
+      val viaSet = EmbargoSplit.route(entries,
+        Whitelist.fromText(spark, FixtureWhitelist), cutoff)
+      assert(viaSet.columns.toSeq === viaFrame.columns.toSeq)
+      val rows = rowsOf(viaFrame)
+      assert(rows.nonEmpty)
+      assert(rowsOf(viaSet) === rows)
+    }
+
+  test("route plans no join and no broadcast: membership is a projection") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    object helper extends AdaptiveSparkPlanHelper
+    val routed = EmbargoSplit.route(TgzSource.entries(spark, FixtureTgz),
+      TgzSource.whitelist(spark, FixtureWhitelist), FixtureCutoff)
+    routed.collect()
+    val plan = routed.queryExecution.executedPlan
+    val offending = helper.collect(plan) {
+      case j: BaseJoinExec => j.nodeName
+      case b: BroadcastExchangeLike => b.nodeName
+    }
+    assert(offending.isEmpty, s"route executed ${offending.mkString(", ")}:\n$plan")
+  }
+
+  test("an empty whitelist routes every web100 entry newer than the cutoff private") {
+    import spark.implicits._
+    val entries = TgzSource.entries(spark, FixtureTgz)
+    for (routed <- Seq(
+        EmbargoSplit.route(entries, Whitelist(Iterator.empty), FixtureCutoff),
+        EmbargoSplit.route(entries, Seq.empty[String].toDF("wip"), FixtureCutoff))) {
+      val routes = routed.select("name", "route").collect()
+        .map(r => (r.getString(0), r.getString(1)))
+      val (web100, other) =
+        routes.partition(r => r._1.substring(r._1.lastIndexOf('/') + 1).contains("web100"))
+      assert(web100.nonEmpty && web100.forall(_._2 == Schemas.RoutePrivate))
+      assert(other.forall(_._2 == Schemas.RoutePublic))
     }
   }
 
@@ -159,7 +209,7 @@ class TgzSplitSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("S7: an archive split across partitions fails at commit, not silently") {
-    val outDir = Files.createTempDirectory("graft-split-conflict").toString
+    val outDir = tempDir("graft-split-conflict").toString
     val entries = TgzSource.entries(spark, FixtureTgz)
     val wl = TgzSource.whitelist(spark, FixtureWhitelist)
     // range-partition by ordinal: each half is contiguous WITHIN its task

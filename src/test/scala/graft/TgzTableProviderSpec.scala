@@ -10,7 +10,7 @@ import graft.queries.TarQueries
   * reference fixture, prune the payload read when `content` is not
   * projected, and plan one partition per archive.
   */
-class TgzTableProviderSpec extends AnyFunSuite with SparkSuite {
+class TgzTableProviderSpec extends AnyFunSuite with SparkSuite with TempDirs {
 
   test("format(\"tgz\") row-set matches TgzSource.entries, content included") {
     val v2 = spark.read.format("tgz").load(TarQueries.FixtureTgz)
@@ -42,7 +42,7 @@ class TgzTableProviderSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("one input partition per archive; glob + dir listing resolve") {
-    val dir = java.nio.file.Files.createTempDirectory("tgz-dsv2").toFile
+    val dir = tempDir("tgz-dsv2").toFile
     val src = new java.io.File(TarQueries.FixtureTgz)
     val names = Seq("a.tgz", "b.tgz", "ignore.txt")
     names.foreach { n =>

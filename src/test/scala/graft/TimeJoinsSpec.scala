@@ -9,11 +9,11 @@ import graft.ops.TimeJoins
   * boundary behavior, plus the plan property the bucketing exists for (no
   * nested-loop/cartesian join even when nothing broadcasts).
   */
-class TimeJoinsSpec extends AnyFunSuite with SparkSuite {
+class TimeJoinsSpec extends AnyFunSuite with SparkSuite with TempDirs {
 
   test("W8: OHLC open/close follow the (us, event_id) total order under same-us ties") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("w8spec").toString
+    val dir = tempDir("w8spec").toString
     val t0 = 1888889L * 900000000L // µs, bar-ALIGNED; all four events land in one 15-min bar
     Seq(
       (2L, t0, 7L, "click", 5.0, "{}"), // same us as event 1 — id breaks the tie

@@ -9,10 +9,10 @@ import graft.io.TgzSource
 import graft.queries.TarQueries
 
 /** E2 promotion + A1 observe specs. */
-class UnembargoSpec extends AnyFunSuite with SparkSuite {
+class UnembargoSpec extends AnyFunSuite with SparkSuite with TempDirs {
 
   test("E2: promoteDay copies -e archives, overwrites existing, validates dates") {
-    val root = Files.createTempDirectory("graft-unemb").toString
+    val root = tempDir("graft-unemb").toString
     val day = "sidestream/2017/03/15"
     Files.createDirectories(Paths.get(s"$root/embargo/$day"))
     Files.createDirectories(Paths.get(s"$root/archive/$day"))
@@ -38,7 +38,7 @@ class UnembargoSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("E2: promoteDay on a day with no embargoed archives copies nothing and creates no public day dir") {
-    val root = Files.createTempDirectory("graft-unemb-absent").toString
+    val root = tempDir("graft-unemb-absent").toString
     try {
       Files.createDirectories(Paths.get(s"$root/embargo"))
       val (copied, overwritten) = Unembargo.promoteDay(spark,

@@ -13,7 +13,7 @@ import graft.streaming.WindowedAgg
   * watermark are dropped deterministically, and still-open windows never
   * reach the sink.
   */
-class WindowedAggSpec extends AnyFunSuite with SparkSuite {
+class WindowedAggSpec extends AnyFunSuite with SparkSuite with TempDirs {
 
   private def t(hhmm: String) = Timestamp.valueOf(s"2024-01-01 $hhmm:00")
 
@@ -89,7 +89,7 @@ class WindowedAggSpec extends AnyFunSuite with SparkSuite {
 
   test("ST10: trending rank sees complete windows even when rows span batches") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("st10spec")
+    val dir = tempDir("st10spec")
     val src = dir.resolve("src")
     val out = dir.resolve("out").toString
     val ckpt = dir.resolve("ckpt").toString
@@ -129,7 +129,7 @@ class WindowedAggSpec extends AnyFunSuite with SparkSuite {
 
   test("ST12: windowed HLL merges across batches, one finalized row per window") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("st12spec")
+    val dir = tempDir("st12spec")
     val src = dir.resolve("src")
     val out = dir.resolve("out").toString
     val ckpt = dir.resolve("ckpt").toString
