@@ -22,18 +22,19 @@ object FsOps {
     * `GetFileNamesFromBucket` (`/root/reference/gcs_operations.go:58-85`).
     *
     * Routed through the `binaryFile` metadata columns (content pruned away,
-    * never read) instead of a driver-materialized `listStatus` array: the
-    * catalog scan uses Spark's file index — parallel listing above the
-    * discovery threshold, suffix pushed down as the path glob — so a
-    * million-object prefix is a distributed scan, not a driver OOM.
-    * Spark's scan convention skips `_`/`.`-prefixed (hidden) files, which
-    * is also the reference's GCS-object behavior for our outputs.
+    * never read), with the suffix pushed down as the path glob, so the
+    * catalog is a DataFrame a query can filter, join or aggregate. Spark's
+    * file index lists a flat prefix on the driver, one `FileStatus` per
+    * object, before any task runs. Spark's scan convention skips
+    * `_`/`.`-prefixed (hidden) files, which is also the reference's
+    * GCS-object behavior for our outputs; the scan also drops zero-length
+    * files, which [[objects]] keeps.
     *
-    * The listing is deliberately UNORDERED: its main consumers
-    * ([[syncCopy]]/[[compare]]/`promoteDay`) feed joins that hash-partition
-    * anyway, so a global sort here would be a full exchange paid on every
-    * catalog access. Display consumers that want the reference's
-    * lexicographic page order sort at the edge (`s2_bucket_list`).
+    * The listing is deliberately UNORDERED: a consumer that joins or
+    * aggregates it hash-partitions anyway, so a global sort here would be
+    * a full exchange paid on every catalog access. Display consumers that
+    * want the reference's lexicographic page order sort at the edge
+    * (`s2_bucket_list`).
     */
   def list(spark: SparkSession, dir: String, suffix: String = "",
            recursive: Boolean = false): DataFrame =
@@ -43,6 +44,21 @@ object FsOps {
       .load(dir)
       .select(regexp_extract(col("path"), "([^/]+)$", 1).as("name"),
         col("length").as("size"))
+
+  /** The regular, non-hidden files directly under `dir` whose names end
+    * in `suffix`, as name -> size, listed on the driver through the Hadoop
+    * [[FileSystem]]: no Spark job. Hidden is a `_` or `.` name prefix,
+    * Spark's rule; zero-length files are listed, as the reference lists
+    * every object. This is the plan side of [[syncCopy]], [[compare]] and
+    * `Unembargo.promoteDay`: one name per object, where [[list]]'s file
+    * index holds one `FileStatus` per object on the driver as well.
+    */
+  def objects(spark: SparkSession, dir: String, suffix: String = ""): Map[String, Long] =
+    fs(spark, dir).listStatus(new Path(dir)).iterator
+      .filter(_.isFile)
+      .map(st => st.getPath.getName -> st.getLen)
+      .filter { case (n, _) => !n.startsWith("_") && !n.startsWith(".") && n.endsWith(suffix) }
+      .toMap
 
   /** S3 — download one object's bytes (`/root/reference/embargo.go:283`). */
   def readBytes(spark: SparkSession, path: String): Array[Byte] = {
@@ -82,33 +98,38 @@ object FsOps {
     }
   }
 
+  /** [[copyAll]] over names planned on the driver, handed over as a local
+    * relation. Nothing to copy starts no job.
+    */
+  def copyNames(spark: SparkSession, names: Iterable[String], srcDir: String,
+                dstDir: String): Unit =
+    if (names.nonEmpty) {
+      import spark.implicits._
+      copyAll(spark, names.toSeq.toDF("name"), srcDir, dstDir)
+    }
+
   /** J2 at the object level — `SyncTwoBuckets`
     * (`/root/reference/gcs_operations.go:200-266`): copy the objects present
     * under `srcDir` but missing under `dstDir` (existing objects are left
     * untouched, as in the reference). Returns the number copied. The
-    * missing-set is the listing anti-join; the copies are distributed.
+    * missing set is a driver set difference of the two [[objects]]
+    * listings; the copies are one distributed job, none when nothing is
+    * missing.
     */
   def syncCopy(spark: SparkSession, srcDir: String, dstDir: String): Long = {
     mkdirs(spark, dstDir)
-    val missing = list(spark, srcDir).select("name")
-      .join(list(spark, dstDir).select("name"), Seq("name"), "left_anti")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val n = missing.count()
-      copyAll(spark, missing, srcDir, dstDir)
-      n
-    } finally missing.unpersist()
+    val missing = objects(spark, srcDir).keySet -- objects(spark, dstDir).keySet
+    copyNames(spark, missing, srcDir, dstDir)
+    missing.size.toLong
   }
 
   /** J4 at the object level — `CompareBuckets`
     * (`/root/reference/gcs_operations.go:269-337`): true iff the two
-    * prefixes hold identical (name, size) sets, via symmetric difference.
+    * prefixes hold identical (name, size) sets. Both [[objects]] listings
+    * are compared on the driver: no Spark job.
     */
-  def compare(spark: SparkSession, dirA: String, dirB: String): Boolean = {
-    val a = list(spark, dirA)
-    val b = list(spark, dirB)
-    a.exceptAll(b).unionAll(b.exceptAll(a)).isEmpty
-  }
+  def compare(spark: SparkSession, dirA: String, dirB: String): Boolean =
+    objects(spark, dirA) == objects(spark, dirB)
 
   /** S10 — delete every object under a prefix
     * (`/root/reference/gcs_operations.go:87-128`).
@@ -138,7 +159,7 @@ object FsOps {
     // size ALL of them or the ceil(bytes/target) arithmetic downstream
     // drifts from the bytes actually rewritten (review r16: the earlier
     // '*.parquet' glob sized only the matching sliver and compacted the
-    // rest into it). Distributed listing via the binaryFile file index;
+    // rest into it). Listing via the binaryFile file index;
     // Spark's scan convention prunes '_'/'.'-hidden files and dirs.
     val viaListing = list(spark, dir, suffix = "", recursive = true)
       .agg(coalesce(sum(col("size")), lit(0L))).collect()(0).getLong(0)

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 import graft.io.FsOps
 
@@ -11,11 +10,11 @@ import graft.io.FsOps
   * the same name (copy-with-overwrite = the J3 last-writer-wins upsert at
   * the object level; 3-case rationale `/root/reference/unembargo.go:4-28`).
   *
-  * Spark-first shape: the relational half (which objects to move — the
-  * anti/overwrite split) is a DataFrame computation over two listings; the
-  * data motion is per-object filesystem copy (server-side where the store
-  * supports it), parallelized with `foreachPartition` instead of the
-  * reference's serial page loop.
+  * Shape: which objects to move, and which of them overwrite, is planned on
+  * the driver from two name listings, the reference's one name lookup per
+  * object; the data motion is per-object filesystem copy (server-side where
+  * the store supports it), parallelized with `foreachPartition` instead of
+  * the reference's serial page loop.
   */
 object Unembargo {
 
@@ -32,11 +31,13 @@ object Unembargo {
     * absent source day is the reference's empty listing: it returns
     * (0, 0) and creates no public day dir.
     *
-    * The copy plan (J3 overwrite-join of the two listings) never leaves the
-    * cluster: counts come from an aggregate, the object copies run
-    * distributed via [[FsOps.copyAll]] — one slow day with thousands of
-    * tarballs parallelizes across executors instead of serializing through
-    * the driver as the reference's page loop does.
+    * The copy plan (J3 overwrite split) comes from two driver listings
+    * ([[FsOps.objects]]): every source `-e.tgz` copies, and those already
+    * named at the destination are overwrites. The copies run as one
+    * distributed job via [[FsOps.copyAll]], none when nothing is due — one
+    * slow day with thousands of tarballs parallelizes across executors
+    * instead of serializing through the driver as the reference's page
+    * loop does.
     */
   def promoteDay(spark: SparkSession, srcDir: String, dstDir: String,
                  dateInt: Int, cutoffDateInt: Int): (Long, Long) = {
@@ -48,19 +49,9 @@ object Unembargo {
     if (!FsOps.exists(spark, srcDay)) return (0L, 0L)
     FsOps.mkdirs(spark, dstDay)
 
-    val src = FsOps.list(spark, srcDay, "-e.tgz").select(col("name"))
-    val dst = FsOps.list(spark, dstDay).select(col("name").as("dname"))
-    // J3: full picture of moves — everything in src copies; rows also in
-    // dst are overwrites (delete-then-copy in the reference)
-    val plan = src.join(dst, src("name") === dst("dname"), "left_outer")
-      .select(col("name"), col("dname").isNotNull.as("overwrite"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val counts = plan.agg(
-        count(lit(1)).as("copied"),
-        count(when(col("overwrite"), 1)).as("overwritten")).head()
-      FsOps.copyAll(spark, plan.select("name"), srcDay, dstDay)
-      (counts.getAs[Long]("copied"), counts.getAs[Long]("overwritten"))
-    } finally plan.unpersist()
+    val names = FsOps.objects(spark, srcDay, "-e.tgz").keySet
+    val present = FsOps.objects(spark, dstDay).keySet
+    FsOps.copyNames(spark, names, srcDay, dstDay)
+    (names.size.toLong, names.count(present).toLong)
   }
 }

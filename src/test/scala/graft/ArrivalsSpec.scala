@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,7 +11,7 @@ import graft.streaming.Drain
   * disagree on schema fail at staging. The scratch dir's removal is
   * pinned by StagedSpec's st7 case.
   */
-class ArrivalsSpec extends AnyFunSuite with SparkSuite {
+class ArrivalsSpec extends AnyFunSuite with SparkSuite with JobCounting {
 
   // the corpus only keys the memo and names the staged dir
   private val sf = "arrivals-spec"
@@ -23,37 +19,6 @@ class ArrivalsSpec extends AnyFunSuite with SparkSuite {
   private def ids(xs: Long*): DataFrame = {
     import spark.implicits._
     xs.toDF("id")
-  }
-
-  /** Spark jobs started by `body`. A marker job runs after `body` in the
-    * same job group; the listener bus delivers in order, so once the
-    * marker arrives every job of `body` has been counted.
-    */
-  private def jobsStartedBy(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = "arrivals-spec-jobs"
-    val marker = "arrivals-spec-marker"
-    val jobs = new AtomicInteger(0)
-    val markerSeen = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        Option(js.properties).filter(_.getProperty("spark.jobGroup.id") == group)
-          .foreach { p =>
-            if (p.getProperty("spark.job.description") == marker) markerSeen.countDown()
-            else jobs.incrementAndGet()
-          }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "arrivals")
-      try {
-        body
-        sc.setJobDescription(marker)
-        sc.parallelize(Seq(1), 1).count()
-      } finally sc.clearJobGroup()
-      assert(markerSeen.await(30, TimeUnit.SECONDS), "marker job never arrived")
-    } finally sc.removeSparkListener(listener)
-    jobs.get()
   }
 
   test("Arrivals: a three-file source drains file i as micro-batch i") {

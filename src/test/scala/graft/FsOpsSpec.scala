@@ -9,7 +9,7 @@ import graft.io.FsOps
 /** S1-S3/S9-S11 catalog-operation specs over a temp dir (posix stands in
   * for the object store; the code path is Hadoop FileSystem either way).
   */
-class FsOpsSpec extends AnyFunSuite with SparkSuite with TempDirs {
+class FsOpsSpec extends AnyFunSuite with SparkSuite with TempDirs with JobCounting {
 
   test("list / read / copy / delete / mkdirs round-trip") {
     val root = tempDir("graft-fs").toString
@@ -72,6 +72,35 @@ class FsOpsSpec extends AnyFunSuite with SparkSuite with TempDirs {
     Files.write(java.nio.file.Paths.get(s"$root/b/x.tgz"), "xx".getBytes)
     assert(FsOps.compare(spark, s"$root/a", s"$root/b"))
     assert(FsOps.syncCopy(spark, s"$root/a", s"$root/b") === 0) // idempotent
+  }
+
+  test("J2/J4 plan on the driver: syncCopy with nothing missing and compare start no Spark job") {
+    val root = tempDir("graft-sync-jobs").toString
+    FsOps.mkdirs(spark, s"$root/a")
+    FsOps.mkdirs(spark, s"$root/b")
+    Seq("a", "b").foreach { d =>
+      Files.write(java.nio.file.Paths.get(s"$root/$d/x.tgz"), "xx".getBytes)
+    }
+    assert(jobsStartedBy {
+      assert(FsOps.syncCopy(spark, s"$root/a", s"$root/b") === 0)
+    } === 0)
+    assert(jobsStartedBy(assert(FsOps.compare(spark, s"$root/a", s"$root/b"))) === 0)
+    Files.write(java.nio.file.Paths.get(s"$root/a/y.tgz"), "yy".getBytes)
+    assert(jobsStartedBy(assert(!FsOps.compare(spark, s"$root/a", s"$root/b"))) === 0)
+  }
+
+  test("J4: compare sees a zero-length object that exists on one side only") {
+    val root = tempDir("graft-cmp-empty").toString
+    FsOps.mkdirs(spark, s"$root/a")
+    FsOps.mkdirs(spark, s"$root/b")
+    Seq("a", "b").foreach { d =>
+      Files.write(java.nio.file.Paths.get(s"$root/$d/x.tgz"), "xx".getBytes)
+    }
+    Files.write(java.nio.file.Paths.get(s"$root/a/empty.tgz"), Array.emptyByteArray)
+    assert(!FsOps.compare(spark, s"$root/a", s"$root/b"))
+    assert(!FsOps.compare(spark, s"$root/b", s"$root/a"))
+    Files.write(java.nio.file.Paths.get(s"$root/b/empty.tgz"), Array.emptyByteArray)
+    assert(FsOps.compare(spark, s"$root/a", s"$root/b"))
   }
 
   test("list() plans no sort: join consumers pay no listing exchange") {

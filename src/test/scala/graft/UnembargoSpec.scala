@@ -9,7 +9,7 @@ import graft.io.TgzSource
 import graft.queries.TarQueries
 
 /** E2 promotion + A1 observe specs. */
-class UnembargoSpec extends AnyFunSuite with SparkSuite with TempDirs {
+class UnembargoSpec extends AnyFunSuite with SparkSuite with TempDirs with JobCounting {
 
   test("E2: promoteDay copies -e archives, overwrites existing, validates dates") {
     val root = tempDir("graft-unemb").toString
@@ -46,6 +46,39 @@ class UnembargoSpec extends AnyFunSuite with SparkSuite with TempDirs {
       assert((copied, overwritten) === ((0L, 0L)))
       assert(!Files.exists(Paths.get(s"$root/archive/${Unembargo.dayPrefix(20170101)}")))
     } finally graft.io.FsOps.deletePrefix(spark, root)
+  }
+
+  test("E2: an empty -e.tgz is promoted and counted like any other") {
+    val root = tempDir("graft-unemb-empty").toString
+    val day = Unembargo.dayPrefix(20170315)
+    Files.createDirectories(Paths.get(s"$root/embargo/$day"))
+    Files.write(Paths.get(s"$root/embargo/$day/a-e.tgz"), Array[Byte](1))
+    Files.write(Paths.get(s"$root/embargo/$day/z-e.tgz"), Array.emptyByteArray)
+    val (copied, overwritten) = Unembargo.promoteDay(spark,
+      s"$root/embargo", s"$root/archive", dateInt = 20170315, cutoffDateInt = 20250101)
+    assert((copied, overwritten) === ((2L, 0L)))
+    assert(Files.size(Paths.get(s"$root/archive/$day/a-e.tgz")) === 1L)
+    assert(Files.size(Paths.get(s"$root/archive/$day/z-e.tgz")) === 0L)
+  }
+
+  test("E2: promoteDay plans on the driver: two -e.tgz start one Spark job, none start none") {
+    val root = tempDir("graft-unemb-jobs").toString
+    val day = Unembargo.dayPrefix(20170315)
+    Files.createDirectories(Paths.get(s"$root/embargo/$day"))
+    Files.createDirectories(Paths.get(s"$root/archive/$day"))
+    Files.write(Paths.get(s"$root/embargo/$day/skip.tgz"), "not-e".getBytes)
+    def promote(): (Long, Long) = Unembargo.promoteDay(spark,
+      s"$root/embargo", s"$root/archive", dateInt = 20170315, cutoffDateInt = 20250101)
+
+    var counts = (-1L, -1L)
+    assert(jobsStartedBy { counts = promote() } === 0)
+    assert(counts === ((0L, 0L)))
+
+    Files.write(Paths.get(s"$root/embargo/$day/a-e.tgz"), "new-a".getBytes)
+    Files.write(Paths.get(s"$root/embargo/$day/b-e.tgz"), "new-b".getBytes)
+    Files.write(Paths.get(s"$root/archive/$day/a-e.tgz"), "old-a".getBytes)
+    assert(jobsStartedBy { counts = promote() } === 1)
+    assert(counts === ((2L, 1L)))
   }
 
   test("A1: observe() collects routed counters in the same pass") {

@@ -3,10 +3,21 @@
 DuckDB over the sf parquet tables, load the Spark result parquet written by
 graft.Verify, sort columns by name + rows by value, and compare exactly.
 
+Some oracle SQL reads artifacts that the queries stage under STAGE_DIR
+(TarQueries.StageDir). A later run (another Verify, the spec suite) may
+re-stage those with other contents, after which the oracle no longer
+describes the Spark output it is checked against. Such a query is reported
+STALE with the re-staged path instead of being compared; rerun Verify for it.
+A path counts as re-staged when it changed after the newest Verify output of
+the queries whose oracle SQL names it.
+The exit code is non-zero on any FAIL or STALE.
+
 Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir>
 """
 import glob
 import json
+import os
+import re
 import sys
 
 import duckdb
@@ -14,6 +25,46 @@ import pandas as pd
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
+
+
+STAGE_DIR = "/tmp/graft_stage"
+STAGED_REF = re.compile(re.escape(STAGE_DIR) + r"/[^'\"\s),;]+")
+
+
+def newest_mtime(path: str) -> float:
+    """Latest modification time of `path` or anything under it."""
+    t = os.path.getmtime(path)
+    for root, dirs, files in os.walk(path):
+        for n in dirs + files:
+            t = max(t, os.path.getmtime(os.path.join(root, n)))
+    return t
+
+
+def staged_paths(sql: str) -> list:
+    """The staged files and dirs `sql` names, cut before any glob part."""
+    paths = set()
+    for ref in STAGED_REF.findall(sql):
+        parts = ref.split("/")
+        keep = next((i for i, p in enumerate(parts) if any(c in p for c in "*?[{")),
+                    len(parts))
+        paths.add("/".join(parts[:keep]))
+    return sorted(paths)
+
+
+def staged_by(oracle: dict, out_dir: str) -> dict:
+    """Each staged path named by some oracle SQL -> the newest Verify output
+    of the queries that name it. A query that stages a path is one whose
+    oracle reads it, so within one Verify run every write to the path comes
+    before that time (t25 re-stages t24's weights, for one); a later write
+    came from another run."""
+    seen = {}
+    for name, sql in oracle.items():
+        files = glob.glob(f"{out_dir}/{name}/*.parquet")
+        if files:
+            written = max(os.path.getmtime(f) for f in files)
+            for p in staged_paths(sql):
+                seen[p] = max(seen.get(p, 0.0), written)
+    return seen
 
 
 def canon(df: pd.DataFrame) -> list:
@@ -30,12 +81,19 @@ def main() -> None:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
-    n_pass = n_fail = 0
+    verified = staged_by(oracle, out_dir)
+    n_pass = n_fail = n_stale = 0
     for name in sorted(oracle):
         files = glob.glob(f"{out_dir}/{name}/*.parquet")
         if not files:
             print(f"FAIL {name}: no spark output")
             n_fail += 1
+            continue
+        newer = [p for p in staged_paths(oracle[name])
+                 if os.path.exists(p) and newest_mtime(p) > verified[p]]
+        if newer:
+            print(f"STALE {name}: {', '.join(newer)} modified after its Verify output")
+            n_stale += 1
             continue
         try:
             got = pd.concat([pd.read_parquet(f) for f in files])
@@ -65,15 +123,14 @@ def main() -> None:
             n_pass += 1
             print(f"PASS {name} ({len(g)} rows)")
     # queries with no oracle: rows-only
-    import os
     for d in sorted(os.listdir(out_dir)):
         p = os.path.join(out_dir, d)
         if os.path.isdir(p) and d not in oracle:
             files = glob.glob(f"{p}/*.parquet")
             n = sum(len(pd.read_parquet(f)) for f in files) if files else 0
             print(f"ROWS-ONLY {d}: {n} rows")
-    print(f"\n{n_pass} pass, {n_fail} fail")
-    sys.exit(1 if n_fail else 0)
+    print(f"\n{n_pass} pass, {n_fail} fail, {n_stale} stale")
+    sys.exit(1 if n_fail or n_stale else 0)
 
 
 if __name__ == "__main__":
