@@ -2,13 +2,13 @@ package graft.io
 
 import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.bridge
 
 /** S1-S3, S9-S11 — object-catalog operations
   * (`/root/reference/gcs_operations.go`), expressed over Hadoop
   * [[FileSystem]] so the same code drives posix, HDFS, or cloud object
-  * stores. Listing returns a DataFrame (the catalog is data); the
+  * stores. Every listing is one driver walk, [[objects]]; [[list]]
+  * hands it to queries as a DataFrame (the catalog is data). The
   * copy/delete/mkdir calls are filesystem utilities with no query
   * semantics, exactly as in the reference.
   */
@@ -17,18 +17,18 @@ object FsOps {
   private def fs(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
+  /** Hidden objects: a `_` or `.` name prefix, Spark's rule for
+    * metadata (`_SUCCESS`, `.crc`, a crashed write's `_temporary`).
+    */
+  def hidden(name: String): Boolean = name.startsWith("_") || name.startsWith(".")
+
   /** S1/S2 — list objects under a prefix (S2 = empty suffix filter), as a
     * DataFrame of (name, size). Mirrors the paginated
     * `GetFileNamesFromBucket` (`/root/reference/gcs_operations.go:58-85`).
     *
-    * Routed through the `binaryFile` metadata columns (content pruned away,
-    * never read), with the suffix pushed down as the path glob, so the
-    * catalog is a DataFrame a query can filter, join or aggregate. Spark's
-    * file index lists a flat prefix on the driver, one `FileStatus` per
-    * object, before any task runs. Spark's scan convention skips
-    * `_`/`.`-prefixed (hidden) files, which is also the reference's
-    * GCS-object behavior for our outputs; the scan also drops zero-length
-    * files, which [[objects]] keeps.
+    * The [[objects]] walk as a local relation, so the catalog is a
+    * DataFrame a query can filter, join or aggregate; with `recursive`,
+    * `name` is the path relative to `dir`.
     *
     * The listing is deliberately UNORDERED: a consumer that joins or
     * aggregates it hash-partitions anyway, so a global sort here would be
@@ -37,28 +37,32 @@ object FsOps {
     * (`s2_bucket_list`).
     */
   def list(spark: SparkSession, dir: String, suffix: String = "",
-           recursive: Boolean = false): DataFrame =
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*" + suffix)
-      .option("recursiveFileLookup", recursive.toString)
-      .load(dir)
-      .select(regexp_extract(col("path"), "([^/]+)$", 1).as("name"),
-        col("length").as("size"))
+           recursive: Boolean = false): DataFrame = {
+    import spark.implicits._
+    objects(spark, dir, suffix, recursive).toSeq.toDF("name", "size")
+  }
 
-  /** The regular, non-hidden files directly under `dir` whose names end
-    * in `suffix`, as name -> size, listed on the driver through the Hadoop
-    * [[FileSystem]]: no Spark job. Hidden is a `_` or `.` name prefix,
-    * Spark's rule; zero-length files are listed, as the reference lists
-    * every object. This is the plan side of [[syncCopy]], [[compare]] and
-    * `Unembargo.promoteDay`: one name per object, where [[list]]'s file
-    * index holds one `FileStatus` per object on the driver as well.
+  /** The regular, non-[[hidden]] files under `dir` whose names end in
+    * `suffix`, as path relative to `dir` -> size, listed on the driver
+    * through the Hadoop [[FileSystem]]: no Spark job. A flat listing's
+    * keys are the names; `recursive` descends into subdirectories and
+    * skips hidden ones at every level, as Spark's file index does.
+    * Zero-length files are listed, as the reference lists every object.
+    * This is the one object listing: [[list]], [[parquetBytes]],
+    * [[syncCopy]], [[compare]] and `Unembargo.promoteDay` all read it.
     */
-  def objects(spark: SparkSession, dir: String, suffix: String = ""): Map[String, Long] =
-    fs(spark, dir).listStatus(new Path(dir)).iterator
-      .filter(_.isFile)
-      .map(st => st.getPath.getName -> st.getLen)
-      .filter { case (n, _) => !n.startsWith("_") && !n.startsWith(".") && n.endsWith(suffix) }
-      .toMap
+  def objects(spark: SparkSession, dir: String, suffix: String = "",
+              recursive: Boolean = false): Map[String, Long] = {
+    val f = fs(spark, dir)
+    def walk(p: Path, prefix: String): Iterator[(String, Long)] =
+      f.listStatus(p).iterator.filterNot(st => hidden(st.getPath.getName)).flatMap { st =>
+        val rel = prefix + st.getPath.getName
+        if (st.isFile) Iterator(rel -> st.getLen)
+        else if (recursive && st.isDirectory) walk(st.getPath, rel + "/")
+        else Iterator.empty
+      }
+    walk(new Path(dir), "").filter(_._1.endsWith(suffix)).toMap
+  }
 
   /** S3 — download one object's bytes (`/root/reference/embargo.go:283`). */
   def readBytes(spark: SparkSession, path: String): Array[Byte] = {
@@ -151,7 +155,7 @@ object FsOps {
     * listing behind [[graft.ops.Compaction.compact]]'s `ceil(bytes/target)`
     * file-count arithmetic (data files only; _SUCCESS/metadata excluded).
     */
-  def parquetBytes(spark: SparkSession, dir: String): Long = {
+  def parquetBytes(spark: SparkSession, dir: String): Long =
     // List what the READER reads: every non-hidden file, recursively
     // (partitioned layouts nest data files under key=value dirs), with
     // NO name filter — `spark.read.parquet` does not filter on '.parquet'
@@ -159,27 +163,6 @@ object FsOps {
     // size ALL of them or the ceil(bytes/target) arithmetic downstream
     // drifts from the bytes actually rewritten (review r16: the earlier
     // '*.parquet' glob sized only the matching sliver and compacted the
-    // rest into it). Listing via the binaryFile file index;
-    // Spark's scan convention prunes '_'/'.'-hidden files and dirs.
-    val viaListing = list(spark, dir, suffix = "", recursive = true)
-      .agg(coalesce(sum(col("size")), lit(0L))).collect()(0).getLong(0)
-    if (viaListing > 0L) viaListing
-    else {
-      // Fallback: a directory holding nothing but zero-length files
-      // (which binaryFile listings skip) must not error the listing.
-      // Walk the FileSystem directly, pruning hidden names at
-      // EVERY level (Spark's own convention: a '_'/'.' prefix marks
-      // metadata, and Spark skips such DIRECTORIES too — a flat
-      // listFiles would count a crashed write's _temporary leftovers
-      // that Spark reads as empty).
-      val f = fs(spark, dir)
-      def walk(p: Path): Long = f.listStatus(p).map { st =>
-        val n = st.getPath.getName
-        if (n.startsWith("_") || n.startsWith(".")) 0L
-        else if (st.isDirectory) walk(st.getPath)
-        else st.getLen
-      }.sum
-      walk(new Path(dir))
-    }
-  }
+    // rest into it).
+    objects(spark, dir, recursive = true).values.sum
 }

@@ -67,8 +67,7 @@ object Compaction {
       .repartitionByRange(n, col(sortCol))
       .sortWithinPartitions(sortCol)
       .write.mode("overwrite").parquet(outDir)
-    graft.io.FsOps.list(spark, outDir, suffix = ".parquet")
-      .count().toInt
+    graft.io.FsOps.objects(spark, outDir, ".parquet").size
   }
 
   /** Spread the low 16 bits of `x` to even bit positions (Morton
@@ -141,8 +140,7 @@ object Compaction {
       .sortWithinPartitions("__z")
       .drop("__z")
       .write.mode("overwrite").parquet(outDir)
-    graft.io.FsOps.list(spark, outDir, suffix = ".parquet")
-      .count().toInt
+    graft.io.FsOps.objects(spark, outDir, ".parquet").size
   }
 
   /** S25 — snapshot retention (the Delta `VACUUM` / Iceberg
@@ -197,7 +195,7 @@ object Compaction {
           // crashed writer's leftovers is deliberately left behind, and
           // operators should be able to see what retention is not
           // reclaiming instead of it vanishing from every report.
-          val hidden = name.startsWith("_") || name.startsWith(".")
+          val hidden = graft.io.FsOps.hidden(name)
           if (hidden && !(name == "_SUCCESS" && e.getLen == 0))
             org.apache.logging.log4j.LogManager.getLogger(getClass)
               .warn(s"expireSnapshots: leaving hidden entry ${e.getPath} " +

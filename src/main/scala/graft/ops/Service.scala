@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
+import graft.io.FsOps
+
 /** The reference's HTTP service surface
   * (`/root/reference/deploy/deploy.go:118-126`): the four routes it
   * registers — `/submit` (embargo a single file or a whole day),
@@ -245,12 +247,11 @@ object Service {
       */
     private def embargoDay(date: String): Unit = {
       val prefix = Unembargo.dayPrefix(date.toInt)
-      val dayPath = new Path(s"${cfg.srcDir}/$prefix")
-      val dayFs = dayPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // an absent day dir globs to nothing, like an empty one
-      if (Option(dayFs.globStatus(new Path(dayPath, "*.tgz"))).forall(_.isEmpty)) return
+      val day = s"${cfg.srcDir}/$prefix"
+      // an absent day dir lists nothing, like one without a visible .tgz
+      if (!FsOps.exists(spark, day) || FsOps.objects(spark, day, ".tgz").isEmpty) return
       spark.sparkContext.setJobGroup(DayJobGroup, s"embargo day $date")
-      try EmbargoSplit.runWith(spark, dayPath.toString, currentWhitelist(),
+      try EmbargoSplit.runWith(spark, day, currentWhitelist(),
         oneYearAgoInt(cfg.today()),
         s"${cfg.publicDir}/$prefix", s"${cfg.privateDir}/$prefix")
       finally spark.sparkContext.clearJobGroup()

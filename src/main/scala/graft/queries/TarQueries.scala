@@ -485,8 +485,8 @@ object TarQueries {
     * sizes; names are the stable table set. The lexicographic order the
     * reference's paged listing yields
     * (`/root/reference/gcs_operations.go:58-85`) is applied here at the
-    * display edge — [[graft.io.FsOps.list]] itself stays unordered so
-    * join consumers don't pay a global sort.
+    * display edge — [[graft.io.FsOps.list]], the driver walk as a local
+    * relation, stays unordered so join consumers don't pay a global sort.
     *
     * DuckDB has no filesystem catalog, so the live listing stages to
     * parquet (the e1/s4 manifest trick). On its own that check would be
@@ -538,15 +538,11 @@ object TarQueries {
     files.foreach { rel =>
       val p = java.nio.file.Paths.get(s"$root/$rel")
       java.nio.file.Files.createDirectories(p.getParent)
-      // ≥1 byte: zero-length files are invisible to binaryFile listings
       java.nio.file.Files.write(p, rel.getBytes("UTF-8"))
     }
     def listing(phase: String): DataFrame =
-      spark.read.format("binaryFile")
-        .option("recursiveFileLookup", "true").load(root)
-        .select(lit(phase).as("phase"),
-          regexp_extract(col("path"), "s20_tree/(.*)$", 1).as("rel"),
-          col("length").as("size"))
+      graft.io.FsOps.list(spark, root, recursive = true)
+        .select(lit(phase).as("phase"), col("name").as("rel"), col("size"))
     listing("before").write.mode("overwrite")
       .parquet(s"$StageDir/s20_before.parquet")
     graft.io.FsOps.deletePrefix(spark, s"$root/sidestream/2017/03/15")
@@ -582,11 +578,8 @@ object TarQueries {
     val obj = java.nio.file.Paths.get(s"$day/archive-0000.tgz")
     java.nio.file.Files.write(obj, "payload".getBytes("UTF-8"))
     def listing(phase: String): DataFrame =
-      spark.read.format("binaryFile")
-        .option("recursiveFileLookup", "true").load(s"$root/store")
-        .select(lit(phase).as("phase"),
-          regexp_extract(col("path"), "s21_tree/store/(.*)$", 1).as("rel"),
-          col("length").as("size"))
+      graft.io.FsOps.list(spark, s"$root/store", recursive = true)
+        .select(lit(phase).as("phase"), col("name").as("rel"), col("size"))
     listing("created").write.mode("overwrite")
       .parquet(s"$StageDir/s21_created.parquet")
     require(graft.io.FsOps.mkdirs(spark, day), "repeat mkdirs not idempotent")
@@ -607,7 +600,7 @@ object TarQueries {
     * (`/root/reference/embargo.go:283` — the per-archive GCS read the
     * split pipeline starts from): a staged store is populated with
     * objects whose CONTENT is their relative path (the s20 convention),
-    * its binaryFile listing stages as the manifest, and every manifest
+    * its recursive listing stages as the manifest, and every manifest
     * object is then read back through [[graft.io.FsOps.readBytes]] — the
     * graded row carries the byte count and payload md5. The oracle never
     * sees the read-back: it derives the expected md5/size FROM the
@@ -631,10 +624,8 @@ object TarQueries {
       java.nio.file.Files.createDirectories(p.getParent)
       java.nio.file.Files.write(p, rel.getBytes("UTF-8"))
     }
-    spark.read.format("binaryFile")
-      .option("recursiveFileLookup", "true").load(root)
-      .select(regexp_extract(col("path"), "s22_tree/(.*)$", 1).as("rel"),
-        col("length").as("size"))
+    graft.io.FsOps.list(spark, root, recursive = true)
+      .select(col("name").as("rel"), col("size"))
       .write.mode("overwrite").parquet(s"$StageDir/s22_manifest.parquet")
     val manifest = spark.read.parquet(s"$StageDir/s22_manifest.parquet")
       .orderBy("rel").collect().map(_.getString(0))

@@ -626,11 +626,15 @@ object TextQueries {
     import spark.implicits._
     import graft.ops.QualityModel
     val f = qualityFeatures(gopherGate(spark, sfDir)).localCheckpoint()
-    val w = QualityModel.quantize(QualityModel.fitLpm(f, QFeatCols, "y"))
-    w.zipWithIndex.map { case (wi, i) => (i.toLong, wi) }.toSeq
-      .toDF("idx", "w")
-      .coalesce(1).write.mode("overwrite")
-      .parquet(s"${TarQueries.StageDir}/t24_weights.parquet")
+    // fit and stage once per corpus: t25 gates through the same weights
+    val weights = s"${TarQueries.StageDir}/t24_weights.parquet"
+    val w = Staged("t24_weights", sfDir, Seq(weights)) {
+      val fit = QualityModel.quantize(QualityModel.fitLpm(f, QFeatCols, "y"))
+      fit.zipWithIndex.map { case (wi, i) => (i.toLong, wi) }.toSeq
+        .toDF("idx", "w")
+        .coalesce(1).write.mode("overwrite").parquet(weights)
+      fit
+    }
     val z = QFeatCols.zipWithIndex
       .map { case (c, i) => col(c) * lit(w(i)) }
       .reduce(_ + _)

@@ -103,6 +103,47 @@ class FsOpsSpec extends AnyFunSuite with SparkSuite with TempDirs with JobCounti
     assert(FsOps.compare(spark, s"$root/a", s"$root/b"))
   }
 
+  /** A dir holding a zero-length file, hidden files, a hidden
+    * subdirectory with a file inside and a visible subdirectory.
+    */
+  private def catalogTree(tag: String): String = {
+    val root = tempDir(tag).toString
+    def put(rel: String, bytes: String): Unit = {
+      val p = java.nio.file.Paths.get(s"$root/$rel")
+      Files.createDirectories(p.getParent)
+      Files.write(p, bytes.getBytes)
+    }
+    put("a.tgz", "alpha")
+    put("empty.tgz", "")
+    put("_hidden.tgz", "hh")
+    put(".hidden/inner.tgz", "inner")
+    put("sub/nested.tgz", "nest")
+    put("sub/_marker", "m")
+    root
+  }
+
+  private def listed(dir: String, recursive: Boolean): Map[String, Long] =
+    FsOps.list(spark, dir, recursive = recursive).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+
+  test("list and objects agree: zero-length files listed, hidden files and dirs skipped, flat and recursive") {
+    val root = catalogTree("graft-catalog")
+    val flat = Map("a.tgz" -> 5L, "empty.tgz" -> 0L)
+    assert(listed(root, recursive = false) === flat)
+    assert(FsOps.objects(spark, root) === flat)
+    val deep = flat + ("sub/nested.tgz" -> 4L)
+    assert(listed(root, recursive = true) === deep)
+    assert(FsOps.objects(spark, root, recursive = true) === deep)
+    assert(FsOps.objects(spark, root, ".tgz", recursive = true) === deep)
+    assert(FsOps.parquetBytes(spark, root) === 9L)
+  }
+
+  test("parquetBytes and list(...).collect() start no Spark job") {
+    val root = catalogTree("graft-catalog-jobs")
+    assert(jobsStartedBy(assert(FsOps.parquetBytes(spark, root) === 9L)) === 0)
+    assert(jobsStartedBy(assert(FsOps.list(spark, root, ".tgz").collect().length === 2)) === 0)
+  }
+
   test("list() plans no sort: join consumers pay no listing exchange") {
     val root = tempDir("graft-plan").toString
     FsOps.mkdirs(spark, s"$root/a")

@@ -47,17 +47,6 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
     assert(plan("s1_prefix_scan").contains("GreaterThanOrEqual(ts"))
   }
 
-  test("catalog listing prunes file content out of the binaryFile scan (s2)") {
-    // the listing must be metadata-only: a ReadSchema carrying `content`
-    // would stream every object's bytes just to print names and sizes.
-    // (Pinned on the listing itself — the s2 QUERY now returns the staged
-    // copy of this listing so DuckDB can hash-compare it.)
-    val p = graft.io.FsOps.list(spark, sf, ".parquet").orderBy("name")
-      .queryExecution.executedPlan.toString
-    assert(p.contains("Format: BINARYFILE"))
-    assert(p.contains("ReadSchema: struct<path:string,length:bigint>"))
-  }
-
   test("top-k aggregation is partial (map-side combine before exchange)") {
     // ObjectHashAggregate appears twice around the exchange: partial + final
     val p = plan("n1_ann_topk")

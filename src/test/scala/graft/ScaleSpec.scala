@@ -7,7 +7,7 @@ import graft.ops.{Scale, SequencePack}
 /** Skew/co-location utility specs: salted join equivalence with a skewed
   * key, heavy-hitter diagnosis, and shuffle-free bucketed joins.
   */
-class ScaleSpec extends AnyFunSuite with SparkSuite with TempDirs {
+class ScaleSpec extends AnyFunSuite with SparkSuite with TempDirs with JobCounting {
 
   test("saltedJoin: identical results to plain join under heavy skew") {
     import spark.implicits._
@@ -380,6 +380,28 @@ class ScaleSpec extends AnyFunSuite with SparkSuite with TempDirs {
         assert(hi1 < lo2, s"file key ranges overlap: $hi1 >= $lo2")
       case _ =>
     }
+  }
+
+  test("S19: compaction starts exactly as many Spark jobs as the bare range-rewrite") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val root = tempDir("graft-s19-jobs").toString
+    (0L until 5000L).map(i => (i, s"payload-$i")).toDF("event_id", "p")
+      .repartition(32).write.mode("overwrite").parquet(s"$root/small")
+    var n = 0
+    val compactJobs = jobsStartedBy {
+      n = graft.ops.Compaction.compact(spark, s"$root/small", s"$root/compact",
+        targetBytes = 64L << 10, sortCol = "event_id")
+    }
+    // the rewrite alone, into the same file count
+    val rewriteJobs = jobsStartedBy {
+      spark.read.parquet(s"$root/small")
+        .repartitionByRange(n, col("event_id"))
+        .sortWithinPartitions("event_id")
+        .write.mode("overwrite").parquet(s"$root/rewrite")
+    }
+    assert(compactJobs === rewriteJobs,
+      s"compact started $compactJobs jobs, the bare rewrite $rewriteJobs")
   }
 
   test("S23: z-order bounds BOTH key columns per file; single-key leaves the second at full range") {

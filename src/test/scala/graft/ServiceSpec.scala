@@ -16,7 +16,7 @@ import graft.queries.TarQueries
   * missing-params 404, invalid-filename 500, failed-processing 500,
   * non-integer unembargo date 400.
   */
-class ServiceSpec extends AnyFunSuite with SparkSuite with TempDirs {
+class ServiceSpec extends AnyFunSuite with SparkSuite with TempDirs with JobCounting {
 
   private def base(p: String) = p.substring(p.lastIndexOf('/') + 1)
   private def b64(s: String) =
@@ -374,36 +374,28 @@ class ServiceSpec extends AnyFunSuite with SparkSuite with TempDirs {
   private val fixtureFile =
     b64(s"gs://scraper-mlab/sidestream/2017/03/15/${base(TarQueries.FixtureTgz)}")
 
+  test("/submit?date= on a day holding only a hidden _stale.tgz answers 200 and starts no Spark job") {
+    val (r, svc, call) = freshService("stale", feed("stale-feed", sitesJson))
+    try {
+      val day = s"$r/src/sidestream/2017/03/20"
+      graft.io.FsOps.mkdirs(spark, day)
+      graft.io.FsOps.copy(spark, TarQueries.FixtureTgz, s"$day/_stale.tgz")
+      var reply = (0, "")
+      val jobs = jobsStartedDuring { reply = call("/submit?date=20170320") }
+      assert(reply === ((200, "success")))
+      assert(jobs === 0)
+    } finally svc.close()
+  }
+
   test("/submit?file= starts exactly two Spark jobs, the split's write and commit: the whitelist is service state") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val (_, svc, call) = freshService("jobs", feed("jobs-feed", sitesJson))
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val fenced = new java.util.concurrent.CountDownLatch(1)
-    val t0 = new java.util.concurrent.atomic.AtomicLong(Long.MaxValue)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (Option(js.properties).exists(_.getProperty("graft.fence") != null))
-          fenced.countDown()
-        else if (js.time >= t0.get) jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
     try {
       // the committed refresh store governs, as in a running deployment
       assert(call("/cron/update_embargo_whitelist") === ((200, "OK")))
-      t0.set(System.currentTimeMillis())
-      assert(call(s"/submit?file=$fixtureFile") === ((200, "success")))
-      // the listener bus delivers in order: once a job started after the
-      // reply is seen, every job the submit started has been counted
-      sc.setLocalProperty("graft.fence", "1")
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setLocalProperty("graft.fence", null)
-      assert(fenced.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      assert(jobs.get === 2)
-    } finally {
-      sc.removeSparkListener(listener)
-      svc.close()
-    }
+      assert(jobsStartedDuring {
+        assert(call(s"/submit?file=$fixtureFile") === ((200, "success")))
+      } === 2)
+    } finally svc.close()
   }
 
   test("a refresh committed by another service over the same store reaches this service's next submit") {

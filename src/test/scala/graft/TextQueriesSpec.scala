@@ -12,6 +12,21 @@ class TextQueriesSpec extends AnyFunSuite with SparkSuite {
 
   private val sf = "/root/testdata/sf0.001"
 
+  test("t24 stages its weights once per corpus: t25 reuses them and does not rewrite them") {
+    import java.nio.file.{Files, Paths}
+    import graft.queries.{TarQueries, TextQueries}
+    val weights = Paths.get(s"${TarQueries.StageDir}/t24_weights.parquet")
+    def stamp(): (java.nio.file.attribute.FileTime, Set[String]) = {
+      val parts = Files.list(weights)
+      try (Files.getLastModifiedTime(weights), parts.toArray.map(_.toString).toSet)
+      finally parts.close()
+    }
+    assert(TextQueries.qualityClassifier(spark, sf).collect().nonEmpty)
+    val staged = stamp()
+    assert(TextQueries.filterEval(spark, sf).collect().length === 7)
+    assert(stamp() === staged)
+  }
+
   test("t13 LM filter equals the sequential reference bit-for-bit") {
     // sequential reference: same model, same packed-key fold order
     // filter on the ORIGINAL text's code-point count — Spark's length()
