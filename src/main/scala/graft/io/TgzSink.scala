@@ -73,15 +73,18 @@ object TgzSink {
     *
     * Output names: `<archiveBasename>` for the public half,
     * `<archiveBasename>` with `.tgz` → `-e.tgz` for the private half.
+    *
+    * Returns the write job's observed metrics by observation name: any
+    * `observe` the caller put on `routed` is filled by the same job.
     */
-  def writeSplit(routed: Dataset[Row], outDir: String): Unit =
+  def writeSplit(routed: Dataset[Row], outDir: String): Map[String, Row] =
     writeSplit(routed, outDir, outDir)
 
   /** [[writeSplit]] with public halves under `publicDir` and `-e.tgz`
     * halves under `privateDir`, each root on its [[CommitProtocol.forPath]].
     */
   def writeSplit(routed: Dataset[Row], publicDir: String,
-                 privateDir: String): Unit = {
+                 privateDir: String): Map[String, Row] = {
     val conf = bridge.sessionHadoopConf(routed.sparkSession)
     writeSplit(routed, publicDir, privateDir,
       CommitProtocol.forPath(publicDir, conf),
@@ -91,7 +94,7 @@ object TgzSink {
   /** [[writeSplit]] into two stores with an explicit protocol per root. */
   def writeSplit(routed: Dataset[Row], publicDir: String, privateDir: String,
                  pubProtocol: CommitProtocol,
-                 privProtocol: CommitProtocol): Unit = {
+                 privProtocol: CommitProtocol): Map[String, Row] = {
     val spark = routed.sparkSession
     // session conf captured ONCE on the driver and shipped — a fresh
     // `new Configuration()` in the task would drop spark.hadoop.* settings
@@ -104,9 +107,8 @@ object TgzSink {
       .distinctBy(t => new Path(t._1))
       .map { case (dir, protocol) => Target(dir, callId, protocol) }
     val privIdx = targets.length - 1
-    targets.foreach(t => t.staging.getFileSystem(sconf.value).mkdirs(t.staging))
 
-    val reports = try routed.mapPartitions { rows: Iterator[Row] =>
+    val written = routed.mapPartitions { rows: Iterator[Row] =>
       val conf = sconf.value
       val fss = targets.map(_.staging.getFileSystem(conf))
       val tc = TaskContext.get()
@@ -153,10 +155,13 @@ object TgzSink {
       closeCurrent()
       // reported only now, with every writer closed
       staged.iterator
-    }(Encoders.product[StagedFile]).collect().toSeq
+    }(Encoders.product[StagedFile])
+    targets.foreach(t => t.staging.getFileSystem(sconf.value).mkdirs(t.staging))
+    val reports = try written.collect().toSeq
     catch { case e: Throwable => sweep(targets, sconf); throw e }
 
     commit(spark, targets, reports, sconf)
+    written.queryExecution.observedMetrics
   }
 
   /** Remove this call's staging dirs — never another call's. */

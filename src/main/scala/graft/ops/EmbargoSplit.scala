@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.IpFunctions.local_ip
@@ -99,14 +99,9 @@ object EmbargoSplit {
     * instead of a text path, loaded by [[Whitelist.fromFrame]].
     */
   def runWith(spark: SparkSession, inPath: String, whitelist: DataFrame,
-              cutoffDateInt: Int, outDir: String): Unit =
-    runWith(spark, inPath, whitelist, cutoffDateInt, outDir, outDir)
-
-  /** The DataFrame-whitelist form of the two-root [[runWith]]. */
-  def runWith(spark: SparkSession, inPath: String, whitelist: DataFrame,
-              cutoffDateInt: Int, publicDir: String, privateDir: String): Unit =
+              cutoffDateInt: Int, outDir: String): Row =
     runWith(spark, inPath, Whitelist.fromFrame(whitelist), cutoffDateInt,
-      publicDir, privateDir)
+      outDir, outDir)
 
   /** Split every archive under `inPath` — a single archive, a directory,
     * or a glob: a whole day splits as ONE job whose task parallelism is
@@ -117,9 +112,13 @@ object EmbargoSplit {
     * service state, the reference's in-memory list,
     * `/root/reference/embargo.go:94-101`), so the split runs the write
     * job and the commit job and nothing else.
+    *
+    * Returns this call's [[Metrics.observeRouted]] row, observed by the
+    * write job itself (no extra job); [[Service]] folds it into the
+    * counters `/metrics` serves.
     */
   def runWith(spark: SparkSession, inPath: String, whitelist: Whitelist,
-              cutoffDateInt: Int, publicDir: String, privateDir: String): Unit =
-    TgzSink.writeSplit(route(TgzSource.entries(spark, inPath), whitelist,
-      cutoffDateInt), publicDir, privateDir)
+              cutoffDateInt: Int, publicDir: String, privateDir: String): Row =
+    TgzSink.writeSplit(Metrics.observeRouted(route(TgzSource.entries(spark, inPath),
+      whitelist, cutoffDateInt)), publicDir, privateDir)(Metrics.Observation)
 }

@@ -1,9 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.functions.NameFunctions.basename
 import graft.model.Schemas
@@ -12,10 +10,20 @@ import graft.model.Schemas
   * the reference exposes Prometheus `CounterVec`s incremented inline with
   * the write loop; the Spark-native analogue is `Dataset.observe`, which
   * accumulates named aggregates during a single pass of the SAME job that
-  * does the work — no second scan, readable from the `QueryExecution`'s
-  * observed metrics (or a `QueryExecutionListener` in production).
+  * does the work — no second scan. The split returns its write job's
+  * observed row ([[EmbargoSplit.runWith]]), [[Service]] folds each call's
+  * row into running totals, and its `/metrics` route renders them with
+  * [[prometheusText]].
   */
 object Metrics {
+
+  /** The observation name [[observeRouted]] records under by default. */
+  val Observation = "embargo_metrics"
+
+  /** The counter [[prometheusText]] renders as `unembargo_tar_total`:
+    * `-e.tgz` archives promoted to the public store.
+    */
+  val UnembargoTars = "unembargo_tars"
 
   /** Instrument a routed entry DataFrame with the reference's counter set:
     * total entries, public/private file counts (web100 only, as
@@ -32,7 +40,7 @@ object Metrics {
     * malformed name seen, not just the ones whose route decision needed the
     * parse).
     */
-  def observeRouted(routed: DataFrame, name: String = "embargo_metrics"): DataFrame = {
+  def observeRouted(routed: DataFrame, name: String = Observation): DataFrame = {
     val isWeb100 = basename(col("name")).contains("web100")
     // span exists iff first '_' is strictly before last '_' — i.e. the
     // basename has >= 2 underscores (filename_parser.go:19-23); a span
@@ -48,89 +56,66 @@ object Metrics {
       count(when(ipv6Failed, 1)).as("ipv6_errors"))
   }
 
-  /** The export half of the reference's counter surface
-    * (`/root/reference/metrics/metrics.go:79-102`, the Prometheus handler):
-    * a [[QueryExecutionListener]] that captures every `observe()` metric row
-    * by observation name as jobs complete — register once per session and
-    * counters flow out-of-band of the queries, no second scan, ready to be
-    * scraped/pushed by whatever metrics backend wraps it.
-    *
-    * Listener delivery is asynchronous; [[ObservedMetricsListener.get]]
-    * polls with a timeout for callers that need read-after-job semantics.
+  /** An observed [[observeRouted]] row as counter values by column name.
+    * An empty split's byte sums are null; they count 0.
     */
-  final class ObservedMetricsListener extends QueryExecutionListener {
-    private val seen = new java.util.concurrent.ConcurrentHashMap[String, Row]()
+  def counts(row: Row): Map[String, Long] =
+    row.schema.fieldNames.zipWithIndex.map { case (c, i) =>
+      c -> (if (row.isNullAt(i)) 0L else row.getLong(i))
+    }.toMap
 
-    override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-      qe.observedMetrics.foreach { case (name, row) => seen.put(name, row) }
-
-    override def onFailure(funcName: String, qe: QueryExecution, ex: Exception): Unit = ()
-
-    /** Latest metric row for `name`, waiting up to `timeoutMs` for the
-      * async listener bus to deliver it.
-      */
-    def get(name: String, timeoutMs: Long = 10000): Option[Row] = {
-      val deadline = System.nanoTime() + timeoutMs * 1000000L
-      var r = seen.get(name)
-      while (r == null && System.nanoTime() < deadline) {
-        Thread.sleep(20)
-        r = seen.get(name)
-      }
-      Option(r)
-    }
-  }
-
-  /** Register a fresh observed-metrics listener on the session. */
-  def registerListener(spark: SparkSession): ObservedMetricsListener = {
-    val l = new ObservedMetricsListener
-    spark.listenerManager.register(l)
-    l
-  }
-
-  /** Prometheus text exposition of an observed `embargo_metrics` row —
-    * the scrape-format half of the reference's counter surface
-    * (`/root/reference/metrics/metrics.go:79-102` serves
-    * `promhttp.Handler()` at `/metrics`; this renders the same format
-    * from [[observeRouted]]'s aggregates, ready for any pull scraper or
-    * pushgateway wrapper). Families with a reference name keep it —
-    * `embargo_file_total{dataset,status}` (`metrics.go:45-51`) and
-    * `embargo_ipv6_errors_total{error}` (`metrics.go:71-76`); the
-    * per-entry/byte aggregates the columnar pass gets for free are
-    * exported under graft-prefixed names so they cannot be mistaken for
-    * reference families. Counter values render as integers (promhttp
-    * renders untyped float64; every counter here is integral).
+  /** Prometheus text exposition of counter values keyed as [[counts]]
+    * keys them, plus [[UnembargoTars]] — the scrape-format half of the
+    * reference's counter surface (`metrics/metrics.go:79-102`
+    * serves `promhttp.Handler()` at `/metrics`). Families with a reference
+    * name keep it — `embargo_file_total{dataset,status}`
+    * (`metrics.go:45-51`), `unembargo_tar_total{dataset}`
+    * (`metrics.go:58-64`) and `embargo_ipv6_errors_total{error}`
+    * (`metrics.go:71-76`); the per-entry/byte aggregates the columnar pass
+    * gets for free are exported under graft-prefixed names so they cannot
+    * be mistaken for reference families. A family renders only once one
+    * of its counters is present, as a promhttp `CounterVec` appears only
+    * once a label set is touched: no counters, empty document. Counter
+    * values render as integers (promhttp renders untyped float64; every
+    * counter here is integral).
     */
-  def prometheusText(row: Row, dataset: String = "sidestream"): String = {
-    def v(c: String): Long = row.getAs[Long](c)
+  def prometheusText(counters: Map[String, Long], dataset: String = "sidestream"): String = {
     // exposition-format label escaping (review r16): an unescaped
     // backslash/quote/newline in a label value makes the whole scrape
     // unparseable — promhttp escapes exactly these three
     val ds = dataset.replace("\\", "\\\\")
       .replace("\"", "\\\"").replace("\n", "\\n")
     val sb = new StringBuilder
-    def fam(name: String, help: String, series: Seq[(String, Long)]): Unit = {
-      sb.append(s"# HELP $name $help\n")
-      sb.append(s"# TYPE $name counter\n")
-      series.foreach { case (labels, value) =>
-        sb.append(s"$name{$labels} $value\n")
+    // series are (labels, counter key); absent counters render nothing
+    def fam(name: String, help: String, series: Seq[(String, String)]): Unit = {
+      val present = series.flatMap { case (labels, c) => counters.get(c).map(labels -> _) }
+      if (present.nonEmpty) {
+        sb.append(s"# HELP $name $help\n")
+        sb.append(s"# TYPE $name counter\n")
+        present.foreach { case (labels, value) =>
+          sb.append(s"$name{$labels} $value\n")
+        }
       }
     }
     fam("embargo_file_total",
       "Number of web100 sidestream files that were processed by embargo app engine.",
       Seq(
-        s"""dataset="$ds",status="public"""" -> v("files_public"),
-        s"""dataset="$ds",status="private"""" -> v("files_private")))
+        s"""dataset="$ds",status="public"""" -> "files_public",
+        s"""dataset="$ds",status="private"""" -> "files_private"))
+    fam("unembargo_tar_total",
+      "Number of embargoed tar files promoted to the public store by unembargo.",
+      Seq(s"""dataset="$ds"""" -> UnembargoTars))
     fam("embargo_ipv6_errors_total",
       "Number of failures normalizing IPv6 addresses.",
-      Seq("""error="normalize failed"""" -> v("ipv6_errors")))
+      Seq("""error="normalize failed"""" -> "ipv6_errors"))
     fam("graft_entries_total",
       "Number of archive entries routed by the split pass.",
-      Seq(s"""dataset="$ds"""" -> v("entries_total")))
+      Seq(s"""dataset="$ds"""" -> "entries_total"))
     fam("graft_bytes_total",
       "Entry bytes routed by the split pass.",
       Seq(
-        s"""dataset="$ds",status="public"""" -> v("bytes_public"),
-        s"""dataset="$ds",status="private"""" -> v("bytes_private")))
+        s"""dataset="$ds",status="public"""" -> "bytes_public",
+        s"""dataset="$ds",status="private"""" -> "bytes_private"))
     sb.toString
   }
 
@@ -138,69 +123,4 @@ object Metrics {
     * (text format 0.0.4).
     */
   val ExpositionContentType = "text/plain; version=0.0.4; charset=utf-8"
-
-  /** The actual scrape surface: a driver-side `/metrics` HTTP endpoint
-    * (JDK built-in `HttpServer`, no extra dependency) rendering the
-    * listener's latest observed row via [[prometheusText]] — end-to-end
-    * the reference's `http.Handle("/metrics", promhttp.Handler())`
-    * (`/root/reference/metrics/metrics.go:79-102`). Loopback-only and
-    * port 0 (ephemeral) by default: a metrics port must never be an
-    * accidental public listener. Before the first observation completes
-    * the scrape returns 200 with zero families — exactly promhttp's
-    * empty-registry behavior, so a scraper sees "up, nothing counted
-    * yet", not an error.
-    */
-  final class MetricsEndpoint(listener: ObservedMetricsListener,
-                              observationName: String,
-                              dataset: String) extends AutoCloseable {
-    private val server = com.sun.net.httpserver.HttpServer.create(
-      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
-    server.createContext("/metrics", new com.sun.net.httpserver.HttpHandler {
-      override def handle(ex: com.sun.net.httpserver.HttpExchange): Unit = {
-        // guard the render (review r17): HttpServer swallows handler
-        // exceptions and drops the connection — a scraper would see
-        // EOF/timeout instead of an error. promhttp answers 500 with the
-        // error text; do the same (e.g. an observation recorded under
-        // this name with a different aggregate schema).
-        // the 500 fallback is only legal while the 200 status line is
-        // unsent — a failure mid-body-write (client disconnect) must not
-        // attempt a second sendResponseHeaders, which would throw
-        // IllegalStateException out of the handler and drop the connection
-        var headersSent = false
-        try {
-          val body = listener.get(observationName, timeoutMs = 0)
-            .fold("")(prometheusText(_, dataset))
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          ex.getResponseHeaders.set("Content-Type", ExpositionContentType)
-          ex.sendResponseHeaders(200, if (body.isEmpty) -1 else body.length.toLong)
-          headersSent = true
-          if (body.nonEmpty) ex.getResponseBody.write(body)
-          ex.close()
-        } catch {
-          case e: Exception =>
-            try {
-              if (!headersSent) {
-                val msg = ("error rendering metrics: " + e)
-                  .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-                ex.getResponseHeaders.set("Content-Type", "text/plain; charset=utf-8")
-                ex.sendResponseHeaders(500, msg.length.toLong)
-                ex.getResponseBody.write(msg)
-              }
-            } finally ex.close()
-        }
-      }
-    })
-    server.start()
-
-    /** The bound ephemeral port — scrape `http://127.0.0.1:$port/metrics`. */
-    def port: Int = server.getAddress.getPort
-
-    override def close(): Unit = server.stop(0)
-  }
-
-  /** Serve `listener`'s latest `observationName` row at `/metrics`. */
-  def serveMetrics(listener: ObservedMetricsListener,
-                   observationName: String = "embargo_metrics",
-                   dataset: String = "sidestream"): MetricsEndpoint =
-    new MetricsEndpoint(listener, observationName, dataset)
 }

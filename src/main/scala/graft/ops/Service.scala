@@ -9,7 +9,8 @@ import graft.io.FsOps
   * (`/root/reference/deploy/deploy.go:118-126`): the four routes it
   * registers — `/submit` (embargo a single file or a whole day),
   * `/_ah/health`, `/cron/update_embargo_whitelist`, `/cron/unembargo` —
-  * served over a real (loopback, ephemeral-port) JDK `HttpServer`, each
+  * plus its counters' `/metrics` scrape (`metrics/metrics.go:79-102`),
+  * served over one real (loopback, ephemeral-port) JDK `HttpServer`, each
   * delegating to the already-graded pipelines: the split
   * ([[EmbargoSplit.runWith]] — e1/e2/e4's engine, committing each half
   * straight into its store with per-call staging), the whitelist reload
@@ -17,7 +18,12 @@ import graft.io.FsOps
   * ([[Unembargo.promoteDay]] — e3's engine). The whitelist the split
   * routes by is service state: a driver-held [[Whitelist]] snapshot,
   * reloaded only when its source's version changes (see
-  * `currentWhitelist`).
+  * `currentWhitelist`). So are the counters: every successful split adds
+  * the row its write job observed, every promotion its copied count, and
+  * `/metrics` renders the running totals with [[Metrics.prometheusText]]
+  * (200 and an empty document before anything is counted, promhttp's
+  * empty registry). The reference serves them on a second port (:9090);
+  * here the scrape shares the service's listener.
   *
   * Statuses follow the reference's INTENT per arm; three wire-level
   * quirks of the Go binary are deliberately not reproduced (review r19):
@@ -46,15 +52,16 @@ import graft.io.FsOps
   *    (`deploy.go:95-101`); an in-syntax but out-of-range date → the
   *    validDate 500; success → 200 with body exactly "OK"
   *  - `/_ah/health` → 200 "ok" (`deploy.go:114-116`)
+  *  - `/metrics` → 200 with the exposition document, content type
+  *    [[Metrics.ExpositionContentType]]
   *  - non-exact paths (`/submitfoo`, `/cron/unembargoX`) → 404, matching
   *    Go's ServeMux exact-match rule for non-slash-terminated patterns —
   *    the JDK server's prefix dispatch is corrected per-request
   *
   * The HTTP layer is driver-side routing only — every accepted request
   * fans out to the same distributed jobs the graded queries run; nothing
-  * data-plane lives in the handlers. Loopback-only and port 0 on purpose
-  * (the [[Metrics.MetricsEndpoint]] posture): a service harness must
-  * never be an accidental public listener.
+  * data-plane lives in the handlers. Loopback-only and port 0 on purpose:
+  * a service harness must never be an accidental public listener.
   */
 object Service {
 
@@ -77,12 +84,6 @@ object Service {
     val d = today.minusYears(1)
     d.getYear * 10000 + d.getMonthValue * 100 + d.getDayOfMonth
   }
-
-  /** Job-group id the whole-day submit runs under — the spec's hook for
-    * pinning that a day splits as ONE distributed job regardless of how
-    * many archives it holds.
-    */
-  val DayJobGroup = "graft-submit-day"
 
   /** Service-owned commit marker for the refreshed whitelist store
     * (ADVICE r20): written by the refresh route itself after the store
@@ -115,30 +116,36 @@ object Service {
       .newFixedThreadPool(spark.sparkContext.defaultParallelism)
     server.setExecutor(handlerPool)
 
-    // the MetricsEndpoint header-guard discipline: HttpServer swallows
-    // handler exceptions and drops the connection; every route answers
-    // through this single guarded writer
-    private def respond(ex: HttpExchange, code: Int, body: String): Unit = {
+    private val PlainText = "text/plain; charset=utf-8"
+
+    // HttpServer swallows handler exceptions and drops the connection;
+    // every route answers through this single guarded writer
+    private def respond(ex: HttpExchange, code: Int, body: String,
+                        contentType: String): Unit = {
       val bytes = body.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      ex.getResponseHeaders.set("Content-Type", "text/plain; charset=utf-8")
+      ex.getResponseHeaders.set("Content-Type", contentType)
       ex.sendResponseHeaders(code, if (bytes.isEmpty) -1 else bytes.length.toLong)
       if (bytes.nonEmpty) ex.getResponseBody.write(bytes)
       ex.close()
     }
 
-    private def route(path: String)(f: HttpExchange => (Int, String)): Unit =
+    /** Serve `f`'s answers at exactly `path` as `contentType`; the 404 and
+      * the 500 guard answer plain text.
+      */
+    private def route(path: String, contentType: String = PlainText)(
+        f: HttpExchange => (Int, String)): Unit =
       server.createContext(path, new HttpHandler {
         override def handle(ex: HttpExchange): Unit = {
-          val (code, body) =
+          val (code, body, ct) =
             // JDK HttpServer dispatches by longest PREFIX; Go's ServeMux
             // matches non-slash-terminated patterns EXACTLY — so
             // /submitfoo must 404 without side effects, not run the
             // /submit pipeline (review r19)
-            if (ex.getRequestURI.getPath != path) (404, "404 page not found\n")
+            if (ex.getRequestURI.getPath != path) (404, "404 page not found\n", PlainText)
             else
-              try f(ex)
-              catch { case e: Exception => (500, s"error: ${e.getMessage}") }
-          try respond(ex, code, body)
+              try { val (c, b) = f(ex); (c, b, contentType) }
+              catch { case e: Exception => (500, s"error: ${e.getMessage}", PlainText) }
+          try respond(ex, code, body, ct)
           catch { case _: Exception => ex.close() }
         }
       })
@@ -219,6 +226,19 @@ object Service {
       }).whitelist
     }
 
+    /** Running counter totals, keyed as [[Metrics.prometheusText]] reads
+      * them: every successful split adds its observed row, every promotion
+      * its copied count. Replaced, never mutated, under the service's
+      * lock; a failed split adds nothing.
+      */
+    @volatile private var totals = Map.empty[String, Long]
+
+    private def add(counts: Map[String, Long]): Unit = synchronized {
+      totals = counts.foldLeft(totals) { case (t, (k, v)) =>
+        t.updated(k, t.getOrElse(k, 0L) + v)
+      }
+    }
+
     /** One archive through the split into the two stores — e4's accepted
       * arm: `base.tgz` → public, `base-e.tgz` → private, both under the
       * archive's own day prefix (`deploy.go:40-42` strips the bucket; the
@@ -231,9 +251,9 @@ object Service {
       require(objPath.contains("tgz") && objPath.contains("sidestream"),
         "not a proper sidestream file")
       val dayDir = objPath.substring(0, objPath.lastIndexOf('/'))
-      EmbargoSplit.runWith(spark, s"${cfg.srcDir}/$objPath",
+      add(Metrics.counts(EmbargoSplit.runWith(spark, s"${cfg.srcDir}/$objPath",
         currentWhitelist(), oneYearAgoInt(cfg.today()),
-        s"${cfg.publicDir}/$dayDir", s"${cfg.privateDir}/$dayDir")
+        s"${cfg.publicDir}/$dayDir", s"${cfg.privateDir}/$dayDir")))
     }
 
     /** A whole day through the split as ONE distributed job
@@ -250,14 +270,16 @@ object Service {
       val day = s"${cfg.srcDir}/$prefix"
       // an absent day dir lists nothing, like one without a visible .tgz
       if (!FsOps.exists(spark, day) || FsOps.objects(spark, day, ".tgz").isEmpty) return
-      spark.sparkContext.setJobGroup(DayJobGroup, s"embargo day $date")
-      try EmbargoSplit.runWith(spark, day, currentWhitelist(),
+      add(Metrics.counts(EmbargoSplit.runWith(spark, day, currentWhitelist(),
         oneYearAgoInt(cfg.today()),
-        s"${cfg.publicDir}/$prefix", s"${cfg.privateDir}/$prefix")
-      finally spark.sparkContext.clearJobGroup()
+        s"${cfg.publicDir}/$prefix", s"${cfg.privateDir}/$prefix")))
     }
 
     route("/_ah/health") { _ => (200, "ok") }
+
+    route("/metrics", Metrics.ExpositionContentType) { _ =>
+      (200, Metrics.prometheusText(totals))
+    }
 
     route("/submit") { ex =>
       val p = params(ex)
@@ -340,6 +362,7 @@ object Service {
               s"date $undateL outside (20160000, 21000000] or newer than cutoff $cutoff")
             val (copied, over) = Unembargo.promoteDay(spark, cfg.privateDir,
               cfg.publicDir, undateL.toInt, cutoff)
+            add(Map(Metrics.UnembargoTars -> copied))
             log.info(s"unembargo $undateL: $copied copied, $over overwritten")
             (200, "OK") // exact deploy.go body
           } catch { case e: Exception => (500, s"error: ${e.getMessage}") }

@@ -38,7 +38,7 @@ class FsOpsSpec extends AnyFunSuite with SparkSuite with TempDirs with JobCounti
     assert(!Files.exists(java.nio.file.Paths.get(s"$root/src")))
   }
 
-  test("S2: empty and many-file prefixes list without driver materialization") {
+  test("S2: driver listing: empty prefix lists 0; 500 files list 500 flat, 501 recursive") {
     val root = tempDir("graft-fs2").toString
     FsOps.mkdirs(spark, s"$root/empty")
     assert(FsOps.list(spark, s"$root/empty").count() === 0)

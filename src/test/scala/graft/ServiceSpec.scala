@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.io.TgzSource
-import graft.ops.{EmbargoSplit, Service}
+import graft.ops.{EmbargoSplit, Metrics, Service}
 import graft.queries.TarQueries
 
 /** The HTTP service surface (`/root/reference/deploy/deploy.go:118-126`)
@@ -268,7 +268,6 @@ class ServiceSpec extends AnyFunSuite with SparkSuite with TempDirs with JobCoun
   }
 
   test("/submit?date= runs ONE distributed split job per day (not per archive) with identical store contents") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val root3 = tempDir("graft-svc-day").toString
     val (src3, pub3, priv3) = (s"$root3/src", s"$root3/public", s"$root3/embargoed")
     // day 1: BOTH fixtures as one day; day 2: a single archive
@@ -285,14 +284,6 @@ class ServiceSpec extends AnyFunSuite with SparkSuite with TempDirs with JobCoun
       sitesUrl = "file:///nonexistent.json",
       whitelistOut = s"$root3/whitelist.parquet",
       today = () => java.time.LocalDate.of(2018, 3, 15)))
-    val dayJobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (Option(js.properties).exists(
-            _.getProperty("spark.jobGroup.id") == Service.DayJobGroup))
-          dayJobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
     try {
       def get3(path: String): Int = {
         val client = java.net.http.HttpClient.newHttpClient()
@@ -300,28 +291,15 @@ class ServiceSpec extends AnyFunSuite with SparkSuite with TempDirs with JobCoun
           .uri(java.net.URI.create(s"http://127.0.0.1:${svc.port}$path")).GET().build()
         client.send(req, java.net.http.HttpResponse.BodyHandlers.ofString()).statusCode()
       }
-      // listener events are async — wait for the FIRST event (the bus can
-      // lag the HTTP response by more than one poll interval, review r20),
-      // then poll until the counter stabilizes; bounded so a genuinely
-      // zero-job run still fails the assert instead of hanging
-      def settledCount(): Int = {
-        val deadline = System.currentTimeMillis + 30000
-        while (dayJobs.get() == 0 && System.currentTimeMillis < deadline)
-          Thread.sleep(100)
-        var prev = -1
-        var cur = dayJobs.get()
-        while (cur != prev) { Thread.sleep(300); prev = cur; cur = dayJobs.get() }
-        cur
+      def dayJobs(date: String): Int = jobsStartedDuring {
+        assert(get3(s"/submit?date=$date") === 200)
       }
-      assert(get3("/submit?date=20170317") === 200)
-      val jobsTwoArchives = settledCount()
-      dayJobs.set(0)
-      assert(get3("/submit?date=20170318") === 200)
-      val jobsOneArchive = settledCount()
+      val jobsTwoArchives = dayJobs("20170317")
+      val jobsOneArchive = dayJobs("20170318")
       // the split is ONE job per day: its job count must not scale with
       // the archive count (the per-archive driver loop would double it)
       assert(jobsTwoArchives === jobsOneArchive,
-        s"2-archive day ran $jobsTwoArchives day-group jobs vs $jobsOneArchive for 1 archive")
+        s"2-archive day ran $jobsTwoArchives jobs vs $jobsOneArchive for 1 archive")
       assert(jobsTwoArchives > 0)
       // contents parity vs the per-archive direct path, all four outputs
       val direct = s"$root3/direct"
@@ -334,10 +312,7 @@ class ServiceSpec extends AnyFunSuite with SparkSuite with TempDirs with JobCoun
         assert(entryNames(s"$priv3/sidestream/2017/03/17/${b.replace(".tgz", "-e.tgz")}") ===
           entryNames(s"$direct/$tag/${b.replace(".tgz", "-e.tgz")}"), s"$tag private half diverged")
       }
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      svc.close()
-    }
+    } finally svc.close()
   }
 
   /** A fresh service over its own stores with fixture 1 in the scraper
@@ -451,6 +426,88 @@ class ServiceSpec extends AnyFunSuite with SparkSuite with TempDirs with JobCoun
           }
         assert(files.isEmpty, s"$store holds $files")
       }
+    } finally svc.close()
+  }
+
+  /** GET `/metrics` from `svc`: (status, content type, body). */
+  private def scrape(svc: Service.EmbargoService): (Int, String, String) = {
+    val client = java.net.http.HttpClient.newHttpClient()
+    val req = java.net.http.HttpRequest.newBuilder()
+      .uri(java.net.URI.create(s"http://127.0.0.1:${svc.port}/metrics")).GET().build()
+    val resp = client.send(req, java.net.http.HttpResponse.BodyHandlers.ofString())
+    (resp.statusCode(), resp.headers().firstValue("Content-Type").orElse(""), resp.body())
+  }
+
+  /** Every line of an exposition document is a comment or a sample. */
+  private def assertExposition(body: String): Unit =
+    assert(body.linesIterator.forall(l =>
+      l.startsWith("#") || l.matches("""[a-z0-9_]+\{[^}]*\} \d+""")),
+      s"non-exposition line in:\n$body")
+
+  private def fileTotal(status: String, n: Long) =
+    s"""embargo_file_total{dataset="sidestream",status="$status"} $n"""
+
+  private def entriesTotal(n: Long) = s"""graft_entries_total{dataset="sidestream"} $n"""
+
+  test("/metrics: empty before any split, then 121/59 files and 204 entries") {
+    val (_, svc, call) = freshService("metrics", feed("metrics-feed", sitesJson))
+    try {
+      // before any split: up, empty registry (promhttp behavior)
+      val (c0, ct0, b0) = scrape(svc)
+      assert(c0 === 200 && b0.isEmpty)
+      assert(ct0 === Metrics.ExpositionContentType)
+      // the scrape is an exact-path route like the others
+      assert(call("/metricsX")._1 === 404)
+      assert(call(s"/submit?file=$fixtureFile") === ((200, "success")))
+      val (c1, ct1, b1) = scrape(svc)
+      assert(c1 === 200)
+      assert(ct1 === Metrics.ExpositionContentType)
+      assert(b1.contains(fileTotal("public", 121)))
+      assert(b1.contains(fileTotal("private", 59)))
+      assert(b1.contains(entriesTotal(204)))
+      assert(b1.contains("# TYPE embargo_ipv6_errors_total counter"))
+      assertExposition(b1)
+      // the scraped document IS prometheusText of the split's observed
+      // row (the service's cutoff is 20170315, its seed the fixture list)
+      val observed = Metrics.observeRouted(EmbargoSplit.route(
+        TgzSource.entries(spark, TarQueries.FixtureTgz),
+        TgzSource.whitelist(spark, TarQueries.FixtureWhitelist), 20170315))
+      observed.collect()
+      assert(b1 === Metrics.prometheusText(Metrics.counts(
+        observed.queryExecution.observedMetrics(Metrics.Observation))))
+    } finally svc.close()
+  }
+
+  test("/metrics: two concurrent fixture submits add up to 242/118 files, 408 entries") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val (_, svc, call) = freshService("metrics-conc", feed("metrics-conc-feed", sitesJson))
+    try {
+      val replies = Await.result(Future.sequence(
+        Seq.fill(2)(Future(call(s"/submit?file=$fixtureFile")))), 5.minutes)
+      assert(replies === Seq.fill(2)((200, "success")))
+      val (code, _, body) = scrape(svc)
+      assert(code === 200)
+      assert(body.contains(fileTotal("public", 242)), body)
+      assert(body.contains(fileTotal("private", 118)), body)
+      assert(body.contains(entriesTotal(408)), body)
+      assertExposition(body)
+    } finally svc.close()
+  }
+
+  test("/metrics: a /cron/unembargo promoting one -e.tgz adds 1 to unembargo_tar_total") {
+    val (_, svc, call) = freshService("metrics-unemb", feed("metrics-unemb-feed", sitesJson))
+    try {
+      assert(call(s"/submit?file=$fixtureFile") === ((200, "success")))
+      assert(!scrape(svc)._3.contains("unembargo_tar_total"))
+      assert(call("/cron/unembargo?date=20170315") === ((200, "OK")))
+      val (code, _, body) = scrape(svc)
+      assert(code === 200)
+      assert(body.contains("""unembargo_tar_total{dataset="sidestream"} 1"""), body)
+      // the promotion adds to its own family only
+      assert(body.contains(fileTotal("public", 121)) && body.contains(entriesTotal(204)))
+      assertExposition(body)
     } finally svc.close()
   }
 

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{SparkSuite, TempDirs}
+import graft.{JobCounting, SparkSuite, TempDirs}
 
 /** A local FileSystem masquerading as an object store whose `rename` is
   * unusable — models GCS/S3 semantics where rename is client-driven
@@ -33,7 +33,7 @@ class NoRenameObjectStore extends NoRenameFileSystem {
   * In the test names, a "marked" file is a reported one and the "election"
   * is the commit over the reports.
   */
-class TgzSinkCommitSpec extends AnyFunSuite with SparkSuite with TempDirs {
+class TgzSinkCommitSpec extends AnyFunSuite with SparkSuite with TempDirs with JobCounting {
 
   private def sconf() =
     new SerializableHadoopConf(
@@ -138,7 +138,6 @@ class TgzSinkCommitSpec extends AnyFunSuite with SparkSuite with TempDirs {
   }
 
   test("commit is one Spark job") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val pubDir = tempDir("graft-commit-job-pub").toString
     val privDir = tempDir("graft-commit-job-priv").toString
     val pub = stagedTarget(pubDir)
@@ -147,29 +146,9 @@ class TgzSinkCommitSpec extends AnyFunSuite with SparkSuite with TempDirs {
       Seq(stage(pub, 0, s"a$p.tgz", p, p, "PUBLIC"),
         stage(priv, 1, s"a$p-e.tgz", p, p, "PRIVATE"))
     }
-    val group = "graft-commit-spec"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (Option(js.properties).exists(
-            _.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      spark.sparkContext.setJobGroup(group, "commit")
-      try TgzSink.commit(spark, Seq(pub, priv), reports, sconf())
-      finally spark.sparkContext.clearJobGroup()
-      // listener events are async: wait for the first, then until the
-      // count holds still (bounded, so a zero-job run fails the assert)
-      val deadline = System.currentTimeMillis + 30000
-      while (jobs.get() == 0 && System.currentTimeMillis < deadline)
-        Thread.sleep(100)
-      var prev = -1
-      while (jobs.get() != prev) { prev = jobs.get(); Thread.sleep(300) }
-    } finally spark.sparkContext.removeSparkListener(listener)
-
-    assert(jobs.get() === 1)
+    assert(jobsStartedBy {
+      TgzSink.commit(spark, Seq(pub, priv), reports, sconf())
+    } === 1)
     assert(visibleNames(pubDir) === Seq("a0.tgz", "a1.tgz", "a2.tgz"))
     assert(visibleNames(privDir) === Seq("a0-e.tgz", "a1-e.tgz", "a2-e.tgz"))
   }

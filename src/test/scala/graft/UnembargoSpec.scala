@@ -122,74 +122,29 @@ class UnembargoSpec extends AnyFunSuite with SparkSuite with TempDirs with JobCo
     assert(m.getAs[Long]("entries_total") === 4)
   }
 
-  test("A1 export: the QueryExecutionListener sees the counters out-of-band") {
+  test("A1 export: prometheusText of an observed row is the exact exposition text") {
     import graft.ops.EmbargoSplit
-    val listener = Metrics.registerListener(spark)
-    try {
-      val entries = TgzSource.entries(spark, TarQueries.FixtureTgz)
-      val wl = TgzSource.whitelist(spark, TarQueries.FixtureWhitelist)
+    val entries = TgzSource.entries(spark, TarQueries.FixtureTgz)
+    val wl = TgzSource.whitelist(spark, TarQueries.FixtureWhitelist)
+    val observed =
       Metrics.observeRouted(EmbargoSplit.route(entries, wl, TarQueries.FixtureCutoff))
-        .collect()
-      val m = listener.get("embargo_metrics")
-        .getOrElse(fail("listener never delivered embargo_metrics"))
-      assert(m.getAs[Long]("entries_total") === 204)
-      assert(m.getAs[Long]("files_public") === 121)
-      assert(m.getAs[Long]("files_private") === 59)
-      // scrape-format exposition of the same row (metrics.go:79-102's
-      // /metrics handler): exact text, so names/labels/format are pinned
-      val text = Metrics.prometheusText(m)
-      val expectFile =
-        "# HELP embargo_file_total Number of web100 sidestream files that were processed by embargo app engine.\n" +
-        "# TYPE embargo_file_total counter\n" +
-        "embargo_file_total{dataset=\"sidestream\",status=\"public\"} 121\n" +
-        "embargo_file_total{dataset=\"sidestream\",status=\"private\"} 59\n"
-      assert(text.startsWith(expectFile), s"exposition drifted:\n$text")
-      assert(text.contains("# TYPE embargo_ipv6_errors_total counter"))
-      assert(text.contains("""graft_entries_total{dataset="sidestream"} 204"""))
-      assert(text.linesIterator.forall(l =>
-        l.startsWith("#") || l.matches("""[a-z0-9_]+\{[^}]*\} \d+""")),
-        s"non-exposition line in:\n$text")
-    } finally spark.listenerManager.unregister(listener)
-  }
-
-  test("A1 scrape: the /metrics HTTP endpoint serves the exposition document end-to-end") {
-    import graft.ops.EmbargoSplit
-    val listener = Metrics.registerListener(spark)
-    val ep = Metrics.serveMetrics(listener)
-    try {
-      def scrape(): (Int, String, String) = {
-        val conn = new java.net.URL(s"http://127.0.0.1:${ep.port}/metrics")
-          .openConnection().asInstanceOf[java.net.HttpURLConnection]
-        val code = conn.getResponseCode
-        val ct = conn.getContentType
-        val body = if (conn.getInputStream == null) "" else
-          new String(conn.getInputStream.readAllBytes(),
-            java.nio.charset.StandardCharsets.UTF_8)
-        conn.disconnect()
-        (code, ct, body)
-      }
-      // before any observation: up, empty registry (promhttp behavior)
-      val (c0, ct0, b0) = scrape()
-      assert(c0 === 200 && b0.isEmpty)
-      assert(ct0 === Metrics.ExpositionContentType)
-      // run the routed pass, wait for the async listener, scrape again
-      val entries = TgzSource.entries(spark, TarQueries.FixtureTgz)
-      val wl = TgzSource.whitelist(spark, TarQueries.FixtureWhitelist)
-      Metrics.observeRouted(EmbargoSplit.route(entries, wl, TarQueries.FixtureCutoff))
-        .collect()
-      assert(listener.get("embargo_metrics").isDefined)
-      val (c1, ct1, b1) = scrape()
-      assert(c1 === 200)
-      assert(ct1 === Metrics.ExpositionContentType)
-      assert(b1.contains("embargo_file_total{dataset=\"sidestream\",status=\"public\"} 121"))
-      assert(b1.contains("embargo_file_total{dataset=\"sidestream\",status=\"private\"} 59"))
-      assert(b1.contains("# TYPE embargo_ipv6_errors_total counter"))
-      // the scraped document IS prometheusText of the observed row
-      assert(b1 === Metrics.prometheusText(
-        listener.get("embargo_metrics").get))
-    } finally {
-      ep.close()
-      spark.listenerManager.unregister(listener)
-    }
+    observed.collect()
+    val m = observed.queryExecution.observedMetrics("embargo_metrics")
+    // scrape-format exposition of the row (metrics.go:79-102's /metrics
+    // handler): exact text, so names/labels/format are pinned
+    val text = Metrics.prometheusText(Metrics.counts(m))
+    val expectFile =
+      "# HELP embargo_file_total Number of web100 sidestream files that were processed by embargo app engine.\n" +
+      "# TYPE embargo_file_total counter\n" +
+      "embargo_file_total{dataset=\"sidestream\",status=\"public\"} 121\n" +
+      "embargo_file_total{dataset=\"sidestream\",status=\"private\"} 59\n"
+    assert(text.startsWith(expectFile), s"exposition drifted:\n$text")
+    assert(text.contains("# TYPE embargo_ipv6_errors_total counter"))
+    assert(text.contains("""graft_entries_total{dataset="sidestream"} 204"""))
+    // no promotion in a split's row: that family is absent, not 0
+    assert(!text.contains("unembargo_tar_total"))
+    assert(text.linesIterator.forall(l =>
+      l.startsWith("#") || l.matches("""[a-z0-9_]+\{[^}]*\} \d+""")),
+      s"non-exposition line in:\n$text")
   }
 }
