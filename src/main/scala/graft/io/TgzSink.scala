@@ -4,6 +4,7 @@ import java.io.OutputStream
 
 import org.apache.commons.compress.archivers.tar.{TarArchiveEntry, TarArchiveOutputStream}
 import org.apache.commons.compress.compressors.gzip.GzipCompressorOutputStream
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Dataset, Encoders, Row}
@@ -34,19 +35,20 @@ import graft.model.Schemas
   * writes `<root>/_tmp-<call>/<final>.p<partition>.a<attempt>` — staging
   * private to the call, so concurrent calls into one root never see or
   * delete each other's files — and, once ALL its writers have closed
-  * cleanly, returns one [[StagedFile]] report per file as its task result.
-  * Spark delivers exactly one result per partition, from the attempt that
-  * succeeded, so the reports name the winners: a task that died mid-write,
-  * or a speculative duplicate, reports nothing and its staged file is
-  * swept with the staging dir. A final name reported by two DIFFERENT
-  * partitions means the caller broke the per-archive contiguity contract
-  * (e.g. a repartition split an archive across tasks) — the commit fails
-  * fast instead of letting the second writer silently clobber the first.
+  * cleanly, returns a [[StagedFile]] per file and its [[Tally]] sums. Spark
+  * delivers exactly one result per partition, from the attempt that
+  * succeeded, so the reports name the winners and the counts are theirs:
+  * a task that died mid-write, or a speculative duplicate, reports nothing
+  * and its staged file is swept with the staging dir. A final name
+  * reported by two DIFFERENT partitions means the caller broke the
+  * per-archive contiguity contract (e.g. a repartition split an archive
+  * across tasks) — the commit fails fast instead of letting the second
+  * writer silently clobber the first.
   *
-  * Publishing is rename-based only where rename is atomic (posix/HDFS); on
-  * object-store schemes the sink switches to the rename-free
-  * [[CopyCommit]] protocol (copy-then-verify) — see [[CommitProtocol]],
-  * resolved per root.
+  * The write is the split's ONE Spark job: the driver publishes (see
+  * [[commit]]), rename-based only where rename is atomic (posix/HDFS); on
+  * object-store schemes with the rename-free [[CopyCommit]] protocol
+  * (copy-then-verify) — see [[CommitProtocol]], resolved per root.
   */
 object TgzSink {
 
@@ -62,7 +64,28 @@ object TgzSink {
   private[io] final case class StagedFile(target: Int, fin: String,
                                           tmpName: String, partition: Int)
 
-  /** Write `(archive × route)` tgz pairs under `outDir`.
+  /** Counters a write task sums over the rows it writes, slot `i` named
+    * `keys(i)`: `add` adds one row. What a slot counts is the caller's. */
+  final case class Tally(keys: IndexedSeq[String], add: (Row, Array[Long]) => Unit)
+
+  val NoTally: Tally = Tally(IndexedSeq.empty, (_, _) => ())
+
+  /** One write task's result: the files it staged and its tally sums. */
+  private[io] final case class TaskReport(staged: Seq[StagedFile], counts: Seq[Long])
+
+  /** Derived once: deriving a product encoder runs Scala reflection under
+    * process-wide locks, so per-call derivation queues concurrent splits.
+    */
+  private val reportEncoder = Encoders.product[TaskReport]
+
+  /** Lock stripes, by qualified final path, for [[RenameCommit]]'s
+    * delete-then-rename: two calls publishing one name (two concurrent
+    * splits of one archive) must not interleave the steps, because a
+    * rename onto a file the other call just published fails.
+    */
+  private val publishLocks = Array.fill(64)(new Object)
+
+  /** Write `(archive × route)` tgz pairs.
     *
     * `routed` must have columns `archive, ordinal, name, size, mode, modTime,
     * typeflag, content, route` with each archive's rows contiguous and
@@ -74,32 +97,28 @@ object TgzSink {
     * Output names: `<archiveBasename>` for the public half,
     * `<archiveBasename>` with `.tgz` → `-e.tgz` for the private half.
     *
-    * Returns the write job's observed metrics by observation name: any
-    * `observe` the caller put on `routed` is filled by the same job.
+    * Public halves go under `publicDir` and `-e.tgz` halves under
+    * `privateDir`, each root on its [[CommitProtocol.forPath]]. Returns
+    * `tally`'s sums by key over the attempts whose files were published,
+    * so each row counts exactly once.
     */
-  def writeSplit(routed: Dataset[Row], outDir: String): Map[String, Row] =
-    writeSplit(routed, outDir, outDir)
-
-  /** [[writeSplit]] with public halves under `publicDir` and `-e.tgz`
-    * halves under `privateDir`, each root on its [[CommitProtocol.forPath]].
-    */
-  def writeSplit(routed: Dataset[Row], publicDir: String,
-                 privateDir: String): Map[String, Row] = {
+  def writeSplit(routed: Dataset[Row], publicDir: String, privateDir: String,
+                 tally: Tally = NoTally): Map[String, Long] = {
     val conf = bridge.sessionHadoopConf(routed.sparkSession)
     writeSplit(routed, publicDir, privateDir,
       CommitProtocol.forPath(publicDir, conf),
-      CommitProtocol.forPath(privateDir, conf))
+      CommitProtocol.forPath(privateDir, conf), tally)
   }
 
   /** [[writeSplit]] into two stores with an explicit protocol per root. */
   def writeSplit(routed: Dataset[Row], publicDir: String, privateDir: String,
-                 pubProtocol: CommitProtocol,
-                 privProtocol: CommitProtocol): Map[String, Row] = {
-    val spark = routed.sparkSession
+                 pubProtocol: CommitProtocol, privProtocol: CommitProtocol,
+                 tally: Tally): Map[String, Long] = {
     // session conf captured ONCE on the driver and shipped — a fresh
     // `new Configuration()` in the task would drop spark.hadoop.* settings
     // (object-store credentials, fs impls) and silently write elsewhere
-    val sconf = new SerializableHadoopConf(bridge.sessionHadoopConf(spark))
+    val conf = bridge.sessionHadoopConf(routed.sparkSession)
+    val sconf = new SerializableHadoopConf(conf)
     val callId = java.util.UUID.randomUUID.toString
     // one target when both halves share a root; the public half always
     // goes to target 0, the private half to the last
@@ -115,6 +134,7 @@ object TgzSink {
       val taskSuffix = s".p${tc.partitionId()}.a${tc.taskAttemptId()}"
       val closed = scala.collection.mutable.HashSet.empty[String]
       val staged = scala.collection.mutable.ArrayBuffer.empty[StagedFile]
+      val counts = new Array[Long](tally.keys.length)
       var current: String = null
       var lastOrdinal = Long.MinValue
       var pub: TarWriter = null
@@ -151,36 +171,38 @@ object TgzSink {
         lastOrdinal = ordinal
         val w = if (r.getAs[String]("route") == Schemas.RoutePublic) pub else priv
         w.write(r)
+        tally.add(r, counts)
       }
       closeCurrent()
       // reported only now, with every writer closed
-      staged.iterator
-    }(Encoders.product[StagedFile])
-    targets.foreach(t => t.staging.getFileSystem(sconf.value).mkdirs(t.staging))
+      Iterator.single(TaskReport(staged.toSeq, counts.toSeq))
+    }(reportEncoder)
+    targets.foreach(t => t.staging.getFileSystem(conf).mkdirs(t.staging))
     val reports = try written.collect().toSeq
-    catch { case e: Throwable => sweep(targets, sconf); throw e }
+    catch { case e: Throwable => sweep(targets, conf); throw e }
 
-    commit(spark, targets, reports, sconf)
-    written.queryExecution.observedMetrics
+    commit(targets, reports.flatMap(_.staged), conf)
+    tally.keys.indices.map(i => tally.keys(i) -> reports.map(_.counts(i)).sum).toMap
   }
 
   /** Remove this call's staging dirs — never another call's. */
-  private def sweep(targets: Seq[Target], sconf: SerializableHadoopConf): Unit =
-    targets.foreach(t => t.staging.getFileSystem(sconf.value).delete(t.staging, true))
+  private def sweep(targets: Seq[Target], conf: Configuration): Unit =
+    targets.foreach(t => t.staging.getFileSystem(conf).delete(t.staging, true))
 
-  /** Publish the files the write job's tasks reported: fail on any final
-    * name reported by two distinct partitions, move each reported file into
-    * its target root (overwriting prior runs' outputs) in ONE distributed
-    * job, and always remove the staging dirs —
-    * unreported files (attempts that died or lost) go with them.
+  /** Publish the files the write job's tasks reported from the driver, as
+    * Hadoop's `FileOutputCommitter.commitJob` does, with no Spark job: fail
+    * on any final name reported by two distinct partitions, move each
+    * reported file into its target root (overwriting prior runs' outputs;
+    * of concurrent calls publishing one name, the last one wins),
+    * and always remove the staging dirs — unreported files (attempts that
+    * died or lost) go with them. [[CopyCommit]] streams through the driver.
     *
     * Driver state: two reports per input archive. The scan's file index
     * already holds one `FileStatus` per input archive on the driver, so
     * the reports add no new class of driver state.
     */
-  private[io] def commit(spark: org.apache.spark.sql.SparkSession,
-                         targets: Seq[Target], reports: Seq[StagedFile],
-                         sconf: SerializableHadoopConf): Unit =
+  private[io] def commit(targets: Seq[Target], reports: Seq[StagedFile],
+                         conf: Configuration): Unit =
     try {
       // two archives with one basename in one task share a staged name
       val files = reports.distinct
@@ -190,18 +212,19 @@ object TgzSink {
         throw new IllegalStateException(
           "archive rows were split across partitions — outputs claimed by " +
             s"multiple tasks: ${conflicts.mkString(", ")}")
-      val sc = spark.sparkContext
-      sc.parallelize(files, files.size.min(sc.defaultParallelism).max(1)).foreach { f =>
-        val conf = sconf.value
+      files.foreach { f =>
         val t = targets(f.target)
         val pfs = t.staging.getFileSystem(conf)
         val src = new Path(t.staging, f.tmpName)
         val target = new Path(t.dir, f.fin)
         t.protocol match {
           case RenameCommit =>
-            pfs.delete(target, false)
-            if (!pfs.rename(src, target))
-              throw new java.io.IOException(s"commit rename failed for ${f.fin}")
+            val stripe = Math.floorMod(pfs.makeQualified(target).hashCode, publishLocks.length)
+            publishLocks(stripe).synchronized {
+              pfs.delete(target, false)
+              if (!pfs.rename(src, target))
+                throw new java.io.IOException(s"commit rename failed for ${f.fin}")
+            }
           case CopyCommit =>
             // Copy-then-verify: object copy/PUT is complete-or-absent,
             // and the length check turns "copy claimed success" into
@@ -218,7 +241,7 @@ object TgzSink {
                   s"published $dstLen bytes, staged $srcLen")
         }
       }
-    } finally sweep(targets, sconf)
+    } finally sweep(targets, conf)
 
   /** One gzipped tar stream; copies the 5 header fields the reference
     * preserves (`/root/reference/embargo.go:163-168`).

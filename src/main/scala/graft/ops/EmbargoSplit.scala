@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.IpFunctions.local_ip
@@ -99,7 +99,7 @@ object EmbargoSplit {
     * instead of a text path, loaded by [[Whitelist.fromFrame]].
     */
   def runWith(spark: SparkSession, inPath: String, whitelist: DataFrame,
-              cutoffDateInt: Int, outDir: String): Row =
+              cutoffDateInt: Int, outDir: String): Map[String, Long] =
     runWith(spark, inPath, Whitelist.fromFrame(whitelist), cutoffDateInt,
       outDir, outDir)
 
@@ -111,14 +111,13 @@ object EmbargoSplit {
     * whitelist is the caller's driver-held value ([[Service]] keeps it as
     * service state, the reference's in-memory list,
     * `/root/reference/embargo.go:94-101`), so the split runs the write
-    * job and the commit job and nothing else.
+    * job and nothing else: the driver publishes the halves.
     *
-    * Returns this call's [[Metrics.observeRouted]] row, observed by the
-    * write job itself (no extra job); [[Service]] folds it into the
-    * counters `/metrics` serves.
+    * Returns this call's [[Metrics.RoutedTally]] sums, counted by the write
+    * job's tasks; [[Service]] folds them into the counters `/metrics` serves.
     */
-  def runWith(spark: SparkSession, inPath: String, whitelist: Whitelist,
-              cutoffDateInt: Int, publicDir: String, privateDir: String): Row =
-    TgzSink.writeSplit(Metrics.observeRouted(route(TgzSource.entries(spark, inPath),
-      whitelist, cutoffDateInt)), publicDir, privateDir)(Metrics.Observation)
+  def runWith(spark: SparkSession, inPath: String, whitelist: Whitelist, cutoffDateInt: Int,
+              publicDir: String, privateDir: String): Map[String, Long] =
+    TgzSink.writeSplit(route(TgzSource.entries(spark, inPath), whitelist, cutoffDateInt),
+      publicDir, privateDir, Metrics.RoutedTally)
 }

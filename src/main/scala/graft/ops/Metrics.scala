@@ -1,31 +1,27 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.Row
 
-import graft.functions.NameFunctions.basename
+import graft.io.TgzSink
 import graft.model.Schemas
 
 /** A1 — online counters (`/root/reference/metrics/metrics.go:19-77`):
   * the reference exposes Prometheus `CounterVec`s incremented inline with
-  * the write loop; the Spark-native analogue is `Dataset.observe`, which
-  * accumulates named aggregates during a single pass of the SAME job that
-  * does the work — no second scan. The split returns its write job's
-  * observed row ([[EmbargoSplit.runWith]]), [[Service]] folds each call's
-  * row into running totals, and its `/metrics` route renders them with
-  * [[prometheusText]].
+  * the write loop; here the split's write task does the same, summing
+  * [[RoutedTally]] over every entry it writes and returning the sums in
+  * its task result — no second scan and no extra job. The split returns
+  * the summed counts ([[EmbargoSplit.runWith]]), [[Service]] folds each
+  * call's counts into running totals, and its `/metrics` route renders
+  * them with [[prometheusText]].
   */
 object Metrics {
-
-  /** The observation name [[observeRouted]] records under by default. */
-  val Observation = "embargo_metrics"
 
   /** The counter [[prometheusText]] renders as `unembargo_tar_total`:
     * `-e.tgz` archives promoted to the public store.
     */
   val UnembargoTars = "unembargo_tars"
 
-  /** Instrument a routed entry DataFrame with the reference's counter set:
+  /** The reference's counter set, summed over routed entry rows:
     * total entries, public/private file counts (web100 only, as
     * `embargo_file_total` counts, `/root/reference/embargo.go:177,190`),
     * bytes per route, and IPv6-normalization failures
@@ -40,33 +36,28 @@ object Metrics {
     * malformed name seen, not just the ones whose route decision needed the
     * parse).
     */
-  def observeRouted(routed: DataFrame, name: String = Observation): DataFrame = {
-    val isWeb100 = basename(col("name")).contains("web100")
-    // span exists iff first '_' is strictly before last '_' — i.e. the
-    // basename has >= 2 underscores (filename_parser.go:19-23); a span
-    // that fails NormalizeIPv6 yields local_ip = ""
-    val ipv6Failed =
-      size(split(basename(col("name")), "_")) >= 3 && length(col("local_ip")) === 0
-    routed.observe(name,
-      count(lit(1)).as("entries_total"),
-      count(when(isWeb100 && col("route") === Schemas.RoutePublic, 1)).as("files_public"),
-      count(when(isWeb100 && col("route") === Schemas.RoutePrivate, 1)).as("files_private"),
-      sum(when(col("route") === Schemas.RoutePublic, col("size")).otherwise(0L)).as("bytes_public"),
-      sum(when(col("route") === Schemas.RoutePrivate, col("size")).otherwise(0L)).as("bytes_private"),
-      count(when(ipv6Failed, 1)).as("ipv6_errors"))
-  }
+  val RoutedTally: TgzSink.Tally = TgzSink.Tally(IndexedSeq("entries_total",
+    "files_public", "files_private", "bytes_public", "bytes_private", "ipv6_errors"),
+    (r: Row, counts: Array[Long]) => {
+      val name = r.getAs[String]("name")
+      val base = name.substring(name.lastIndexOf('/') + 1)
+      counts(0) += 1
+      // 0 for the public files/bytes slots, 1 for the private ones
+      val half = Seq(Schemas.RoutePublic, Schemas.RoutePrivate).indexOf(r.getAs[String]("route"))
+      if (half >= 0) {
+        if (base.contains("web100")) counts(1 + half) += 1
+        counts(3 + half) += r.getAs[Long]("size")
+      }
+      // span exists iff the basename has >= 2 underscores
+      // (filename_parser.go:19-23); a span that fails NormalizeIPv6
+      // yields local_ip = ""
+      val ip = r.getAs[String]("local_ip")
+      if (base.split("_", -1).length >= 3 && ip != null && ip.isEmpty) counts(5) += 1
+    })
 
-  /** An observed [[observeRouted]] row as counter values by column name.
-    * An empty split's byte sums are null; they count 0.
-    */
-  def counts(row: Row): Map[String, Long] =
-    row.schema.fieldNames.zipWithIndex.map { case (c, i) =>
-      c -> (if (row.isNullAt(i)) 0L else row.getLong(i))
-    }.toMap
-
-  /** Prometheus text exposition of counter values keyed as [[counts]]
-    * keys them, plus [[UnembargoTars]] — the scrape-format half of the
-    * reference's counter surface (`metrics/metrics.go:79-102`
+  /** Prometheus text exposition of counter values keyed as
+    * [[RoutedTally]] keys them, plus [[UnembargoTars]] — the scrape-format
+    * half of the reference's counter surface (`metrics/metrics.go:79-102`
     * serves `promhttp.Handler()` at `/metrics`). Families with a reference
     * name keep it — `embargo_file_total{dataset,status}`
     * (`metrics.go:45-51`), `unembargo_tar_total{dataset}`

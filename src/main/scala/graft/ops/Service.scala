@@ -19,7 +19,7 @@ import graft.io.FsOps
   * routes by is service state: a driver-held [[Whitelist]] snapshot,
   * reloaded only when its source's version changes (see
   * `currentWhitelist`). So are the counters: every successful split adds
-  * the row its write job observed, every promotion its copied count, and
+  * the counts its write job returned, every promotion its copied count, and
   * `/metrics` renders the running totals with [[Metrics.prometheusText]]
   * (200 and an empty document before anything is counted, promhttp's
   * empty registry). The reference serves them on a second port (:9090);
@@ -227,7 +227,7 @@ object Service {
     }
 
     /** Running counter totals, keyed as [[Metrics.prometheusText]] reads
-      * them: every successful split adds its observed row, every promotion
+      * them: every successful split adds its returned counts, every promotion
       * its copied count. Replaced, never mutated, under the service's
       * lock; a failed split adds nothing.
       */
@@ -251,9 +251,9 @@ object Service {
       require(objPath.contains("tgz") && objPath.contains("sidestream"),
         "not a proper sidestream file")
       val dayDir = objPath.substring(0, objPath.lastIndexOf('/'))
-      add(Metrics.counts(EmbargoSplit.runWith(spark, s"${cfg.srcDir}/$objPath",
+      add(EmbargoSplit.runWith(spark, s"${cfg.srcDir}/$objPath",
         currentWhitelist(), oneYearAgoInt(cfg.today()),
-        s"${cfg.publicDir}/$dayDir", s"${cfg.privateDir}/$dayDir")))
+        s"${cfg.publicDir}/$dayDir", s"${cfg.privateDir}/$dayDir"))
     }
 
     /** A whole day through the split as ONE distributed job
@@ -270,9 +270,9 @@ object Service {
       val day = s"${cfg.srcDir}/$prefix"
       // an absent day dir lists nothing, like one without a visible .tgz
       if (!FsOps.exists(spark, day) || FsOps.objects(spark, day, ".tgz").isEmpty) return
-      add(Metrics.counts(EmbargoSplit.runWith(spark, day, currentWhitelist(),
+      add(EmbargoSplit.runWith(spark, day, currentWhitelist(),
         oneYearAgoInt(cfg.today()),
-        s"${cfg.publicDir}/$prefix", s"${cfg.privateDir}/$prefix")))
+        s"${cfg.publicDir}/$prefix", s"${cfg.privateDir}/$prefix"))
     }
 
     route("/_ah/health") { _ => (200, "ok") }

@@ -319,14 +319,16 @@ class ServiceSpec extends AnyFunSuite with SparkSuite with TempDirs with JobCoun
     * store, plus a GET against it that answers (status, body).
     */
   private def freshService(tag: String, sitesUrl: String,
-                           whitelistOut: Option[String] = None)
+                           whitelistOut: Option[String] = None,
+                           storeScheme: String = "")
       : (String, Service.EmbargoService, String => (Int, String)) = {
     val r = tempDir(s"graft-svc-$tag").toString
     graft.io.FsOps.mkdirs(spark, s"$r/src/sidestream/2017/03/15")
     graft.io.FsOps.copy(spark, TarQueries.FixtureTgz,
       s"$r/src/sidestream/2017/03/15/${base(TarQueries.FixtureTgz)}")
     val svc = Service.serve(spark, Service.ServiceConfig(
-      srcDir = s"$r/src", publicDir = s"$r/public", privateDir = s"$r/embargoed",
+      srcDir = s"$r/src", publicDir = s"$storeScheme$r/public",
+      privateDir = s"$storeScheme$r/embargoed",
       whitelistPath = TarQueries.FixtureWhitelist, sitesUrl = sitesUrl,
       whitelistOut = whitelistOut.getOrElse(s"$r/whitelist.parquet"),
       today = () => java.time.LocalDate.of(2018, 3, 15)))
@@ -362,14 +364,14 @@ class ServiceSpec extends AnyFunSuite with SparkSuite with TempDirs with JobCoun
     } finally svc.close()
   }
 
-  test("/submit?file= starts exactly two Spark jobs, the split's write and commit: the whitelist is service state") {
+  test("/submit?file= starts exactly one Spark job, the split's write: the whitelist is service state and the driver publishes") {
     val (_, svc, call) = freshService("jobs", feed("jobs-feed", sitesJson))
     try {
       // the committed refresh store governs, as in a running deployment
       assert(call("/cron/update_embargo_whitelist") === ((200, "OK")))
       assert(jobsStartedDuring {
         assert(call(s"/submit?file=$fixtureFile") === ((200, "success")))
-      } === 2)
+      } === 1)
     } finally svc.close()
   }
 
@@ -449,6 +451,11 @@ class ServiceSpec extends AnyFunSuite with SparkSuite with TempDirs with JobCoun
 
   private def entriesTotal(n: Long) = s"""graft_entries_total{dataset="sidestream"} $n"""
 
+  /** Fixture 1's split counts at cutoff 20170315 by the fixture list. */
+  private val fixtureCounts = Map("entries_total" -> 204L,
+    "files_public" -> 121L, "files_private" -> 59L,
+    "bytes_public" -> 1218228L, "bytes_private" -> 3063519L, "ipv6_errors" -> 0L)
+
   test("/metrics: empty before any split, then 121/59 files and 204 entries") {
     val (_, svc, call) = freshService("metrics", feed("metrics-feed", sitesJson))
     try {
@@ -467,14 +474,9 @@ class ServiceSpec extends AnyFunSuite with SparkSuite with TempDirs with JobCoun
       assert(b1.contains(entriesTotal(204)))
       assert(b1.contains("# TYPE embargo_ipv6_errors_total counter"))
       assertExposition(b1)
-      // the scraped document IS prometheusText of the split's observed
-      // row (the service's cutoff is 20170315, its seed the fixture list)
-      val observed = Metrics.observeRouted(EmbargoSplit.route(
-        TgzSource.entries(spark, TarQueries.FixtureTgz),
-        TgzSource.whitelist(spark, TarQueries.FixtureWhitelist), 20170315))
-      observed.collect()
-      assert(b1 === Metrics.prometheusText(Metrics.counts(
-        observed.queryExecution.observedMetrics(Metrics.Observation))))
+      // the scraped document IS prometheusText of fixture 1's counts at
+      // the service's cutoff 20170315 by its seed, the fixture list
+      assert(b1 === Metrics.prometheusText(fixtureCounts))
     } finally svc.close()
   }
 
@@ -509,6 +511,33 @@ class ServiceSpec extends AnyFunSuite with SparkSuite with TempDirs with JobCoun
       assert(body.contains(fileTotal("public", 121)) && body.contains(entriesTotal(204)))
       assertExposition(body)
     } finally svc.close()
+  }
+
+  test("/submit?file= whose publication fails partway answers 500, leaves no staging and adds no counts") {
+    graft.io.FreezingFileSystem.register(spark)
+    val (r, svc, call) = freshService("publish-fail", feed("publish-fail-feed", sitesJson),
+      storeScheme = "frz://")
+    val privDay = s"$r/embargoed/sidestream/2017/03/15"
+    try {
+      assert(call(s"/submit?file=$fixtureFile") === ((200, "success")))
+      val before = scrape(svc)._3
+      assert(before === Metrics.prometheusText(fixtureCounts))
+      // the public half lands again; the private half's rename fails
+      graft.io.FreezingFileSystem.frozen.add(privDay)
+      assert(call(s"/submit?file=$fixtureFile") === ((500, "Fail with embargo single file.")))
+      assert(scrape(svc)._3 === before)
+      for (store <- Seq(s"$r/public", s"$r/embargoed")) {
+        val walk = Files.walk(java.nio.file.Paths.get(store))
+        val staging =
+          try walk.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path].getFileName.toString)
+            .filter(_.startsWith("_tmp"))
+          finally walk.close()
+        assert(staging.isEmpty, s"$store holds staging entries $staging")
+      }
+    } finally {
+      graft.io.FreezingFileSystem.frozen.remove(privDay)
+      svc.close()
+    }
   }
 
   test("service shuts down cleanly") {

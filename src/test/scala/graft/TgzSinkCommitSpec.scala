@@ -27,6 +27,29 @@ class NoRenameObjectStore extends NoRenameFileSystem {
   override def getUri: java.net.URI = java.net.URI.create("gs://graft-test/")
 }
 
+/** A local FileSystem (`frz://`) whose rename fails into any dir listed
+  * in [[FreezingFileSystem.frozen]]: a publication that breaks partway,
+  * after the files bound for other dirs have landed.
+  */
+class FreezingFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getScheme: String = "frz"
+  override def getUri: java.net.URI = java.net.URI.create("frz:///")
+  override def rename(src: org.apache.hadoop.fs.Path,
+                      dst: org.apache.hadoop.fs.Path): Boolean =
+    if (FreezingFileSystem.frozen.contains(dst.getParent.toUri.getPath))
+      throw new java.io.IOException(s"rename into a frozen dir: $src -> $dst")
+    else super.rename(src, dst)
+}
+
+object FreezingFileSystem {
+  /** Local paths of the dirs no rename may land in. */
+  val frozen: java.util.Set[String] = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  /** Register the `frz` scheme with `spark`'s Hadoop conf. */
+  def register(spark: org.apache.spark.sql.SparkSession): Unit =
+    spark.sparkContext.hadoopConfiguration.set("fs.frz.impl", classOf[FreezingFileSystem].getName)
+}
+
 /** Commit-protocol spec for [[TgzSink]]: only the staged files the write
   * job's tasks reported are publishable — an attempt that died mid-write
   * (no report) must never beat a complete attempt, whatever its attempt id.
@@ -35,9 +58,7 @@ class NoRenameObjectStore extends NoRenameFileSystem {
   */
 class TgzSinkCommitSpec extends AnyFunSuite with SparkSuite with TempDirs with JobCounting {
 
-  private def sconf() =
-    new SerializableHadoopConf(
-      org.apache.spark.sql.graft.bridge.sessionHadoopConf(spark))
+  private def conf() = org.apache.spark.sql.graft.bridge.sessionHadoopConf(spark)
 
   /** One call's staging under `outDir`, created empty — the layout
     * `writeSplit` makes before its write job.
@@ -97,7 +118,7 @@ class TgzSinkCommitSpec extends AnyFunSuite with SparkSuite with TempDirs with J
     // a second final name whose only attempt never reported: nothing published
     Files.write(Paths.get(s"${t.staging}/y.tgz.p1.a1"), "DEAD".getBytes)
 
-    TgzSink.commit(spark, Seq(t), Seq(x), sconf())
+    TgzSink.commit(Seq(t), Seq(x), conf())
 
     assert(Files.readString(Paths.get(s"$outDir/x.tgz")) === "COMPLETE")
     assert(!Files.exists(Paths.get(s"$outDir/y.tgz")))
@@ -112,7 +133,7 @@ class TgzSinkCommitSpec extends AnyFunSuite with SparkSuite with TempDirs with J
     // unreported mid-write debris must still lose
     Files.write(Paths.get(s"${t.staging}/x.tgz.p0.a9"), "TRUNCATED-LONGER".getBytes)
 
-    TgzSink.commit(spark, Seq(t), Seq(x), sconf())
+    TgzSink.commit(Seq(t), Seq(x), conf())
 
     assert(Files.readString(Paths.get(s"$outDir/x.tgz")) === "COMPLETE")
     assert(!Files.exists(Paths.get(t.staging.toString)))
@@ -130,14 +151,14 @@ class TgzSinkCommitSpec extends AnyFunSuite with SparkSuite with TempDirs with J
       stage(pub, 0, "a-e.tgz", 0, 1, "PUBLIC"),
       stage(priv, 1, "a-e.tgz", 1, 2, "PRIVATE"))
 
-    TgzSink.commit(spark, Seq(pub, priv), reports, sconf())
+    TgzSink.commit(Seq(pub, priv), reports, conf())
 
     assert(Files.readString(Paths.get(s"$pubDir/a-e.tgz")) === "PUBLIC")
     assert(Files.readString(Paths.get(s"$privDir/a-e.tgz")) === "PRIVATE")
     assert(stagingEntries(pubDir).isEmpty && stagingEntries(privDir).isEmpty)
   }
 
-  test("commit is one Spark job") {
+  test("commit starts no Spark job") {
     val pubDir = tempDir("graft-commit-job-pub").toString
     val privDir = tempDir("graft-commit-job-priv").toString
     val pub = stagedTarget(pubDir)
@@ -147,10 +168,36 @@ class TgzSinkCommitSpec extends AnyFunSuite with SparkSuite with TempDirs with J
         stage(priv, 1, s"a$p-e.tgz", p, p, "PRIVATE"))
     }
     assert(jobsStartedBy {
-      TgzSink.commit(spark, Seq(pub, priv), reports, sconf())
-    } === 1)
+      TgzSink.commit(Seq(pub, priv), reports, conf())
+    } === 0)
     assert(visibleNames(pubDir) === Seq("a0.tgz", "a1.tgz", "a2.tgz"))
     assert(visibleNames(privDir) === Seq("a0-e.tgz", "a1-e.tgz", "a2-e.tgz"))
+  }
+
+  test("concurrent commits of one final name all publish, the last writer wins") {
+    // concurrent splits of one archive: each call deletes the old file and
+    // renames its own into place, and a rename onto the file another call
+    // just published fails
+    val writers = Seq("A", "B", "C", "D")
+    val fails = new java.util.concurrent.atomic.AtomicInteger()
+    for (round <- 0 until 300) {
+      val outDir = tempDir(s"graft-commit-race-$round").toString
+      val calls = writers.map { who =>
+        val t = TgzSink.Target(outDir, s"call-$who", RenameCommit)
+        Files.createDirectories(Paths.get(t.staging.toString))
+        (t, stage(t, 0, "x.tgz", 0, 1, who))
+      }
+      val threads = calls.map { case (t, f) =>
+        new Thread(() =>
+          try TgzSink.commit(Seq(t), Seq(f), conf())
+          catch { case _: java.io.IOException => fails.incrementAndGet() })
+      }
+      threads.foreach(_.start())
+      threads.foreach(_.join())
+      assert(writers.contains(Files.readString(Paths.get(s"$outDir/x.tgz"))))
+      assert(stagingEntries(outDir).isEmpty)
+    }
+    assert(fails.get === 0)
   }
 
   test("writeSplit leaves a concurrent writer's staged files in the same root alone") {
@@ -166,7 +213,7 @@ class TgzSinkCommitSpec extends AnyFunSuite with SparkSuite with TempDirs with J
       Files.write(p, "OTHER-WRITER".getBytes)
     }
 
-    TgzSink.writeSplit(fixtureRouted(), outDir)
+    TgzSink.writeSplit(fixtureRouted(), outDir, outDir)
 
     // neither deleted nor published by this call
     planted.foreach(p => assert(Files.readString(p) === "OTHER-WRITER", p))
@@ -190,7 +237,7 @@ class TgzSinkCommitSpec extends AnyFunSuite with SparkSuite with TempDirs with J
 
     val routed = fixtureRouted()
     TgzSink.writeSplit(routed, s"nar://$localPub", s"nar://$localPriv",
-      CopyCommit, CopyCommit)
+      CopyCommit, CopyCommit, TgzSink.NoTally)
 
     assert(entryCount(s"$localPub/$fixtureBase") === 145)
     assert(entryCount(s"$localPriv/${fixtureBase.replace(".tgz", "-e.tgz")}") === 59)
@@ -201,12 +248,29 @@ class TgzSinkCommitSpec extends AnyFunSuite with SparkSuite with TempDirs with J
     // the path is rename-free end to end
     val out2 = s"nar://${tempDir("graft-nar2")}"
     val e = intercept[Exception] {
-      TgzSink.writeSplit(routed, out2, out2, RenameCommit, RenameCommit)
+      TgzSink.writeSplit(routed, out2, out2, RenameCommit, RenameCommit, TgzSink.NoTally)
     }
     def chain(t: Throwable): Seq[Throwable] =
       if (t == null) Nil else t +: chain(t.getCause)
     assert(chain(e).exists(_.getMessage != null)
       && chain(e).exists(c => Option(c.getMessage).exists(_.contains("rename"))))
+  }
+
+  test("a publication that fails partway throws and leaves no staging in either root") {
+    FreezingFileSystem.register(spark)
+    val pubDir = tempDir("graft-frz-pub").toString
+    val privDir = tempDir("graft-frz-priv").toString
+    // the public half is published first; the private half's rename fails
+    FreezingFileSystem.frozen.add(privDir)
+    try {
+      val e = intercept[java.io.IOException] {
+        TgzSink.writeSplit(fixtureRouted(), s"frz://$pubDir", s"frz://$privDir")
+      }
+      assert(e.getMessage.contains("frozen"))
+    } finally FreezingFileSystem.frozen.remove(privDir)
+    assert(entryCount(s"$pubDir/$fixtureBase") === 145)
+    assert(visibleNames(privDir).isEmpty)
+    assert(stagingEntries(pubDir).isEmpty && stagingEntries(privDir).isEmpty)
   }
 
   test("each root resolves its own protocol: an object-store root never sees rename") {
@@ -241,7 +305,7 @@ class TgzSinkCommitSpec extends AnyFunSuite with SparkSuite with TempDirs with J
     val reports = Seq(stage(t, 0, "w.tgz", 0, 1, "P0"), stage(t, 0, "w.tgz", 1, 2, "P1"))
 
     val e = intercept[IllegalStateException] {
-      TgzSink.commit(spark, Seq(t), reports, sconf())
+      TgzSink.commit(Seq(t), reports, conf())
     }
     assert(e.getMessage.contains("split across partitions"))
     assert(!Files.exists(Paths.get(s"$outDir/w.tgz")))

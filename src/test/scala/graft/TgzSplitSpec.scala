@@ -218,7 +218,7 @@ class TgzSplitSpec extends AnyFunSuite with SparkSuite with TempDirs {
     val split = EmbargoSplit.route(entries, wl, FixtureCutoff)
       .repartitionByRange(2, org.apache.spark.sql.functions.col("ordinal"))
     val e = intercept[IllegalStateException] {
-      TgzSink.writeSplit(split, outDir)
+      TgzSink.writeSplit(split, outDir, outDir)
     }
     assert(e.getMessage.contains("split across partitions"))
     // nothing was published and the call's staging dir was cleaned up

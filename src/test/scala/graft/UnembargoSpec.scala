@@ -4,11 +4,11 @@ import java.nio.file.{Files, Paths}
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ops.{Metrics, Unembargo}
+import graft.ops.{EmbargoSplit, Metrics, Unembargo, Whitelist}
 import graft.io.TgzSource
 import graft.queries.TarQueries
 
-/** E2 promotion + A1 observe specs. */
+/** E2 promotion + A1 counter specs. */
 class UnembargoSpec extends AnyFunSuite with SparkSuite with TempDirs with JobCounting {
 
   test("E2: promoteDay copies -e archives, overwrites existing, validates dates") {
@@ -81,21 +81,24 @@ class UnembargoSpec extends AnyFunSuite with SparkSuite with TempDirs with JobCo
     assert(counts === ((2L, 1L)))
   }
 
-  test("A1: observe() collects routed counters in the same pass") {
-    import graft.ops.EmbargoSplit
-    val entries = TgzSource.entries(spark, TarQueries.FixtureTgz)
-    val wl = TgzSource.whitelist(spark, TarQueries.FixtureWhitelist)
-    val routed = EmbargoSplit.route(entries, wl, TarQueries.FixtureCutoff)
-    val observed = Metrics.observeRouted(routed)
-    observed.collect() // one pass does work + counters
+  /** Split `tgz` at `cutoff` by the fixture whitelist into a fresh root
+    * and return the split's counts.
+    */
+  private def splitCounts(tgz: String, cutoff: Int): Map[String, Long] = {
+    val out = tempDir("graft-a1").toString
+    EmbargoSplit.runWith(spark, tgz,
+      Whitelist.fromText(spark, TarQueries.FixtureWhitelist), cutoff, out, out)
+  }
 
-    val m = observed.queryExecution.observedMetrics("embargo_metrics")
-    assert(m.getAs[Long]("entries_total") === 204)
+  test("A1: the split returns its routed counters from the write job") {
+    var m = Map.empty[String, Long]
+    assert(jobsStartedBy { m = splitCounts(TarQueries.FixtureTgz, TarQueries.FixtureCutoff) } === 1)
+    assert(m("entries_total") === 204)
     // golden split: 145 public entries of which 121 are web100; 59 private
     // (all web100) — the web100-only counts mirror embargo_file_total
-    assert(m.getAs[Long]("files_public") === 121)
-    assert(m.getAs[Long]("files_private") === 59)
-    assert(m.getAs[Long]("bytes_public") > 0 && m.getAs[Long]("bytes_private") > 0)
+    assert(m("files_public") === 121)
+    assert(m("files_private") === 59)
+    assert(m("bytes_public") > 0 && m("bytes_private") > 0)
   }
 
   test("A1: ipv6_errors counts names with an _IP_ span that fails normalization") {
@@ -115,24 +118,57 @@ class UnembargoSpec extends AnyFunSuite with SparkSuite with TempDirs with JobCo
     ).toDF("name", "size", "route")
       .withColumn("local_ip",
         graft.functions.IpFunctions.local_ip(graft.functions.NameFunctions.basename(col("name"))))
-    val observed = Metrics.observeRouted(routed)
-    observed.collect()
-    val m = observed.queryExecution.observedMetrics("embargo_metrics")
-    assert(m.getAs[Long]("ipv6_errors") === 1)
-    assert(m.getAs[Long]("entries_total") === 4)
+    // the tally over the four rows, as one write task sums it
+    val counts = new Array[Long](Metrics.RoutedTally.keys.length)
+    routed.collect().foreach(Metrics.RoutedTally.add(_, counts))
+    val m = Metrics.RoutedTally.keys.zip(counts).toMap
+    assert(m("ipv6_errors") === 1)
+    assert(m("entries_total") === 4)
+  }
+
+  test("A1: split counts are pinned for syd02 and for an empty split") {
+    assert(splitCounts(TarQueries.Fixture2Tgz, 20170315) === Map(
+      "entries_total" -> 10L, "files_public" -> 3L, "files_private" -> 6L,
+      "bytes_public" -> 621L, "bytes_private" -> 1159L, "ipv6_errors" -> 1L))
+    // an archive with no entries: every counter is present, at 0
+    val empty = tempDir("graft-a1-empty").resolve("20170315T000000Z-empty-sidestream-0000.tgz")
+    val tar = new org.apache.commons.compress.archivers.tar.TarArchiveOutputStream(
+      new org.apache.commons.compress.compressors.gzip.GzipCompressorOutputStream(
+        Files.newOutputStream(empty)))
+    tar.close()
+    assert(splitCounts(empty.toString, 20170315) ===
+      Metrics.RoutedTally.keys.map(_ -> 0L).toMap)
+  }
+
+  test("A1: the write task's counts equal the column definitions on every testdata archive") {
+    import org.apache.spark.sql.functions._
+    import graft.functions.NameFunctions.basename
+    import graft.model.Schemas.{RoutePrivate, RoutePublic}
+    val wl = Whitelist.fromText(spark, TarQueries.FixtureWhitelist)
+    val archives = Seq(TarQueries.FixtureTgz, TarQueries.Fixture2Tgz,
+      new java.io.File(TarQueries.FixtureTgz).getParent +
+        "/20160102T000000Z-mlab3-sin01-sidestream-0000.tgz")
+    for (tgz <- archives; cutoff <- Seq(20160101, 20170315, 20170317)) {
+      // the counter definitions as column aggregates over the routed rows
+      val web100 = basename(col("name")).contains("web100")
+      val expected = EmbargoSplit.route(TgzSource.entries(spark, tgz), wl, cutoff).agg(
+        count(lit(1)).as("entries_total"),
+        count(when(web100 && col("route") === RoutePublic, 1)).as("files_public"),
+        count(when(web100 && col("route") === RoutePrivate, 1)).as("files_private"),
+        sum(when(col("route") === RoutePublic, col("size")).otherwise(0L)).as("bytes_public"),
+        sum(when(col("route") === RoutePrivate, col("size")).otherwise(0L)).as("bytes_private"),
+        count(when(size(split(basename(col("name")), "_")) >= 3
+          && length(col("local_ip")) === 0, 1)).as("ipv6_errors")).head()
+      val want = expected.schema.fieldNames.map(f => f -> expected.getAs[Long](f)).toMap
+      assert(splitCounts(tgz, cutoff) === want, s"$tgz at $cutoff")
+    }
   }
 
   test("A1 export: prometheusText of an observed row is the exact exposition text") {
-    import graft.ops.EmbargoSplit
-    val entries = TgzSource.entries(spark, TarQueries.FixtureTgz)
-    val wl = TgzSource.whitelist(spark, TarQueries.FixtureWhitelist)
-    val observed =
-      Metrics.observeRouted(EmbargoSplit.route(entries, wl, TarQueries.FixtureCutoff))
-    observed.collect()
-    val m = observed.queryExecution.observedMetrics("embargo_metrics")
-    // scrape-format exposition of the row (metrics.go:79-102's /metrics
+    val m = splitCounts(TarQueries.FixtureTgz, TarQueries.FixtureCutoff)
+    // scrape-format exposition of the counts (metrics.go:79-102's /metrics
     // handler): exact text, so names/labels/format are pinned
-    val text = Metrics.prometheusText(Metrics.counts(m))
+    val text = Metrics.prometheusText(m)
     val expectFile =
       "# HELP embargo_file_total Number of web100 sidestream files that were processed by embargo app engine.\n" +
       "# TYPE embargo_file_total counter\n" +
@@ -141,7 +177,7 @@ class UnembargoSpec extends AnyFunSuite with SparkSuite with TempDirs with JobCo
     assert(text.startsWith(expectFile), s"exposition drifted:\n$text")
     assert(text.contains("# TYPE embargo_ipv6_errors_total counter"))
     assert(text.contains("""graft_entries_total{dataset="sidestream"} 204"""))
-    // no promotion in a split's row: that family is absent, not 0
+    // no promotion in a split's counts: that family is absent, not 0
     assert(!text.contains("unembargo_tar_total"))
     assert(text.linesIterator.forall(l =>
       l.startsWith("#") || l.matches("""[a-z0-9_]+\{[^}]*\} \d+""")),
