@@ -20,7 +20,8 @@ import graft.model.Schemas
   *
   * Spark-first shape: a `mapPartitions` writer over routed entry rows.
   * [[TgzSource]] produces each archive's entries contiguously and in order
-  * inside one task, so the whole split pipeline
+  * inside one task (its `tgz` scan plans one input partition per archive),
+  * so the whole split pipeline
   * (scan → explode → route → repack) runs shuffle-free: this sink just
   * consumes consecutive runs of rows per archive and keeps two tar writers
   * (public/private) open at a time, exactly the reference's write loop but
@@ -34,7 +35,8 @@ import graft.model.Schemas
   * Output is published with a write-tmp-then-commit protocol: every task
   * writes `<root>/_tmp-<call>/<final>.p<partition>.a<attempt>` — staging
   * private to the call, so concurrent calls into one root never see or
-  * delete each other's files — and, once ALL its writers have closed
+  * delete each other's files, made by the task's first `create` and never
+  * by the driver — and, once ALL its writers have closed
   * cleanly, returns a [[StagedFile]] per file and its [[Tally]] sums. Spark
   * delivers exactly one result per partition, from the attempt that
   * succeeded, so the reports name the winners and the counts are theirs:
@@ -105,19 +107,28 @@ object TgzSink {
   def writeSplit(routed: Dataset[Row], publicDir: String, privateDir: String,
                  tally: Tally = NoTally): Map[String, Long] = {
     val conf = bridge.sessionHadoopConf(routed.sparkSession)
-    writeSplit(routed, publicDir, privateDir,
-      CommitProtocol.forPath(publicDir, conf),
-      CommitProtocol.forPath(privateDir, conf), tally)
+    write(routed, publicDir, privateDir, CommitProtocol.forPath(publicDir, conf),
+      CommitProtocol.forPath(privateDir, conf), tally, conf)
   }
 
   /** [[writeSplit]] into two stores with an explicit protocol per root. */
   def writeSplit(routed: Dataset[Row], publicDir: String, privateDir: String,
                  pubProtocol: CommitProtocol, privProtocol: CommitProtocol,
-                 tally: Tally): Map[String, Long] = {
-    // session conf captured ONCE on the driver and shipped — a fresh
-    // `new Configuration()` in the task would drop spark.hadoop.* settings
-    // (object-store credentials, fs impls) and silently write elsewhere
-    val conf = bridge.sessionHadoopConf(routed.sparkSession)
+                 tally: Tally): Map[String, Long] =
+    write(routed, publicDir, privateDir, pubProtocol, privProtocol, tally,
+      bridge.sessionHadoopConf(routed.sparkSession))
+
+  /** The split's write job and commit, with the session conf `conf`
+    * captured ONCE on the driver and shipped: a fresh `new Configuration()`
+    * in the task would drop spark.hadoop.* settings (object-store
+    * credentials, fs impls) and silently write elsewhere.
+    *
+    * The driver makes no staging dir: a task's first `create` makes its
+    * parents, so a split that writes no file leaves no `_tmp-*` dir.
+    */
+  private def write(routed: Dataset[Row], publicDir: String, privateDir: String,
+                    pubProtocol: CommitProtocol, privProtocol: CommitProtocol,
+                    tally: Tally, conf: Configuration): Map[String, Long] = {
     val sconf = new SerializableHadoopConf(conf)
     val callId = java.util.UUID.randomUUID.toString
     // one target when both halves share a root; the public half always
@@ -177,7 +188,6 @@ object TgzSink {
       // reported only now, with every writer closed
       Iterator.single(TaskReport(staged.toSeq, counts.toSeq))
     }(reportEncoder)
-    targets.foreach(t => t.staging.getFileSystem(conf).mkdirs(t.staging))
     val reports = try written.collect().toSeq
     catch { case e: Throwable => sweep(targets, conf); throw e }
 
@@ -197,8 +207,8 @@ object TgzSink {
     * and always remove the staging dirs — unreported files (attempts that
     * died or lost) go with them. [[CopyCommit]] streams through the driver.
     *
-    * Driver state: two reports per input archive. The scan's file index
-    * already holds one `FileStatus` per input archive on the driver, so
+    * Driver state: two reports per input archive. The scan's listing
+    * already holds one input partition per archive on the driver, so
     * the reports add no new class of driver state.
     */
   private[io] def commit(targets: Seq[Target], reports: Seq[StagedFile],

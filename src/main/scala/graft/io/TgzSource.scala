@@ -4,8 +4,7 @@ import java.io.{BufferedInputStream, ByteArrayInputStream, InputStream}
 
 import org.apache.commons.compress.archivers.tar.TarArchiveInputStream
 import org.apache.commons.compress.compressors.gzip.GzipCompressorInputStream
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions.col
 
 import graft.model.TarEntry
@@ -13,12 +12,16 @@ import graft.model.TarEntry
 /** S4 — the `.tgz` record scan (`/root/reference/embargo.go:125-173`):
   * one archive row explodes into many [[TarEntry]] rows.
   *
-  * Spark-first shape: a `binaryFile` scan supplies (path, content) rows —
-  * partition discovery, pathGlobFilter pushdown (P1) and task scheduling are
-  * Catalyst's — and a `flatMap` streams tar entries out of each archive with
-  * commons-compress. The explode is narrow (no shuffle): every entry of an
-  * archive is produced inside the task that read it, ordered by `ordinal`,
-  * which is what lets [[TgzSink]] repack without a shuffle.
+  * Spark-first shape: a batch scan reads through the DSv2 `tgz` source
+  * ([[TgzTableProvider]]): one input partition per archive, listed on the
+  * driver as the `binaryFile` reader lists (globs, a directory's own
+  * files, hidden names skipped, `pathGlobFilter`), and each archive's tar entries
+  * streamed out of its Hadoop stream with commons-compress. The explode is
+  * narrow (no shuffle): every entry of an archive is produced inside the
+  * task that read it, ordered by `ordinal`, which is what lets [[TgzSink]]
+  * repack without a shuffle. Streaming micro-batches, which arrive as
+  * `binaryFile` rows, explode through [[explodeEntries]], the same entry
+  * reader.
   *
   * Scale notes (100 TB): parallelism is per-archive — exactly the unit the
   * reference processes serially (`/root/reference/embargo.go:278-291`); a
@@ -30,41 +33,27 @@ import graft.model.TarEntry
   */
 object TgzSource {
 
-  /** Explode every `.tgz` under `path` (file, dir, or glob) into entries.
-    *
-    * A glob is expanded here, on the driver, and its matches are loaded as
-    * concrete paths — the same root paths the reader's own expansion
-    * yields. Handed the glob itself, the reader first checks it for a
-    * streaming sink's metadata dir by stat-ing it as a literal path, which
-    * fails and logs a WARN with a full `FileNotFoundException` stack on
-    * every call. A glob that matches nothing is passed through unchanged,
-    * so it fails exactly as before.
+  /** Derived once: deriving an encoder runs Scala reflection under
+    * process-wide locks, so per-call derivation queues concurrent splits.
+    */
+  private val entryEncoder = Encoders.product[TarEntry]
+  private val binaryRowEncoder = Encoders.tuple(Encoders.STRING, Encoders.BINARY)
+
+  /** Explode every `.tgz` under `path` (file, dir, or glob) into entries:
+    * one `tgz` scan, typed with [[entryEncoder]]. A path that matches no
+    * file fails when the scan is planned.
     */
   def entries(spark: SparkSession, path: String,
-              globFilter: String = "*.tgz"): Dataset[TarEntry] = {
-    val paths =
-      if (!path.exists("{}[]*?\\".contains(_))) Seq(path)
-      else {
-        val p = new Path(path)
-        Option(p.getFileSystem(spark.sparkContext.hadoopConfiguration).globStatus(p))
-          .map(_.toSeq.map(_.getPath.toString)).filter(_.nonEmpty)
-          .getOrElse(Seq(path))
-      }
-    explodeEntries(
-      spark.read.format("binaryFile")
-        .option("pathGlobFilter", globFilter)
-        .load(paths: _*))
-  }
+              globFilter: String = "*.tgz"): Dataset[TarEntry] =
+    spark.read.format("tgz").option("pathGlobFilter", globFilter).load(path)
+      .as(entryEncoder)
 
-  /** Explode a DataFrame of `(path, content)` binary-file rows — the shared
-    * core for batch scans and streaming micro-batches (ST1).
+  /** Explode a DataFrame of `(path, content)` binary-file rows — the core
+    * for streaming micro-batches (ST1).
     */
-  def explodeEntries(bin: DataFrame): Dataset[TarEntry] = {
-    import bin.sparkSession.implicits._
-    bin.select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (p, bytes) => readTgz(p, bytes) }
-  }
+  def explodeEntries(bin: DataFrame): Dataset[TarEntry] =
+    bin.select(col("path"), col("content")).as(binaryRowEncoder)
+      .flatMap { case (p, bytes) => readTgz(p, bytes) }(entryEncoder)
 
   /** P2 — regular-file filter (`/root/reference/embargo.go:158-160`). */
   def regularFiles(es: Dataset[TarEntry]): Dataset[TarEntry] =

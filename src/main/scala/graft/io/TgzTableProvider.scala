@@ -1,8 +1,9 @@
 package graft.io
 
+import java.io.FileNotFoundException
 import java.util
 
-import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.fs.{FileStatus, GlobFilter, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -32,8 +33,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *   - entries decode lazily, one at a time, inside the partition reader —
   *     memory is O(largest entry), never O(archive).
   *
-  * Options: `pathGlobFilter` (default `*.tgz`) filters directory listings,
-  * matching the `binaryFile` option of the same name.
+  * Options: `pathGlobFilter` (default `*.tgz`) filters the listed files,
+  * matching the `binaryFile` option of the same name. Paths resolve as
+  * `binaryFile` resolves them (see [[TgzTableProvider.listArchives]]), so
+  * [[TgzSource.entries]] reads through this source.
   */
 class TgzTableProvider extends TableProvider with DataSourceRegister {
 
@@ -62,21 +65,28 @@ object TgzTableProvider {
     StructField("typeflag", StringType, nullable = false),
     StructField("content", BinaryType)))
 
-  /** Resolve the `.load(...)` paths to concrete archive files: globs
-    * expand, directories list non-recursively through `pathGlobFilter`.
+  /** Resolve the `.load(...)` paths to archive files the way the
+    * `binaryFile` reader resolves the paths of an unpartitioned layout:
+    * globs expand, a matched directory contributes the files directly in
+    * it, and every file — a literal one too — must have a non-hidden name
+    * ([[FsOps.hidden]]), match `pathGlobFilter` and hold bytes. A path
+    * that matches nothing fails, as the file sources' `PATH_NOT_FOUND`
+    * does, rather than scanning as empty.
     */
   private[io] def listArchives(paths: Seq[String], glob: String): Seq[FileStatus] = {
     val conf = SparkSession.active.sessionState.newHadoopConf()
-    val filter = new org.apache.hadoop.fs.GlobFilter(glob)
+    val filter = new GlobFilter(glob)
+    def archive(s: FileStatus) = s.isFile && s.getLen > 0 &&
+      !FsOps.hidden(s.getPath.getName) && filter.accept(s.getPath)
     paths.flatMap { p =>
       val path = new Path(p)
       val fs = path.getFileSystem(conf)
-      val matched = Option(fs.globStatus(path)).map(_.toSeq).getOrElse(Seq.empty)
-      matched.flatMap {
-        case d if d.isDirectory =>
-          fs.listStatus(d.getPath).toSeq.filter(s => s.isFile && filter.accept(s.getPath))
-        case f => Seq(f)
-      }
+      val matched = Option(fs.globStatus(path)).map(_.toSeq).getOrElse(Nil)
+      if (matched.isEmpty) throw new FileNotFoundException(s"Path does not exist: $p")
+      matched.flatMap { s =>
+        if (s.isDirectory) fs.listStatus(s.getPath).toSeq.sortBy(_.getPath.toString)
+        else Seq(s)
+      }.filter(archive)
     }
   }
 }

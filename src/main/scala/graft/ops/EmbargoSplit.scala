@@ -13,7 +13,7 @@ import graft.model.{Schemas, TarEntry}
   * J1 whitelist membership → repack per-archive public/private pairs.
   *
   * The whole job is one narrow stage: the route column is a projection
-  * (membership is an `InSet` over the driver-held [[Whitelist]]), so each
+  * (membership is an [[InWhitelist]] test of the driver-held [[Whitelist]]), so each
   * archive's entries stay in the task that read them (order intact),
   * [[TgzSink.writeSplit]] needs no shuffle and the day-batch parallelizes
   * purely by archive — the unit the reference looped over serially
@@ -27,6 +27,11 @@ object EmbargoSplit {
     * file, OR its extracted local IP (F1) is whitelisted. `local_ip` is
     * coalesced through `""` so the OR never sees a null under
     * three-valued logic.
+    *
+    * The plan is one filter and one projection: the entry columns in
+    * order, then `local_ip` and `route`. The basename and local IP each
+    * appear twice in it and are computed once per row by the projection's
+    * common-subexpression elimination.
     *
     * The age arm reads the ARCHIVE's date, never the entry's own: the
     * reference computes `moreThanOneYear` once per archive — from the day
@@ -58,16 +63,16 @@ object EmbargoSplit {
     * local_ip.
     */
   def route(entries: Dataset[TarEntry], whitelist: Whitelist,
-            cutoffDateInt: Int): DataFrame =
-    entries.filter(col("typeflag") === "0")
-      .withColumn("base", basename(col("name")))
-      .withColumn("local_ip", coalesce(local_ip(col("base")), lit("")))
-      .withColumn("route",
-        when(fileDateInt(basename(col("archive"))) < lit(cutoffDateInt)
-          || !col("base").contains("web100")
-          || whitelist.contains(col("local_ip")), Schemas.RoutePublic)
-          .otherwise(Schemas.RoutePrivate))
-      .drop("base")
+            cutoffDateInt: Int): DataFrame = {
+    val base = basename(col("name"))
+    val localIp = coalesce(local_ip(base), lit(""))
+    entries.where(col("typeflag") === "0").select(col("*"),
+      localIp.as("local_ip"),
+      when(fileDateInt(basename(col("archive"))) < lit(cutoffDateInt)
+        || !base.contains("web100")
+        || whitelist.contains(entries.sparkSession, localIp), Schemas.RoutePublic)
+        .otherwise(Schemas.RoutePrivate).as("route"))
+  }
 
   /** [[route]] with the whitelist as a DataFrame with one `wip` column
     * (see [[TgzSource.whitelist]]), loaded by [[Whitelist.fromFrame]]'s

@@ -18,7 +18,7 @@ import graft.io.TgzSource
   *   LATERAL VIEW explode_tar(path, content) t
   * }}}
   *
-  * The DataFrame path ([[TgzSource.entries]], a typed flatMap) remains the
+  * The DataFrame path ([[TgzSource.entries]], a `tgz` source scan) remains the
   * primary API; this Generator shares its streaming reader, so entries are
   * decoded lazily per row group, never materialized per archive.
   * `CodegenFallback` is fine here — tar decode is I/O-bound; the generated

@@ -707,11 +707,10 @@ object TarQueries {
 
   /** S16 — the DSv2 `tgz` format end-to-end: the same raw manifest as s4
     * but scanned through `spark.read.format("tgz")`
-    * ([[graft.io.TgzTableProvider]]) instead of binaryFile+flatMap. The
-    * projection omits `content`, so the scan's pruned path (payloads
-    * skipped, headers only) is what actually runs; staged to parquet for
-    * the DuckDB hash-check, which pins both the row set AND that the two
-    * scan paths agree.
+    * ([[graft.io.TgzTableProvider]]) directly. The projection omits
+    * `content`, so the scan's pruned path (payloads skipped, headers only)
+    * is what actually runs; staged to parquet for the DuckDB hash-check,
+    * which pins both the row set AND that the pruned and full scans agree.
     */
   def tarScanDsv2(spark: SparkSession, sfDir: String): DataFrame = {
     spark.read.format("tgz").load(FixtureTgz)

@@ -50,6 +50,43 @@ object FreezingFileSystem {
     spark.sparkContext.hadoopConfiguration.set("fs.frz.impl", classOf[FreezingFileSystem].getName)
 }
 
+/** A local FileSystem (`mkc://`) that counts the `mkdirs` calls made on
+  * one thread, [[MkdirsCountingFileSystem.watched]]: the driver's, while
+  * the write tasks run on others.
+  */
+class MkdirsCountingFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getScheme: String = "mkc"
+  override def getUri: java.net.URI = java.net.URI.create("mkc:///")
+  override def mkdirs(f: org.apache.hadoop.fs.Path,
+                      permission: org.apache.hadoop.fs.permission.FsPermission): Boolean = {
+    if (Thread.currentThread() eq MkdirsCountingFileSystem.watched)
+      MkdirsCountingFileSystem.calls.incrementAndGet()
+    super.mkdirs(f, permission)
+  }
+  override def mkdirs(f: org.apache.hadoop.fs.Path): Boolean = {
+    if (Thread.currentThread() eq MkdirsCountingFileSystem.watched)
+      MkdirsCountingFileSystem.calls.incrementAndGet()
+    super.mkdirs(f)
+  }
+}
+
+object MkdirsCountingFileSystem {
+  @volatile var watched: Thread = _
+  val calls = new java.util.concurrent.atomic.AtomicInteger()
+
+  /** Register the `mkc` scheme with `spark`'s Hadoop conf. */
+  def register(spark: org.apache.spark.sql.SparkSession): Unit =
+    spark.sparkContext.hadoopConfiguration.set("fs.mkc.impl", classOf[MkdirsCountingFileSystem].getName)
+
+  /** The `mkdirs` calls `body` makes on the calling thread. */
+  def countedOnThisThread(body: => Unit): Int = {
+    calls.set(0)
+    watched = Thread.currentThread()
+    try body finally watched = null
+    calls.get
+  }
+}
+
 /** Commit-protocol spec for [[TgzSink]]: only the staged files the write
   * job's tasks reported are publishable — an attempt that died mid-write
   * (no report) must never beat a complete attempt, whatever its attempt id.
@@ -60,8 +97,8 @@ class TgzSinkCommitSpec extends AnyFunSuite with SparkSuite with TempDirs with J
 
   private def conf() = org.apache.spark.sql.graft.bridge.sessionHadoopConf(spark)
 
-  /** One call's staging under `outDir`, created empty — the layout
-    * `writeSplit` makes before its write job.
+  /** One call's staging under `outDir`, created empty — the layout a
+    * `writeSplit`'s write tasks leave before its commit.
     */
   private def stagedTarget(outDir: String,
                            protocol: CommitProtocol = RenameCommit): TgzSink.Target = {
@@ -297,6 +334,27 @@ class TgzSinkCommitSpec extends AnyFunSuite with SparkSuite with TempDirs with J
     assert(CommitProtocol.forPath("s3a://bucket/dir", conf) === CopyCommit)
     assert(CommitProtocol.forPath("/plain/posix/dir", conf) === RenameCommit)
     assert(CommitProtocol.forPath("hdfs://nn/dir", conf) === RenameCommit)
+  }
+
+  test("writeSplit makes no dir from the driver: the tasks' creates make the staging") {
+    MkdirsCountingFileSystem.register(spark)
+    val out = tempDir("graft-mkc").toString
+    val routed = fixtureRouted()
+    val driverMkdirs = MkdirsCountingFileSystem.countedOnThisThread {
+      TgzSink.writeSplit(routed, s"mkc://$out/pub", s"mkc://$out/priv")
+    }
+    assert(driverMkdirs === 0)
+    assert(entryCount(s"$out/pub/$fixtureBase") === 145)
+    assert(entryCount(s"$out/priv/${fixtureBase.replace(".tgz", "-e.tgz")}") === 59)
+    assert(stagingEntries(s"$out/pub").isEmpty && stagingEntries(s"$out/priv").isEmpty)
+  }
+
+  test("an entry-less split publishes nothing and leaves no staging dir") {
+    val outDir = tempDir("graft-empty").toString
+    val counts = TgzSink.writeSplit(fixtureRouted().where("false"), outDir,
+      s"$outDir/private", graft.ops.Metrics.RoutedTally)
+    assert(counts.values.forall(_ == 0L))
+    assert(names(outDir).isEmpty) // no `_tmp-*`, and no private root either
   }
 
   test("commit still rejects a final name marked by two partitions") {

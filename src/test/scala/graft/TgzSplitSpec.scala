@@ -141,6 +141,30 @@ class TgzSplitSpec extends AnyFunSuite with SparkSuite with TempDirs {
     assert(offending.isEmpty, s"route executed ${offending.mkString(", ")}:\n$plan")
   }
 
+  test("route's plan description stays the same size from a 2-entry to a 65,000-entry whitelist") {
+    import org.apache.spark.sql.execution.ExtendedMode
+    val listed = scala.io.Source.fromFile(FixtureWhitelist).getLines().toVector
+    // the fixture's list plus addresses no file names, up to 65,000 entries
+    val big = listed ++ Iterator.from(0).map(i => s"10.${i >> 16}.${(i >> 8) & 255}.${i & 255}")
+      .take(65000 - listed.size)
+    val entries = TgzSource.entries(spark, FixtureTgz)
+    val small = EmbargoSplit.route(entries, Whitelist(Iterator("10.0.0.1", "10.0.0.2")), FixtureCutoff)
+    val large = EmbargoSplit.route(entries, Whitelist(big.iterator), FixtureCutoff)
+    val sizes = Seq(small, large).map(_.queryExecution.explainString(ExtendedMode).length)
+    assert(math.abs(sizes(1) - sizes(0)) < 1024, s"explain sizes $sizes")
+    // the 65,000-entry list routes as the fixture's own, compiled or interpreted
+    def routes(df: org.apache.spark.sql.DataFrame) =
+      df.select("ordinal", "route").collect().map(r => (r.getLong(0), r.getString(1))).toSeq.sorted
+    val expected = routes(EmbargoSplit.route(entries, Whitelist.fromText(spark, FixtureWhitelist),
+      FixtureCutoff))
+    assert(expected.map(_._2).distinct.sorted === Seq(Schemas.RoutePrivate, Schemas.RoutePublic))
+    assert(routes(large) === expected)
+    val keys = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
+    keys.zip(Seq("false", "NO_CODEGEN")).foreach { case (k, v) => spark.conf.set(k, v) }
+    try assert(routes(EmbargoSplit.route(entries, Whitelist(big.iterator), FixtureCutoff)) === expected)
+    finally keys.foreach(spark.conf.unset)
+  }
+
   test("an empty whitelist routes every web100 entry newer than the cutoff private") {
     import spark.implicits._
     val entries = TgzSource.entries(spark, FixtureTgz)

@@ -1,30 +1,84 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.io.TgzSource
 import graft.queries.TarQueries
 
-/** DSv2 `tgz` format spec: `spark.read.format("tgz")` must agree with the
-  * binaryFile+flatMap path ([[TgzSource.entries]]) row for row on the
-  * reference fixture, prune the payload read when `content` is not
-  * projected, and plan one partition per archive.
+/** DSv2 `tgz` format spec: `spark.read.format("tgz")` must agree row for
+  * row with an independent oracle — [[TgzSource.explodeEntries]] over a
+  * `binaryFile` read — on the reference fixture, list paths as the
+  * `binaryFile` reader lists them, prune the payload read when `content`
+  * is not projected, and plan one partition per archive.
   */
 class TgzTableProviderSpec extends AnyFunSuite with SparkSuite with TempDirs {
+
+  private val rowCols = Seq("archive", "ordinal", "name", "size", "mode",
+    "cast(modTime as long) mt", "typeflag", "xxhash64(content) ch")
+
+  private def rows(df: DataFrame): Seq[Seq[Any]] =
+    df.selectExpr(rowCols: _*).collect().map(_.toSeq).toSeq
+      .sortBy(r => (r.head.asInstanceOf[String], r(1).asInstanceOf[Long]))
+
+  /** What `binaryFile` reads from `path`, exploded by the streaming core. */
+  private def binaryFileOracle(path: String, glob: String = "*.tgz"): DataFrame =
+    TgzSource.explodeEntries(spark.read.format("binaryFile")
+      .option("pathGlobFilter", glob).load(path)).toDF()
 
   test("format(\"tgz\") row-set matches TgzSource.entries, content included") {
     val v2 = spark.read.format("tgz").load(TarQueries.FixtureTgz)
     assert(v2.columns.toSeq === Seq("archive", "ordinal", "name", "size",
       "mode", "modTime", "typeflag", "content"))
-    val v2Rows = v2.selectExpr("ordinal", "name", "size", "mode",
-      "cast(modTime as long) mt", "typeflag", "xxhash64(content) ch")
-      .collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long])
-    val v1Rows = TgzSource.entries(spark, TarQueries.FixtureTgz)
-      .selectExpr("ordinal", "name", "size", "mode",
-        "cast(modTime as long) mt", "typeflag", "xxhash64(content) ch")
-      .collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long])
-    assert(v1Rows.length === 205) // the fixture's golden entry count
-    assert(v2Rows.toSeq === v1Rows.toSeq)
+    val oracle = rows(binaryFileOracle(TarQueries.FixtureTgz))
+    assert(oracle.length === 205) // the fixture's golden entry count
+    assert(rows(v2) === oracle)
+    assert(rows(TgzSource.entries(spark, TarQueries.FixtureTgz).toDF()) === oracle)
+  }
+
+  test("tgz lists paths as binaryFile does: a dir's own files, hidden names, literal files") {
+    val dir = tempDir("tgz-list").toFile
+    val src = new java.io.File(TarQueries.FixtureTgz).toPath
+    Seq("a.tgz", "sub/b.tgz", "sub/deeper/c.tgz", "_hidden/d.tgz", ".dot/e.tgz",
+        "_f.tgz", ".g.tgz", "h.tar.gz").foreach { n =>
+      val dst = new java.io.File(dir, n).toPath
+      java.nio.file.Files.createDirectories(dst.getParent)
+      java.nio.file.Files.copy(src, dst)
+    }
+    java.nio.file.Files.writeString(new java.io.File(dir, "ignore.txt").toPath, "not a tarball")
+    java.nio.file.Files.createFile(new java.io.File(dir, "empty.tgz").toPath)
+    def archives(df: DataFrame): Seq[String] =
+      df.select("archive").distinct().collect().map(_.getString(0)).sorted.toSeq
+    val d = dir.getAbsolutePath
+    for ((path, glob) <- Seq(d -> "*.tgz", s"$d/*" -> "*.tgz", s"$d/sub" -> "*.tgz",
+        s"$d/_hidden" -> "*.tgz", s"$d/_f.tgz" -> "*.tgz", s"$d/.g.tgz" -> "*.tgz",
+        s"$d/h.tar.gz" -> "*.tgz", s"$d/h.tar.gz" -> "*.gz", s"$d/empty.tgz" -> "*.tgz",
+        s"$d/{a,_f}.tgz" -> "*.tgz")) {
+      val expected = archives(binaryFileOracle(path, glob))
+      assert(archives(spark.read.format("tgz").option("pathGlobFilter", glob).load(path)) ===
+        expected, s"$path $glob")
+      assert(archives(TgzSource.entries(spark, path, glob).toDF()) === expected, s"$path $glob")
+    }
+    // non-vacuity: each rule showed — a dir's own files only, hidden and
+    // empty files dropped, a glob-matched hidden dir listed, the filter
+    // applied to a literal file
+    def rel(path: String, glob: String = "*.tgz") =
+      archives(TgzSource.entries(spark, path, glob).toDF()).map(a => a.substring(a.indexOf(d) + d.length))
+    assert(rel(d) === Seq("/a.tgz"))
+    assert(rel(s"$d/*") === Seq("/.dot/e.tgz", "/_hidden/d.tgz", "/a.tgz", "/sub/b.tgz"))
+    assert(rel(s"$d/h.tar.gz", "*.gz") === Seq("/h.tar.gz"))
+    assert(rel(s"$d/h.tar.gz").isEmpty && rel(s"$d/_f.tgz").isEmpty && rel(s"$d/empty.tgz").isEmpty)
+  }
+
+  test("a path that matches nothing fails the scan, as it fails binaryFile") {
+    val d = tempDir("tgz-missing").toString
+    for (path <- Seq(s"$d/nope.tgz", s"$d/none-*.tgz")) {
+      intercept[org.apache.spark.sql.AnalysisException](binaryFileOracle(path).count())
+      for (df <- Seq(spark.read.format("tgz").load(path), TgzSource.entries(spark, path).toDF())) {
+        val e = intercept[java.io.FileNotFoundException](df.count())
+        assert(e.getMessage.contains(path))
+      }
+    }
   }
 
   test("column pruning reaches the scan: no content -> payloads skipped") {
