@@ -61,10 +61,11 @@ object TgzSink {
   }
 
   /** One file a task staged and closed: `tmpName` under
-    * `targets(target).staging`, to be published as `fin`.
+    * `targets(target).staging`, to be published as `fin`. `tmpName` ends
+    * in `.p<partition>.a<attempt>`, so two partitions' files for one `fin`
+    * are two distinct reports.
     */
-  private[io] final case class StagedFile(target: Int, fin: String,
-                                          tmpName: String, partition: Int)
+  private[io] final case class StagedFile(target: Int, fin: String, tmpName: String)
 
   /** Counters a write task sums over the rows it writes, slot `i` named
     * `keys(i)`: `add` adds one row. What a slot counts is the caller's. */
@@ -152,7 +153,7 @@ object TgzSink {
       var priv: TarWriter = null
 
       def open(i: Int, name: String): TarWriter = {
-        staged += StagedFile(i, name, name + taskSuffix, tc.partitionId())
+        staged += StagedFile(i, name, name + taskSuffix)
         new TarWriter(fss(i).create(
           new Path(targets(i).staging, name + taskSuffix), true))
       }

@@ -3,33 +3,35 @@ package graft.io
 import java.io.FileNotFoundException
 import java.util
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, GlobFilter, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
+
+import graft.model.Schemas
 
 /** DataSource V2 `tgz` format: `spark.read.format("tgz").load(path)` scans
-  * `.tgz` archives directly — no `binaryFile` + `flatMap`, no
-  * `LATERAL VIEW explode_tar` — with the [[graft.model.TarEntry]] schema
+  * `.tgz` archives directly — no `binaryFile` read, no
+  * `LATERAL VIEW explode_tar` — as [[Schemas.tarEntrySchema]] rows
   * (SURVEY §4's optional DSv2 surface; the reference's scan loop is
-  * `/root/reference/embargo.go:125-173`).
+  * `/root/reference/embargo.go:125-173`). Each partition reader hands its
+  * archive's stream and the pruned schema to [[TgzSource.rows]], the one
+  * tar-entry decoder.
   *
   * Scale shape, mirrored from [[TgzSource]]:
   *   - **one InputPartition per archive** — the task unit the reference
   *     processes serially; 1000 executors split 1000 tarballs at once. A
   *     gzip stream has no split points, so sub-file splitting buys nothing.
   *   - **column pruning reaches the tar reader**: a projection without
-  *     `content` streams PAST every payload (tar knows each entry's size,
-  *     so skipping is a seek, not an inflate+discard) — a name/size
-  *     manifest over 100 TB of archives decompresses headers only.
+  *     `content` reads no payload into memory; the tar reader skips each
+  *     one by its header's size (gzip has no index, so the skipped bytes
+  *     are still inflated, never copied out).
   *   - entries decode lazily, one at a time, inside the partition reader —
   *     memory is O(largest entry), never O(archive).
   *
@@ -45,7 +47,7 @@ class TgzTableProvider extends TableProvider with DataSourceRegister {
   override def supportsExternalMetadata(): Boolean = false
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    TgzTableProvider.Schema
+    Schemas.tarEntrySchema
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: util.Map[String, String]): Table =
@@ -53,17 +55,6 @@ class TgzTableProvider extends TableProvider with DataSourceRegister {
 }
 
 object TgzTableProvider {
-
-  /** The [[graft.model.TarEntry]] fields, in declaration order. */
-  val Schema: StructType = StructType(Seq(
-    StructField("archive", StringType, nullable = false),
-    StructField("ordinal", LongType, nullable = false),
-    StructField("name", StringType, nullable = false),
-    StructField("size", LongType, nullable = false),
-    StructField("mode", LongType, nullable = false),
-    StructField("modTime", TimestampType),
-    StructField("typeflag", StringType, nullable = false),
-    StructField("content", BinaryType)))
 
   /** Resolve the `.load(...)` paths to archive files the way the
     * `binaryFile` reader resolves the paths of an unpartitioned layout:
@@ -73,8 +64,8 @@ object TgzTableProvider {
     * that matches nothing fails, as the file sources' `PATH_NOT_FOUND`
     * does, rather than scanning as empty.
     */
-  private[io] def listArchives(paths: Seq[String], glob: String): Seq[FileStatus] = {
-    val conf = SparkSession.active.sessionState.newHadoopConf()
+  private[io] def listArchives(paths: Seq[String], glob: String,
+                               conf: Configuration): Seq[FileStatus] = {
     val filter = new GlobFilter(glob)
     def archive(s: FileStatus) = s.isFile && s.getLen > 0 &&
       !FsOps.hidden(s.getPath.getName) && filter.accept(s.getPath)
@@ -96,7 +87,7 @@ private[io] class TgzTable(options: CaseInsensitiveStringMap)
 
   override def name(): String = s"tgz(${TgzScan.paths(options).mkString(",")})"
 
-  override def schema(): StructType = TgzTableProvider.Schema
+  override def schema(): StructType = Schemas.tarEntrySchema
 
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ)
@@ -108,12 +99,12 @@ private[io] class TgzTable(options: CaseInsensitiveStringMap)
 private[io] class TgzScanBuilder(options: CaseInsensitiveStringMap)
     extends ScanBuilder with SupportsPushDownRequiredColumns {
 
-  private var required: StructType = TgzTableProvider.Schema
+  private var required: StructType = Schemas.tarEntrySchema
 
   override def pruneColumns(requiredSchema: StructType): Unit = {
     // preserve source field order regardless of projection order
     val keep = requiredSchema.fieldNames.toSet
-    required = StructType(TgzTableProvider.Schema.fields.filter(f => keep(f.name)))
+    required = StructType(Schemas.tarEntrySchema.fields.filter(f => keep(f.name)))
   }
 
   override def build(): Scan = new TgzScan(options, required)
@@ -144,17 +135,19 @@ private[io] class TgzScan(options: CaseInsensitiveStringMap,
     s"tgz ReadSchema: ${requiredSchema.simpleString}$content"
   }
 
+  /** The session Hadoop conf, built once: the listing and the reader
+    * factory this scan plans both use it.
+    */
+  private lazy val hadoopConf = SparkSession.active.sessionState.newHadoopConf()
+
   override def planInputPartitions(): Array[InputPartition] = {
     val glob = Option(options.get("pathGlobFilter")).getOrElse("*.tgz")
-    TgzTableProvider.listArchives(TgzScan.paths(options), glob)
+    TgzTableProvider.listArchives(TgzScan.paths(options), glob, hadoopConf)
       .map(s => TgzInputPartition(s.getPath.toString): InputPartition).toArray
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val conf = new SerializableHadoopConf(
-      SparkSession.active.sessionState.newHadoopConf())
-    TgzReaderFactory(conf, requiredSchema)
-  }
+  override def createReaderFactory(): PartitionReaderFactory =
+    TgzReaderFactory(new SerializableHadoopConf(hadoopConf), requiredSchema)
 }
 
 /** One archive = one partition: the reference's serial unit of work,
@@ -177,38 +170,15 @@ private[io] class TgzPartitionReader(pathStr: String,
                                      requiredSchema: StructType)
     extends PartitionReader[InternalRow] {
 
-  private val needContent = requiredSchema.fieldNames.contains("content")
-  // per-field writers bound once (not per row): ordinal in the pruned row
-  // -> extractor from the TarEntry
-  private val writers: Array[graft.model.TarEntry => Any] =
-    requiredSchema.fieldNames.map {
-      case "archive"  => (e: graft.model.TarEntry) => UTF8String.fromString(e.archive)
-      case "ordinal"  => (e: graft.model.TarEntry) => e.ordinal
-      case "name"     => (e: graft.model.TarEntry) => UTF8String.fromString(e.name)
-      case "size"     => (e: graft.model.TarEntry) => e.size
-      case "mode"     => (e: graft.model.TarEntry) => e.mode
-      case "modTime"  => (e: graft.model.TarEntry) => DateTimeUtils.fromJavaTimestamp(e.modTime)
-      case "typeflag" => (e: graft.model.TarEntry) => UTF8String.fromString(e.typeflag)
-      case "content"  => (e: graft.model.TarEntry) => e.content
-    }
-
   private lazy val stream = {
     val path = new Path(pathStr)
     path.getFileSystem(conf.value).open(path)
   }
-  private lazy val entries =
-    TgzSource.readTgzStream(pathStr, stream, readContent = needContent)
+  private lazy val rows = TgzSource.rows(pathStr, stream, requiredSchema)
   private var current: InternalRow = _
 
   override def next(): Boolean =
-    if (entries.hasNext) {
-      val e = entries.next()
-      val row = new GenericInternalRow(writers.length)
-      var i = 0
-      while (i < writers.length) { row.update(i, writers(i)(e)); i += 1 }
-      current = row
-      true
-    } else false
+    rows.hasNext && { current = rows.next(); true }
 
   override def get(): InternalRow = current
 

@@ -4,7 +4,8 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.types._
 
-/** A single entry inside a `.tgz` archive.
+/** A single entry inside a `.tgz` archive: the typed form of one
+  * [[Schemas.tarEntrySchema]] row.
   *
   * Mirrors the tar-header fields the reference preserves when re-packing
   * archives (`/root/reference/embargo.go:163-168`: Name, Size, Mode, ModTime,
@@ -28,28 +29,22 @@ final case class TarEntry(
     content: Array[Byte]
 )
 
-/** One M-Lab site row from the public site-IP JSON feed
-  * (`/root/reference/embargo_check.go:28-33`).
-  */
-final case class Site(hostname: String, ipv4: String, ipv6: String)
-
-/** Parsed components of a sidestream inner-file basename such as
-  * `20170315T01:00:00Z_173.205.3.39_0.web100`
-  * (`/root/reference/filename_parser.go:1-38`).
-  * `localIp` is the empty string for old-format (IP-less) or malformed names.
-  */
-final case class ParsedName(name: String, date: String, localIp: String)
-
 object Schemas {
 
-  /** Schema of the site-IP JSON feed (array of Site). */
+  /** Schema of the site-IP JSON feed, an array of `{hostname, ipv4, ipv6}`
+    * objects (`/root/reference/embargo_check.go:28-33`).
+    */
   val siteSchema: StructType = StructType(Seq(
     StructField("hostname", StringType),
     StructField("ipv4", StringType),
     StructField("ipv6", StringType)
   ))
 
-  /** Schema of an exploded tar entry — see [[TarEntry]]. */
+  /** The tar-entry format, declared once: the `tgz` source's table schema,
+    * `explode_tar`'s element schema (less `archive`) and the fields of
+    * [[TarEntry]], in order. [[graft.io.TgzSource.rows]] decodes any
+    * subset of it.
+    */
   val tarEntrySchema: StructType = StructType(Seq(
     StructField("archive", StringType, nullable = false),
     StructField("ordinal", LongType, nullable = false),

@@ -75,8 +75,8 @@ object EmbargoSplit {
   }
 
   /** [[route]] with the whitelist as a DataFrame with one `wip` column
-    * (see [[TgzSource.whitelist]]), loaded by [[Whitelist.fromFrame]]'s
-    * bounded collect.
+    * (such as [[graft.io.Sites.whitelist]] gives), loaded by
+    * [[Whitelist.fromFrame]]'s bounded collect.
     */
   def route(entries: Dataset[TarEntry], whitelist: DataFrame,
             cutoffDateInt: Int): DataFrame =

@@ -123,8 +123,8 @@ object Whitelist {
 
   /** The non-null values of a DataFrame's `wip` column, by a bounded
     * collect (`limit(MaxSize + 1)`): the form every DataFrame whitelist
-    * ([[graft.io.TgzSource.whitelist]], [[graft.io.Sites.whitelist]], the
-    * service's committed refresh store) goes through.
+    * ([[graft.io.Sites.whitelist]], the service's committed refresh store)
+    * goes through.
     */
   def fromFrame(wip: DataFrame): Whitelist =
     apply(wip.select(col("wip")).filter(col("wip").isNotNull)

@@ -1,13 +1,14 @@
 package graft.plans
 
+import java.io.ByteArrayInputStream
+
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.{Expression, Generator}
-import org.apache.spark.sql.catalyst.util.DateTimeUtils
-import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.types.StructType
 
 import graft.io.TgzSource
+import graft.model.Schemas
 
 /** SQL-surface form of the S4 tar explode (SURVEY §2.8: "the one true
   * UDTF"): a Catalyst [[Generator]] so `.tgz` archives can be exploded from
@@ -18,11 +19,14 @@ import graft.io.TgzSource
   *   LATERAL VIEW explode_tar(path, content) t
   * }}}
   *
-  * The DataFrame path ([[TgzSource.entries]], a `tgz` source scan) remains the
-  * primary API; this Generator shares its streaming reader, so entries are
-  * decoded lazily per row group, never materialized per archive.
-  * `CodegenFallback` is fine here — tar decode is I/O-bound; the generated
-  * rows still feed whole-stage-codegen'd consumers.
+  * Its elements are [[Schemas.tarEntrySchema]] without `archive` (the
+  * caller already holds the path), decoded lazily from the payload bytes
+  * by [[TgzSource.rows]], the decoder the `tgz` source scans with. The
+  * DataFrame path ([[TgzSource.entries]], a `tgz` source scan) remains the
+  * primary API; [[TgzSource.explodeEntries]] is this generator over
+  * streaming `binaryFile` batches. `CodegenFallback` is fine here — tar
+  * decode is I/O-bound; the generated rows still feed
+  * whole-stage-codegen'd consumers.
   */
 case class ExplodeTar(path: Expression, content: Expression)
     extends Generator with CodegenFallback {
@@ -33,26 +37,21 @@ case class ExplodeTar(path: Expression, content: Expression)
       newChildren: IndexedSeq[Expression]): ExplodeTar =
     copy(path = newChildren(0), content = newChildren(1))
 
-  override def elementSchema: StructType = StructType(Seq(
-    StructField("ordinal", LongType, nullable = false),
-    StructField("name", StringType, nullable = false),
-    StructField("size", LongType, nullable = false),
-    StructField("mode", LongType, nullable = false),
-    StructField("modTime", TimestampType),
-    StructField("typeflag", StringType, nullable = false),
-    StructField("content", BinaryType)))
+  override def elementSchema: StructType = ExplodeTar.Elements
 
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
     val p = path.eval(input)
     val bytes = content.eval(input)
     if (p == null || bytes == null) Iterator.empty
-    else TgzSource.readTgz(p.asInstanceOf[UTF8String].toString,
-      bytes.asInstanceOf[Array[Byte]]).map { e =>
-      InternalRow(e.ordinal, UTF8String.fromString(e.name), e.size, e.mode,
-        DateTimeUtils.fromJavaTimestamp(e.modTime),
-        UTF8String.fromString(e.typeflag), e.content)
-    }
+    else TgzSource.rows(p.toString,
+      new ByteArrayInputStream(bytes.asInstanceOf[Array[Byte]]), elementSchema)
   }
 
   override def prettyName: String = "explode_tar"
+}
+
+object ExplodeTar {
+
+  /** [[Schemas.tarEntrySchema]] less `archive`. */
+  val Elements: StructType = StructType(Schemas.tarEntrySchema.filterNot(_.name == "archive"))
 }

@@ -114,7 +114,7 @@ class TgzSinkCommitSpec extends AnyFunSuite with SparkSuite with TempDirs with J
                     attempt: Int, content: String): TgzSink.StagedFile = {
     val tmp = s"$fin.p$part.a$attempt"
     Files.write(Paths.get(s"${t.staging}/$tmp"), content.getBytes)
-    TgzSink.StagedFile(target, fin, tmp, part)
+    TgzSink.StagedFile(target, fin, tmp)
   }
 
   private def names(dir: String): Seq[String] = {
@@ -133,7 +133,7 @@ class TgzSinkCommitSpec extends AnyFunSuite with SparkSuite with TempDirs with J
   private def fixtureRouted() = {
     import graft.queries.TarQueries.{FixtureCutoff, FixtureTgz, FixtureWhitelist}
     graft.ops.EmbargoSplit.route(TgzSource.entries(spark, FixtureTgz),
-      TgzSource.whitelist(spark, FixtureWhitelist), FixtureCutoff)
+      graft.ops.Whitelist.fromText(spark, FixtureWhitelist), FixtureCutoff)
   }
 
   private val fixtureBase = {
@@ -142,8 +142,7 @@ class TgzSinkCommitSpec extends AnyFunSuite with SparkSuite with TempDirs with J
   }
 
   private def entryCount(localTgz: String): Int =
-    TgzSource.readTgzStream(fixtureBase,
-      Files.newInputStream(Paths.get(localTgz))).size
+    graft.TarFiles.read(localTgz).size
 
   test("commit publishes marked attempts and drops unmarked mid-write debris") {
     val outDir = tempDir("graft-commit").toString

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.functions.IpFunctions
 import graft.io.{TgzSink, TgzSource}
 import graft.model.Schemas
 import graft.ops.{EmbargoSplit, Whitelist}
@@ -18,8 +19,14 @@ import graft.queries.TarQueries.{Fixture2Cutoff, Fixture2Tgz, FixtureCutoff, Fix
 class TgzSplitSpec extends AnyFunSuite with SparkSuite with TempDirs {
 
   private def goldenEntries(path: String): Seq[(String, Long)] =
-    TgzSource.readTgzStream(path, Files.newInputStream(Paths.get(path)))
-      .map(e => (e.name, e.size)).toSeq
+    TarFiles.read(path).map(e => (e.name, e.size))
+
+  /** The fixture whitelist as a `wip` frame, one trimmed line per row. */
+  private def fixtureWip = {
+    import spark.implicits._
+    scala.io.Source.fromFile(FixtureWhitelist).getLines().map(_.trim).filter(_.nonEmpty)
+      .toSeq.toDF("wip")
+  }
 
   /** Both golden fixtures: the reference's own site-day tarball (whole-
     * bucket routing, 145/59) and the hand-built second day
@@ -48,7 +55,7 @@ class TgzSplitSpec extends AnyFunSuite with SparkSuite with TempDirs {
 
     test(s"E1 golden split [$label]: routing matches -p/-e goldens in order") {
       val entries = TgzSource.entries(spark, tgz)
-      val wl = TgzSource.whitelist(spark, FixtureWhitelist)
+      val wl = Whitelist.fromText(spark, FixtureWhitelist)
       val routed = EmbargoSplit.route(entries, wl, cutoff)
         .select("route", "ordinal", "name", "size")
         .collect()
@@ -87,7 +94,7 @@ class TgzSplitSpec extends AnyFunSuite with SparkSuite with TempDirs {
       val outDir = tempDir("graft-split-md5").toString
       EmbargoSplit.run(spark, tgz, FixtureWhitelist, cutoff, outDir)
       def entryMd5s(path: String): Map[String, String] =
-        TgzSource.readTgzStream(path, Files.newInputStream(Paths.get(path)))
+        TarFiles.read(path)
           .filter(_.typeflag == "0")
           .map { e =>
             val d = java.security.MessageDigest.getInstance("MD5")
@@ -115,8 +122,7 @@ class TgzSplitSpec extends AnyFunSuite with SparkSuite with TempDirs {
   for ((label, tgz, cutoff, _, _) <- goldenFixtures)
     test(s"route [$label]: the DataFrame and Whitelist forms give identical rows in order") {
       val entries = TgzSource.entries(spark, tgz)
-      val viaFrame = EmbargoSplit.route(entries,
-        TgzSource.whitelist(spark, FixtureWhitelist), cutoff)
+      val viaFrame = EmbargoSplit.route(entries, fixtureWip, cutoff)
       val viaSet = EmbargoSplit.route(entries,
         Whitelist.fromText(spark, FixtureWhitelist), cutoff)
       assert(viaSet.columns.toSeq === viaFrame.columns.toSeq)
@@ -131,7 +137,7 @@ class TgzSplitSpec extends AnyFunSuite with SparkSuite with TempDirs {
     import org.apache.spark.sql.execution.joins.BaseJoinExec
     object helper extends AdaptiveSparkPlanHelper
     val routed = EmbargoSplit.route(TgzSource.entries(spark, FixtureTgz),
-      TgzSource.whitelist(spark, FixtureWhitelist), FixtureCutoff)
+      Whitelist.fromText(spark, FixtureWhitelist), FixtureCutoff)
     routed.collect()
     val plan = routed.queryExecution.executedPlan
     val offending = helper.collect(plan) {
@@ -185,7 +191,7 @@ class TgzSplitSpec extends AnyFunSuite with SparkSuite with TempDirs {
     assert(es.length === 12)
     assert(es.count(_.typeflag == "5") === 2, "leading AND mid-stream directory")
     assert(es(6).typeflag === "5", "directory entry sits mid-stream")
-    val wl = TgzSource.whitelist(spark, FixtureWhitelist)
+    val wl = Whitelist.fromText(spark, FixtureWhitelist)
     val routes = EmbargoSplit.route(
         TgzSource.entries(spark, Fixture2Tgz), wl, Fixture2Cutoff)
       .select("name", "route").collect()
@@ -207,7 +213,7 @@ class TgzSplitSpec extends AnyFunSuite with SparkSuite with TempDirs {
   test("P4/P5: archives older than the cutoff route public wholesale") {
     val oldTgz = "/root/repo/testdata/20160102T000000Z-mlab3-sin01-sidestream-0000.tgz"
     val entries = TgzSource.entries(spark, oldTgz)
-    val wl = TgzSource.whitelist(spark, FixtureWhitelist)
+    val wl = Whitelist.fromText(spark, FixtureWhitelist)
     // cutoff after the archive day: moreThanOneYear arm short-circuits
     val routes = EmbargoSplit.route(entries, wl, cutoffDateInt = 20170101)
       .groupBy("route").count().collect()
@@ -221,21 +227,25 @@ class TgzSplitSpec extends AnyFunSuite with SparkSuite with TempDirs {
   }
 
   test("S4: corrupt input fails fast, as the reference's reader error path") {
+    def decode(bytes: Array[Byte]) = TgzSource.rows("bad.tgz",
+      new java.io.ByteArrayInputStream(bytes), Schemas.tarEntrySchema).toList
     val junk = Array.fill[Byte](64)(0x41)
-    assertThrows[java.io.IOException] {
-      TgzSource.readTgz("bad.tgz", junk).toList
-    }
+    assertThrows[java.io.IOException](decode(junk))
     // truncated gzip: valid header, cut-off stream
     val real = Files.readAllBytes(Paths.get(FixtureTgz))
+    assertThrows[java.io.IOException](decode(real.take(1000)))
+    // a name/size projection reads the same stream, and fails the same way
     assertThrows[java.io.IOException] {
-      TgzSource.readTgz("trunc.tgz", real.take(1000)).toList
+      TgzSource.rows("trunc.tgz", new java.io.ByteArrayInputStream(real.take(1000)),
+        Schemas.tarEntrySchema(Set("name", "size"))).toList
     }
+    assert(decode(real).length === 205)
   }
 
   test("S7: an archive split across partitions fails at commit, not silently") {
     val outDir = tempDir("graft-split-conflict").toString
     val entries = TgzSource.entries(spark, FixtureTgz)
-    val wl = TgzSource.whitelist(spark, FixtureWhitelist)
+    val wl = Whitelist.fromText(spark, FixtureWhitelist)
     // range-partition by ordinal: each half is contiguous WITHIN its task
     // (so the in-task interleave guard cannot fire) but the archive spans
     // two tasks — exactly the silent-clobber case the commit must reject
@@ -284,9 +294,21 @@ class TgzSplitSpec extends AnyFunSuite with SparkSuite with TempDirs {
   }
 
   test("S5/F10: whitelist loads trimmed distinct IPs") {
-    val wl = TgzSource.whitelist(spark, FixtureWhitelist).collect().map(_.getString(0))
-    assert(wl.length === 3473)
-    assert(wl.forall(ip => ip == ip.trim && ip.nonEmpty))
-    assert(wl.contains("2001:4c08:2003:2::148"))
+    import org.apache.spark.sql.functions.lit
+    import org.apache.spark.sql.graft.bridge.expression
+    val lines = scala.io.Source.fromFile(FixtureWhitelist).getLines().toVector
+    // the fixture again, every line padded and doubled, blank lines between
+    val padded = tempDir("graft-wl").resolve("whitelist").toString
+    Files.write(Paths.get(padded), lines.flatMap(l => Seq(s"  $l\t", "", l)).mkString("\n").getBytes)
+    val canonical = lines.map(IpFunctions.canonicalIp).filter(_.nonEmpty).distinct
+    for (path <- Seq(FixtureWhitelist, padded)) {
+      val wl = Whitelist.fromText(spark, path)
+      val member = wl.contains(spark, lit("2001:4c08:2003:2::148"))
+      // the predicate renders its set's size: one per distinct canonical IP
+      assert(expression(member).toString.endsWith(s", ${canonical.size} ips)"), path)
+      assert(spark.range(1).select(member).head.getBoolean(0), path)
+      assert(!spark.range(1).select(wl.contains(spark, lit("192.0.2.1"))).head.getBoolean(0))
+    }
+    assert(lines.map(_.trim).filter(_.nonEmpty).distinct.length === 3473)
   }
 }

@@ -4,36 +4,70 @@ import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.io.TgzSource
+import graft.plans.GraftExtensions
 import graft.queries.TarQueries
 
 /** DSv2 `tgz` format spec: `spark.read.format("tgz")` must agree row for
-  * row with an independent oracle — [[TgzSource.explodeEntries]] over a
-  * `binaryFile` read — on the reference fixture, list paths as the
+  * row with an independent oracle — the archives a `binaryFile` read
+  * returns, decoded by the test's own commons-compress reader
+  * ([[TarFiles]]) — on both reference fixtures, list paths as the
   * `binaryFile` reader lists them, prune the payload read when `content`
-  * is not projected, and plan one partition per archive.
+  * is not projected, and plan one partition per archive. The other users
+  * of the one decoder (`TgzSource.entries`, `TgzSource.explodeEntries`,
+  * SQL `explode_tar`) are held to the same oracle.
   */
 class TgzTableProviderSpec extends AnyFunSuite with SparkSuite with TempDirs {
 
   private val rowCols = Seq("archive", "ordinal", "name", "size", "mode",
-    "cast(modTime as long) mt", "typeflag", "xxhash64(content) ch")
+    "unix_micros(modTime) mt", "typeflag", "xxhash64(content) ch")
 
-  private def rows(df: DataFrame): Seq[Seq[Any]] =
-    df.selectExpr(rowCols: _*).collect().map(_.toSeq).toSeq
+  private def rows(df: DataFrame, cols: Seq[String] = rowCols): Seq[Seq[Any]] =
+    df.selectExpr(cols: _*).collect().map(_.toSeq).toSeq
       .sortBy(r => (r.head.asInstanceOf[String], r(1).asInstanceOf[Long]))
 
-  /** What `binaryFile` reads from `path`, exploded by the streaming core. */
-  private def binaryFileOracle(path: String, glob: String = "*.tgz"): DataFrame =
-    TgzSource.explodeEntries(spark.read.format("binaryFile")
-      .option("pathGlobFilter", glob).load(path)).toDF()
+  /** The archives `binaryFile` reads from `path`, decoded by [[TarFiles]]. */
+  private def binaryFileOracle(path: String, glob: String = "*.tgz"): DataFrame = {
+    import spark.implicits._
+    val bin = spark.read.format("binaryFile").option("pathGlobFilter", glob).load(path)
+      .select("path", "content").collect()
+    bin.toSeq.flatMap(r => TarFiles.read(r.getString(0), r.getAs[Array[Byte]](1))).toDS().toDF()
+  }
+
+  /** Both golden fixtures with their entry counts: the second has a
+    * mid-stream directory, malformed names and `:::` IPs.
+    */
+  private val fixtures = Seq(TarQueries.FixtureTgz -> 205, TarQueries.Fixture2Tgz -> 12)
 
   test("format(\"tgz\") row-set matches TgzSource.entries, content included") {
-    val v2 = spark.read.format("tgz").load(TarQueries.FixtureTgz)
-    assert(v2.columns.toSeq === Seq("archive", "ordinal", "name", "size",
-      "mode", "modTime", "typeflag", "content"))
-    val oracle = rows(binaryFileOracle(TarQueries.FixtureTgz))
-    assert(oracle.length === 205) // the fixture's golden entry count
-    assert(rows(v2) === oracle)
-    assert(rows(TgzSource.entries(spark, TarQueries.FixtureTgz).toDF()) === oracle)
+    for ((tgz, n) <- fixtures) {
+      val v2 = spark.read.format("tgz").load(tgz)
+      assert(v2.columns.toSeq === Seq("archive", "ordinal", "name", "size",
+        "mode", "modTime", "typeflag", "content"))
+      val oracle = rows(binaryFileOracle(tgz))
+      assert(oracle.length === n, tgz) // the fixture's golden entry count
+      assert(rows(v2) === oracle, tgz)
+      assert(rows(TgzSource.entries(spark, tgz).toDF()) === oracle, tgz)
+      assert(rows(TgzSource.explodeEntries(spark.read.format("binaryFile").load(tgz)).toDF()) ===
+        oracle, tgz)
+    }
+  }
+
+  test("a pruned (name, size) scan and SQL explode_tar match the binaryFile oracle") {
+    GraftExtensions.register(spark)
+    for ((tgz, n) <- fixtures) {
+      val oracle = binaryFileOracle(tgz)
+      val nameSize = Seq("archive", "ordinal", "name", "size")
+      val pruned = spark.read.format("tgz").load(tgz).selectExpr(nameSize: _*)
+      assert(rows(pruned, nameSize) === rows(oracle, nameSize), tgz)
+      spark.read.format("binaryFile").load(tgz).createOrReplaceTempView("bin")
+      val sql = spark.sql(
+        "SELECT path AS archive, t.* FROM bin LATERAL VIEW explode_tar(path, content) t")
+      assert(sql.columns.toSeq === Seq("archive", "ordinal", "name", "size",
+        "mode", "modTime", "typeflag", "content"))
+      val expected = rows(oracle)
+      assert(expected.length === n)
+      assert(rows(sql) === expected, tgz)
+    }
   }
 
   test("tgz lists paths as binaryFile does: a dir's own files, hidden names, literal files") {
